@@ -1,12 +1,20 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. An untimed warm-up pass runs the full suite first so
   * the timed pass reports steady-state numbers (codegen compiled, parquet
   * footers cached, JIT warm) rather than charging JVM start-up to whichever
-  * query happens to run first. */
+  * query happens to run first. Beside each query's time, the record's
+  * `layers` map holds that run's scheduler and task counters ([[Layers]]).
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the host's cores),
+  * SPARK_GRAFT_SHUFFLE_PARTITIONS, SPARK_GRAFT_ONLY, SPARK_GRAFT_BENCH_OUT. */
 object Bench {
 
   /** Full-evaluation action: `count()` lets Catalyst column-prune the plan
@@ -61,22 +69,73 @@ object Bench {
     else math.max(1L, math.min(cpus.toLong, (bytes + (1L << 20) - 1) >> 20)).toInt
   }
 
+  /** Scheduler and task counters of one timed run: the per-layer split of
+    * its wall time (how many jobs/stages/tasks it scheduled, how much task
+    * CPU, GC, shuffle and spill it cost). On tiny-data queries wall time
+    * tracks the job count, not compute — per-job scheduling is the floor. */
+  private final case class Layers(jobs: Long, stages: Long, tasks: Long,
+      taskCpuMs: Long, gcMs: Long, shuffleReadBytes: Long,
+      shuffleWriteBytes: Long, spillBytes: Long) {
+    def json: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_cpu_ms":$taskCpuMs,"gc_ms":$gcMs,"shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes}"""
+  }
+
+  /** Counts scheduler events between [[reset]] and [[read]]. Both drain the
+    * asynchronous listener bus first, so a run's late task-end events are
+    * neither missed at its readout nor carried into the next run. Stages
+    * count on completion (skipped stages do not count); GC is the JVM's
+    * collection time over the run (task-level GC time overcounts when
+    * tasks overlap). */
+  private final class LayerListener(sc: SparkContext) extends SparkListener {
+    private var jobs, stages, tasks, cpuNs, readBytes, writeBytes, spillBytes = 0L
+    private var gcAtReset = 0L
+    sc.addSparkListener(this)
+
+    private def gcMs: Long = java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans.asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized { stages += 1 }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      tasks += 1
+      val m = e.taskMetrics
+      if (m != null) {
+        cpuNs += m.executorCpuTime
+        readBytes += m.shuffleReadMetrics.totalBytesRead
+        writeBytes += m.shuffleWriteMetrics.bytesWritten
+        spillBytes += m.diskBytesSpilled
+      }
+    }
+
+    def reset(): Unit = {
+      GraftBridge.drainListenerBus(sc)
+      synchronized {
+        jobs = 0; stages = 0; tasks = 0; cpuNs = 0; readBytes = 0; writeBytes = 0; spillBytes = 0
+        gcAtReset = gcMs
+      }
+    }
+
+    def read(): Layers = {
+      GraftBridge.drainListenerBus(sc)
+      synchronized {
+        Layers(jobs, stages, tasks, cpuNs / 1000000L, gcMs - gcAtReset,
+          readBytes, writeBytes, spillBytes)
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = Graft.session("graft-bench", master = Some(s"local[$cpus]"),
       // scale-adaptive default, env-parameterized (see above)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-          adaptiveShufflePartitions(sfDir, cpus.toInt).toString))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // map-typed outputs (map_funcs_orders) must be hashable by force()
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      .getOrCreate()
+      shufflePartitions = Some(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+        .fold(adaptiveShufflePartitions(sfDir, cpus))(_.toInt)))
     spark.sparkContext.setLogLevel("WARN")
+    // map-typed outputs (map_funcs_orders) must be hashable by force()
+    spark.conf.set("spark.sql.legacy.allowHashOnMapType", "true")
+    val layers = new LayerListener(spark.sparkContext)
     // Operators that materialize intermediates persist a new table per
     // invocation; dropping caches between queries keeps every measurement
     // hermetic (no storage-memory pressure from earlier queries).
@@ -90,37 +149,41 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    ordered.foreach { case (_, fn) =>
-      try force(fn(spark, sfDir)) catch { case _: Throwable => () }
+    // A warm-up failure is logged, not fatal: the timed runs below record
+    // the same query's failure in the `errors` map.
+    ordered.foreach { case (name, fn) =>
+      try force(fn(spark, sfDir)) catch { case e: Throwable => Verify.logFailure("bench", name, e) }
       clearCaches()
     }
     // Min of 3 timed runs per query: a single pass is dominated by GC /
     // scheduler noise at these sub-second scales (observed ±2s swings on
-    // identical plans); the min is the stable steady-state estimate. A run
-    // that throws is NOT timed — recording the fast failure path would make
-    // a broken query indistinguishable from a fast one, so failed queries
-    // land in a separate "errors" map and are excluded from the total.
+    // identical plans); the min is the stable steady-state estimate, and
+    // its run's layer counters are the ones recorded. A run that throws is
+    // NOT timed — recording the fast failure path would make a broken
+    // query indistinguishable from a fast one, so failed queries land in a
+    // separate "errors" map and are excluded from the total.
     //
     // The per-query record is ALSO flushed to the output file after every
     // query (r21 verdict item 5: BENCH_r20's per-query JSON died to stdout
     // truncation and nulled a whole round's PERF comparison; a run killed
     // mid-suite used to leave nothing). The flush happens BETWEEN queries,
     // outside any timed region, and the final write below overwrites it
-    // with the complete line — a finished run's file is byte-identical to
-    // the pre-r22 format.
-    var flushed: Seq[(String, Either[String, Double])] = Seq.empty
-    val results: Seq[(String, Either[String, Double])] = ordered.map { case (name, fn) =>
+    // with the complete line.
+    var flushed: Seq[(String, Either[String, (Double, Layers)])] = Seq.empty
+    val results = ordered.map { case (name, fn) =>
       val runs = (1 to 3).map { _ =>
+        layers.reset()
         val t0 = System.nanoTime()
         val r =
           try { force(fn(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
           catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}".take(160)) }
+        val rec = r.map(_ -> layers.read())
         clearCaches()
-        r
+        rec
       }
       val failures = runs.collect { case Left(e) => e }
-      val rec = name -> (if (failures.nonEmpty) Left(failures.head): Either[String, Double]
-                         else Right(runs.collect { case Right(t) => t }.min): Either[String, Double])
+      val rec = name -> (if (failures.nonEmpty) Left(failures.head)
+                         else Right(runs.collect { case Right(t) => t }.minBy(_._1)))
       flushed = flushed :+ rec
       writeRecord(flushed, partial = true, only, sfDir)
       rec
@@ -134,16 +197,18 @@ object Bench {
     * `"partial":true` marker and no stdout print) so a run killed mid-suite
     * still leaves every completed query's timing on disk; the final call
     * overwrites it with the complete, marker-free line. */
-  private def writeRecord(results: Seq[(String, Either[String, Double])],
+  private def writeRecord(results: Seq[(String, Either[String, (Double, Layers)])],
       partial: Boolean, only: Option[Set[String]], sfDir: String): String = {
     // All control chars (< 0x20, incl. \b \f and raw escapes in exception
     // messages) flatten to spaces — one unlucky message must not make the
     // emitted JSON line unparseable.
     def jstr(s: String): String =
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"").replaceAll("\\p{Cntrl}", " ") + "\""
-    val ok = results.collect { case (k, Right(v)) => k -> v }
+    val ok = results.collect { case (k, Right((v, _))) => k -> v }
     val errors = results.collect { case (k, Left(e)) => k -> e }
     val qs = ok.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    val ls = results.collect { case (k, Right((_, l))) => jstr(k) + ":" + l.json }
+      .mkString("{", ",", "}")
     val es = errors.map { case (k, e) => jstr(k) + ":" + jstr(e) }.mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     // Artifact-served rows tagged in the output (r18 ADVICE): their
@@ -164,7 +229,7 @@ object Bench {
     // explicit remainder, so no consumer can quote the artifact-inflated
     // total without seeing the split.
     val marker = if (partial) "\"partial\":true," else ""
-    val line = s"""{$marker"metric":"total","value":$total,"fresh_secs":$freshTotal,"artifact_secs":${total - freshTotal},"unit":"sec","artifact_served":$servedList,"queries":$qs,"errors":$es,"sf":"$sfDir"}"""
+    val line = s"""{$marker"metric":"total","value":$total,"fresh_secs":$freshTotal,"artifact_secs":${total - freshTotal},"unit":"sec","artifact_served":$servedList,"queries":$qs,"layers":$ls,"errors":$es,"sf":"$sfDir"}"""
     // The driver's stdout capture has truncated past rounds' artifacts to a
     // 2000-char tail (BENCH_r07.json: parsed null, no total, 57/110 query
     // times) — so the COMPLETE line also lands at a stable path the driver

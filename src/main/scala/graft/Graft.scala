@@ -2,11 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Library entry point: builds a SparkSession with the engine's recommended
-  * configuration and the graft SQL functions registered — the one-call path
-  * for a user switching from the reference application.
+/** The one SparkSession factory: every entry point (the library facade,
+  * `Bench`, `Verify`, the dev mains, the test harness) builds its session
+  * here, so the configuration that is tested is the one that is verified,
+  * benched and shipped. Callers choose only the master and the
+  * shuffle-partition count.
   *
   * Deliberate defaults (each documented where it matters):
+  *  - master `local[cores]` unless `spark.master` is already set (e.g. by
+  *    spark-submit);
   *  - AQE on (runtime skew-join splitting + partition coalescing);
   *  - shuffle partitions sized to cores locally — on a real cluster callers
   *    should pass `shufflePartitions ≈ max(2×cores, inputBytes/128MB)` and
@@ -15,30 +19,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - nanosAsLong for TIMESTAMP(NANOS) parquet columns (pre-Spark-4.2
   *    parquet readers reject them otherwise);
   *  - RocksDB streaming state store: spillable, off-heap — the posture an
-  *    unbounded-state fold needs (the reference's store is process-memory).
+  *    unbounded-state fold needs (the reference's store is process-memory);
+  *  - graft's SQL functions, optimizer rule and planner strategy registered
+  *    before the session is returned.
   */
 object Graft {
 
   def session(
       appName: String = "graft",
       master: Option[String] = None,
-      shufflePartitions: Option[Int] = None,
-      rocksDbState: Boolean = true): SparkSession = {
+      shufflePartitions: Option[Int] = None): SparkSession = {
     // If a session already exists in this JVM, adopt it: getOrCreate would
     // silently re-apply our conf (e.g. shuffle.partitions=cores) onto it,
     // changing the partitioning of every downstream plan behind the
     // caller's back — the conf leak that broke IncrementalDedupSpec's
     // exchange-count assertion when run after another suite.
     //
-    // Adoption contract: explicitly passed `master`/`shufflePartitions`/
-    // `rocksDbState` are IGNORED (logged below — conf of a live session is
-    // caller-owned, and partitioning/master/state-store cannot change
-    // mid-session anyway), but the two confs graft's SEMANTICS depend on —
-    // UTC session timezone (every oracle-checked timestamp comparison
-    // assumes it) and nanosAsLong (TIMESTAMP(NANOS) parquet is unreadable
-    // without it) — are runtime-settable and plan-shape-neutral, so they
-    // ARE applied: a graft query on an adopted session must not silently
-    // return different timestamps than the same query on a fresh one.
+    // Adoption contract: explicitly passed `master`/`shufflePartitions` are
+    // IGNORED (logged below — conf of a live session is caller-owned, and
+    // partitioning/master/state-store cannot change mid-session anyway),
+    // but the two confs graft's SEMANTICS depend on — UTC session timezone
+    // (every oracle-checked timestamp comparison assumes it) and
+    // nanosAsLong (TIMESTAMP(NANOS) parquet is unreadable without it) —
+    // are runtime-settable and plan-shape-neutral, so they ARE applied: a
+    // graft query on an adopted session must not silently return
+    // different timestamps than the same query on a fresh one.
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
       case Some(existing) =>
         if (master.nonEmpty || shufflePartitions.nonEmpty)
@@ -59,13 +64,11 @@ object Graft {
           .config("spark.sql.legacy.parquet.nanosAsLong", "true")
           .config("spark.sql.shuffle.partitions",
             shufflePartitions.getOrElse(cores).toString)
-        val withMaster = master.fold(base)(base.master)
-        val withState =
-          if (rocksDbState) withMaster.config(
-            "spark.sql.streaming.stateStore.providerClass",
+          .config("spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          else withMaster
-        val spark = withState.getOrCreate()
+        val hostMaster =
+          if (sys.props.contains("spark.master")) None else Some(s"local[$cores]")
+        val spark = master.orElse(hostMaster).fold(base)(base.master).getOrCreate()
         GraftExtensions.register(spark)
         spark
     }

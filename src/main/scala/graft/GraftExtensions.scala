@@ -13,26 +13,10 @@ import graft.functions.{BpeTokenCount, CharEntropyMilli, DotProduct, MinHashSig}
   * [[GraftExtensions.register]] on an existing session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      GraftExtensions.dotBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_cosine"),
-      GraftExtensions.cosineBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_bpe_count"),
-      new ExpressionInfo(classOf[BpeTokenCount].getName, "graft_bpe_count"),
-      GraftExtensions.bpeBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      GraftExtensions.minhashBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_char_entropy"),
-      new ExpressionInfo(classOf[CharEntropyMilli].getName, "graft_char_entropy"),
-      GraftExtensions.charEntropyBuilder))
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     e.injectOptimizerRule(_ => graft.plans.DotProductFusion)
     e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
   }
@@ -97,18 +81,22 @@ object GraftExtensions {
       CharEntropyMilli(exprs(0))
     }
 
+  /** The SQL functions, read by both the `spark.sql.extensions` injection
+    * ([[GraftExtensions#apply]]) and [[register]]: (name, implementing
+    * expression class, builder). */
+  private[graft] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], dotBuilder),
+    ("graft_cosine", classOf[DotProduct], cosineBuilder),
+    ("graft_bpe_count", classOf[BpeTokenCount], bpeBuilder),
+    ("graft_minhash", classOf[MinHashSig], minhashBuilder),
+    ("graft_char_entropy", classOf[CharEntropyMilli], charEntropyBuilder))
+
   /** Imperative registration for sessions built without the extension. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", dotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_count", bpeBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", minhashBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_entropy", charEntropyBuilder, "built-in")
+    functions.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
+    }
     // imperative twins of injectOptimizerRule / injectPlannerStrategy for
     // adopted sessions
     if (!spark.experimental.extraOptimizations.contains(graft.plans.DotProductFusion))

@@ -1,22 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet#ts has shipped as TIMESTAMP(NANOS) (readable only
-      // under this legacy flag) and as timestamp[us]; Tables.events
-      // normalizes either to LongType epoch-nanos at the load boundary.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = Graft.session("graft-verify", master = Some(s"local[$cpus]"),
+      shufflePartitions = Some(cpus))
     spark.sparkContext.setLogLevel("WARN")
     // Artifact-buyback invariant (r18 VERDICT item 2): every declared
     // artifact-served row and its fresh twin must be registered, no twin
@@ -39,17 +31,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // the root cause is what matters for triage (Spark wraps planner
-        // failures in INTERNAL_ERROR with the real exception as the cause)
-        var c = e.getCause
-        while (c != null) {
-          System.err.println(s"[verify]   caused by: $c")
-          c.getStackTrace.take(6).foreach(f => System.err.println(s"[verify]     at $f"))
-          c = c.getCause
-        }
-      }
+      catch { case e: Throwable => logFailure("verify", name, e) }
       // drop intermediates materialized by the query (hermetic runs)
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       spark.sharedState.cacheManager.clearCache()
@@ -70,5 +52,19 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Log one query's failure loud on stderr as `[tag] name failed: …`,
+    * then each cause with its top frames: the root cause is what matters
+    * for triage (Spark wraps planner failures in INTERNAL_ERROR with the
+    * real exception as the cause). */
+  private[graft] def logFailure(tag: String, name: String, e: Throwable): Unit = {
+    System.err.println(s"[$tag] $name failed: ${e.getMessage}")
+    var c = e.getCause
+    while (c != null) {
+      System.err.println(s"[$tag]   caused by: $c")
+      c.getStackTrace.take(6).foreach(f => System.err.println(s"[$tag]     at $f"))
+      c = c.getCause
+    }
   }
 }

@@ -123,7 +123,6 @@ object Retrieval {
         (coalesce(expr(s"1000000 div ($RrfK + lex_rank)"), lit(0L)) +
           coalesce(expr(s"1000000 div ($RrfK + dense_rank)"), lit(0L)))
           .cast("long").as("rrf_score"))
-    graft.GraftExtensions.register(fused.sparkSession)
     graft.plans.TopKPerGroup(fused, Seq(col("query_id")),
         col("rrf_score"), col("doc_id"), topK)
       .groupBy(col("query_id"))

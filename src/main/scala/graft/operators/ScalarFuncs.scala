@@ -161,7 +161,7 @@ object ScalarFuncs {
       org.apache.spark.sql.types.DataType.fromDDL(schema)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
     // r22 (guide §2.5 input skew): the single-row-group local scan ran the
-    // whole to_json + from_json chain in ONE task (Profile: 3 jobs / 3
+    // whole to_json + from_json chain in ONE task (profiled: 3 jobs / 3
     // tasks, parallelism 0.9) — fanOut rebalances the scan output to
     // cluster width before the heavy row-local serde, the multimodal-codec
     // discipline (per-row JSON build+parse dwarfs the row's transport cost)

@@ -1072,31 +1072,17 @@ object TextAnalysis {
       |FROM cxy JOIN cl ON cxy.l = cl.l JOIN cr ON cxy.r = cr.r CROSS JOIN n
       |WHERE cxy.c >= 5
       |ORDER BY pmi_milli DESC, cxy.l, cxy.r LIMIT 50""".stripMargin) { (s, d) =>
-    pmiOn(s, d, broadcastMarginals = false)
+    pmiOn(s, d)
   }
 
-  /** Broadcast cap for the PMI marginal tables: (word, count) rows ≈ 40 B —
-    * 10M rows ≈ 400 MB shipped, under the hard broadcast cap with headroom;
-    * past it both marginal joins pin shuffle_hash (the r19 cliff arm). */
-  private[graft] val MaxBroadcastMarginalRows = 10000000L
-
-  /** The PMI plan body, marginal-join strategy switchable so the r22 A/B
-    * (verdict item 4) can interleave both forms in one JVM ([[graft.PmiAb]]).
-    * `false` — the COMMITTED WINNER (OPTIMIZATION_r22.md §pmi): both
-    * marginals pin shuffle_hash, paying one exchange of the (filtered,
-    * vocabulary-bounded) pair stream per marginal join. The A/B bracket
-    * (same-JVM interleaved, min/med of 6 runs per arm): shuffle_hash
-    * 0.751/0.936 s vs broadcast 0.832/0.904 s at c32, 0.598/0.782 vs
-    * 0.646/0.835 at c8 — the broadcast arm's |cxy| gate probe costs more
-    * than the two small exchanges it saves, at both core counts.
-    * `true` = gated-broadcast marginals: |cl|,|cr| ≤ |cxy| by
-    * construction, |cxy| counted over the already-materialized pair cache
-    * (the probe pre-populates the cache the main job reads, the
-    * contamination-gate pattern); past [[MaxBroadcastMarginalRows]] both
-    * joins fall back to the shuffle_hash arm — the r19 cliff discipline
-    * either way. */
-  private[graft] def pmiOn(s: SparkSession, d: String,
-      broadcastMarginals: Boolean): DataFrame = {
+  /** The PMI plan body. Both marginal joins pin shuffle_hash, paying one
+    * exchange of the (filtered, vocabulary-bounded) pair stream per
+    * marginal join. The r22 same-JVM A/B against gated-broadcast
+    * marginals (OPTIMIZATION_r22.md §pmi; min/med of 6 runs per arm):
+    * shuffle_hash 0.751/0.936 s vs broadcast 0.832/0.904 s at c32,
+    * 0.598/0.782 vs 0.646/0.835 at c8 — the broadcast arm's |cxy| gate
+    * probe cost more than the two small exchanges it saved. */
+  private[graft] def pmiOn(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     // generator-then-project (the spanHashes discipline, r19): the struct-
     // building transform lambda ran INTERPRETED per bigram
@@ -1118,18 +1104,12 @@ object TextAnalysis {
     // marginals are VOCABULARY-scale (Heaps' law: sublinear in corpus but
     // tens of millions of tokens at 100 TB) and generator-fed, so their
     // size estimates are suppressed — an estimator-trusted broadcast here
-    // was the r19 cliff shape. The broadcast decision runs through the
-    // bounded gate above instead. The corpus total `n` stays
-    // unconditionally broadcast: a keyless aggregate is ONE row by
-    // construction.
-    lazy val pairRows = cxy.count() // once; also pre-populates the cache
-    def marginal(df: DataFrame): DataFrame =
-      if (broadcastMarginals)
-        Tables.boundedBroadcast(df, pairRows, MaxBroadcastMarginalRows)
-      else df.hint("shuffle_hash")
+    // was the r19 cliff shape; both joins pin shuffle_hash instead. The
+    // corpus total `n` stays unconditionally broadcast: a keyless
+    // aggregate is ONE row by construction.
     cxy.filter(col("c") >= 5)
-      .join(marginal(cl), Seq("l"))
-      .join(marginal(cr), Seq("r"))
+      .join(cl.hint("shuffle_hash"), Seq("l"))
+      .join(cr.hint("shuffle_hash"), Seq("r"))
       .crossJoin(broadcast(n))
       .select(col("l"), col("r"), col("c").cast("long").as("pair_count"),
         // 1000·c·n passes 2^63 at corpus scale (n ~ 10^13 bigrams at

@@ -322,7 +322,7 @@ object TrainingData {
     * on the shard key. Three narrow exchanges total for the whole pipeline.
     * r22 (guide §2.5 input skew): the corpus arrives as one unsplittable
     * scan task locally, which serialized the regex-clean + tokenize + md5
-    * chain (Profile: 5 jobs × 1 task, parallelism 0.9 — wall ≈ single-core
+    * chain (profiled: 5 jobs × 1 task, parallelism 0.9 — wall ≈ single-core
     * CPU). `fanOut` rebalances the scan output to cluster width before the
     * heavy row-local projection — the multimodal-codec discipline (r21):
     * an input-sized exchange, only worth it because the per-row work

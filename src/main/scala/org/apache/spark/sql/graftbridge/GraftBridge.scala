@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -32,4 +33,10 @@ object GraftBridge {
 
   /** A DataFrame's analyzed logical plan, for embedding as a child. */
   def analyzedPlan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** Block until every listener event posted so far has been delivered
+    * (the bus is `private[spark]`), so counters reset or read afterwards
+    * neither miss the last run's late task-end events nor bleed them into
+    * the next run. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

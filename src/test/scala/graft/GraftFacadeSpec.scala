@@ -4,6 +4,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class GraftFacadeSpec extends AnyFunSuite {
 
+  // first in the suite, so no test below has touched the session's conf
+  test("the shared test session carries the shipped Graft.session conf") {
+    val s = SharedSpark.spark
+    assert(s.conf.get("spark.sql.streaming.stateStore.providerClass") ===
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    // the SQL functions are registered when the session is created: no
+    // explicit GraftExtensions.register call here
+    val dot = s.sql("SELECT graft_dot(array(1.0d,2.0d), array(3.0d,4.0d)) AS d")
+      .collect().head.getDouble(0)
+    assert(dot === 11.0)
+  }
+
   test("facade session runs a registered query with SQL functions available") {
     // getOrCreate reuses SharedSpark's context; facade must still register
     // its functions and expose the query surface on the returned session

@@ -2,19 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One SparkSession for the whole forked test JVM. */
+/** One SparkSession for the whole forked test JVM: the shipped
+  * [[Graft.session]], pinned to 4 cores and 4 shuffle partitions so plan
+  * shapes do not depend on the host. */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    // a static conf, so it must be in place before the session exists; the
+    // per-JVM temp warehouse keeps test tables out of the working directory
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    val s = Graft.session("graft-test", master = Some("local[4]"),
+      shufflePartitions = Some(4))
     s.sparkContext.setLogLevel("WARN")
     s
   }
