@@ -1,7 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.operators.{DHashBands, MediaRecord}
 
 /** Streaming operators for the training-data-pipeline surface, each with the
   * state-bounding story that makes it viable on an unbounded 100 TB/day
@@ -328,35 +333,78 @@ object StreamingOps extends Serializable {
     curationStream(unseen, tsCol, watermark, minTokens, maxDupMilli)
   }
 
-  /** Read the append-mode fingerprint store at `storePath` (single `fp`
-    * column), or an empty frame if no batch has written it yet. The loop's
-    * store is a plain parquet PATH, not the bucketed table: micro-batches
-    * append small fp files all day, and the nightly compaction rewrites the
-    * accumulated set through
-    * [[graft.sources.ParquetSink.writeBucketed]] — bucketing is a
-    * compaction-time property, not something tiny streaming appends can
-    * maintain. */
-  def readFpStore(spark: org.apache.spark.sql.SparkSession, storePath: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(storePath)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("fp",
-          org.apache.spark.sql.types.StringType))))
-  }
+  /** The continuous ingest loop: the one `foreachBatch` shell every
+    * store-folding stream in this module runs through. Each micro-batch
+    * calls `body(batch, batchId)`; the body — one `ingestBatch*` method per
+    * keep rule — owns the store, the output and the durability posture,
+    * e.g. `ingestLoop(docs, ckpt)(ingestBatchUrlMerge(_, store, out, _))`.
+    *
+    * This is the reference's accumulate-across-rounds state model
+    * (InventoryUpdateEventGenerator.java:74-106 keeps an accumulator across
+    * send rounds) lifted to corpus scale: the persisted store IS the
+    * accumulator, each micro-batch folds into it, and unlike the
+    * watermark-bounded dedup state inside [[curationStream]] it never
+    * evicts. foreachBatch rather than a stateful operator because the state
+    * must (a) outlive the query and be shared with the BATCH pipeline
+    * ([[graft.operators.Dedup.incremental]] reads the same store) and (b)
+    * scale past executor state stores — it lives in the lake, joined per
+    * batch, not held per key in RocksDB.
+    *
+    * `trigger` defaults to Spark's own (next batch as soon as the last one
+    * finishes). `Trigger.AvailableNow()` is CATCH-UP mode: drain every
+    * record available at start — rate-limited into micro-batches by the
+    * source's own admission limits, each folded through the SAME body —
+    * then STOP. This is the restart posture of a 100 TB/day pipeline: a
+    * crashed or nightly loop comes back, works off the backlog
+    * incrementally (bounded batches, not one giant job), exits, and hands
+    * the cluster back. The checkpoint carries source offsets across runs,
+    * so successive catch-ups process only what arrived since the last one
+    * — StreamingOpsSpec proves a second catch-up run resumes from the
+    * first's offsets. */
+  def ingestLoop(docs: DataFrame, checkpoint: String,
+      trigger: Trigger = Trigger.ProcessingTime(0L))(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    docs.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch(body)
+      .start()
 
-  /** One micro-batch of the ingest loop: dedup `batch` against the store's
-    * CURRENT contents, emit the survivors, and only then append their
-    * fingerprints — so batch N+1 sees every doc batch N kept. Ordering is
-    * the crash-safety argument: appending fps BEFORE the survivors are
+  /** Read the store at `path` with its declared `schema`, or an empty frame
+    * if no batch has written it yet. Never schema inference: a zero-row
+    * `partitionBy` write leaves a directory with no parquet file in it, and
+    * inferring from that fails every later batch. Each `*Schema` below is
+    * exactly what its body writes. */
+  private def readOrEmpty(spark: SparkSession, path: String,
+      schema: StructType): DataFrame =
+    if (fsOf(spark, path).exists(new Path(path))) spark.read.schema(schema).parquet(path)
+    else empty(spark, schema)
+
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  private def fpStoreSchema = StructType(Seq(StructField("fp", StringType)))
+
+  /** One micro-batch of the exact-dedup ingest loop: dedup `batch` against
+    * the store's CURRENT contents, emit the survivors, and only then append
+    * their fingerprints — so batch N+1 sees every doc batch N kept. Ordering
+    * is the crash-safety argument: appending fps BEFORE the survivors are
     * durably emitted would, on a retry of a half-done batch, let the
     * replayed batch anti-join against its own fingerprints and silently
     * drop its output. This order instead makes a replay re-emit (standard
     * foreachBatch at-least-once) and re-append fps (harmless — the store is
     * semantically a set, and [[graft.operators.Dedup.dedupIncrementalOn]]
-    * collapses it through the anti-join). */
+    * collapses it through the anti-join).
+    *
+    * The store (single `fp` column) is a plain parquet PATH, not the
+    * bucketed table: micro-batches append small fp files all day, and the
+    * nightly compaction rewrites the accumulated set through
+    * [[graft.sources.ParquetSink.writeBucketed]] — bucketing is a
+    * compaction-time property, not something tiny streaming appends can
+    * maintain. */
   def ingestBatch(batch: DataFrame, storePath: String, outPath: String): Unit = {
     val spark = batch.sparkSession
     // dedupIncrementalOn returns the (doc_id, fp) survivor keys; re-join the
@@ -367,67 +415,13 @@ object StreamingOps extends Serializable {
     // can replay the same row twice within one trigger, and a plain join
     // would re-expand the collapsed survivor back into duplicates.
     val survivors = graft.operators.Dedup
-      .dedupIncrementalOn(batch, readFpStore(spark, storePath))
+      .dedupIncrementalOn(batch, readOrEmpty(spark, storePath, fpStoreSchema))
       .join(batch.dropDuplicates("doc_id"), Seq("doc_id"))
       .persist()
     try {
       survivors.write.mode("append").parquet(outPath)
       survivors.select(col("fp")).write.mode("append").parquet(storePath)
     } finally survivors.unpersist()
-  }
-
-  /** The continuous ingest loop — the reference's accumulate-across-rounds
-    * state model (InventoryUpdateEventGenerator.java:74-106 keeps an
-    * accumulator across send rounds) lifted to corpus scale: the persisted
-    * fingerprint store IS the accumulator, each micro-batch folds into it,
-    * and unlike the watermark-bounded dedup state inside [[curationStream]]
-    * it never evicts. foreachBatch rather than a stateful operator because
-    * the state must (a) outlive the query and be shared with the BATCH
-    * pipeline ([[graft.operators.Dedup.incremental]] reads the same store)
-    * and (b) scale past executor state stores — it lives in the lake,
-    * joined per batch, not held per key in RocksDB. */
-  def ingestLoop(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatch(batch, storePath, outPath)
-      }
-      .start()
-
-  /** [[ingestLoop]] in CATCH-UP mode: `Trigger.AvailableNow` drains every
-    * record available at start — rate-limited into micro-batches by the
-    * source's own admission limits, each folded through the SAME
-    * [[ingestBatch]] store-dedup — then STOPS on its own. This is the
-    * restart posture of a 100 TB/day pipeline: a crashed or nightly loop
-    * comes back, works off the backlog incrementally (bounded batches, not
-    * one giant job), exits, and hands the cluster back. The checkpoint
-    * carries source offsets across runs, so successive catch-ups process
-    * only what arrived since the last one — StreamingOpsSpec proves a
-    * second catch-up run resumes from the first's offsets. */
-  def ingestCatchUp(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatch(batch, storePath, outPath)
-      }
-      .start()
-
-  private def readOrEmpty(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
   private def sigSchema = org.apache.spark.sql.types.StructType(
@@ -471,28 +465,13 @@ object StreamingOps extends Serializable {
   def ingestBatchSemantic(batch: DataFrame, centroids: DataFrame,
       memPath: String, outPath: String): Unit = {
     val spark = batch.sparkSession
-    def dot(a: Column, b: Column): Column =
-      graft.functions.VectorFunctions.dotProduct(a, b)
     // at-least-once sources can replay a row within one trigger: collapse
     // per vec_id before assignment (see [[ingestBatch]])
-    val normed = batch.dropDuplicates("vec_id")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
-    val bmem = graft.operators.Similarity.ivfListsFrom(normed, centroids).persist()
+    val bmem = graft.operators.Similarity.ivfListsFrom(normed(batch), centroids).persist()
     try {
-      val store = readOrEmpty(spark, memPath, memSchema)
-      val histDrops = store.as("h")
-        .join(broadcast(bmem.as("b")), col("h.cid") === col("b.cid"))
-        .filter(dot(col("h.e"), col("b.e")) / (col("h.nrm") * col("b.nrm")) >= 0.99)
-        .select(col("b.vec_id").as("vec_id"))
-      val batchDrops = bmem.as("a")
-        .join(bmem.as("b"),
-          col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
-        .filter(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")) >= 0.99)
-        .select(col("b.vec_id").as("vec_id"))
       val survivors = bmem
-        .join(histDrops.union(batchDrops), Seq("vec_id"), "left_anti")
+        .join(cosineDrops(readOrEmpty(spark, memPath, memSchema), bmem),
+          Seq("vec_id"), "left_anti")
         .persist()
       try {
         survivors.select(col("vec_id"), col("cid")).write.mode("append").parquet(outPath)
@@ -501,21 +480,36 @@ object StreamingOps extends Serializable {
     } finally bmem.unpersist()
   }
 
-  /** The continuous semantic-dedup ingest loop: [[ingestLoop]]'s shape with
-    * the member store as the accumulator. `centroids` is the persisted
-    * one-row centroid table the batch pipeline trained on history. */
-  def ingestLoopSemantic(
-      vecs: DataFrame,
-      centroids: DataFrame,
-      memPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchSemantic(batch, centroids, memPath, outPath)
-      }
-      .start()
+  private def dot(a: Column, b: Column): Column =
+    graft.functions.VectorFunctions.dotProduct(a, b)
+
+  /** (vec_id, e, nrm) of a (vec_id, embedding) batch, one row per vec_id,
+    * `e` the embedding as doubles and `nrm` its L2 norm — the input of
+    * [[graft.operators.Similarity.ivfListsFrom]]. */
+  private def normed(batch: DataFrame): DataFrame =
+    batch.dropDuplicates("vec_id")
+      .select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("e"))
+      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
+
+  /** The semantic keep rule's drop set: vec_ids of the cluster-assigned
+    * batch `b` (vec_id, e, nrm, cid) with a `store` member of the same
+    * cluster — or a smaller-vec_id member of `b` itself — at cosine ≥ 0.99.
+    * May hold a vec_id twice; a left_anti join against it does not care. */
+  private def cosineDrops(store: DataFrame, b: DataFrame): DataFrame = {
+    def cos(x: String, y: String): Column =
+      dot(col(s"$x.e"), col(s"$y.e")) / (col(s"$x.nrm") * col(s"$y.nrm"))
+    val histDrops = store.as("h")
+      .join(broadcast(b.as("b")), col("h.cid") === col("b.cid"))
+      .filter(cos("h", "b") >= 0.99)
+      .select(col("b.vec_id").as("vec_id"))
+    val batchDrops = b.as("a")
+      .join(b.as("b"),
+        col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
+      .filter(cos("a", "b") >= 0.99)
+      .select(col("b.vec_id").as("vec_id"))
+    histDrops.union(batchDrops)
+  }
 
   /** One micro-batch of the NEAR-dup ingest loop: estimate-dedup `batch`
     * against the signature/band stores' current contents, emit survivors,
@@ -551,83 +545,33 @@ object StreamingOps extends Serializable {
       org.apache.spark.sql.types.StructField(n,
         org.apache.spark.sql.types.LongType)))
 
-  private def imgBandSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("bh",
-      org.apache.spark.sql.types.LongType)))
-
-  /** One micro-batch of the IMAGE ingest loop — the streaming twin of
-    * `dedup_incremental_image`, sharing its keep rule verbatim
-    * ([[graft.operators.ImageDedup.incrementalDropped]]): decode + dHash
-    * the batch's payloads, drop anything within Hamming ≤ MaxDist of a
-    * stored image or an earlier-id batch image, emit survivors, then
-    * append the survivors' fingerprint and band rows so the next batch
-    * sees them. Same emit-before-append crash-safety ordering as
-    * [[ingestBatch]]; undecodable payloads carry the −1 sentinel, match
-    * nothing, and are kept (a decode failure is a quality signal, not a
-    * duplicate). `batch` needs (doc_id, payload). */
-  def ingestBatchImage(batch: DataFrame, fpPath: String, bandPath: String,
-      outPath: String): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val collapsed = batch.dropDuplicates("doc_id") // see [[ingestBatch]]
-    val bfp = collapsed
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, payload) => graft.operators.MediaRecord(id, payload) }
-      .transform(ds => graft.operators.ImageDedup.fingerprints(spark, ds).toDF())
-      .persist()
-    try {
-      // counted bound on the persisted batch fingerprint table (the count
-      // populates the cache the probe reads anyway — no second decode);
-      // a trigger-sized micro-batch is far under the cap, so the probe
-      // keeps its broadcast plan, while an oversized replay falls back to
-      // shuffle_hash instead of the estimator cliff
-      val bounded = bfp.limit((graft.operators.ImageDedup.MaxBroadcastProbeDocs + 1).toInt)
-        .count() <= graft.operators.ImageDedup.MaxBroadcastProbeDocs
-      val dropped = graft.operators.ImageDedup.incrementalDropped(
-        bfp.filter(col("b0") >= 0),
-        readOrEmpty(spark, fpPath, imgFpSchema),
-        readOrEmpty(spark, bandPath, imgBandSchema), bounded)
-      val survivors = bfp
-        .join(dropped, Seq("doc_id"), "left_anti")
-        .join(collapsed, Seq("doc_id"))
-        .persist()
-      try {
-        survivors.select(col("doc_id")).write.mode("append").parquet(outPath)
-        val sfp = survivors.filter(col("b0") >= 0)
-          .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-        sfp.write.mode("append").parquet(fpPath)
-        graft.operators.ImageDedup.bandRowsOf(sfp)
-          .write.mode("append").parquet(bandPath)
-      } finally survivors.unpersist()
-    } finally bfp.unpersist()
-  }
-
-  /** One micro-batch of the VIDEO ingest loop — the streaming twin of
-    * `dedup_incremental_video`, sharing the image loop's store layout and
-    * [[graft.operators.ImageDedup.incrementalDropped]] keep rule verbatim
-    * (a pooled clip signature is the same four-band shape): container-walk
-    * + per-sampled-frame dHash + majority pool the batch's payloads, drop
-    * anything within Hamming ≤ MaxDist of a stored clip or an earlier-id
-    * batch clip, emit survivors, append their signature and band rows.
-    * Unparseable clips carry the −1 sentinel, match nothing, and are kept
-    * (a decode failure is a quality signal, not a duplicate). `batch`
+  /** One micro-batch of the PERCEPTUAL ingest loop — the streaming twin of
+    * `dedup_incremental_image`, `_video` and `_audio`, one body for all
+    * three: `fingerprints` is the modality's four-band fingerprinter
+    * ([[graft.operators.ImageDedup.fingerprints]] decode + dHash,
+    * [[graft.operators.VideoDedup.fingerprints]] container walk +
+    * per-frame dHash + majority pool,
+    * [[graft.operators.AudioDedup.fingerprints]] PCM decode + envelope
+    * hash), and every modality shares the store layout and the
+    * [[graft.operators.ImageDedup.incrementalDropped]] keep rule verbatim:
+    * drop anything within Hamming ≤ MaxDist of a stored fingerprint or an
+    * earlier-id batch fingerprint, emit survivors, then append the
+    * survivors' fingerprint and band rows so the next batch sees them.
+    * Same emit-before-append crash-safety ordering as [[ingestBatch]];
+    * undecodable payloads carry the −1 sentinel, match nothing, and are
+    * kept (a decode failure is a quality signal, not a duplicate). `batch`
     * needs (doc_id, payload). */
-  def ingestBatchVideo(batch: DataFrame, fpPath: String, bandPath: String,
-      outPath: String, stride: Int = 1): Unit = {
+  def ingestBatchMedia(batch: DataFrame,
+      fingerprints: (SparkSession, Dataset[MediaRecord]) => Dataset[DHashBands],
+      fpPath: String, bandPath: String, outPath: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     val collapsed = batch.dropDuplicates("doc_id") // see [[ingestBatch]]
-    val bfp = collapsed
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, payload) => graft.operators.MediaRecord(id, payload) }
-      .transform(ds =>
-        graft.operators.VideoDedup.fingerprints(spark, ds, _ => stride).toDF())
+    val bfp = fingerprints(spark, collapsed
+        .select(col("doc_id"), col("payload"))
+        .as[(Long, Array[Byte])]
+        .map { case (id, payload) => MediaRecord(id, payload) })
+      .toDF()
       .persist()
     try {
       // counted bound on the persisted batch fingerprint table (the count
@@ -640,7 +584,7 @@ object StreamingOps extends Serializable {
       val dropped = graft.operators.ImageDedup.incrementalDropped(
         bfp.filter(col("b0") >= 0),
         readOrEmpty(spark, fpPath, imgFpSchema),
-        readOrEmpty(spark, bandPath, imgBandSchema), bounded)
+        readOrEmpty(spark, bandPath, bandSchema), bounded)
       val survivors = bfp
         .join(dropped, Seq("doc_id"), "left_anti")
         .join(collapsed, Seq("doc_id"))
@@ -655,97 +599,6 @@ object StreamingOps extends Serializable {
       } finally survivors.unpersist()
     } finally bfp.unpersist()
   }
-
-  /** [[ingestBatchVideo]] as a continuous foreachBatch loop — the
-    * perceptual-dedup accumulator for a video ingest stream. */
-  def ingestLoopVideo(
-      docs: DataFrame,
-      fpPath: String,
-      bandPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchVideo(batch, fpPath, bandPath, outPath)
-      }
-      .start()
-
-  /** One micro-batch of the AUDIO ingest loop — the streaming twin of
-    * `dedup_incremental_audio`, completing loop coverage of the
-    * perceptual triangle (image and video have theirs): PCM-decode +
-    * envelope-hash the batch's payloads, drop anything within Hamming ≤
-    * MaxDist of a stored clip or an earlier-id batch clip via the shared
-    * [[graft.operators.ImageDedup.incrementalDropped]] rule, emit
-    * survivors, append their signature and band rows. Undecodable/empty
-    * clips carry the −1 sentinel, match nothing, and are kept. `batch`
-    * needs (doc_id, payload). */
-  def ingestBatchAudio(batch: DataFrame, fpPath: String, bandPath: String,
-      outPath: String): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val collapsed = batch.dropDuplicates("doc_id") // see [[ingestBatch]]
-    val bfp = collapsed
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, payload) => graft.operators.MediaRecord(id, payload) }
-      .transform(ds => graft.operators.AudioDedup.fingerprints(spark, ds).toDF())
-      .persist()
-    try {
-      // counted bound on the persisted batch fingerprint table (the count
-      // populates the cache the probe reads anyway — no second decode);
-      // a trigger-sized micro-batch is far under the cap, so the probe
-      // keeps its broadcast plan, while an oversized replay falls back to
-      // shuffle_hash instead of the estimator cliff
-      val bounded = bfp.limit((graft.operators.ImageDedup.MaxBroadcastProbeDocs + 1).toInt)
-        .count() <= graft.operators.ImageDedup.MaxBroadcastProbeDocs
-      val dropped = graft.operators.ImageDedup.incrementalDropped(
-        bfp.filter(col("b0") >= 0),
-        readOrEmpty(spark, fpPath, imgFpSchema),
-        readOrEmpty(spark, bandPath, imgBandSchema), bounded)
-      val survivors = bfp
-        .join(dropped, Seq("doc_id"), "left_anti")
-        .join(collapsed, Seq("doc_id"))
-        .persist()
-      try {
-        survivors.select(col("doc_id")).write.mode("append").parquet(outPath)
-        val sfp = survivors.filter(col("b0") >= 0)
-          .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-        sfp.write.mode("append").parquet(fpPath)
-        graft.operators.ImageDedup.bandRowsOf(sfp)
-          .write.mode("append").parquet(bandPath)
-      } finally survivors.unpersist()
-    } finally bfp.unpersist()
-  }
-
-  /** [[ingestBatchAudio]] as a continuous foreachBatch loop. */
-  def ingestLoopAudio(
-      docs: DataFrame,
-      fpPath: String,
-      bandPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchAudio(batch, fpPath, bandPath, outPath)
-      }
-      .start()
-
-  /** [[ingestBatchImage]] as a continuous foreachBatch loop — the
-    * perceptual-dedup accumulator for an image ingest stream. */
-  def ingestLoopImage(
-      docs: DataFrame,
-      fpPath: String,
-      bandPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchImage(batch, fpPath, bandPath, outPath)
-      }
-      .start()
 
   private def urlStoreSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("canonical",
@@ -784,19 +637,6 @@ object StreamingOps extends Serializable {
       fresh.select(col("chunk_hash")).write.mode("append").parquet(storePath)
     } finally fresh.unpersist()
   }
-
-  /** [[ingestBatchChunks]] as a continuous foreachBatch loop. */
-  def ingestLoopChunks(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchChunks(batch, storePath, outPath)
-      }
-      .start()
 
   private def chunkMemSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("chunk_hash",
@@ -838,8 +678,6 @@ object StreamingOps extends Serializable {
   def ingestBatchChunkSemantic(batch: DataFrame, centroids: DataFrame,
       memPath: String, outPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    def dot(a: Column, b: Column): Column =
-      graft.functions.VectorFunctions.dotProduct(a, b)
     val sig = graft.operators.TrainingData.chunkTexts(batch.dropDuplicates("doc_id"))
       .groupBy(md5(col("chunk_text")).as("chunk_hash"))
       .agg(min(col("chunk_text")).as("chunk_text"),
@@ -857,56 +695,35 @@ object StreamingOps extends Serializable {
       .join(cand.select(col("chunk_hash"), col("m")), Seq("chunk_hash"))
       .persist()
     try {
-      val histDrops = store.as("h")
-        .join(broadcast(assigned.as("b")), col("h.cid") === col("b.cid"))
-        .filter(dot(col("h.e"), col("b.e")) / (col("h.nrm") * col("b.nrm")) >= 0.99)
-        .select(col("b.vec_id").as("vec_id"))
-      val batchDrops = assigned.as("a")
-        .join(assigned.as("b"),
-          col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
-        .filter(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")) >= 0.99)
-        .select(col("b.vec_id").as("vec_id"))
       // no distinct on the drop set: left_anti is unaffected by duplicate
       // right-side keys, and the dedup would cost an exchange per batch
       val survivors = assigned
-        .join(histDrops.union(batchDrops), Seq("vec_id"), "left_anti")
+        .join(cosineDrops(store, assigned), Seq("vec_id"), "left_anti")
         .persist()
       try {
-        survivors
+        overwriteBatch(survivors
           .select(col("m.doc_id").as("doc_id"), col("m.chunk_id").as("chunk_id"),
             col("m.start_token").as("start_token"),
-            col("m.n_tokens").as("n_tokens"), col("chunk_hash"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        survivors
-          .select(col("chunk_hash"), col("vec_id"), col("e"), col("nrm"), col("cid"))
-          .withColumn("batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(memPath)
+            col("m.n_tokens").as("n_tokens"), col("chunk_hash")),
+          "batch_id", batchId, outPath)
+        overwriteBatch(survivors
+          .select(col("chunk_hash"), col("vec_id"), col("e"), col("nrm"), col("cid")),
+          "batch", batchId, memPath)
       } finally survivors.unpersist()
     } finally assigned.unpersist()
   }
 
-  /** [[ingestBatchChunkSemantic]] as a continuous foreachBatch loop — the
-    * near-dup-aware upgrade of [[ingestLoopChunks]]. `centroids` is the
-    * persisted one-row centroid table trained on history. */
-  def ingestLoopChunkSemantic(
-      docs: DataFrame,
-      centroids: DataFrame,
-      memPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchChunkSemantic(batch, centroids, memPath, outPath, bid)
-      }
-      .start()
+  /** Write `df` as the `<partCol>=<batchId>` partition of `path`, replacing
+    * only that partition (dynamic overwrite): the replay-exact write of
+    * every batch-keyed store and output in this module — a replayed batch
+    * rewrites its own partition instead of appending a second copy. */
+  private def overwriteBatch(df: DataFrame, partCol: String, batchId: Long,
+      path: String): Unit =
+    df.withColumn(partCol, lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol)
+      .parquet(path)
 
   /** One micro-batch of the URL ingest loop — the streaming twin of
     * `dedup_incremental_url`, sharing [[graft.operators.Dedup.canonicalUrl]]
@@ -932,20 +749,6 @@ object StreamingOps extends Serializable {
     } finally survivors.unpersist()
   }
 
-  /** [[ingestBatchUrl]] as a continuous foreachBatch loop — the
-    * canonical-key accumulator for a crawl-frontier stream. */
-  def ingestLoopUrl(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchUrl(batch, storePath, outPath)
-      }
-      .start()
-
   /** `gen=<digits>` directory name → generation number; anything else
     * (a `gen=tmp` left by a tool, a stray file) is None rather than a
     * NumberFormatException that fails the whole micro-batch. */
@@ -965,27 +768,63 @@ object StreamingOps extends Serializable {
     org.apache.spark.sql.types.StructField("fp",
       org.apache.spark.sql.types.StringType)))
 
-  /** The newest COMMITTED store generation strictly OLDER than `batchId`
-    * under `storePath/gen=<id>` (committed = `_SUCCESS` present; a dir
-    * without it is a crashed write, skipped). Strictly-older is the replay
-    * guarantee: batch N's own generation is never its read, so a batch
-    * replayed AFTER its merge committed still sees the pre-merge state it
-    * first saw. Empty store → empty frame. */
-  private def readUrlMergeStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, batchId: Long): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens =
-      if (!fs.exists(dir)) Array.empty[Long]
-      else fs.listStatus(dir).filter(_.isDirectory)
-        .map(_.getPath.getName).flatMap(genNumber)
-        .filter(g => g < batchId && fs.exists(
-          new org.apache.hadoop.fs.Path(s"$storePath/gen=$g/_SUCCESS")))
-    if (gens.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        urlFpGenSchema)
-    else spark.read.schema(urlFpGenSchema).parquet(s"$storePath/gen=${gens.max}")
+  /** Every `gen=<n>` generation directory under `storePath` as (n, dir);
+    * a store that does not exist yet has none. */
+  private def generations(fs: FileSystem, storePath: String): Seq[(Long, Path)] = {
+    val dir = new Path(storePath)
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath)
+      .flatMap(p => genNumber(p.getName).map(_ -> p))
   }
+
+  /** The newest COMMITTED generation strictly OLDER than `before`:
+    * committed = its `marker` file is present (`_SUCCESS` for
+    * [[ingestBatchUrlMerge]]'s snapshots, `_BANDS` for the parted store,
+    * written after the band data so its presence proves the whole
+    * generation); a dir without it is a crashed write, skipped.
+    * Strictly-older is the replay guarantee: batch N's own generation is
+    * never its read, so a batch replayed AFTER its merge committed still
+    * sees the pre-merge state it first saw. */
+  private def newestCommittedGen(fs: FileSystem, storePath: String,
+      before: Long, marker: String): Option[Long] =
+    generations(fs, storePath).map(_._1)
+      .filter(g => g < before && fs.exists(new Path(s"$storePath/gen=$g/$marker")))
+      .maxOption
+
+  /** Delete every generation whose number is `dead`; returns how many. */
+  private def pruneGenerations(fs: FileSystem, storePath: String)(
+      dead: Long => Boolean): Int = {
+    val stale = generations(fs, storePath).filter(g => dead(g._1))
+    stale.foreach { case (_, p) => fs.delete(p, true) }
+    stale.length
+  }
+
+  /** One row per canonical URL of a (doc_id, url, text) batch: the latest
+    * arrival (max doc_id) wins — the keyed-batch MERGE contract, applied
+    * batch-side. Columns (canonical, doc_id, url, fp = md5(text)). */
+  private def urlKeyed(batch: DataFrame): DataFrame =
+    batch.dropDuplicates("doc_id")
+      .select(graft.operators.Dedup.canonicalUrl(col("url")).as("canonical"),
+        col("doc_id"), col("url"), md5(col("text")).as("fp"))
+      .groupBy(col("canonical"))
+      .agg(max(struct(col("doc_id"), col("url"), col("fp"))).as("m"))
+      .select(col("canonical"), col("m.doc_id").as("doc_id"),
+        col("m.url").as("url"), col("m.fp").as("fp"))
+
+  /** Emit each batch key's provenance against the PRE-merge `history` —
+    * `new`, `unchanged` (skippable) or `changed` (must re-enter the
+    * content pipeline) — under this batch's own dynamic-overwrite
+    * `batch_id=<id>` partition, so a replay overwrites it. */
+  private def emitProvenance(keyed: DataFrame, history: DataFrame,
+      outPath: String, batchId: Long): Unit =
+    overwriteBatch(keyed
+      .join(history.select(col("canonical"), col("fp").as("h_fp")),
+        Seq("canonical"), "left")
+      .select(col("canonical"), col("doc_id"), col("url"), col("fp"),
+        when(col("h_fp").isNull, "new")
+          .when(col("fp") === col("h_fp"), "unchanged")
+          .otherwise("changed").as("status")),
+      "batch_id", batchId, outPath)
 
   /** One micro-batch of the URL-MERGE ingest loop — the streaming twin of
     * `dedup_url_merge` (the re-crawl CONTENT-CHANGE case [[ingestBatchUrl]]
@@ -1025,32 +864,16 @@ object StreamingOps extends Serializable {
   def ingestBatchUrlMerge(batch: DataFrame, storePath: String, outPath: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    // one row per canonical: latest arrival (max doc_id) wins — the
-    // keyed-batch MERGE contract, applied batch-side
-    val keyed = batch.dropDuplicates("doc_id")
-      .select(graft.operators.Dedup.canonicalUrl(col("url")).as("canonical"),
-        col("doc_id"), col("url"), md5(col("text")).as("fp"))
-      .groupBy(col("canonical"))
-      .agg(max(struct(col("doc_id"), col("url"), col("fp"))).as("m"))
-      .select(col("canonical"), col("m.doc_id").as("doc_id"),
-        col("m.url").as("url"), col("m.fp").as("fp"))
-      .persist()
+    val fs = fsOf(spark, storePath)
+    val keyed = urlKeyed(batch).persist()
     try {
-      val store = readUrlMergeStore(spark, storePath, batchId)
+      val read = newestCommittedGen(fs, storePath, batchId, "_SUCCESS")
+      val store = read
+        .map(g => spark.read.schema(urlFpGenSchema).parquet(s"$storePath/gen=$g"))
+        .getOrElse(empty(spark, urlFpGenSchema))
       // provenance vs the PRE-merge store: emitted first, under this
       // batch's own dynamic-overwrite partition (replay overwrites)
-      keyed
-        .join(store.select(col("canonical"), col("fp").as("h_fp")),
-          Seq("canonical"), "left")
-        .select(col("canonical"), col("doc_id"), col("url"), col("fp"),
-          when(col("h_fp").isNull, "new")
-            .when(col("fp") === col("h_fp"), "unchanged")
-            .otherwise("changed").as("status"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(outPath)
+      emitProvenance(keyed, store, outPath, batchId)
       // MERGE: unmatched store rows carry over, batch rows replace/insert —
       // a complete new generation, committed by its _SUCCESS marker
       store.join(keyed.select(col("canonical")), Seq("canonical"), "left_anti")
@@ -1061,27 +884,15 @@ object StreamingOps extends Serializable {
       // everything at-or-newer than it is either this batch's own write
       // or another writer's state this prune has no business touching
       // (a batchId restart against an existing store must never wipe
-      // history — when nothing older than batchId exists, keep is empty
-      // and NOTHING is deleted). `keep` applies the SAME `_SUCCESS`
-      // committed filter as the read above — a crashed uncommitted
-      // newer gen (dir present, no marker) is NOT the anchor; anchoring
-      // on it would delete the committed gen this batch actually read,
-      // and a replay after that would see an empty store (data loss).
+      // history — when nothing older than batchId exists, `read` is empty
+      // and NOTHING is deleted). The anchor is the `_SUCCESS`-committed
+      // generation the read above used — a crashed uncommitted newer gen
+      // (dir present, no marker) is NOT the anchor; anchoring on it would
+      // delete the committed gen this batch actually read, and a replay
+      // after that would see an empty store (data loss).
       // Best-effort — a leftover gen is storage, not a defect; a
       // deleted live gen would be data loss.
-      val dir = new org.apache.hadoop.fs.Path(storePath)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val keep = fs.listStatus(dir).filter(_.isDirectory)
-        .map(_.getPath.getName).flatMap(genNumber)
-        .filter(g => g < batchId && fs.exists(
-          new org.apache.hadoop.fs.Path(s"$storePath/gen=$g/_SUCCESS")))
-        .sorted.lastOption
-      keep.foreach { k =>
-        fs.listStatus(dir).filter(_.isDirectory).map(_.getPath)
-          .foreach { p =>
-            genNumber(p.getName).filter(_ < k).foreach(_ => fs.delete(p, true))
-          }
-      }
+      read.foreach(k => pruneGenerations(fs, storePath)(_ < k))
     } finally keyed.unpersist()
   }
 
@@ -1132,17 +943,9 @@ object StreamingOps extends Serializable {
       outPath: String, batchId: Long, numBands: Int = 8): Unit = {
     val spark = batch.sparkSession
     val bandExpr = pmod(xxhash64(col("canonical")), lit(numBands.toLong))
-    val keyed = batch.dropDuplicates("doc_id")
-      .select(graft.operators.Dedup.canonicalUrl(col("url")).as("canonical"),
-        col("doc_id"), col("url"), md5(col("text")).as("fp"))
-      .groupBy(col("canonical"))
-      .agg(max(struct(col("doc_id"), col("url"), col("fp"))).as("m"))
-      .select(col("canonical"), col("m.doc_id").as("doc_id"),
-        col("m.url").as("url"), col("m.fp").as("fp"))
-      .persist()
+    val keyed = urlKeyed(batch).persist()
     try {
-      val fs = new org.apache.hadoop.fs.Path(storePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = fsOf(spark, storePath)
       // compaction high-water mark: an id collision with a published
       // compaction would static-overwrite the compacted generation and
       // mask it behind resolving parent pointers — fail loud instead
@@ -1159,38 +962,18 @@ object StreamingOps extends Serializable {
       // pruning predicate, not data movement
       val touched = keyed.select(bandExpr.as("band")).distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
-      val keep = newestCommittedGen(fs, storePath, batchId)
+      val keep = newestCommittedGen(fs, storePath, batchId, "_BANDS")
       val parent = keep
         .map(g => readBandManifest(fs, s"$storePath/gen=$g"))
         .getOrElse(Map.empty[Long, Long])
-      // pre-merge slice of the TOUCHED bands only: group the manifest's
-      // touched entries by source generation, one partition-pruned read
-      // per generation directory
-      val slices = parent.view.filterKeys(touched.contains).toSeq
-        .groupMap(_._2)(_._1).toSeq.map { case (g, bands) =>
-          spark.read.parquet(s"$storePath/gen=$g")
-            .filter(col("band").isInCollection(bands))
-            .select(col("canonical"), col("doc_id"), col("url"), col("fp"))
-        }
-      val slice = slices.reduceOption(_ unionByName _).getOrElse(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          urlFpGenSchema))
+      // pre-merge slice of the TOUCHED bands only
+      val slice = bandView(spark, storePath, parent.filter(e => touched.contains(e._1)))
+        .map(_.drop("band"))
+        .getOrElse(empty(spark, urlFpGenSchema))
       // provenance vs the pre-merge slice (a key's history row can live
       // nowhere but its own band), emitted first under this batch's own
       // dynamic-overwrite partition — [[ingestBatchUrlMerge]] verbatim
-      keyed
-        .join(slice.select(col("canonical"), col("fp").as("h_fp")),
-          Seq("canonical"), "left")
-        .select(col("canonical"), col("doc_id"), col("url"), col("fp"),
-          when(col("h_fp").isNull, "new")
-            .when(col("fp") === col("h_fp"), "unchanged")
-            .otherwise("changed").as("status"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(outPath)
+      emitProvenance(keyed, slice, outPath, batchId)
       // MERGE of the touched bands only: unmatched slice rows carry over,
       // batch rows replace/insert; static overwrite of gen=<batchId> —
       // a directory exclusively this batch's, so replay rewrites it whole
@@ -1209,12 +992,7 @@ object StreamingOps extends Serializable {
       // go. Nothing is deleted when no older generation exists.
       keep.foreach { k =>
         val live = parent.values.toSet ++ manifest.values.toSet + k
-        fs.listStatus(new org.apache.hadoop.fs.Path(storePath))
-          .filter(_.isDirectory).map(_.getPath)
-          .foreach { p =>
-            genNumber(p.getName).filter(g => g < k && !live.contains(g))
-              .foreach(_ => fs.delete(p, true))
-          }
+        pruneGenerations(fs, storePath)(g => g < k && !live(g))
       }
     } finally keyed.unpersist()
   }
@@ -1222,40 +1000,25 @@ object StreamingOps extends Serializable {
   /** The SERVING read of a [[ingestBatchUrlMergeParted]] store: every band
     * resolved through the newest committed manifest — the view a frontier
     * consumer (or the next compaction) scans. Empty store → empty frame. */
-  def urlMergePartedStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    newestCommittedGen(fs, storePath, Long.MaxValue) match {
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], urlFpGenSchema)
-      case Some(g) =>
-        readBandManifest(fs, s"$storePath/gen=$g").toSeq
-          .groupMap(_._2)(_._1).toSeq.map { case (src, bands) =>
-            spark.read.parquet(s"$storePath/gen=$src")
-              .filter(col("band").isInCollection(bands))
-              .select(col("canonical"), col("doc_id"), col("url"), col("fp"))
-          }
-          .reduceOption(_ unionByName _)
-          .getOrElse(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            urlFpGenSchema))
-    }
+  def urlMergePartedStore(spark: SparkSession, storePath: String): DataFrame = {
+    val fs = fsOf(spark, storePath)
+    newestCommittedGen(fs, storePath, Long.MaxValue, "_BANDS")
+      .flatMap(g => bandView(spark, storePath, readBandManifest(fs, s"$storePath/gen=$g")))
+      .map(_.drop("band"))
+      .getOrElse(empty(spark, urlFpGenSchema))
   }
 
-  /** Newest generation strictly older than `batchId` whose `_BANDS`
-    * manifest exists (the parted commit marker — written after the band
-    * data, so its presence proves the whole generation). */
-  private def newestCommittedGen(fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String, batchId: Long): Option[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).filter(_.isDirectory)
-      .map(_.getPath.getName).flatMap(genNumber)
-      .filter(g => g < batchId && fs.exists(
-        new org.apache.hadoop.fs.Path(s"$storePath/gen=$g/_BANDS")))
-      .sorted.lastOption
-  }
+  /** A parted store's rows as `manifest` (band → the generation holding
+    * it) resolves them: one partition-pruned read per source generation.
+    * Columns (canonical, doc_id, url, fp, band); None for an empty
+    * manifest. */
+  private def bandView(spark: SparkSession, storePath: String,
+      manifest: Map[Long, Long]): Option[DataFrame] =
+    manifest.toSeq.groupMap(_._2)(_._1).toSeq.map { case (g, bands) =>
+      spark.read.parquet(s"$storePath/gen=$g")
+        .filter(col("band").isInCollection(bands))
+        .select(col("canonical"), col("doc_id"), col("url"), col("fp"), col("band"))
+    }.reduceOption(_ unionByName _)
 
   private def readBandManifest(fs: org.apache.hadoop.fs.FileSystem,
       genDir: String): Map[Long, Long] = {
@@ -1458,12 +1221,8 @@ object StreamingOps extends Serializable {
     * Empty/uncommitted store → no-op, -1. */
   def compactPartedStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, compactId: Long, vacuum: Boolean = true): Int = {
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing =
-      if (!fs.exists(dir)) Array.empty[Long]
-      else fs.listStatus(dir).filter(_.isDirectory)
-        .map(_.getPath.getName).flatMap(genNumber)
+    val fs = fsOf(spark, storePath)
+    val existing = generations(fs, storePath).map(_._1)
     val selfCommitted = fs.exists(
       new org.apache.hadoop.fs.Path(s"$storePath/gen=$compactId/_BANDS"))
     require(existing.forall(g => g < compactId || g == compactId),
@@ -1476,20 +1235,12 @@ object StreamingOps extends Serializable {
       // idempotent to skip, the marker rewrite is idempotent by content
       writeCompactMarker(fs, storePath, compactId)
       if (vacuum) vacuumPartedStore(spark, storePath) else 0
-    } else newestCommittedGen(fs, storePath, compactId) match {
+    } else newestCommittedGen(fs, storePath, compactId, "_BANDS") match {
       case None => -1 // nothing committed to compact
       case Some(g) =>
-        // the serving view, band column preserved: read each source
-        // generation's referenced bands (the manifest-resolved frame)
+        // the serving view, band column preserved
         val manifest = readBandManifest(fs, s"$storePath/gen=$g")
-        val view = manifest.toSeq.groupMap(_._2)(_._1).toSeq.map {
-          case (src, bands) =>
-            spark.read.parquet(s"$storePath/gen=$src")
-              .filter(col("band").isInCollection(bands))
-              .select(col("canonical"), col("doc_id"), col("url"), col("fp"),
-                col("band"))
-        }.reduceOption(_ unionByName _)
-        view match {
+        bandView(spark, storePath, manifest) match {
           case None => -1 // committed but empty manifest — nothing to write
           case Some(v) =>
             v.write.mode("overwrite").partitionBy("band")
@@ -1516,47 +1267,14 @@ object StreamingOps extends Serializable {
     * generation → 0. */
   def vacuumPartedStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String): Int = {
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    newestCommittedGen(fs, storePath, Long.MaxValue) match {
+    val fs = fsOf(spark, storePath)
+    newestCommittedGen(fs, storePath, Long.MaxValue, "_BANDS") match {
       case None => 0
       case Some(g) =>
         val live = readBandManifest(fs, s"$storePath/gen=$g").values.toSet + g
-        val stale = fs.listStatus(dir).filter(_.isDirectory).map(_.getPath)
-          .filter(p => genNumber(p.getName).exists(n => n < g && !live(n)))
-        stale.foreach(p => fs.delete(p, true))
-        stale.length
+        pruneGenerations(fs, storePath)(n => n < g && !live(n))
     }
   }
-
-  /** [[ingestBatchUrlMergeParted]] as a continuous foreachBatch loop —
-    * the crawl-frontier upsert stream at its O(touched-bands) cost. */
-  def ingestLoopUrlMergeParted(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String,
-      numBands: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchUrlMergeParted(batch, storePath, outPath, bid, numBands)
-      }
-      .start()
-
-  /** [[ingestBatchUrlMerge]] as a continuous foreachBatch loop — the
-    * crawl-frontier upsert stream. */
-  def ingestLoopUrlMerge(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchUrlMerge(batch, storePath, outPath, bid)
-      }
-      .start()
 
   /** One micro-batch of the IVF-PQ INDEX-MAINTENANCE loop — the streaming
     * twin of `knn_ivf_pq_incremental` (faiss `add` as a stream): encode the
@@ -1577,29 +1295,10 @@ object StreamingOps extends Serializable {
   def ingestBatchIvfPq(batch: DataFrame, centroids: DataFrame, cb: DataFrame,
       dim: Int, storePath: String, batchId: Long): Unit = {
     val n = graft.operators.Similarity.withNorm(batch.dropDuplicates("vec_id"))
-    graft.operators.Similarity
-      .ivfPqIndex(n, dim, centroids, cb, materializeResid = false)
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch")
-      .parquet(storePath)
+    overwriteBatch(graft.operators.Similarity
+      .ivfPqIndex(n, dim, centroids, cb, materializeResid = false),
+      "batch", batchId, storePath)
   }
-
-  /** [[ingestBatchIvfPq]] as a continuous foreachBatch loop. */
-  def ingestLoopIvfPq(
-      vecs: DataFrame,
-      centroids: DataFrame,
-      cb: DataFrame,
-      dim: Int,
-      storePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchIvfPq(batch, centroids, cb, dim, storePath, bid)
-      }
-      .start()
 
   private def spanStoreSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("h",
@@ -1633,28 +1332,10 @@ object StreamingOps extends Serializable {
     try {
       graft.operators.Dedup.spanAuditOn(batch, store, g1)
         .write.mode("append").parquet(outPath)
-      g1.select(col("h")).distinct()
-        .join(store, Seq("h"), "left_anti")
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(spanPath)
+      overwriteBatch(g1.select(col("h")).distinct()
+        .join(store, Seq("h"), "left_anti"), "batch", batchId, spanPath)
     } finally g1.unpersist()
   }
-
-  /** [[ingestBatchSpans]] as a continuous foreachBatch loop. */
-  def ingestLoopSpans(
-      docs: DataFrame,
-      spanPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchSpans(batch, spanPath, outPath, bid)
-      }
-      .start()
 
   private def driftStoreSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("t",
@@ -1723,35 +1404,13 @@ object StreamingOps extends Serializable {
             coalesce(col("c"), lit(0L)).as("cb"))
           .persist()
         try {
-          graft.operators.TrainingData.psiReport(m)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
+          overwriteBatch(graft.operators.TrainingData.psiReport(m),
+            "batch_id", batchId, outPath)
         } finally m.unpersist()
       }
-      bcnt.withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(storePath)
+      overwriteBatch(bcnt, "batch", batchId, storePath)
     } finally bcnt.unpersist()
   }
-
-  /** [[ingestBatchDrift]] as a continuous foreachBatch loop — the
-    * production drift alarm riding the ingest stream itself. */
-  def driftStream(
-      docs: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchDrift(batch, storePath, outPath, bid)
-      }
-      .start()
 
   /** One micro-batch of the EMBEDDING-drift monitor — the streaming twin
     * of `drift_embedding_psi`, closing the drift family: assign the
@@ -1766,51 +1425,12 @@ object StreamingOps extends Serializable {
     * history embeddings are never re-assigned, each batch costs its own
     * assignment plus a K-row merge. `batch` needs (vec_id, embedding). */
   def ingestBatchEmbeddingDrift(batch: DataFrame, centroids: DataFrame,
-      storePath: String, outPath: String, batchId: Long): Unit = {
-    def dot(a: Column, b: Column): Column =
-      graft.functions.VectorFunctions.dotProduct(a, b)
-    val normed = batch.dropDuplicates("vec_id")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
+      storePath: String, outPath: String, batchId: Long): Unit =
     psiMonitorBatch(
-      graft.operators.Similarity.ivfListsFrom(normed, centroids)
+      graft.operators.Similarity.ivfListsFrom(normed(batch), centroids)
         .groupBy(col("cid").cast("string").as("t"))
         .agg(count(lit(1)).as("c")),
       storePath, outPath, batchId)
-  }
-
-  /** [[ingestBatchEmbeddingDrift]] as a continuous foreachBatch loop — the
-    * codebook-staleness alarm riding the embedding ingest stream.
-    * `centroids` is the persisted one-row centroid table the serving index
-    * was trained on. */
-  def ingestLoopEmbeddingDrift(
-      vecs: DataFrame,
-      centroids: DataFrame,
-      storePath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        ingestBatchEmbeddingDrift(batch, centroids, storePath, outPath, bid)
-      }
-      .start()
-
-  /** [[ingestLoop]]'s near-dup twin: the signature + band stores are the
-    * accumulator; each micro-batch folds into them via foreachBatch. */
-  def ingestLoopNearDup(
-      docs: DataFrame,
-      sigPath: String,
-      bandPath: String,
-      outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatchNearDup(batch, sigPath, bandPath, outPath)
-      }
-      .start()
 
   /** Custom-state session record: bounds in epoch millis + event count. */
   final case class SessionAcc(start: Long, end: Long, n: Long)

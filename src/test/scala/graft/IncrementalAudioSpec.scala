@@ -68,18 +68,21 @@ class IncrementalAudioSpec extends AnyFunSuite {
     }.find { c => val d = hamming(h0, fp(c)); d >= 1 && d <= ImageDedup.MaxDist }.get
     val tmp = java.nio.file.Files.createTempDirectory("graft-audloop").toString
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = graft.streaming.StreamingOps.ingestLoopAudio(
-      input.toDF().toDF("doc_id", "payload"),
-      s"$tmp/fp", s"$tmp/band", s"$tmp/out", s"$tmp/ckpt")
+    val q = graft.streaming.StreamingOps.ingestLoop(
+      input.toDF().toDF("doc_id", "payload"), s"$tmp/ckpt")((b, _) =>
+      graft.streaming.StreamingOps.ingestBatchMedia(
+        b, AudioDedup.fingerprints, s"$tmp/fp", s"$tmp/band", s"$tmp/out"))
     try {
       input.addData((1L, MediaCodec.encodeWav(8000, base)))
       q.processAllAvailable()
       input.addData(
         (2L, MediaCodec.encodeWav(8000, nearCopy)),     // near the stored clip
-        (3L, MediaCodec.encodeWav(8000, clip(97, 1777)))) // unrelated
+        (3L, MediaCodec.encodeWav(8000, clip(97, 1777))), // unrelated
+        (4L, Array[Byte](1, 2, 3)))                      // undecodable
       q.processAllAvailable()
       val kept = spark.read.parquet(s"$tmp/out").collect().map(_.getLong(0)).toSet
-      assert(kept === Set(1L, 3L), s"near-copy must drop at ingest: $kept")
+      assert(kept === Set(1L, 3L, 4L),
+        s"near-copy must drop at ingest, undecodable payload must be kept: $kept")
     } finally q.stop()
   }
 }

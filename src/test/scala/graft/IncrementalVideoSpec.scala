@@ -56,17 +56,20 @@ class IncrementalVideoSpec extends AnyFunSuite {
 
     val base = java.nio.file.Files.createTempDirectory("graft-vidloop").toString
     val input = MemoryStream[(Long, Array[Byte])]
-    val q = graft.streaming.StreamingOps.ingestLoopVideo(
-      input.toDF().toDF("doc_id", "payload"),
-      s"$base/fp", s"$base/band", s"$base/out", s"$base/ckpt")
+    val q = graft.streaming.StreamingOps.ingestLoop(
+      input.toDF().toDF("doc_id", "payload"), s"$base/ckpt")((b, _) =>
+      graft.streaming.StreamingOps.ingestBatchMedia(b,
+        (s, ds) => graft.operators.VideoDedup.fingerprints(s, ds, _ => 1),
+        s"$base/fp", s"$base/band", s"$base/out"))
     try {
       input.addData((1L, orig))
       q.processAllAvailable()
-      input.addData((2L, reenc), (3L, other))
+      input.addData((2L, reenc), (3L, other), (4L, Array[Byte](1, 2, 3)))
       q.processAllAvailable()
       val kept = spark.read.parquet(s"$base/out").collect().map(_.getLong(0)).toSet
-      assert(kept === Set(1L, 3L),
-        s"re-encoded clip must drop against the stored signature: $kept")
+      assert(kept === Set(1L, 3L, 4L),
+        s"re-encoded clip must drop against the stored signature, " +
+          s"undecodable payload must be kept: $kept")
     } finally q.stop()
   }
 }

@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.MediaCodec
+import graft.operators.{ImageDedup, MediaCodec}
 import graft.streaming.StreamingOps
 
 final case class StreamImg(doc_id: Long, payload: Array[Byte])
 
-/** `ingestLoopImage`: a re-encoded copy of a stored image must drop against
+/** The image ingest loop (`ingestLoop` over `ingestBatchMedia` with the
+  * dHash fingerprinter): a re-encoded copy of a stored image must drop against
   * the accumulated fingerprint store in a LATER batch, batch-internal twins
   * keep only the first id, unrelated and undecodable payloads survive. */
 class IngestImageSpec extends AnyFunSuite {
@@ -40,8 +41,9 @@ class IngestImageSpec extends AnyFunSuite {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft-imgloop").toString
     val input = MemoryStream[StreamImg]
-    val q = StreamingOps.ingestLoopImage(
-      input.toDF(), s"$base/fp", s"$base/band", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.ingestLoop(input.toDF(), s"$base/ckpt")((b, _) =>
+      StreamingOps.ingestBatchMedia(b, ImageDedup.fingerprints,
+        s"$base/fp", s"$base/band", s"$base/out"))
     val a = hillBmp(32, 32, 12, 10)
     try {
       input.addData(StreamImg(1, a), StreamImg(2, rampBmp(32, 32, vertical = true)))

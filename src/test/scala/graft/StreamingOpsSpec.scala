@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingOps
@@ -545,8 +545,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft-ingest").toString
     val (storePath, outPath, ckpt) = (s"$base/store", s"$base/out", s"$base/ckpt")
     val input = MemoryStream[StreamDoc]
-    val q = StreamingOps.ingestLoop(
-      input.toDF().select("doc_id", "text"), storePath, outPath, ckpt)
+    val q = StreamingOps.ingestLoop(input.toDF().select("doc_id", "text"), ckpt)(
+      (b, _) => StreamingOps.ingestBatch(b, storePath, outPath))
     val a = "alpha beta gamma"
     val b = "delta epsilon zeta"
     val c = "eta theta iota"
@@ -589,8 +589,9 @@ class StreamingOpsSpec extends AnyFunSuite {
     val c = "eta theta iota"
     // backlog before the query even starts — the crashed-loop restart shape
     input.addData(StreamDoc(1, "s0", a, t(0)), StreamDoc(2, "s0", b, t(0)))
-    val q1 = StreamingOps.ingestCatchUp(
-      input.toDF().select("doc_id", "text"), storePath, outPath, ckpt)
+    val q1 = StreamingOps.ingestLoop(
+      input.toDF().select("doc_id", "text"), ckpt, Trigger.AvailableNow())(
+      (b, _) => StreamingOps.ingestBatch(b, storePath, outPath))
     assert(q1.awaitTermination(60000), "AvailableNow must terminate on its own")
     assert(spark.read.parquet(outPath).select("doc_id").collect()
       .map(_.getLong(0)).toSet === Set(1L, 2L))
@@ -599,8 +600,9 @@ class StreamingOpsSpec extends AnyFunSuite {
     input.addData(
       StreamDoc(3, "s1", a.split(" ").reverse.mkString(" "), t(1)),
       StreamDoc(4, "s1", c, t(1)))
-    val q2 = StreamingOps.ingestCatchUp(
-      input.toDF().select("doc_id", "text"), storePath, outPath, ckpt)
+    val q2 = StreamingOps.ingestLoop(
+      input.toDF().select("doc_id", "text"), ckpt, Trigger.AvailableNow())(
+      (b, _) => StreamingOps.ingestBatch(b, storePath, outPath))
     assert(q2.awaitTermination(60000), "second catch-up must terminate on its own")
     val kept = spark.read.parquet(outPath).select("doc_id").collect()
       .map(_.getLong(0)).toSet
@@ -613,9 +615,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft-neardup").toString
     val input = MemoryStream[StreamDoc]
-    val q = StreamingOps.ingestLoopNearDup(
-      input.toDF().select("doc_id", "text"),
-      s"$base/sig", s"$base/band", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.ingestLoop(input.toDF().select("doc_id", "text"), s"$base/ckpt")(
+      (b, _) => StreamingOps.ingestBatchNearDup(b, s"$base/sig", s"$base/band", s"$base/out"))
     val long = (1 to 20).map(i => s"w$i").mkString(" ")
     val novel = (1 to 20).map(i => s"v$i").mkString(" ")
     try {
@@ -642,9 +643,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     val W = graft.operators.Dedup.SpanWindow
     val base = java.nio.file.Files.createTempDirectory("graft-spanloop").toString
     val input = MemoryStream[StreamDoc]
-    val q = StreamingOps.ingestLoopSpans(
-      input.toDF().select("doc_id", "text"),
-      s"$base/spans", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.ingestLoop(input.toDF().select("doc_id", "text"), s"$base/ckpt")(
+      StreamingOps.ingestBatchSpans(_, s"$base/spans", s"$base/out", _))
     val para = (1 to W).map(i => s"p$i").mkString(" ") // exactly one window
     val other = (1 to W).map(i => s"q$i").mkString(" ")
     try {
@@ -689,9 +689,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft-driftloop").toString
     val input = MemoryStream[StreamDoc]
     import org.apache.spark.sql.functions.col
-    val q = StreamingOps.driftStream(
-      input.toDF().select("doc_id", "text"),
-      s"$base/store", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.ingestLoop(input.toDF().select("doc_id", "text"), s"$base/ckpt")(
+      StreamingOps.ingestBatchDrift(_, s"$base/store", s"$base/out", _))
     val steady = "alpha alpha alpha beta gamma"
     try {
       input.addData(StreamDoc(1, "s0", steady, t(0)))
@@ -745,8 +744,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft-urlloop").toString
     val input = MemoryStream[UrlDoc]
-    val q = StreamingOps.ingestLoopUrl(
-      input.toDF(), s"$base/store", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.ingestLoop(input.toDF(), s"$base/ckpt")(
+      (b, _) => StreamingOps.ingestBatchUrl(b, s"$base/store", s"$base/out"))
     try {
       input.addData(
         UrlDoc(1L, "https://example.org/a"),
@@ -781,8 +780,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft-urlmerge").toString
     val input = MemoryStream[CrawlDoc]
-    val q = StreamingOps.ingestLoopUrlMerge(
-      input.toDF(), s"$base/store", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.ingestLoop(input.toDF(), s"$base/ckpt")(
+      StreamingOps.ingestBatchUrlMerge(_, s"$base/store", s"$base/out", _))
     try {
       input.addData(
         CrawlDoc(1L, "https://example.org/a", "alpha v1"),
@@ -1286,9 +1285,9 @@ class StreamingOpsSpec extends AnyFunSuite {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft-chunkloop").toString
     val input = MemoryStream[UrlDoc] // (doc_id, url) stands in for (doc_id, text)
-    val q = StreamingOps.ingestLoopChunks(
-      input.toDF().withColumnRenamed("url", "text"),
-      s"$base/store", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.ingestLoop(
+      input.toDF().withColumnRenamed("url", "text"), s"$base/ckpt")(
+      (b, _) => StreamingOps.ingestBatchChunks(b, s"$base/store", s"$base/out"))
     val para = (1 to 32).map(i => s"w$i").mkString(" ")   // one full window
     val tail = (1 to 8).map(i => s"x$i").mkString(" ")
     try {
@@ -1328,9 +1327,9 @@ class StreamingOpsSpec extends AnyFunSuite {
           org.apache.spark.sql.functions.col("chunk_text")).as("chunk_text")))
     val cents = graft.operators.Similarity.centroidArray(histEmb, 16)
     val input = MemoryStream[UrlDoc] // (doc_id, url) stands in for (doc_id, text)
-    val q = StreamingOps.ingestLoopChunkSemantic(
-      input.toDF().withColumnRenamed("url", "text"),
-      cents, s"$base/mem", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.ingestLoop(
+      input.toDF().withColumnRenamed("url", "text"), s"$base/ckpt")(
+      StreamingOps.ingestBatchChunkSemantic(_, cents, s"$base/mem", s"$base/out", _))
     try {
       input.addData(UrlDoc(1L, boiler))
       q.processAllAvailable()
@@ -1412,6 +1411,26 @@ class StreamingOpsSpec extends AnyFunSuite {
       s"replay audit drifted: ${audits.toSet} vs ${firstAudit.toSet}")
   }
 
+  test("ingestBatchSpans: a first batch with no full window leaves an empty " +
+      "store partition that the next batch still reads") {
+    import spark.implicits._
+    val W = graft.operators.Dedup.SpanWindow
+    val base = java.nio.file.Files.createTempDirectory("graft-spanempty").toString
+    // batch 0: fewer than SpanWindow tokens → no span hashes → a zero-row
+    // partitioned store write (a directory with no parquet files in it)
+    StreamingOps.ingestBatchSpans(Seq((1L, "too short")).toDF("doc_id", "text"),
+      s"$base/spans", s"$base/out", 0L)
+    val para = (1 to W).map(i => s"p$i").mkString(" ")
+    StreamingOps.ingestBatchSpans(Seq((2L, para)).toDF("doc_id", "text"),
+      s"$base/spans", s"$base/out", 1L)
+    val audit = spark.read.parquet(s"$base/out")
+      .select("doc_id", "n_spans", "n_hist_dup").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(audit === Map(1L -> ((0L, 0L)), 2L -> ((1L, 0L))), s"audit $audit")
+    assert(spark.read.parquet(s"$base/spans").count() === 1L,
+      "batch 1's one window lands in the store")
+  }
+
   test("ingestLoopEmbeddingDrift: bootstrap silent, steady quiet, a cluster-mass " +
       "shift fires the alarm; replay never double-counts") {
     import spark.implicits._
@@ -1427,9 +1446,9 @@ class StreamingOpsSpec extends AnyFunSuite {
       .withColumn("nrm",
         sqrt(graft.functions.VectorFunctions.dotProduct(col("e"), col("e"))))
     val cents = graft.operators.Similarity.centroidArray(boot, 2)
-    val q = StreamingOps.ingestLoopEmbeddingDrift(
-      input.toDF().select("vec_id", "embedding"),
-      cents, s"$base/store", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.ingestLoop(
+      input.toDF().select("vec_id", "embedding"), s"$base/ckpt")(
+      StreamingOps.ingestBatchEmbeddingDrift(_, cents, s"$base/store", s"$base/out", _))
     def nearE1(id: Long) = StreamVec(id, Array(1f, 0.01f * id))
     def nearE2(id: Long) = StreamVec(id, Array(0.01f * id, 1f))
     try {
@@ -1493,9 +1512,9 @@ class StreamingOpsSpec extends AnyFunSuite {
       .withColumn("nrm",
         sqrt(graft.functions.VectorFunctions.dotProduct(col("e"), col("e"))))
     val cents = graft.operators.Similarity.centroidArray(boot, 2)
-    val q = StreamingOps.ingestLoopSemantic(
-      input.toDF().select("vec_id", "embedding"),
-      cents, s"$base/mem", s"$base/out", s"$base/ckpt")
+    val q = StreamingOps.ingestLoop(
+      input.toDF().select("vec_id", "embedding"), s"$base/ckpt")(
+      (b, _) => StreamingOps.ingestBatchSemantic(b, cents, s"$base/mem", s"$base/out"))
     try {
       // batch 1: v2 is a near-exact copy of v1 (same cluster, cos ≈ 1) —
       // dropped in-batch by the first-arrival rule; v3 lives in the other
