@@ -20,6 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    parquet readers reject them otherwise);
   *  - RocksDB streaming state store: spillable, off-heap — the posture an
   *    unbounded-state fold needs (the reference's store is process-memory);
+  *  - graft's local filesystem ([[ForkFreeLocalFs]]) for `file:` paths:
+  *    without the native `libhadoop`, Hadoop's own forks a `chmod` or
+  *    `readlink` process for each local metadata call, and those forks, not
+  *    the fold, set the cost of every streaming commit (checkpoint, offset
+  *    and commit logs, state-store files). Only those calls change; the
+  *    `.crc` sidecars and Spark's checkpoint file manager are Hadoop's own;
   *  - graft's SQL functions, optimizer rule and planner strategy registered
   *    before the session is returned.
   */
@@ -66,6 +72,8 @@ object Graft {
             shufflePartitions.getOrElse(cores).toString)
           .config("spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+          .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+          .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
         val hostMaster =
           if (sys.props.contains("spark.master")) None else Some(s"local[$cores]")
         val spark = master.orElse(hostMaster).fold(base)(base.master).getOrCreate()

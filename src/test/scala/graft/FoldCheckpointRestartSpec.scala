@@ -37,11 +37,15 @@ class FoldCheckpointRestartSpec extends AnyFunSuite {
   /** Runs `batches` through `mkStream`, stopping and re-starting the query
     * from the same checkpoint after `killAfter` batches. Every (batchId,
     * row) emission lands in the returned buffer; restart replays are
-    * harmless because callers fold by batchId (last-write-wins / set). */
+    * harmless because callers fold by batchId (last-write-wins / set).
+    * `firstRunConf` is set on the session for the first query only (unset
+    * again once it has stopped), so the resumed query reads a checkpoint
+    * written under a different configuration. */
   private def runWithRestart[T](
       batches: Seq[Seq[OrderedUpdateEvent]], killAfter: Int,
       mkStream: org.apache.spark.sql.Dataset[OrderedUpdateEvent] =>
-        org.apache.spark.sql.Dataset[T]): Seq[(Long, T)] = {
+        org.apache.spark.sql.Dataset[T],
+      firstRunConf: Map[String, String] = Map.empty): Seq[(Long, T)] = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val ckpt = java.nio.file.Files.createTempDirectory("graft-fold-ckpt").toString
@@ -57,12 +61,15 @@ class FoldCheckpointRestartSpec extends AnyFunSuite {
         ()
       }
       .start()
-    val q1 = start()
+    firstRunConf.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      batches.take(killAfter).foreach { b =>
-        input.addData(b); q1.processAllAvailable()
-      }
-    } finally q1.stop() // the mid-corpus kill
+      val q1 = start()
+      try {
+        batches.take(killAfter).foreach { b =>
+          input.addData(b); q1.processAllAvailable()
+        }
+      } finally q1.stop() // the mid-corpus kill
+    } finally firstRunConf.keys.foreach(spark.conf.unset)
     val q2 = start()    // brand-new query, same checkpoint: state restores
     try {
       batches.drop(killAfter).foreach { b =>
@@ -95,6 +102,22 @@ class FoldCheckpointRestartSpec extends AnyFunSuite {
       runWithRestart(batches, killAfter = batches.size, InventoryStream.foldStream))
     assert(restarted === uninterrupted,
       "resume-from-checkpoint must be invisible in the final state")
+
+    // a checkpoint written under Hadoop's stock FileContext filesystem (as
+    // older builds did) resumes under graft's; `seen` holds the filesystem
+    // each query was built, and its checkpoint opened, under
+    val stockFs = "org.apache.hadoop.fs.local.LocalFs"
+    val seen = mutable.ArrayBuffer.empty[String]
+    val resumedFromStock = lastWriteWins(runWithRestart(batches, killAfter = 2,
+      ds => {
+        seen += org.apache.hadoop.fs.FileContext.getFileContext(new java.net.URI("file:///"),
+          spark.sessionState.newHadoopConf()).getDefaultFileSystem.getClass.getName
+        InventoryStream.foldStream(ds)
+      },
+      firstRunConf = Map("fs.AbstractFileSystem.file.impl" -> stockFs)))
+    assert(seen.toSeq === Seq(stockFs, classOf[ForkFreeLocalFs].getName))
+    assert(resumedFromStock === uninterrupted,
+      "a checkpoint from Hadoop's stock local filesystem must resume unchanged")
 
     // and both equal the oracled batch fold over the same corpus
     val batchFold = InventoryFold.query(spark, d).collect()

@@ -11,6 +11,17 @@ class GraftFacadeSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(s.conf.get("spark.hadoop.fs.file.impl") === classOf[ForkFreeLocalFileSystem].getName)
+    assert(s.conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ===
+      classOf[ForkFreeLocalFs].getName)
+    // FileSystem caches one instance per scheme: a stock instance cached
+    // before the session existed would bypass the conf above
+    val local = new java.net.URI("file:///")
+    val hadoopConf = s.sessionState.newHadoopConf()
+    assert(org.apache.hadoop.fs.FileSystem.get(local, hadoopConf).getClass ===
+      classOf[ForkFreeLocalFileSystem])
+    assert(org.apache.hadoop.fs.FileContext.getFileContext(local, hadoopConf)
+      .getDefaultFileSystem.getClass === classOf[ForkFreeLocalFs])
     // the SQL functions are registered when the session is created: no
     // explicit GraftExtensions.register call here
     val dot = s.sql("SELECT graft_dot(array(1.0d,2.0d), array(3.0d,4.0d)) AS d")
