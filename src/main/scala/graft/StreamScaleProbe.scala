@@ -74,7 +74,7 @@ object StreamScaleProbe {
         else urlDocs(copyBatch(c))
           .filter(pmod(col("doc_id"), lit(199L)) === 3 &&
             bandOf === (c % nb).toLong)
-      timed(graft.streaming.StreamingOps.ingestBatchUrlMergeParted(
+      timed(graft.streaming.StreamingOps.ingestBatchUrlMerge(
         batch, s"$workDir/urlp_store", s"$workDir/urlp_out", c.toLong, nb))
     }
 

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.{Actions, OrderedUpdateEvent}
+import graft.model.Actions
 
 /** The reference's core operator: the per-key stateful INC/DEC/REP fold
   * (InventoryCountUpdateEventUpdater.java:26-46 via
@@ -89,27 +89,4 @@ object InventoryFold {
        |                          CASE WHEN action='INC' THEN delta ELSE -delta END
        |                     ELSE 0 END) AS BIGINT) AS inv_count
        |FROM m GROUP BY product_code ORDER BY product_code""".stripMargin
-
-  /** Typed twin of [[fold]]: per-key in-memory sort + fold of the exact
-    * reference updater via [[Actions.foldAll]], so removal semantics on an
-    * unknown action (reset to 0, never keep the stale accumulator) match
-    * [[Actions.foldAllState]] and the streaming fold — unreachable through
-    * [[asUpdateEvents]]' 3-member enum but kept aligned so no latent
-    * divergence exists if raw actions ever reach this path. Semantically
-    * identical to [[fold]]; used as the differential cross-check in tests.
-    * Not the shipped plan — the window form stays fully inside codegen'd SQL,
-    * while this one round-trips through JVM objects and buffers one key's
-    * events (fine: per-key event counts are bounded in practice; a 100 TB run
-    * would prefer a secondary sort via repartitionAndSortWithinPartitions if
-    * keys were pathological). */
-  def foldTyped(spark: SparkSession, updates: Dataset[OrderedUpdateEvent]): DataFrame = {
-    import spark.implicits._
-    updates
-      .groupByKey(_.productCode)
-      .mapGroups { (key, it) =>
-        val ordered = it.toSeq.sortBy(_.eventOrder).map(e => (e.action, e.delta))
-        (key, Actions.foldAll(ordered).toLong)
-      }
-      .toDF("product_code", "inv_count")
-  }
 }

@@ -196,13 +196,6 @@ object MinHashLSH {
       .orderBy("d1", "d2")
   }
 
-  /** Spec-only since round 18 (not registered — see [[all]]): the
-    * engine-native production path, pinned by TrainingOpsSpec (LSH ≡ exact
-    * Jaccard at threshold); the registered, oracled surface is [[queryMd5]]. */
-  val query: QueryDef = QueryDef.noOracle("dedup_minhash_lsh") { (s, d) =>
-    nearDuplicates(Tables.documents(s, d))
-  }
-
   /** Count of agreeing signature lanes between two prefixed signature row
     * halves — the MinHash estimate of Jaccard is lanes/NumHashes. */
   private def agreeingLanes(aPrefix: String, bPrefix: String): Column =
@@ -290,7 +283,7 @@ object MinHashLSH {
 
   /** md5-keyed MinHash-LSH twin, fully DuckDB-oracled — the move that took
     * the sign-bit LSH family out of the no_oracle set, applied to MinHash
-    * banding: the production path ([[query]]) stays on engine-native
+    * banding: the production path ([[nearDuplicates]]) stays on engine-native
     * xxhash64 (the codegen'd [[graft.functions.MinHashSig]] projection —
     * ~ns/hash, irreducibly engine-native), while this twin re-keys the
     * SAME algorithm on md5 so DuckDB replays every stage — per-lane
@@ -570,8 +563,8 @@ object MinHashLSH {
   def md5MinLanes: Int = math.ceil(Threshold * Md5Lanes).toInt
 
   /** Registry surface (round 18): the fully-DuckDB-oracled md5-keyed forms
-    * ONLY — the xxhash64 [[query]]/[[incrementalMinHash]] stay the
-    * documented production path and remain spec-verified internals
+    * ONLY — the xxhash64 [[nearDuplicates]]/[[incrementalMinHash]] stay
+    * the documented production path and remain spec-verified internals
     * (TrainingOpsSpec LSH ≡ exact, IncrementalMinHashSpec keep rule +
     * exact-sibling agreement), but as registry rows they carried no oracle
     * and duplicated the twins' pipeline coverage — the same fold that took

@@ -17,18 +17,17 @@ import graft.operators.{DHashBands, MediaRecord}
   *    state is O(keys-in-watermark-horizon), not O(stream length), which is
   *    the only form that survives unbounded key cardinality. (Plain
   *    streaming `dropDuplicates` without a watermark grows state forever.)
-  *  - **stream-stream inner join**: both sides watermarked + an event-time
-  *    range bound on the join condition; Spark buffers each side only inside
-  *    the watermark window, then evicts — the unbounded-state hazard of
-  *    stream joins is fenced by the range predicate.
+  *  - **stream-stream join** (inner, left or full outer): both sides
+  *    watermarked + an event-time range bound on the join condition; Spark
+  *    buffers each side only inside the watermark window, then evicts — the
+  *    unbounded-state hazard of stream joins is fenced by the range
+  *    predicate.
   *  - **session windows**: `session_window` merges gap-contiguous events into
   *    variable-length sessions per key; watermark closes sessions and evicts
   *    their state (the streaming twin of the batch gaps-and-islands
   *    sessionization in [[graft.operators.Temporal]]).
   */
-// Serializable: the sessionize fold closure calls mergeSessionEvents and
-// so captures the module reference into the task closure
-object StreamingOps extends Serializable {
+object StreamingOps {
 
   /** Exact dedup on `idCol` with state bounded by the watermark horizon.
     * Emits each distinct id's first-seen row; a duplicate arriving within
@@ -43,10 +42,17 @@ object StreamingOps extends Serializable {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(idCol)
 
-  /** Stream-stream inner equi-join with an event-time range bound:
-    * right-side rows join left-side rows at most `horizon` older, so both
-    * buffers evict at the watermark. Column names: left (k, lts, ...),
-    * right (k, rts, ...). */
+  /** Stream-stream equi-join with an event-time range bound: right-side
+    * rows join left-side rows at most `horizon` older, so both buffers
+    * evict at the watermark. Column names: left (k, lts, ...), right
+    * (k, rts, ...); the output is (k, left non-key columns, right non-key
+    * columns). `joinType` is "inner", "left_outer" (keep every click,
+    * attributed or not) or "full_outer" (unmatched rows from either side).
+    * An outer form emits an UNMATCHED row with nulls only once the
+    * watermark passes its join window — before that a match could still
+    * arrive, and the null row would be premature and wrong. The eviction
+    * that bounds state is the same event that makes this "never matched"
+    * verdict final. */
   def rangeBoundedJoin(
       left: DataFrame,
       right: DataFrame,
@@ -54,66 +60,17 @@ object StreamingOps extends Serializable {
       leftTs: String,
       rightTs: String,
       watermark: String = "10 minutes",
-      horizon: String = "15 minutes"): DataFrame = {
+      horizon: String = "15 minutes",
+      joinType: String = "inner"): DataFrame = {
     val l = left.withWatermark(leftTs, watermark)
     val r = right.withWatermark(rightTs, watermark)
-    l.join(r,
-      l(key) === r(key) &&
-        r(rightTs) >= l(leftTs) &&
-        r(rightTs) <= l(leftTs) + expr(s"INTERVAL $horizon"))
-      .drop(r(key))
-  }
-
-  /** LEFT OUTER stream-stream join — [[rangeBoundedJoin]]'s
-    * keep-the-misses form (every click, attributed or not): matched rows
-    * emit like the inner join; an UNMATCHED left row emits with nulls only
-    * once the watermark passes its join window (before that, a match could
-    * still arrive — the null row would be premature and wrong). Same state
-    * bound: both buffers evict at the watermark, which is exactly what
-    * makes the null-emission decision finite. */
-  def rangeBoundedJoinLeftOuter(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      watermark: String = "10 minutes",
-      horizon: String = "15 minutes"): DataFrame = {
-    val l = left.withWatermark(leftTs, watermark)
-    val r = right.withWatermark(rightTs, watermark)
+    // both key columns survive an outer join (either may be null); the
+    // coalesced key restores the single-key output of every join type
     l.join(r,
       l(key) === r(key) &&
         r(rightTs) >= l(leftTs) &&
         r(rightTs) <= l(leftTs) + expr(s"INTERVAL $horizon"),
-      "left_outer")
-      .drop(r(key))
-  }
-
-  /** FULL OUTER stream-stream join — completes the inner/left family:
-    * matched rows emit inline; an unmatched row from EITHER side emits
-    * with nulls once the watermark closes its join window (same deferred
-    * null-emission rule as the left-outer form, now applied to both
-    * buffers). State bound unchanged: both sides evict at the watermark —
-    * the eviction is precisely what finalizes the "never matched"
-    * verdict for each side. */
-  def rangeBoundedJoinFullOuter(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      watermark: String = "10 minutes",
-      horizon: String = "15 minutes"): DataFrame = {
-    val l = left.withWatermark(leftTs, watermark)
-    val r = right.withWatermark(rightTs, watermark)
-    // both key columns survive a full outer join (either may be null);
-    // an explicit select with a coalesced key restores the single-key
-    // contract of the inner/left forms
-    l.join(r,
-      l(key) === r(key) &&
-        r(rightTs) >= l(leftTs) &&
-        r(rightTs) <= l(leftTs) + expr(s"INTERVAL $horizon"),
-      "full_outer")
+      joinType)
       .select(coalesce(l(key), r(key)).as(key) +:
         (left.columns.filterNot(_ == key).map(c => l(c)) ++
           right.columns.filterNot(_ == key).map(c => r(c))).toIndexedSeq: _*)
@@ -256,80 +213,6 @@ object StreamingOps extends Serializable {
       .withColumn("fp", graft.operators.Dedup.tokenSetFp(col("text")))
       .join(store, Seq("fp"), "left_anti")
       .drop("fp")
-    curationStream(unseen, tsCol, watermark, minTokens, maxDupMilli)
-  }
-
-  /** [[curationStreamIncremental]] with a Bloom pre-gate — the 100 TB-store
-    * posture: a Bloom filter of the store's fingerprints is built ONCE at
-    * stream definition (driver-side aggregation over the store, a few bytes
-    * per fp) and ships in the task closure; each micro-batch row probes the
-    * sketch first, and only rows the sketch CANNOT rule out ("maybe seen")
-    * pay the exact anti-join against the store. Mostly-new traffic — the
-    * common case for a crawl frontier — then joins an (empty-ish) slice
-    * instead of the full batch. Correctness does not depend on the sketch:
-    * a false positive merely routes a new doc through the exact anti-join,
-    * which keeps it; a Bloom filter has no false negatives, so a truly-seen
-    * doc can never take the bypass. Identical output to the exact form by
-    * construction (StreamingOpsSpec pins it). `fpp` trades sketch size for
-    * bypass precision; the default 3% keeps a 10⁹-fp store's sketch around
-    * a GiB — broadcast-sized, rebuilt nightly with the store refresh.
-    *
-    * Driver-memory posture: the sketch AGGREGATES on the executors
-    * (`bloom_filter_agg` over `xxhash64(fp)` — Spark's native, codegen'd
-    * bloom expressions, not a per-row Scala UDF: the round-7 advisor
-    * flagged the UDF's per-row serialization in the streaming hot path)
-    * but still collects to the driver and ships in the probe literal, at
-    * ~7.3 bits/item for 3% fpp — fine at 10⁹ fps (~1 GiB), lethal at 10¹¹.
-    * `maxBloomItems` bounds it: a store larger than the cap degrades to the
-    * plain exact-anti-join path of [[curationStreamIncremental]] (correct,
-    * just without the bypass) instead of OOMing the driver. Raise the cap
-    * only together with `spark.driver.memory` AND
-    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems`/`maxNumBits` —
-    * the sketch's size clamps to those session confs (defaults 4M items /
-    * 8 MiB), degrading fpp rather than failing, since the exact anti-join
-    * behind the gate makes precision an efficiency knob, never a
-    * correctness one. */
-  def curationStreamIncrementalBloom(
-      docs: DataFrame,
-      store: DataFrame,
-      fpp: Double = 0.03,
-      tsCol: String = "ingest_ts",
-      watermark: String = "10 minutes",
-      minTokens: Int = 15,
-      maxDupMilli: Int = 650,
-      maxBloomItems: Long = 2_000_000_000L): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    import org.apache.spark.sql.types.BinaryType
-    val expected = math.max(store.count(), 1L)
-    if (expected > maxBloomItems)
-      return curationStreamIncremental(docs, store, tsCol, watermark, minTokens, maxDupMilli)
-    val spark = store.sparkSession
-    def confLong(k: String, dflt: Long): Long =
-      spark.conf.getOption(k).map(_.toLong).getOrElse(dflt)
-    val nItems = math.min(expected,
-      confLong("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", 4000000L))
-    val nBits = math.min(
-      confLong("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", 67108864L),
-      math.max(64L, math.ceil(-expected.toDouble * math.log(fpp) /
-        (math.log(2) * math.log(2))).toLong))
-    val bloomBytes = store
-      .select(GraftBridge.column(new BloomFilterAggregate(
-          new XxHash64(Seq(GraftBridge.expression(col("fp")))),
-          Literal(nItems), Literal(nBits))
-        .toAggregateExpression()).as("bf"))
-      .head.getAs[Array[Byte]](0)
-    if (bloomBytes == null) // empty store aggregates to null: nothing seen
-      return curationStreamIncremental(docs, store, tsCol, watermark, minTokens, maxDupMilli)
-    def maybeSeen(c: Column): Column = GraftBridge.column(
-      BloomFilterMightContain(Literal.create(bloomBytes, BinaryType),
-        new XxHash64(Seq(GraftBridge.expression(c)))))
-    val withFp = docs.withColumn("fp", graft.operators.Dedup.tokenSetFp(col("text")))
-    val definiteNew = withFp.filter(!maybeSeen(col("fp")))
-    val checked = withFp.filter(maybeSeen(col("fp")))
-      .join(store, Seq("fp"), "left_anti")
-    val unseen = definiteNew.unionByName(checked).drop("fp")
     curationStream(unseen, tsCol, watermark, minTokens, maxDupMilli)
   }
 
@@ -778,17 +661,16 @@ object StreamingOps extends Serializable {
   }
 
   /** The newest COMMITTED generation strictly OLDER than `before`:
-    * committed = its `marker` file is present (`_SUCCESS` for
-    * [[ingestBatchUrlMerge]]'s snapshots, `_BANDS` for the parted store,
-    * written after the band data so its presence proves the whole
-    * generation); a dir without it is a crashed write, skipped.
-    * Strictly-older is the replay guarantee: batch N's own generation is
-    * never its read, so a batch replayed AFTER its merge committed still
-    * sees the pre-merge state it first saw. */
+    * committed = its `_BANDS` manifest is present (written after the band
+    * data, so its presence proves the whole generation); a dir without it
+    * is a crashed write, skipped. Strictly-older is the replay guarantee:
+    * batch N's own generation is never its read, so a batch replayed
+    * AFTER its merge committed still sees the pre-merge state it first
+    * saw. */
   private def newestCommittedGen(fs: FileSystem, storePath: String,
-      before: Long, marker: String): Option[Long] =
+      before: Long): Option[Long] =
     generations(fs, storePath).map(_._1)
-      .filter(g => g < before && fs.exists(new Path(s"$storePath/gen=$g/$marker")))
+      .filter(g => g < before && fs.exists(new Path(s"$storePath/gen=$g/_BANDS")))
       .maxOption
 
   /** Delete every generation whose number is `dead`; returns how many. */
@@ -839,107 +721,63 @@ object StreamingOps extends Serializable {
     * form), emit each batch key's provenance downstream (`new` /
     * `unchanged` — skippable / `changed` — must re-enter the content
     * pipeline), then fold the batch into the store last-writer-wins.
+    * `batch` needs (doc_id, url, text).
     *
-    * The store is a GENERATION per merge (`gen=<batchId>`, each a complete
-    * keyed snapshot) rather than [[graft.sources.ParquetSink.writeBucketed]]'s
-    * managed-table swap — the batch query's documented alternative for the
-    * streaming cadence ("the batch=<id> generation discipline if the
-    * table-swap cost per batch is too high"): a catalog swap per
-    * micro-batch would serialize every batch behind two catalog calls,
-    * and, decisively, generations make replay EXACT — the store read takes
-    * the newest committed generation STRICTLY OLDER than the current
-    * batchId, so a batch replayed after any crash point (before the merge,
-    * after the merge but before checkpoint commit) recomputes provenance
-    * against exactly the pre-merge store and OVERWRITES its own generation
-    * and its own `batch_id=<id>` emit partition — a fixpoint, never a
-    * double-merge. Generations older than the one just read are pruned
-    * (two live snapshots at steady state).
-    *
-    * Scale shape: provenance is one broadcast-keyed join of the tiny batch
-    * against the store; the generation write pays O(store + batch) IO per
-    * merge — the copy-on-write MERGE posture, same trade as the batch
-    * form; the partition-pruned layout ([[graft.sources.ParquetSink
-    * .mergePartitionedBucketed]]) is the mitigation when the store dwarfs
-    * the batch. `batch` needs (doc_id, url, text). */
-  def ingestBatchUrlMerge(batch: DataFrame, storePath: String, outPath: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val fs = fsOf(spark, storePath)
-    val keyed = urlKeyed(batch).persist()
-    try {
-      val read = newestCommittedGen(fs, storePath, batchId, "_SUCCESS")
-      val store = read
-        .map(g => spark.read.schema(urlFpGenSchema).parquet(s"$storePath/gen=$g"))
-        .getOrElse(empty(spark, urlFpGenSchema))
-      // provenance vs the PRE-merge store: emitted first, under this
-      // batch's own dynamic-overwrite partition (replay overwrites)
-      emitProvenance(keyed, store, outPath, batchId)
-      // MERGE: unmatched store rows carry over, batch rows replace/insert —
-      // a complete new generation, committed by its _SUCCESS marker
-      store.join(keyed.select(col("canonical")), Seq("canonical"), "left_anti")
-        .unionByName(keyed)
-        .write.mode("overwrite").parquet(s"$storePath/gen=$batchId")
-      // prune generations STRICTLY OLDER than the one this batch read:
-      // the read gen must survive (this batch can still replay), and
-      // everything at-or-newer than it is either this batch's own write
-      // or another writer's state this prune has no business touching
-      // (a batchId restart against an existing store must never wipe
-      // history — when nothing older than batchId exists, `read` is empty
-      // and NOTHING is deleted). The anchor is the `_SUCCESS`-committed
-      // generation the read above used — a crashed uncommitted newer gen
-      // (dir present, no marker) is NOT the anchor; anchoring on it would
-      // delete the committed gen this batch actually read, and a replay
-      // after that would see an empty store (data loss).
-      // Best-effort — a leftover gen is storage, not a defect; a
-      // deleted live gen would be data loss.
-      read.foreach(k => pruneGenerations(fs, storePath)(_ < k))
-    } finally keyed.unpersist()
-  }
-
-  /** PARTITION-PRUNED generations for the streaming MERGE — the
-    * composition of [[ingestBatchUrlMerge]]'s replay-exact generation
-    * discipline with [[graft.sources.ParquetSink.writePartitionedBucketed]]'s
-    * hash-band layout contract, closing the full-store IO trade the
-    * unpartitioned loop documents: a generation here holds ONLY the bands
-    * containing batch keys plus a `_BANDS` manifest pointing every other
-    * band at the generation that last wrote it, so per micro-batch the
-    * store read AND the store write are O(touched bands), never O(store).
-    * At 100 TB with a daily batch touching a sliver of the key space, the
-    * crawl frontier pays the sliver. This is the reference's own posture:
-    * the KTable changelog is an incremental store update, never a
-    * snapshot (kafka-streams-aggregate
-    * `KafkaStreamsInventoryCountApplication.java:78-82`).
+    * The store is a GENERATION per merge (`gen=<batchId>`) rather than
+    * [[graft.sources.ParquetSink.writeBucketed]]'s managed-table swap — the
+    * batch query's documented alternative for the streaming cadence: a
+    * catalog swap per micro-batch would serialize every batch behind two
+    * catalog calls, and generations make replay exact (below). A
+    * generation holds ONLY the hash bands containing batch keys, in the
+    * [[graft.sources.ParquetSink.writePartitionedBucketed]] layout, plus a
+    * `_BANDS` manifest pointing every band ever written at the generation
+    * that last wrote it, so per micro-batch the store read AND the store write
+    * are O(touched bands), never O(store). At 100 TB with a daily batch
+    * touching a sliver of the key space, the crawl frontier pays the
+    * sliver — the reference's own posture: the KTable changelog is an
+    * incremental store update, never a snapshot. With `numBands = 1` every
+    * generation is the whole store (the copy-on-write MERGE trade: O(store
+    * + batch) IO per batch).
     *
     * Layout under `storePath`:
     * {{{
     * gen=<id>/band=<b>/part-*.parquet   touched bands only
-    * gen=<id>/_BANDS                    manifest: "<band>=<gen>" per band,
-    *                                    covering the whole key space;
-    *                                    written LAST = the commit marker
+    * gen=<id>/_BANDS                    manifest: "<band>=<gen>" for every
+    *                                    band ever written; written LAST =
+    *                                    the commit marker
     * }}}
     * `band = pmod(xxhash64(canonical), numBands)` — a pure function of the
     * key (the [[graft.sources.ParquetSink.mergePartitionedBucketed]]
     * contract), so a key's history row lives exactly in its own band:
     * provenance needs only the touched bands' slice, and a replacement
-    * lands where its stale row lies.
+    * lands where its stale row lies. `numBands` is fixed for a store's
+    * life: the manifest's band numbers mean nothing under another count.
     *
-    * Replay is EXACT, the unpartitioned loop's rule verbatim: the store
-    * read resolves through the newest COMMITTED (`_BANDS` present)
-    * generation STRICTLY OLDER than `batchId`, so a batch replayed after
-    * any crash point — mid band write, after the bands but before the
-    * manifest, after the manifest but before checkpoint commit — sees the
-    * identical pre-merge state, recomputes identical provenance, and
-    * rewrites `gen=<batchId>` (static overwrite of a directory that is
-    * exclusively this batch's) and its manifest bit-for-bit: a fixpoint.
+    * Replay is EXACT: the store read resolves through the newest COMMITTED
+    * (`_BANDS` present) generation STRICTLY OLDER than `batchId`, so a
+    * batch replayed after any crash point — mid band write, after the
+    * bands but before the manifest, after the manifest but before
+    * checkpoint commit — sees the identical pre-merge state, recomputes
+    * identical provenance, and rewrites its own `batch_id=<id>` emit
+    * partition, `gen=<batchId>` (static overwrite of a directory that is
+    * exclusively this batch's) and its manifest bit-for-bit: a fixpoint,
+    * never a double-merge.
     *
-    * Pruning is REFERENCE-AWARE, unlike the snapshot loop's (where older
-    * gens are unreachable by construction): an old generation stays live
-    * for as long as any band of the read generation's manifest — or of
-    * the one just written — still points at it. Only generations strictly
-    * older than the read one and referenced by neither are deleted; at
-    * steady state the live set is the distinct generations the manifest
-    * spans, each holding bands written exactly once. */
-  def ingestBatchUrlMergeParted(batch: DataFrame, storePath: String,
+    * Pruning is REFERENCE-AWARE and anchored on the generation this batch
+    * READ: a generation stays live for as long as the read generation's
+    * manifest — or the one just written — still points at it, and only
+    * generations strictly older than the read one and referenced by
+    * neither are deleted; at steady state the live set is the distinct
+    * generations the manifest spans (two with `numBands = 1`). The anchor
+    * is the committed generation the read used, never a crashed
+    * uncommitted newer dir (dir present, no `_BANDS`): anchoring on that
+    * would delete the generation this batch read, and a replay would then
+    * see an empty store. When no committed generation older than
+    * `batchId` exists — a checkpoint reset restarting batch ids against an
+    * existing store — nothing is deleted. Pruning is best-effort: a
+    * leftover generation is storage, a deleted live one would be data
+    * loss. */
+  def ingestBatchUrlMerge(batch: DataFrame, storePath: String,
       outPath: String, batchId: Long, numBands: Int = 8): Unit = {
     val spark = batch.sparkSession
     val bandExpr = pmod(xxhash64(col("canonical")), lit(numBands.toLong))
@@ -952,7 +790,7 @@ object StreamingOps extends Serializable {
       // (the half of compactPartedStore's contract only ingest can check)
       readCompactMarker(fs, storePath).foreach { hw =>
         require(batchId > hw,
-          s"ingestBatchUrlMergeParted: batchId=$batchId collides with (or " +
+          s"ingestBatchUrlMerge: batchId=$batchId collides with (or " +
             s"precedes) the published compaction high-water mark gen=$hw — " +
             "a replay from a pre-compaction checkpoint or a compactId the " +
             "stream has since reached; restart the stream from a checkpoint " +
@@ -962,7 +800,7 @@ object StreamingOps extends Serializable {
       // pruning predicate, not data movement
       val touched = keyed.select(bandExpr.as("band")).distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
-      val keep = newestCommittedGen(fs, storePath, batchId, "_BANDS")
+      val keep = newestCommittedGen(fs, storePath, batchId)
       val parent = keep
         .map(g => readBandManifest(fs, s"$storePath/gen=$g"))
         .getOrElse(Map.empty[Long, Long])
@@ -972,7 +810,7 @@ object StreamingOps extends Serializable {
         .getOrElse(empty(spark, urlFpGenSchema))
       // provenance vs the pre-merge slice (a key's history row can live
       // nowhere but its own band), emitted first under this batch's own
-      // dynamic-overwrite partition — [[ingestBatchUrlMerge]] verbatim
+      // dynamic-overwrite partition (replay overwrites)
       emitProvenance(keyed, slice, outPath, batchId)
       // MERGE of the touched bands only: unmatched slice rows carry over,
       // batch rows replace/insert; static overwrite of gen=<batchId> —
@@ -997,12 +835,12 @@ object StreamingOps extends Serializable {
     } finally keyed.unpersist()
   }
 
-  /** The SERVING read of a [[ingestBatchUrlMergeParted]] store: every band
+  /** The SERVING read of a [[ingestBatchUrlMerge]] store: every band
     * resolved through the newest committed manifest — the view a frontier
     * consumer (or the next compaction) scans. Empty store → empty frame. */
   def urlMergePartedStore(spark: SparkSession, storePath: String): DataFrame = {
     val fs = fsOf(spark, storePath)
-    newestCommittedGen(fs, storePath, Long.MaxValue, "_BANDS")
+    newestCommittedGen(fs, storePath, Long.MaxValue)
       .flatMap(g => bandView(spark, storePath, readBandManifest(fs, s"$storePath/gen=$g")))
       .map(_.drop("band"))
       .getOrElse(empty(spark, urlFpGenSchema))
@@ -1020,18 +858,26 @@ object StreamingOps extends Serializable {
         .select(col("canonical"), col("doc_id"), col("url"), col("fp"), col("band"))
     }.reduceOption(_ unionByName _)
 
+  /** The `_BANDS` manifest of `genDir` as band → generation. A line that
+    * does not parse fails LOUD: skipping it would drop its band from the
+    * next manifest, and the batch after that would prune the generation
+    * holding the band's rows. The empty line of an empty manifest is no
+    * entry. */
   private def readBandManifest(fs: org.apache.hadoop.fs.FileSystem,
       genDir: String): Map[Long, Long] = {
     val p = new org.apache.hadoop.fs.Path(s"$genDir/_BANDS")
     val in = fs.open(p)
     try {
       scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .flatMap { line =>
+        .zipWithIndex.filter(_._1.nonEmpty)
+        .map { case (line, i) =>
           line.split("=", 2) match {
             case Array(b, g) if b.forall(_.isDigit) && g.forall(_.isDigit)
                 && b.nonEmpty && g.nonEmpty =>
-              Some(b.toLong -> g.toLong)
-            case _ => None
+              b.toLong -> g.toLong
+            case _ => throw new IllegalStateException(
+              s"corrupt _BANDS manifest at $p line ${i + 1}: '$line' — " +
+                "expected <band>=<generation>")
           }
         }.toMap
     } finally in.close()
@@ -1170,7 +1016,7 @@ object StreamingOps extends Serializable {
 
   /** COMPACTION for the parted MERGE store — the maintenance pass that
     * bounds what the incremental loop cannot: at steady state
-    * [[ingestBatchUrlMergeParted]]'s manifest keeps one live generation
+    * [[ingestBatchUrlMerge]]'s manifest keeps one live generation
     * per last-writer band, so the live-generation set — and the serving
     * read's per-generation scan fan-out ([[urlMergePartedStore]]'s one
     * `spark.read` per distinct source generation) — grows with
@@ -1235,7 +1081,7 @@ object StreamingOps extends Serializable {
       // idempotent to skip, the marker rewrite is idempotent by content
       writeCompactMarker(fs, storePath, compactId)
       if (vacuum) vacuumPartedStore(spark, storePath) else 0
-    } else newestCommittedGen(fs, storePath, compactId, "_BANDS") match {
+    } else newestCommittedGen(fs, storePath, compactId) match {
       case None => -1 // nothing committed to compact
       case Some(g) =>
         // the serving view, band column preserved
@@ -1268,7 +1114,7 @@ object StreamingOps extends Serializable {
   def vacuumPartedStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String): Int = {
     val fs = fsOf(spark, storePath)
-    newestCommittedGen(fs, storePath, Long.MaxValue, "_BANDS") match {
+    newestCommittedGen(fs, storePath, Long.MaxValue) match {
       case None => 0
       case Some(g) =>
         val live = readBandManifest(fs, s"$storePath/gen=$g").values.toSet + g
@@ -1432,138 +1278,13 @@ object StreamingOps extends Serializable {
         .agg(count(lit(1)).as("c")),
       storePath, outPath, batchId)
 
-  /** Custom-state session record: bounds in epoch millis + event count. */
-  final case class SessionAcc(start: Long, end: Long, n: Long)
-
-  /** One finalized session. `finalized_by` names the close path: "gap" (a
-    * later event opened the next session) or "timeout" (the watermark
-    * passed the session's horizon and the state row was EVICTED). */
-  final case class SessionOut(
-      key: String,
-      session_start: java.sql.Timestamp,
-      session_end: java.sql.Timestamp,
-      n_events: Long,
-      finalized_by: String)
-
-  /** Buffered per-key session state: EVERY session that could still
-    * change — not just the latest. A session leaves the buffer only when
-    * the watermark proves no admissible event can extend or merge into it
-    * (see [[sessionizeWithTimeout]]), which is what lets an early event in
-    * a LATER trigger merge into a session whose gap-successor has already
-    * been observed (round-8 verdict item 5 — the old single-open-session
-    * state emitted on gap-evidence inside the trigger, so such an event
-    * found its session already immutable in the output). */
-  final case class SessionBuf(sessions: Seq[SessionAcc])
-
-  /** Pure interval chain-merge (unit-tested directly): prior sessions and
-    * the batch's events become intervals, sorted by start; consecutive
-    * intervals merge while the next one starts within `gap` of the running
-    * end — TRANSITIVE, so a bridge event connects two otherwise-separate
-    * accumulators, and events EARLIER than existing sessions (possible
-    * across triggers whenever the watermark delay is nonzero) merge with
-    * each other and — via a chain — even with those sessions, instead of
-    * each closing as its own single-event session (advisor round 7: the
-    * per-event fold split two early events that belonged to one session).
-    * Returns ALL intervals, sorted, pairwise separated by more than the
-    * gap; the CALLER decides which are final (watermark), none close on
-    * gap-evidence alone here. */
-  private[graft] def mergeIntervals(
-      prior: Seq[SessionAcc], ts: Array[Long], gapMs: Long): List[SessionAcc] = {
-    val intervals = (prior.toList ++ ts.iterator.map(t => SessionAcc(t, t, 1)))
-      .sortBy(s => (s.start, s.end))
-    intervals match {
-      case Nil => Nil
-      case first :: rest =>
-        var done = List.empty[SessionAcc]
-        var cur = first
-        rest.foreach { s =>
-          if (s.start <= cur.end + gapMs)
-            cur = SessionAcc(math.min(cur.start, s.start), math.max(cur.end, s.end), cur.n + s.n)
-          else { done ::= cur; cur = s }
-        }
-        (cur :: done).reverse
-    }
-  }
-
-  /** [[mergeIntervals]] in the (closed-by-gap-evidence, still-open) view:
-    * every interval except the last is followed by a proven gap. Kept as
-    * the unit-test surface for the merge algebra. */
-  private[graft] def mergeSessionEvents(
-      open: Option[SessionAcc], ts: Array[Long], gapMs: Long): (List[SessionAcc], Option[SessionAcc]) = {
-    val all = mergeIntervals(open.toSeq, ts, gapMs)
-    (all.dropRight(1), all.lastOption)
-  }
-
-  /** Sessionized counts with BOUNDED custom state:
-    * `flatMapGroupsWithState` + `GroupStateTimeout.EventTimeTimeout` — the
-    * state-TTL posture the inventory fold deliberately does NOT have (the
-    * reference never expires state, so parity pins NoTimeout there;
-    * an unbounded-key stream at 100 TB/day needs eviction or the state
-    * store grows without limit).
-    *
-    * Per trigger and key: merge the batch's events (sorted by event time)
-    * into the open session — an event within `gapMs` of the session end
-    * extends it, a later one emits the closed session and opens the next —
-    * then arm the timeout at `end + gapMs`. When the WATERMARK passes that
-    * timestamp, Spark invokes the group once more with `hasTimedOut`: the
-    * session is emitted as final and `state.remove()` drops the row — so
-    * every idle key's state lives exactly one gap past its last event, and
-    * total state is O(keys active within the watermark horizon), not
-    * O(keys ever seen). StreamingOpsSpec proves the eviction by watching
-    * the state-store row count fall.
-    *
-    * EMISSION RULE (round 9 — the full fix for the cross-trigger early
-    * split): a session is emitted ONLY once the watermark has passed
-    * `end + gap`. Until then it stays in the per-key [[SessionBuf]] — even
-    * when a later session already proves a gap after it — because an
-    * above-watermark event in a later trigger may still arrive EARLIER
-    * than the gap and merge into it (watermark delay > 0 makes that
-    * admissible). Emitted output is immutable in append mode, so
-    * "cannot change" must mean the watermark bound, not gap-evidence
-    * inside one trigger. `finalized_by` reports which evidence closed the
-    * session: "gap" when a later session exists for the key at emission
-    * time, "timeout" when it was the key's last and only the watermark
-    * closed it. */
-  def sessionizeWithTimeout(
-      events: org.apache.spark.sql.Dataset[(String, java.sql.Timestamp)],
-      gapMs: Long,
-      watermark: String = "0 seconds"): org.apache.spark.sql.Dataset[SessionOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-    def fold(key: String, it: Iterator[(String, java.sql.Timestamp)],
-        state: GroupState[SessionBuf]): Iterator[SessionOut] = {
-      def out(s: SessionAcc, how: String) = SessionOut(key,
-        new java.sql.Timestamp(s.start), new java.sql.Timestamp(s.end), s.n, how)
-      val wm = state.getCurrentWatermarkMs()
-      val prior = state.getOption.map(_.sessions).getOrElse(Seq.empty)
-      val merged = mergeIntervals(prior, it.map(_._2.getTime).toArray.sorted, gapMs)
-      // ripe = no admissible event can touch it: extenders/mergers have
-      // ts <= end + gap, and the watermark now rejects all of those
-      val (ripe, live) = merged.partition(s => s.end + gapMs < wm)
-      if (live.isEmpty) state.remove()
-      else {
-        state.update(SessionBuf(live))
-        // re-arm at the earliest horizon still open (clamped above the
-        // watermark — Spark rejects event-time timeouts at/behind it)
-        state.setTimeoutTimestamp(math.max(live.map(_.end + gapMs).min, wm + 1))
-      }
-      val lastIdx = ripe.length - 1
-      ripe.zipWithIndex.map { case (s, i) =>
-        out(s, if (live.isEmpty && i == lastIdx) "timeout" else "gap")
-      }.iterator
-    }
-
-    events
-      .withWatermark("_2", watermark)
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessionBuf, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fold)
-  }
-
   /** Session-window aggregation: events within `gap` of each other merge
-    * into one session per key; watermark finalizes sessions in append mode. */
+    * into one session per key; watermark finalizes sessions in append mode.
+    * Merging is transitive and spans triggers: an event arriving in a
+    * later trigger (still above the watermark) extends, pulls back or
+    * bridges the sessions already held in state. A session is emitted and
+    * its state row evicted once the watermark passes its end, so state is
+    * O(sessions within the watermark horizon), not O(keys ever seen). */
   def sessionWindows(
       events: DataFrame,
       key: String,

@@ -50,14 +50,6 @@ class InventoryFoldSpec extends AnyFunSuite {
     }
   }
 
-  test("typed mapGroups fold matches the window fold") {
-    val rnd = new Random(42)
-    val events = rnd.shuffle(genEvents(rnd, 10, 25))
-    val typed = InventoryFold.foldTyped(spark, events.toDS())
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(typed === model(events))
-  }
-
   test("REP discards all prior history") {
     val events = Seq(
       OrderedUpdateEvent("p", 1, Actions.Inc, 5),

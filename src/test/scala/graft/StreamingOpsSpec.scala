@@ -74,8 +74,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     val clicks = MemoryStream[Click]
     val buys = MemoryStream[Buy]
     val out = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Option[Long])]()
-    val joined = StreamingOps.rangeBoundedJoinLeftOuter(
-      clicks.toDF(), buys.toDF(), "k", "lts", "rts")
+    val joined = StreamingOps.rangeBoundedJoin(
+      clicks.toDF(), buys.toDF(), "k", "lts", "rts", joinType = "left_outer")
     val q = joined.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         b.select("k", "page", "amount").collect().foreach(r =>
@@ -139,32 +139,73 @@ class StreamingOpsSpec extends AnyFunSuite {
     } finally { q.stop(); spark.streams.removeListener(listener) }
   }
 
-  test("session windows merge gap-contiguous events and close via watermark") {
+  /** Run [[StreamingOps.sessionWindows]] over `triggers` (one micro-batch
+    * each) and return the emitted (start, end, user, n_events) rows plus the
+    * state-store row count after every trigger. */
+  private def sessionRun(gap: String, watermark: String,
+      triggers: Seq[Seq[UserEvent]]): (Set[(Timestamp, Timestamp, String, Long)], Seq[Long]) = {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[UserEvent]
     val out = new java.util.concurrent.ConcurrentLinkedQueue[(Timestamp, Timestamp, String, Long)]()
-    val q = StreamingOps.sessionWindows(input.toDF(), "user", gap = "30 minutes")
+    val q = StreamingOps.sessionWindows(input.toDF(), "user", gap = gap, watermark = watermark)
       .writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         b.collect().foreach(r =>
           out.add((r.getTimestamp(0), r.getTimestamp(1), r.getString(2), r.getLong(3)))); ()
       }.start()
     try {
-      // u: events at 0 and 20 chain one session (gap 20 < 30); 70 starts another
-      input.addData(UserEvent("u", t(0)), UserEvent("u", t(20)), UserEvent("u", t(70)))
-      q.processAllAvailable()
-      // advance the watermark far enough to close both sessions
-      input.addData(UserEvent("w", t(300)))
-      q.processAllAvailable()
-      input.addData(UserEvent("w", t(600)))
-      q.processAllAvailable()
-      val got = out.toArray(Array.empty[(Timestamp, Timestamp, String, Long)])
-        .filter(_._3 == "u").toSet
-      assert(got === Set(
-        (t(0), t(50), "u", 2L),   // session = [first, last+gap)
-        (t(70), t(100), "u", 1L)))
+      val stateRows = triggers.map { evs =>
+        input.addData(evs)
+        q.processAllAvailable()
+        q.lastProgress.stateOperators.head.numRowsTotal
+      }
+      (out.toArray(Array.empty[(Timestamp, Timestamp, String, Long)]).toSet, stateRows)
     } finally q.stop()
+  }
+
+  test("session windows merge gap-contiguous events and close via watermark") {
+    def ev(user: String, minutes: Int*) = minutes.map(m => UserEvent(user, t(m)))
+    // u: events at 0 and 20 chain one session (gap 20 < 30); 70 starts
+    // another; w's events advance the watermark far enough to close both
+    val (got, _) = sessionRun("30 minutes", "10 minutes",
+      Seq(ev("u", 0, 20, 70), ev("w", 300), ev("w", 600)))
+    assert(got.filter(_._3 == "u") === Set(
+      (t(0), t(50), "u", 2L),   // session = [first, last+gap)
+      (t(70), t(100), "u", 1L)))
+
+    // 5-minute gap, 30-minute watermark delay: an event may arrive in a
+    // LATER trigger than the sessions it belongs to and must still merge.
+    //  a, b: a gap-closed session (a@0,2) and a lone one (b@2)
+    //  x: x@23 arrives after x@40 and joins x@20, no single-event session
+    //  e1: an earlier in-gap event pulls the session start back
+    //  e2: two early events merge with each other, not with e2@40
+    //  e3: an early pair chains into the session it reaches within the gap
+    //  e4: a bridge event joins two sessions already held in state
+    //  z: advances the watermark past every session above
+    val (got5, stateRows) = sessionRun("5 minutes", "30 minutes", Seq(
+      ev("a", 0, 2) ++ ev("b", 2) ++ ev("x", 20) ++ ev("e1", 40) ++
+        ev("e2", 40) ++ ev("e3", 40) ++ ev("e4", 20, 28),
+      ev("a", 22) ++ ev("x", 40),
+      ev("x", 23) ++ ev("e1", 36) ++ ev("e2", 30, 33) ++ ev("e3", 32, 36) ++
+        ev("e4", 24) ++ ev("c", 23),
+      ev("z", 80),
+      ev("z", 200),
+      ev("z", 201)))
+    assert(got5 === Set(
+      (t(0), t(7), "a", 2L), (t(22), t(27), "a", 1L),
+      (t(2), t(7), "b", 1L),
+      (t(23), t(28), "c", 1L),
+      (t(20), t(28), "x", 2L), (t(40), t(45), "x", 1L),
+      (t(36), t(45), "e1", 2L),
+      (t(30), t(38), "e2", 2L), (t(40), t(45), "e2", 1L),
+      (t(32), t(45), "e3", 3L),
+      (t(20), t(33), "e4", 3L),
+      (t(80), t(85), "z", 1L)))
+    // eviction is real: once the watermark passed them, every emitted
+    // session's state row is gone and only z's open session remains
+    assert(stateRows.max > 1 && stateRows.last === 1L,
+      s"state rows per trigger: $stateRows")
   }
 
   test("stream-static enrichment broadcasts the dimension, no streaming state") {
@@ -321,61 +362,14 @@ class StreamingOpsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("Bloom-gated incremental curation emits exactly what the exact form emits") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val histText = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda mu nu xi omicron pi"
-    val hist = Seq((100L, histText)).toDF("doc_id", "text")
-    val store = graft.sources.ParquetSink.writeBucketed(
-      graft.operators.Dedup.fingerprintSnapshot(hist), "bloom_fp_store", "fp",
-      graft.operators.Dedup.storeBuckets(spark))
-
-    val input = MemoryStream[StreamDoc]
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    val gated = StreamingOps.curationStreamIncrementalBloom(input.toDF(), store)
-    // the gate must be the NATIVE bloom expressions, not a per-row Scala
-    // UDF (round-7 advisor: UDF serialization in the streaming hot path)
-    locally {
-      import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ScalaUDF}
-      val exprs = scala.collection.mutable.ArrayBuffer[Expression]()
-      gated.queryExecution.analyzed.foreach(p =>
-        p.expressions.foreach(e => e.foreach(exprs += _)))
-      assert(!exprs.exists(_.isInstanceOf[ScalaUDF]),
-        "bloom gate must not plan a Scala UDF")
-      assert(exprs.exists(_.isInstanceOf[BloomFilterMightContain]),
-        "bloom gate must probe through BloomFilterMightContain")
-    }
-    val q = gated
-      .writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.collect().foreach(r => out.add(r.getLong(0))); ()
-      }.start()
-    val fresh1 = "one two three four five six seven eight nine ten " +
-      "eleven twelve thirteen fourteen fifteen sixteen"
-    val fresh2 = "uno dos tres cuatro cinco seis siete ocho nueve diez " +
-      "once doce trece catorce quince dieciseis"
-    try {
-      input.addData(
-        StreamDoc(1, "s0", histText.split(" ").reverse.mkString(" "), t(0)), // seen: no false negatives, must drop
-        StreamDoc(2, "s0", fresh1, t(1)),  // new: bypass or FP->anti-join, must keep
-        StreamDoc(3, "s0", fresh2, t(1)),  // new
-        StreamDoc(4, "s1", fresh1, t(2)))  // in-stream dup, dropped by watermark state
-      q.processAllAvailable()
-      val got = out.toArray(Array.empty[java.lang.Long]).map(_.longValue).toSet
-      assert(got === Set(2L, 3L),
-        s"bloom gate must emit exactly the exact-form survivors, got $got")
-    } finally q.stop()
-  }
-
   test("FULL outer stream-stream join surfaces unmatched rows from BOTH sides") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val clicks = MemoryStream[Click]
     val buys = MemoryStream[Buy]
     val out = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[String], Option[Long])]()
-    val joined = StreamingOps.rangeBoundedJoinFullOuter(
-      clicks.toDF(), buys.toDF(), "k", "lts", "rts")
+    val joined = StreamingOps.rangeBoundedJoin(
+      clicks.toDF(), buys.toDF(), "k", "lts", "rts", joinType = "full_outer")
     val q = joined.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         b.select("k", "page", "amount").collect().foreach(r =>
@@ -399,143 +393,6 @@ class StreamingOpsSpec extends AnyFunSuite {
         s"unmatched LEFT row must surface: $got")
       assert(got.contains(("u9", None, Some(7L))),
         s"unmatched RIGHT row must surface — the full-outer addition: $got")
-    } finally q.stop()
-  }
-
-  test("session merge handles out-of-order (above-watermark) events correctly") {
-    import graft.streaming.StreamingOps.{mergeSessionEvents, SessionAcc}
-    val gap = 5L * 60 * 1000
-    def m(min: Long) = min * 60 * 1000
-    // in-gap EARLIER event pulls session_start backwards and counts
-    assert(mergeSessionEvents(Some(SessionAcc(m(20), m(20), 1)), Array(m(16)), gap)
-      === (Nil, Some(SessionAcc(m(16), m(20), 2))))
-    // event more than a gap BEFORE the open session: its own closed
-    // session; the open session is untouched
-    assert(mergeSessionEvents(Some(SessionAcc(m(20), m(20), 1)), Array(m(13)), gap)
-      === (List(SessionAcc(m(13), m(13), 1)), Some(SessionAcc(m(20), m(20), 1))))
-    // forward extension and gap-close still behave
-    assert(mergeSessionEvents(Some(SessionAcc(m(20), m(20), 1)), Array(m(22), m(40)), gap)
-      === (List(SessionAcc(m(20), m(22), 2)), Some(SessionAcc(m(40), m(40), 1))))
-    // cold start
-    assert(mergeSessionEvents(None, Array(m(1), m(3)), gap)
-      === (Nil, Some(SessionAcc(m(1), m(3), 2))))
-    // TWO early events within gap of each other: ONE closed session, not
-    // two single-event splits (advisor round 7 — the per-event fold closed
-    // each early event on sight)
-    assert(mergeSessionEvents(Some(SessionAcc(m(20), m(20), 1)), Array(m(10), m(13)), gap)
-      === (List(SessionAcc(m(10), m(13), 2)), Some(SessionAcc(m(20), m(20), 1))))
-    // chain-merge: an early pair whose chain reaches within gap of the
-    // open session merges INTO it — transitivity, not just pairing
-    assert(mergeSessionEvents(Some(SessionAcc(m(20), m(20), 1)), Array(m(12), m(16)), gap)
-      === (Nil, Some(SessionAcc(m(12), m(20), 3))))
-    // a bridge event connects two otherwise-separate islands ([0] and [8]
-    // are 8 min apart — past the gap — until [4] arrives between them)
-    assert(mergeSessionEvents(None, Array(m(0), m(8), m(4)), gap)
-      === (Nil, Some(SessionAcc(m(0), m(8), 3))))
-  }
-
-  test("EventTimeTimeout sessionization: gap-close emits, timeout EVICTS state") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(String, Timestamp)]
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String)]()
-    val gapMs = 5 * 60 * 1000L // 5-minute session gap
-    val q = StreamingOps.sessionizeWithTimeout(input.toDS(), gapMs)
-      .writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamingOps.SessionOut], _: Long) =>
-        b.collect().foreach(s => out.add((s.key, s.n_events, s.finalized_by))); ()
-      }.start()
-    def stateRows: Long = q.lastProgress.stateOperators.head.numRowsTotal
-    try {
-      // key a: two events 2 min apart -> one open session of 2
-      input.addData(("a", t(0)), ("a", t(2)), ("b", t(2)))
-      q.processAllAvailable()
-      assert(out.isEmpty, "open sessions must not emit in append mode")
-      assert(stateRows === 2, "one state row per active key")
-      // key a again 20 min later: past the gap -> closes a's first session
-      // inline ("gap"); watermark (max event time - 0s) = t(22) also passes
-      // b's timeout (t(2)+gap=t(7)) -> b is finalized by TIMEOUT + evicted
-      input.addData(("a", t(22)))
-      q.processAllAvailable()
-      // one more empty-ish trigger so the timeout pass runs after the
-      // watermark update propagates
-      input.addData(("c", t(23)))
-      q.processAllAvailable()
-      val got = out.toArray(Array.empty[(String, Long, String)]).toSet
-      assert(got.contains(("a", 2L, "gap")), s"gap-closed session missing: $got")
-      assert(got.contains(("b", 1L, "timeout")), s"timeout-evicted session missing: $got")
-      // the eviction is real: only the still-active keys hold state
-      assert(stateRows === 2, s"b's state row must be gone, got $stateRows")
-    } finally q.stop()
-  }
-
-  test("early events in SEPARATE triggers merge into one session (buffered until watermark)") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(String, Timestamp)]
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String)]()
-    val gapMs = 5 * 60 * 1000L
-    // nonzero watermark delay: exactly the regime where an event can arrive
-    // in a LATER trigger than the session it belongs to
-    val q = StreamingOps.sessionizeWithTimeout(input.toDS(), gapMs, watermark = "30 minutes")
-      .writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamingOps.SessionOut], _: Long) =>
-        b.collect().foreach(s => out.add((s.key, s.n_events, s.finalized_by))); ()
-      }.start()
-    try {
-      input.addData(("x", t(20))) // trigger 1: session [20,20]
-      q.processAllAvailable()
-      input.addData(("x", t(40))) // trigger 2: gap-successor observed
-      q.processAllAvailable()
-      // trigger 3: EARLIER than the first session's horizon (t23 <= 20+gap),
-      // above the watermark (t40 - 30m = t10) — with the old eager-gap
-      // emission the [20,20] session was already immutable output and this
-      // event became a spurious single-event session
-      input.addData(("x", t(23)))
-      q.processAllAvailable()
-      // advance the watermark past both horizons, then one more trigger so
-      // the timeout pass runs after the watermark update propagates
-      input.addData(("z", t(80)))
-      q.processAllAvailable()
-      input.addData(("z", t(81)))
-      q.processAllAvailable()
-      val got = out.toArray(Array.empty[(String, Long, String)]).toSet
-      assert(got.contains(("x", 2L, "gap")),
-        s"t20+t23 (separate triggers) must be ONE gap-closed session: $got")
-      assert(got.contains(("x", 1L, "timeout")),
-        s"the t40 session closes by watermark: $got")
-      assert(!got.exists(r => r._1 == "x" && r._2 == 1L && r._3 == "gap"),
-        s"no spurious single-event gap session for x: $got")
-    } finally q.stop()
-  }
-
-  test("Bloom gate over the item cap degrades to the exact anti-join path") {
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val histText = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda mu nu xi omicron pi"
-    val store = graft.operators.Dedup.fingerprintSnapshot(
-      Seq((100L, histText)).toDF("doc_id", "text"))
-    val input = MemoryStream[StreamDoc]
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    // cap of 0 < any store count → the driver Bloom must NOT be built; the
-    // stream must still dedup correctly through the exact anti-join
-    val q = StreamingOps.curationStreamIncrementalBloom(
-        input.toDF(), store, maxBloomItems = 0L)
-      .writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.collect().foreach(r => out.add(r.getLong(0))); ()
-      }.start()
-    val fresh = "one two three four five six seven eight nine ten " +
-      "eleven twelve thirteen fourteen fifteen sixteen"
-    try {
-      input.addData(
-        StreamDoc(1, "s0", histText.split(" ").reverse.mkString(" "), t(0)),
-        StreamDoc(2, "s0", fresh, t(1)))
-      q.processAllAvailable()
-      val got = out.toArray(Array.empty[java.lang.Long]).map(_.longValue).toSet
-      assert(got === Set(2L),
-        s"over-cap branch must still drop the history dup, got $got")
     } finally q.stop()
   }
 
@@ -865,10 +722,10 @@ class StreamingOpsSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-replay").toString
     val b0 = Seq((1L, "https://example.org/a", "alpha v1"),
       (2L, "https://example.org/b", "beta v1")).toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b0, s"$base/store", s"$base/out", 0L)
+    StreamingOps.ingestBatchUrlMerge(b0, s"$base/store", s"$base/out", 0L, 1)
     val b1 = Seq((10L, "https://example.org/b", "beta v2"))
       .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L)
+    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L, 1)
     def prov1() = spark.read.parquet(s"$base/out")
       .filter($"batch_id" === 1L).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(4))).toSet
@@ -882,14 +739,14 @@ class StreamingOpsSpec extends AnyFunSuite {
     // re-overwritten and the merge then lands; or after the merge — the
     // store read is the generation STRICTLY OLDER than batchId, so the
     // pre-merge state is still what provenance is computed against)
-    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L)
+    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L, 1)
     assert(prov1() === firstProv,
       "replayed provenance identical — 'changed' stays changed, no dup rows")
     assert(liveStore() === firstStore, "replayed merge is a fixpoint")
     // a third batch prunes the unreachable generation 0 but keeps 1
     val b2 = Seq((20L, "https://example.org/d", "delta v1"))
       .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b2, s"$base/store", s"$base/out", 2L)
+    StreamingOps.ingestBatchUrlMerge(b2, s"$base/store", s"$base/out", 2L, 1)
     val gens = new java.io.File(s"$base/store").listFiles()
       .map(_.getName).filter(_.startsWith("gen=")).sorted.toSeq
     assert(gens === Seq("gen=1", "gen=2"),
@@ -898,27 +755,31 @@ class StreamingOpsSpec extends AnyFunSuite {
       "history carried over: a, b(v2), d — one row per key")
   }
 
-  test("ingestBatchUrlMergeParted: a generation holds ONLY touched bands — " +
+  /** Three (band, url) pairs in DISTINCT hash bands of an `nb`-band URL
+    * store, bands ascending (xxhash64 is fixed — this is deterministic). */
+  private def threeBands(nb: Int): Seq[(Long, String)] = {
+    import spark.implicits._
+    val byBand = ('a' to 'p').map(c => s"https://example.org/$c").toDF("url")
+      .select($"url", org.apache.spark.sql.functions.pmod(
+        org.apache.spark.sql.functions.xxhash64(
+          graft.operators.Dedup.canonicalUrl($"url")),
+        org.apache.spark.sql.functions.lit(nb.toLong)).as("band"))
+      .collect().map(r => r.getLong(1) -> r.getString(0))
+      .groupBy(_._1).view.mapValues(_.head._2).toMap
+    assert(byBand.size >= 3, s"fixture spans 3+ bands: ${byBand.keys}")
+    byBand.toSeq.sorted.take(3)
+  }
+
+  test("ingestBatchUrlMerge: a generation holds ONLY touched bands — " +
       "untouched bands stay byte-identical in their original generation and " +
       "resolve through the manifest; replay is a fixpoint; prune is " +
       "reference-aware") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-parted").toString
     val nb = 4
-    // map candidate pages to hash bands so the test can pick keys in
-    // three DISTINCT bands (xxhash64 is fixed — this is deterministic)
-    val byBand = ('a' to 'p').map(c => s"https://example.org/$c").toDF("url")
-      .select($"url", org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.xxhash64(
-          graft.operators.Dedup.canonicalUrl($"url")),
-        org.apache.spark.sql.functions.lit(nb.toLong)).as("band"))
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-      .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
-    assert(byBand.size >= 3, s"fixture spans 3+ bands: ${byBand.keys}")
-    val Seq(bA, bB, bC) = byBand.keys.toSeq.sorted.take(3)
-    val (uA, uB, uC) = (byBand(bA).head, byBand(bB).head, byBand(bC).head)
+    val Seq((bA, uA), (bB, uB), (_, uC)) = threeBands(nb)
     def ingest(bid: Long, rows: (Long, String, String)*): Unit =
-      StreamingOps.ingestBatchUrlMergeParted(
+      StreamingOps.ingestBatchUrlMerge(
         rows.toDF("doc_id", "url", "text"),
         s"$base/store", s"$base/out", bid, nb)
     def snapshot(dir: String): Map[String, (Long, String)] = {
@@ -973,6 +834,37 @@ class StreamingOpsSpec extends AnyFunSuite {
       "the manifest-resolved store equals the last-writer-wins fold")
   }
 
+  test("a malformed _BANDS manifest line fails the next batch LOUD and " +
+      "deletes no generation") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-badmanifest").toString
+    val nb = 4
+    val Seq((bA, uA), (bB, uB), (_, uC)) = threeBands(nb)
+    def ingest(bid: Long, rows: (Long, String, String)*): Unit =
+      StreamingOps.ingestBatchUrlMerge(
+        rows.toDF("doc_id", "url", "text"),
+        s"$base/store", s"$base/out", bid, nb)
+    def gens(): Seq[String] = new java.io.File(s"$base/store").listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted.toSeq
+    ingest(0L, (1L, uA, "alpha v1"), (2L, uB, "beta v1"))
+    ingest(1L, (10L, uA, "alpha v2")) // manifest: A -> 1, B -> 0
+    // corrupt band B's entry (line 2) through the filesystem, checksum and all
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new org.apache.hadoop.fs.Path(s"$base/store/gen=1/_BANDS"), true)
+    try out.write(s"$bA=1\n$bB=O\n".getBytes("UTF-8")) finally out.close()
+    val before = gens()
+    assert(before === Seq("gen=0", "gen=1"))
+    // skipping the line would drop band B from batch 2's manifest and
+    // prune gen=0, the only generation holding B's rows
+    val e = intercept[IllegalStateException](ingest(2L, (30L, uC, "gamma v1")))
+    assert(e.getMessage.contains("gen=1/_BANDS") && e.getMessage.contains("line 2"),
+      e.getMessage)
+    assert(gens() === before, s"no generation deleted: ${gens()}")
+    intercept[IllegalStateException](
+      StreamingOps.urlMergePartedStore(spark, s"$base/store"))
+  }
+
   test("compactPartedStore rewrites the serving view into ONE self-contained " +
       "generation: serving frame is a fixpoint, live generation count drops " +
       "to 1, the next batch's read resolves through the compacted gen only, " +
@@ -980,17 +872,9 @@ class StreamingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-parted-compact").toString
     val nb = 4
-    val byBand = ('a' to 'p').map(c => s"https://example.org/$c").toDF("url")
-      .select($"url", org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.xxhash64(
-          graft.operators.Dedup.canonicalUrl($"url")),
-        org.apache.spark.sql.functions.lit(nb.toLong)).as("band"))
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-      .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
-    val Seq(bA, bB, bC) = byBand.keys.toSeq.sorted.take(3)
-    val (uA, uB, uC) = (byBand(bA).head, byBand(bB).head, byBand(bC).head)
+    val Seq((_, uA), (_, uB), (_, uC)) = threeBands(nb)
     def ingest(bid: Long, rows: (Long, String, String)*): Unit =
-      StreamingOps.ingestBatchUrlMergeParted(
+      StreamingOps.ingestBatchUrlMerge(
         rows.toDF("doc_id", "url", "text"),
         s"$base/store", s"$base/out", bid, nb)
     def gens(): Seq[String] = new java.io.File(s"$base/store").listFiles()
@@ -1078,7 +962,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-parted-hw").toString
     def ingest(bid: Long, doc: Long, url: String, text: String): Unit =
-      StreamingOps.ingestBatchUrlMergeParted(
+      StreamingOps.ingestBatchUrlMerge(
         Seq((doc, url, text)).toDF("doc_id", "url", "text"),
         s"$base/store", s"$base/out", bid, 4)
     ingest(0L, 1L, "https://example.org/a", "alpha v1")
@@ -1123,7 +1007,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-parted-max").toString
     def ingest(bid: Long, doc: Long, url: String, text: String): Unit =
-      StreamingOps.ingestBatchUrlMergeParted(
+      StreamingOps.ingestBatchUrlMerge(
         Seq((doc, url, text)).toDF("doc_id", "url", "text"),
         s"$base/store", s"$base/out", bid, 4)
     ingest(0L, 1L, "https://example.org/a", "alpha v1")
@@ -1166,7 +1050,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-parted-mono").toString
     def ingest(bid: Long, doc: Long, url: String, text: String): Unit =
-      StreamingOps.ingestBatchUrlMergeParted(
+      StreamingOps.ingestBatchUrlMerge(
         Seq((doc, url, text)).toDF("doc_id", "url", "text"),
         s"$base/store", s"$base/out", bid, 4)
     ingest(0L, 1L, "https://example.org/a", "alpha v1")
@@ -1204,8 +1088,8 @@ class StreamingOpsSpec extends AnyFunSuite {
       .toDF("doc_id", "url", "text")
     val b1 = Seq((10L, "https://example.org/b", "beta v1"))
       .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b0, s"$base/store", s"$base/out", 0L)
-    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L)
+    StreamingOps.ingestBatchUrlMerge(b0, s"$base/store", s"$base/out", 0L, 1)
+    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L, 1)
     val gen1Before = spark.read.parquet(s"$base/store/gen=1").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(gen1Before.map(_._1) === Set("example.org/a", "example.org/b"))
@@ -1218,7 +1102,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // here: the entire accumulated history)
     val r0 = Seq((20L, "https://example.org/c", "gamma v1"))
       .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(r0, s"$base/store", s"$base/out2", 0L)
+    StreamingOps.ingestBatchUrlMerge(r0, s"$base/store", s"$base/out2", 0L, 1)
     val gens = new java.io.File(s"$base/store").listFiles()
       .map(_.getName).filter(_.startsWith("gen=")).sorted.toSeq
     assert(gens === Seq("gen=0", "gen=1", "gen=tmp"),
@@ -1229,21 +1113,21 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("ingestBatchUrlMerge prune anchor is commit-marker-aware: a crashed " +
-      "uncommitted newer generation (dir present, no _SUCCESS) is NOT the " +
+      "uncommitted newer generation (dir present, no _BANDS) is NOT the " +
       "keep anchor — the committed generation the batch actually read " +
       "survives the prune, and the batch's replay fixpoint holds") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-crashgen").toString
     val b0 = Seq((1L, "https://example.org/a", "alpha v1"),
       (2L, "https://example.org/b", "beta v1")).toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b0, s"$base/store", s"$base/out", 0L)
+    StreamingOps.ingestBatchUrlMerge(b0, s"$base/store", s"$base/out", 0L, 1)
     // simulate batch 1 crashing MID-WRITE: its generation directory exists
-    // with data files but the _SUCCESS marker never landed
+    // with band data but the _BANDS manifest never landed
     val b1 = Seq((10L, "https://example.org/b", "beta v2"))
       .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L)
+    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L, 1)
     assert(java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$base/store/gen=1/_SUCCESS")),
+      java.nio.file.Paths.get(s"$base/store/gen=1/_BANDS")),
       "fixture: gen=1 exists and its commit marker is removed")
     val gen0Before = spark.read.parquet(s"$base/store/gen=0").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(3))).toSet
@@ -1252,7 +1136,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // old rule anchored on gen=1 and deleted gen=0, the replay anchor
     val b2 = Seq((20L, "https://example.org/c", "gamma v1"))
       .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b2, s"$base/store", s"$base/out", 2L)
+    StreamingOps.ingestBatchUrlMerge(b2, s"$base/store", s"$base/out", 2L, 1)
     def prov2() = spark.read.parquet(s"$base/out")
       .filter($"batch_id" === 2L).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(4))).toSet
@@ -1271,7 +1155,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // identical provenance, identical merged generation (the fixpoint the
     // old rule broke by deleting the anchor: replay would have seen an
     // empty store and reported everything 'new' with lost history)
-    StreamingOps.ingestBatchUrlMerge(b2, s"$base/store", s"$base/out", 2L)
+    StreamingOps.ingestBatchUrlMerge(b2, s"$base/store", s"$base/out", 2L, 1)
     assert(prov2() === firstProv, "replay fixpoint: provenance identical")
     assert(spark.read.parquet(s"$base/store/gen=2").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
