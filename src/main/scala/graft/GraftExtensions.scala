@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{BpeTokenCount, CharEntropyMilli, DotProduct, MinHashSig}
+import graft.functions.{BpeTokenCount, CharEntropyMilli, DotProduct}
 
 /** Session extension registering graft's custom expressions as SQL
   * functions, so `spark.sql("SELECT graft_dot(a, b)")` works next to the
@@ -40,30 +40,6 @@ object GraftExtensions {
   private[graft] val bpeBuilder: Seq[Expression] => Expression =
     exprs => BpeTokenCount(exprs(0))
 
-  /** graft_minhash(sids[, numHashes]) — minhash signature, [[MinHashSig]].
-    * numHashes must be an integer literal (it shapes the output array); a
-    * non-foldable or non-integral argument is rejected at resolution with a
-    * readable analysis error rather than an opaque eval-time cast failure. */
-  private[graft] val minhashBuilder: Seq[Expression] => Expression =
-    exprs => MinHashSig(exprs(0),
-      if (exprs.length > 1) {
-        val arg = exprs(1)
-        def fail(): Nothing = throw new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION",
-          Map("errorMessage" ->
-            ("graft_minhash: numHashes (2nd argument) must be a positive " +
-              s"integer literal, got ${arg.sql}")),
-          None)
-        if (!arg.foldable) fail()
-        arg.eval() match {
-          case n: java.lang.Integer => n.intValue()
-          case n: java.lang.Long if n.longValue() == n.intValue() => n.intValue()
-          case n: java.lang.Short => n.intValue()
-          case n: java.lang.Byte => n.intValue()
-          case _ => fail()
-        }
-      } else 64)
-
   /** graft_char_entropy(text) — fixed-point char-entropy milli-bits,
     * [[CharEntropyMilli]] (null text → null here, the raw expression; the
     * Column/gate form adds the COALESCE-0 sentinel). Exactly one argument
@@ -88,7 +64,6 @@ object GraftExtensions {
     ("graft_dot", classOf[DotProduct], dotBuilder),
     ("graft_cosine", classOf[DotProduct], cosineBuilder),
     ("graft_bpe_count", classOf[BpeTokenCount], bpeBuilder),
-    ("graft_minhash", classOf[MinHashSig], minhashBuilder),
     ("graft_char_entropy", classOf[CharEntropyMilli], charEntropyBuilder))
 
   /** Imperative registration for sessions built without the extension. */

@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (distinct×filter, sorted-run fold) measured seconds-per-thousand-docs:
   * ~35 s for the composed pipeline at sf0.1 against v1's 1.2 s. This
   * expression is one fused O(chars) Java loop inside whole-stage codegen
-  * (the [[MinHashSig]] posture): an int[128] fast path for ASCII plus a
+  * (the [[Md5MinLanes]] posture): an int[128] fast path for ASCII plus a
   * boxed map for the astronomically-rare rest.
   *
   * Unit note: counts are per Unicode CODE POINT; the audit form counts

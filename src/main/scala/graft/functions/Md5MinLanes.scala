@@ -22,12 +22,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why an expression: the HOF form is a nested lambda tree evaluated
   * INTERPRETED — lanes × shingles md5 calls each pay expression-tree
   * dispatch and a concat allocation, and the tree blocks whole-stage
-  * codegen (the round-17 char-entropy lesson; [[MinHashSig]] is this
-  * operator's xxhash64 twin). Here the whole signature is one fused
-  * loop — prefix bytes per lane precomputed once, one byte-array concat
-  * per (shingle, lane), straight into codegen via a static call. The md5
-  * keying (not xxhash64) is what keeps the LSH twins DuckDB-replayable:
-  * this is the oracle-expressible half of the minhash family. */
+  * codegen (the round-17 char-entropy lesson). Here the whole signature
+  * is one fused loop — prefix bytes per lane precomputed once, one
+  * byte-array concat per (shingle, lane), straight into codegen via a
+  * static call. The md5 keying (not xxhash64) is what keeps
+  * [[graft.operators.MinHashLSH]] DuckDB-replayable. */
 case class Md5MinLanes(child: Expression, lanes: Int) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

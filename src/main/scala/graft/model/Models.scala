@@ -2,24 +2,6 @@ package graft.model
 
 import org.apache.spark.sql.types._
 
-/** Record types of the reference engine, re-expressed as Spark case classes
-  * with explicit (never inferred) schemas.
-  *
-  * Reference shapes (see SURVEY.md §1.2):
-  *  - ProductKey            — /root/reference/src/main/java/kafka/streams/inventory/count/ProductKey.java:20-29
-  *  - InventoryUpdateEvent  — InventoryUpdateEvent.java:23-58 (delta:int, key, action ∈ {INC,DEC,REP})
-  *  - InventoryCountEvent   — InventoryCountEvent.java:25-70 (count:int, key)
-  */
-final case class ProductKey(productCode: String)
-
-final case class InventoryUpdateEvent(delta: Int, key: ProductKey, action: String)
-
-/** Aggregate state / output value. The reference initializes state with the
-  * no-arg constructor (count=0, key=null) and never sets the embedded key
-  * (InventoryCountUpdateEventUpdater.java:32-38) — so only the record key
-  * identifies the product; oracles compare (record key, count). */
-final case class InventoryCountEvent(count: Int, key: ProductKey)
-
 /** A keyed update event with an explicit total-order column. Kafka gives
   * per-key arrival order for free (partition offsets); Spark does not, so
   * every batch/streaming formulation carries `eventOrder` explicitly
@@ -30,6 +12,19 @@ final case class OrderedUpdateEvent(
     action: String,
     delta: Int)
 
+/** Wire schemas of the reference engine's records, explicit (never
+  * inferred). Reference shapes (see SURVEY.md §1.2):
+  *  - ProductKey — ProductKey.java:20-29 (productCode:string):
+  *    [[Schemas.productKey]]
+  *  - InventoryUpdateEvent — InventoryUpdateEvent.java:23-58 (delta:int,
+  *    key, action ∈ {INC,DEC,REP}): [[Schemas.inventoryUpdateEvent]]
+  *  - InventoryCountEvent — InventoryCountEvent.java:25-70 (count:int,
+  *    key): the aggregate state and output value. The reference
+  *    initializes state with the no-arg constructor (count=0, key=null) and
+  *    never sets the embedded key (InventoryCountUpdateEventUpdater.java:32-38)
+  *    — so only the record key identifies the product; oracles compare
+  *    (record key, count).
+  */
 object Schemas {
   /** JSON wire schema of the record key. */
   val productKey: StructType =
@@ -40,11 +35,6 @@ object Schemas {
     StructField("delta", IntegerType),
     StructField("key", productKey),
     StructField("action", StringType)))
-
-  /** JSON wire schema of the output value. */
-  val inventoryCountEvent: StructType = StructType(Seq(
-    StructField("count", IntegerType),
-    StructField("key", productKey)))
 }
 
 object Actions {

@@ -343,7 +343,7 @@ object Similarity {
 
   /** Banded scale path for all-pairs cosine: candidate pairs share at least
     * one signature band; exact cosine verifies each candidate (same
-    * candidate/verify split as [[MinHashLSH.nearDuplicates]]).
+    * candidate/verify split as [[MinHashLSH.queryMd5]]).
     *
     * The quadratic stages run on DISTINCT vectors only: training corpora
     * carry heavy exact duplication (re-crawls, mirrored shards — the 10×
@@ -1124,7 +1124,8 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("m"), col("lrow")))),
         s => s.getField("lrow")).as("lut"))
 
-  /** PQ ANN end to end: train → encode → ADC-score → exact rerank.
+  /** PQ ANN serving: ADC-score → exact rerank, against an externally
+    * supplied (typically [[trainOnce]]-persisted) codebook + encoded index.
     * The ADC score of a corpus row is `Σ_m lut[m][codes[m]]` — a row-local
     * zip_with/aggregate over the broadcast LUT, inside whole-stage codegen,
     * no shuffle until the per-query top-[[PqCandidates]] window over
@@ -1133,19 +1134,9 @@ object Similarity {
     * reports EXACT cosines — approximation affects WHICH candidates are
     * scored, never the reported values (the same contract as the IVF
     * path; QuantizationSpec pins recall vs. brute force and the
-    * ADC ≡ dot(q, reconstruction) identity). */
-  def knnPq(embeddings: DataFrame, k: Int = 5, trainIters: Int = 2): DataFrame = {
-    val n = Tables.materialize(withNorm(embeddings))
-    val dim = n.select(size(col("e"))).head.getInt(0)
-    val subs = Tables.materialize(pqSubVectors(n, dim, "vec_id"))
-    val cb = Tables.materialize(pqCodebook(subs, trainIters))
-    knnPqWith(n, dim, cb, pqEncode(subs, cb), k)
-  }
-
-  /** [[knnPq]] serving path against an externally supplied (typically
-    * [[trainOnce]]-persisted) codebook + encoded index. Takes the prepared
-    * normed corpus + dim so callers never pay `withNorm` or the dim-probe
-    * head job twice. */
+    * ADC ≡ dot(q, reconstruction) identity). Takes the prepared normed
+    * corpus + dim so callers never pay `withNorm` or the dim-probe head
+    * job twice. */
   private[graft] def knnPqWith(n: DataFrame, dim: Int, cb: DataFrame,
       codes: DataFrame, k: Int = 5): DataFrame = {
     val qsubs = pqSubVectors(

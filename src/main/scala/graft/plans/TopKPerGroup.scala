@@ -12,7 +12,7 @@ import org.apache.spark.sql.graftbridge.GraftBridge
 /** Whole-operator extension demo: per-group top-k as a FIRST-CLASS plan
   * node — custom logical operator → injected [[TopKPerGroupStrategy]] →
   * custom physical operator — completing graft's extension-surface tour
-  * (native expression: [[graft.functions.MinHashSig]]; optimizer rule:
+  * (native expression: [[graft.functions.Md5MinLanes]]; optimizer rule:
   * [[DotProductFusion]]; planner strategy: this).
   *
   * Why this operator: every kNN serving path in

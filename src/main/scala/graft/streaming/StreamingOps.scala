@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.{DHashBands, MediaRecord}
 
@@ -307,12 +307,14 @@ object StreamingOps {
     } finally survivors.unpersist()
   }
 
-  private def sigSchema = org.apache.spark.sql.types.StructType(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType) +:
-    (0 until graft.operators.MinHashLSH.NumHashes).map(i =>
-      org.apache.spark.sql.types.StructField(s"h$i",
-        org.apache.spark.sql.types.LongType)))
+  /** The near-dup loop's stores: [[graft.operators.MinHashLSH.md5Signatures]]
+    * and [[graft.operators.MinHashLSH.md5Bands]] rows. */
+  private def md5SigSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("sig", ArrayType(StringType))))
+
+  private def md5BandSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("band", IntegerType),
+    StructField("bh", StringType)))
 
   private def bandSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_id",
@@ -394,31 +396,31 @@ object StreamingOps {
     histDrops.union(batchDrops)
   }
 
-  /** One micro-batch of the NEAR-dup ingest loop: estimate-dedup `batch`
-    * against the signature/band stores' current contents, emit survivors,
-    * then append the survivors' signatures and band rows so the next batch
-    * sees them. Same emit-before-append crash-safety ordering as
-    * [[ingestBatch]]; same constant-bytes-per-doc store economics as
-    * [[graft.operators.MinHashLSH.dedupIncrementalMinHashOn]] — this is the
-    * loop a crawl frontier actually runs when history is too large for a
-    * postings store. */
+  /** One micro-batch of the NEAR-dup ingest loop — the streaming twin of
+    * `dedup_incremental_minhash_md5`, on the same keep rule
+    * ([[graft.operators.MinHashLSH.dedupIncrementalMinHashOn]]): drop any
+    * doc whose 8-lane md5 MinHash estimate says it near-duplicates a
+    * stored doc or an earlier-id batch doc, emit survivors, then append
+    * the survivors' signatures and band rows so the next batch sees them.
+    * Same emit-before-append crash-safety ordering as [[ingestBatch]];
+    * constant bytes per stored doc — the loop a crawl frontier runs when
+    * history is too large for a postings store. */
   def ingestBatchNearDup(batch: DataFrame, sigPath: String, bandPath: String,
       outPath: String): Unit = {
     val spark = batch.sparkSession
-    val survivors = graft.operators.MinHashLSH.dedupIncrementalMinHashOn(
+    val lsh = graft.operators.MinHashLSH
+    val survivors = lsh.dedupIncrementalMinHashOn(
         batch,
-        readOrEmpty(spark, sigPath, sigSchema),
-        readOrEmpty(spark, bandPath, bandSchema))
+        readOrEmpty(spark, sigPath, md5SigSchema),
+        readOrEmpty(spark, bandPath, md5BandSchema))
       .join(batch.dropDuplicates("doc_id"), Seq("doc_id")) // see [[ingestBatch]]
       .persist()
     try {
       survivors.write.mode("append").parquet(outPath)
-      val sigs = graft.operators.MinHashLSH.signatures(survivors).persist()
+      val sigs = lsh.md5Signatures(lsh.shingleArrays(survivors)).persist()
       try {
         sigs.write.mode("append").parquet(sigPath)
-        graft.operators.MinHashLSH.bandHashes(sigs)
-          .select(col("doc_id"), col("band"), col("bh"))
-          .write.mode("append").parquet(bandPath)
+        lsh.md5Bands(sigs).write.mode("append").parquet(bandPath)
       } finally sigs.unpersist()
     } finally survivors.unpersist()
   }
@@ -742,16 +744,20 @@ object StreamingOps {
     * Layout under `storePath`:
     * {{{
     * gen=<id>/band=<b>/part-*.parquet   touched bands only
-    * gen=<id>/_BANDS                    manifest: "<band>=<gen>" for every
-    *                                    band ever written; written LAST =
-    *                                    the commit marker
+    * gen=<id>/_BANDS                    manifest: "numBands=<n>", then
+    *                                    "<band>=<gen>" for every band ever
+    *                                    written; written LAST = the commit
+    *                                    marker
     * }}}
     * `band = pmod(xxhash64(canonical), numBands)` — a pure function of the
     * key (the [[graft.sources.ParquetSink.mergePartitionedBucketed]]
     * contract), so a key's history row lives exactly in its own band:
     * provenance needs only the touched bands' slice, and a replacement
     * lands where its stale row lies. `numBands` is fixed for a store's
-    * life: the manifest's band numbers mean nothing under another count.
+    * life: the manifest's band numbers mean nothing under another count,
+    * so the manifest records it and a batch whose `numBands` differs from
+    * the one its read generation recorded fails LOUD before it writes
+    * anything.
     *
     * Replay is EXACT: the store read resolves through the newest COMMITTED
     * (`_BANDS` present) generation STRICTLY OLDER than `batchId`, so a
@@ -801,9 +807,15 @@ object StreamingOps {
       val touched = keyed.select(bandExpr.as("band")).distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
       val keep = newestCommittedGen(fs, storePath, batchId)
-      val parent = keep
-        .map(g => readBandManifest(fs, s"$storePath/gen=$g"))
-        .getOrElse(Map.empty[Long, Long])
+      val read = keep.map(g => readBandManifest(fs, s"$storePath/gen=$g"))
+      read.flatMap(_.numBands).foreach { n =>
+        require(n == numBands,
+          s"ingestBatchUrlMerge: numBands=$numBands, but the store at " +
+            s"$storePath was written with numBands=$n — a key's band is " +
+            "pmod(xxhash64(canonical), numBands), so another count resolves " +
+            s"keys to the wrong bands; keep numBands=$n or start a new store")
+      }
+      val parent = read.map(_.bands).getOrElse(Map.empty[Long, Long])
       // pre-merge slice of the TOUCHED bands only
       val slice = bandView(spark, storePath, parent.filter(e => touched.contains(e._1)))
         .map(_.drop("band"))
@@ -823,7 +835,8 @@ object StreamingOps {
       // manifest LAST — the commit point: parent pointers for untouched
       // bands, this generation for touched ones
       val manifest = parent ++ touched.map(_ -> batchId)
-      writeBandManifest(fs, s"$storePath/gen=$batchId", manifest)
+      writeBandManifest(fs, s"$storePath/gen=$batchId",
+        BandManifest(Some(numBands), manifest))
       // reference-aware prune: a generation survives while the read
       // generation (replay anchor), its manifest, or the manifest just
       // written still reaches it; only strictly-older unreferenced gens
@@ -841,7 +854,7 @@ object StreamingOps {
   def urlMergePartedStore(spark: SparkSession, storePath: String): DataFrame = {
     val fs = fsOf(spark, storePath)
     newestCommittedGen(fs, storePath, Long.MaxValue)
-      .flatMap(g => bandView(spark, storePath, readBandManifest(fs, s"$storePath/gen=$g")))
+      .flatMap(g => bandView(spark, storePath, readBandManifest(fs, s"$storePath/gen=$g").bands))
       .map(_.drop("band"))
       .getOrElse(empty(spark, urlFpGenSchema))
   }
@@ -858,28 +871,35 @@ object StreamingOps {
         .select(col("canonical"), col("doc_id"), col("url"), col("fp"), col("band"))
     }.reduceOption(_ unionByName _)
 
-  /** The `_BANDS` manifest of `genDir` as band → generation. A line that
-    * does not parse fails LOUD: skipping it would drop its band from the
-    * next manifest, and the batch after that would prune the generation
-    * holding the band's rows. The empty line of an empty manifest is no
-    * entry. */
+  /** A `_BANDS` manifest: the store's band count (None in a manifest
+    * written before the count was recorded) and band → generation. */
+  private case class BandManifest(numBands: Option[Int], bands: Map[Long, Long])
+
+  /** The `_BANDS` manifest of `genDir`. A line that does not parse fails
+    * LOUD: skipping it would drop its band from the next manifest, and the
+    * batch after that would prune the generation holding the band's rows.
+    * The empty line of an empty manifest is no entry. */
   private def readBandManifest(fs: org.apache.hadoop.fs.FileSystem,
-      genDir: String): Map[Long, Long] = {
+      genDir: String): BandManifest = {
     val p = new org.apache.hadoop.fs.Path(s"$genDir/_BANDS")
     val in = fs.open(p)
+    def number(v: String): Boolean = v.nonEmpty && v.forall(_.isDigit)
     try {
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      val entries = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .zipWithIndex.filter(_._1.nonEmpty)
         .map { case (line, i) =>
           line.split("=", 2) match {
-            case Array(b, g) if b.forall(_.isDigit) && g.forall(_.isDigit)
-                && b.nonEmpty && g.nonEmpty =>
-              b.toLong -> g.toLong
+            case Array("numBands", n) if number(n) && n.length < 10 =>
+              Left(n.toInt)
+            case Array(b, g) if number(b) && number(g) =>
+              Right(b.toLong -> g.toLong)
             case _ => throw new IllegalStateException(
               s"corrupt _BANDS manifest at $p line ${i + 1}: '$line' — " +
-                "expected <band>=<generation>")
+                "expected numBands=<count> or <band>=<generation>")
           }
-        }.toMap
+        }.toSeq
+      BandManifest(entries.collectFirst { case Left(n) => n },
+        entries.collect { case Right(e) => e }.toMap)
     } finally in.close()
   }
 
@@ -898,13 +918,13 @@ object StreamingOps {
     * committed generation unmarked until the next replay (r16 ADVICE). A
     * stale temp from a crashed attempt is simply overwritten next time. */
   private def writeBandManifest(fs: org.apache.hadoop.fs.FileSystem,
-      genDir: String, manifest: Map[Long, Long]): Unit = {
+      genDir: String, manifest: BandManifest): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(s"$genDir/.bands.tmp")
     val dest = new org.apache.hadoop.fs.Path(s"$genDir/_BANDS")
     val out = fs.create(tmp, true)
-    try out.write(manifest.toSeq.sorted
-      .map { case (b, g) => s"$b=$g" }.mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
+    try out.write((manifest.numBands.map(n => s"numBands=$n").toSeq ++
+        manifest.bands.toSeq.sorted.map { case (b, g) => s"$b=$g" })
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
     renameOver(fs, tmp, dest)
   }
@@ -1086,13 +1106,13 @@ object StreamingOps {
       case Some(g) =>
         // the serving view, band column preserved
         val manifest = readBandManifest(fs, s"$storePath/gen=$g")
-        bandView(spark, storePath, manifest) match {
+        bandView(spark, storePath, manifest.bands) match {
           case None => -1 // committed but empty manifest — nothing to write
           case Some(v) =>
             v.write.mode("overwrite").partitionBy("band")
               .parquet(s"$storePath/gen=$compactId")
             writeBandManifest(fs, s"$storePath/gen=$compactId",
-              manifest.keys.map(_ -> compactId).toMap)
+              manifest.copy(bands = manifest.bands.keys.map(_ -> compactId).toMap))
             // high-water mark AFTER the commit marker: a crash between the
             // two is healed by the selfCommitted retry branch above
             writeCompactMarker(fs, storePath, compactId)
@@ -1117,7 +1137,7 @@ object StreamingOps {
     newestCommittedGen(fs, storePath, Long.MaxValue) match {
       case None => 0
       case Some(g) =>
-        val live = readBandManifest(fs, s"$storePath/gen=$g").values.toSet + g
+        val live = readBandManifest(fs, s"$storePath/gen=$g").bands.values.toSet + g
         pruneGenerations(fs, storePath)(n => n < g && !live(n))
     }
   }

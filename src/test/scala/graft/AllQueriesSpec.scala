@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    missing columns, bad casts at `sbt test` time);
   *  - every oracled query's SQL mentions each of its output column names
   *    (the driver hash-compare sorts columns by name, so a rename on one
-  *    side is an automatic mismatch). */
+  *    side is an automatic mismatch);
+  *  - results do not depend on the shuffle partition count or on adaptive
+  *    execution (a sample of queries, about 100 s on a 4-core host). */
 class AllQueriesSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -41,5 +43,32 @@ class AllQueriesSpec extends AnyFunSuite {
     }
     assert(failures.isEmpty,
       s"columns absent from oracle SQL (hash compare would misalign): ${failures.mkString("\n")}")
+  }
+
+  test("registered results are the same at shuffle partitions {1, 17} x AQE {on, off}") {
+    // same rows in the same order as at the shared session's own conf;
+    // caches are cleared before every run so each cell plans and executes
+    // afresh, and the session's conf is restored whatever happens
+    val queries = Seq("dedup_minhash_lsh_md5", "dedup_incremental_minhash_md5",
+      "inventory_fold", "inventory_scd2")
+    val partitions = "spark.sql.shuffle.partitions"
+    val aqe = "spark.sql.adaptive.enabled"
+    def rows(name: String): Seq[org.apache.spark.sql.Row] = {
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      spark.sharedState.cacheManager.clearCache()
+      SparkEntry.queries(name)(spark, dir).collect().toSeq
+    }
+    val saved = Seq(partitions, aqe).map(k => k -> spark.conf.get(k))
+    val expected = queries.map(q => q -> rows(q)).toMap
+    queries.foreach(q => assert(expected(q).nonEmpty, s"$q returned no rows"))
+    try {
+      for (n <- Seq(1, 17); adaptive <- Seq(true, false)) {
+        spark.conf.set(partitions, n.toLong)
+        spark.conf.set(aqe, adaptive)
+        queries.foreach { q =>
+          assert(rows(q) === expected(q), s"$q differs at partitions=$n aqe=$adaptive")
+        }
+      }
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

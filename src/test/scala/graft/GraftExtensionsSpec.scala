@@ -45,21 +45,4 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(r.getLong(2) === 0L, "empty string is the audit form's 0 sentinel")
     assert(r.isNullAt(3), "the raw SQL expression null-propagates")
   }
-
-  test("graft_minhash rejects a non-literal numHashes with a readable analysis error") {
-    GraftExtensions.register(spark)
-    // literal forms resolve: INT and (in-range) BIGINT literals
-    assert(spark.sql("SELECT size(graft_minhash(array(1L, 2L), 16)) AS n")
-      .collect().head.getInt(0) === 16)
-    val err = intercept[Exception] {
-      spark.sql("SELECT graft_minhash(array(1L, 2L), id) FROM range(1)").collect()
-    }
-    assert(err.getMessage.contains("numHashes"),
-      s"non-foldable arg must name the contract, got: ${err.getMessage}")
-    val err2 = intercept[Exception] {
-      spark.sql("SELECT graft_minhash(array(1L, 2L), 'x')").collect()
-    }
-    assert(err2.getMessage.contains("numHashes"),
-      s"non-integral arg must name the contract, got: ${err2.getMessage}")
-  }
 }

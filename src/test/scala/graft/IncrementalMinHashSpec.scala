@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, MinHashLSH}
 import graft.sources.ParquetSink
 
-/** Signature-store incremental near-dup: the keep rule under the MinHash
-  * ESTIMATE, and its agreement with the exact-Jaccard sibling on real docs
-  * (the estimate is deterministic here — fixed hash family, no RNG). */
+/** Signature-store incremental near-dup: the keep rule under the 8-lane md5
+  * MinHash ESTIMATE, and its agreement with the exact-Jaccard sibling on
+  * real docs (the estimate is deterministic — fixed hash family, no RNG). */
 class IncrementalMinHashSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -18,14 +18,14 @@ class IncrementalMinHashSpec extends AnyFunSuite {
     val long = (1 to 20).map(i => s"t$i").mkString(" ")
     val hist = Seq((1L, long)).toDF("doc_id", "text")
     val batch = Seq(
-      (10L, long),                                        // exact copy → 64/64 lanes
-      (11L, long.split(" ").dropRight(1).mkString(" ") + " zz"), // J≈0.84 → dropped
+      (10L, long),                                        // exact copy → 8/8 lanes
+      (11L, long.split(" ").dropRight(1).mkString(" ") + " zz"), // J≈0.89 → dropped
       (12L, (1 to 20).map(i => s"u$i").mkString(" ")),    // novel → kept
       (13L, (1 to 20).map(i => s"u$i").mkString(" ")),    // in-batch copy of 12 → dropped
       (14L, "a b")                                        // too short to shingle → kept
     ).toDF("doc_id", "text")
-    val sigs = MinHashLSH.signatures(hist)
-    val bandT = ParquetSink.writeBucketed(MinHashLSH.bandHashes(sigs), "inc_mh_band", "bh", 4)
+    val sigs = MinHashLSH.md5Signatures(MinHashLSH.shingleArrays(hist))
+    val bandT = ParquetSink.writeBucketed(MinHashLSH.md5Bands(sigs), "inc_mh_band", "bh", 4)
     val sigT = ParquetSink.writeBucketed(sigs, "inc_mh_sig", "doc_id", 4)
     val out = MinHashLSH.dedupIncrementalMinHashOn(batch, sigT, bandT)
       .collect().map(_.getLong(0))
@@ -33,7 +33,7 @@ class IncrementalMinHashSpec extends AnyFunSuite {
   }
 
   test("registered query agrees with the exact-Jaccard sibling on real docs") {
-    val est = MinHashLSH.incrementalMinHash.run(spark, dir)
+    val est = MinHashLSH.incrementalMinHashMd5.run(spark, dir)
       .collect().map(_.getLong(0)).toSet
     val exact = Dedup.incrementalJaccard.run(spark, dir)
       .collect().map(_.getLong(0)).toSet

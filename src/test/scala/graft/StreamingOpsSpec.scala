@@ -479,7 +479,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     try {
       input.addData(StreamDoc(1, "s0", long, t(0)))
       q.processAllAvailable()
-      // batch 2: doc 2 is a one-token edit of doc 1 (J≈0.84, est >> 0.5) —
+      // batch 2: doc 2 is a one-token edit of doc 1 (J≈0.89, est >> 0.5) —
       // only the ACCUMULATED store can catch it; doc 3 is novel
       input.addData(
         StreamDoc(2, "s1", long.split(" ").dropRight(1).mkString(" ") + " zz", t(1)),
@@ -489,9 +489,9 @@ class StreamingOpsSpec extends AnyFunSuite {
         .collect().map(_.getLong(0)).toSet
       assert(kept === Set(1L, 3L),
         s"cross-batch near-dup (2) must be dropped, got $kept")
-      // constant-space store: one signature row and Bands band rows per survivor
+      // constant-space store: one signature row and Md5Bands band rows per survivor
       assert(spark.read.parquet(s"$base/sig").count() === 2)
-      assert(spark.read.parquet(s"$base/band").count() === 2L * graft.operators.MinHashLSH.Bands)
+      assert(spark.read.parquet(s"$base/band").count() === 2L * graft.operators.MinHashLSH.Md5Bands)
     } finally q.stop()
   }
   test("ingestLoopSpans audits span duplication across batches, store grows by novel hashes only") {
@@ -863,6 +863,41 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(gens() === before, s"no generation deleted: ${gens()}")
     intercept[IllegalStateException](
       StreamingOps.urlMergePartedStore(spark, s"$base/store"))
+  }
+
+  test("ingestBatchUrlMerge: a batch whose numBands differs from the store's " +
+      "fails LOUD, naming both counts, before it writes anything") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-numbands").toString
+    val urls = ('a' to 'h').map(c => s"https://example.org/$c")
+    def ingest(bid: Long, nb: Int, text: String): Unit =
+      StreamingOps.ingestBatchUrlMerge(
+        urls.zipWithIndex.map { case (u, i) => (bid * 100 + i, u, s"$text $i") }
+          .toDF("doc_id", "url", "text"),
+        s"$base/store", s"$base/out", bid, nb)
+    def listing(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(base))
+      try walk.iterator.asScala.map(_.toString).toList.sorted
+      finally walk.close()
+    }
+    ingest(0L, 8, "v1")
+    val before = listing()
+    // re-crawl every URL with changed text under another band count: the
+    // keys would resolve to bands 0..3 of an 8-band manifest
+    val e = intercept[IllegalArgumentException](ingest(1L, 4, "v2"))
+    assert(e.getMessage.contains("numBands=4") && e.getMessage.contains("numBands=8"),
+      e.getMessage)
+    assert(listing() === before, "the failed batch wrote nothing")
+    assert(StreamingOps.urlMergePartedStore(spark, s"$base/store").count() === 8L)
+    // the recorded count carries through compaction
+    StreamingOps.compactPartedStore(spark, s"$base/store", 5L)
+    intercept[IllegalArgumentException](ingest(6L, 4, "v2"))
+    ingest(6L, 8, "v2")
+    val status = spark.read.parquet(s"$base/out").filter($"batch_id" === 6L)
+      .select("status").as[String].collect().toSeq
+    assert(status === Seq.fill(8)("changed"), s"provenance under the store's count: $status")
+    assert(StreamingOps.urlMergePartedStore(spark, s"$base/store").count() === 8L)
   }
 
   test("compactPartedStore rewrites the serving view into ONE self-contained " +
