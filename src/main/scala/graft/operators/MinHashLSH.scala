@@ -207,10 +207,19 @@ object MinHashLSH {
     * band store (bucketed by `bh`) and the signature store (bucketed by
     * `doc_id`) are both joined in place; everything that shuffles is
     * O(batch + candidates). The registered `dedup_incremental_minhash_md5`
-    * and the streaming `StreamingOps.ingestBatchNearDup` both run this. */
+    * runs this; the streaming `StreamingOps.ingestBatchNearDup` runs
+    * [[dedupIncrementalMinHashSigs]], the same keep rule over batch
+    * signatures it owns. */
   def dedupIncrementalMinHashOn(newDocs: DataFrame, sigStore: DataFrame,
-      bandStore: DataFrame): DataFrame = {
-    val bsigs = Tables.materialize(md5Signatures(shingleArrays(newDocs)))
+      bandStore: DataFrame): DataFrame =
+    dedupIncrementalMinHashSigs(newDocs,
+      Tables.materialize(md5Signatures(shingleArrays(newDocs))), sigStore, bandStore)
+
+  /** [[dedupIncrementalMinHashOn]] with the batch's (doc_id, sig) signatures
+    * `bsigs` supplied by the caller, who persists them (they are read by
+    * both the history and the within-batch probe) and releases them. */
+  private[graft] def dedupIncrementalMinHashSigs(newDocs: DataFrame,
+      bsigs: DataFrame, sigStore: DataFrame, bandStore: DataFrame): DataFrame = {
     val bband = md5Bands(bsigs)
     // counted bound on the RAW batch doc count (cheap scan — counting the
     // band explode itself would re-run the md5 signature build): batch

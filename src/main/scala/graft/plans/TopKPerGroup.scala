@@ -127,10 +127,7 @@ final case class TopKPerGroupExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val (g, s, t, kk, childOutput) = (groupExprs, score, tieBreak, k, child.output)
-    // read driver-side (here, not in the closure) so the value ships to
-    // executors; the property override exists to make the flush path
-    // drivable in tests
-    val groupCap = if (partial) TopKPerGroupExec.maxPartialGroups else Int.MaxValue
+    val groupCap = if (partial) TopKPerGroupExec.MaxPartialGroups else Int.MaxValue
     val scoreIsLong = score.dataType == org.apache.spark.sql.types.LongType
     child.execute().mapPartitions { it =>
       val keyProj = UnsafeProjection.create(g, childOutput)
@@ -218,13 +215,8 @@ final case class TopKPerGroupExec(
 
 object TopKPerGroupExec {
   /** Flush threshold for the unclustered partial phase: with k ≈ 5–100
-    * this caps partial-state at a few million buffered rows per task.
-    * Overridable via -Dgraft.topk.maxPartialGroups (tests drive the flush
-    * path with a tiny cap). */
-  val DefaultMaxPartialGroups: Int = 1 << 16
-  def maxPartialGroups: Int =
-    sys.props.get("graft.topk.maxPartialGroups").map(_.toInt)
-      .getOrElse(DefaultMaxPartialGroups)
+    * this caps partial-state at a few million buffered rows per task. */
+  val MaxPartialGroups: Int = 1 << 16
 }
 
 /** The injected planner strategy: our node → final-over-partial execs

@@ -3,10 +3,21 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.{DHashBands, MediaRecord}
+
+/** One crawl keyed for [[StreamingOps.urlMergeStream]] — canonical URL,
+  * doc_id, url and `fp = md5(text)` — and the frontier's per-key state: the
+  * latest crawl of the canonical key. */
+final case class UrlCrawl(canonical: String, doc_id: Long, url: String, fp: String)
+
+/** One [[StreamingOps.urlMergeStream]] output row: a batch's latest crawl of
+  * `canonical` and its `status` against the frontier — `new`, `unchanged` or
+  * `changed`. */
+final case class UrlProvenance(canonical: String, doc_id: Long, url: String,
+    fp: String, status: String)
 
 /** Streaming operators for the training-data-pipeline surface, each with the
   * state-bounding story that makes it viable on an unbounded 100 TB/day
@@ -220,7 +231,7 @@ object StreamingOps {
     * store-folding stream in this module runs through. Each micro-batch
     * calls `body(batch, batchId)`; the body — one `ingestBatch*` method per
     * keep rule — owns the store, the output and the durability posture,
-    * e.g. `ingestLoop(docs, ckpt)(ingestBatchUrlMerge(_, store, out, _))`.
+    * e.g. `ingestLoop(docs, ckpt)(ingestBatchSpans(_, store, out, _))`.
     *
     * This is the reference's accumulate-across-rounds state model
     * (InventoryUpdateEventGenerator.java:74-106 keeps an accumulator across
@@ -404,25 +415,29 @@ object StreamingOps {
     * the survivors' signatures and band rows so the next batch sees them.
     * Same emit-before-append crash-safety ordering as [[ingestBatch]];
     * constant bytes per stored doc — the loop a crawl frontier runs when
-    * history is too large for a postings store. */
+    * history is too large for a postings store. The batch signatures are
+    * built once: the keep rule probes with them and the store append
+    * writes the survivors' rows of them. */
   def ingestBatchNearDup(batch: DataFrame, sigPath: String, bandPath: String,
       outPath: String): Unit = {
     val spark = batch.sparkSession
     val lsh = graft.operators.MinHashLSH
-    val survivors = lsh.dedupIncrementalMinHashOn(
-        batch,
-        readOrEmpty(spark, sigPath, md5SigSchema),
-        readOrEmpty(spark, bandPath, md5BandSchema))
-      .join(batch.dropDuplicates("doc_id"), Seq("doc_id")) // see [[ingestBatch]]
-      .persist()
+    val docs = batch.dropDuplicates("doc_id") // see [[ingestBatch]]
+    val bsigs = lsh.md5Signatures(lsh.shingleArrays(docs)).persist()
     try {
-      survivors.write.mode("append").parquet(outPath)
-      val sigs = lsh.md5Signatures(lsh.shingleArrays(survivors)).persist()
+      val survivors = lsh.dedupIncrementalMinHashSigs(
+          docs, bsigs,
+          readOrEmpty(spark, sigPath, md5SigSchema),
+          readOrEmpty(spark, bandPath, md5BandSchema))
+        .join(docs, Seq("doc_id"))
+        .persist()
       try {
+        survivors.write.mode("append").parquet(outPath)
+        val sigs = bsigs.join(survivors.select(col("doc_id")), Seq("doc_id"))
         sigs.write.mode("append").parquet(sigPath)
         lsh.md5Bands(sigs).write.mode("append").parquet(bandPath)
-      } finally sigs.unpersist()
-    } finally survivors.unpersist()
+      } finally survivors.unpersist()
+    } finally bsigs.unpersist()
   }
 
   private def imgFpSchema = org.apache.spark.sql.types.StructType(
@@ -634,512 +649,53 @@ object StreamingOps {
     } finally survivors.unpersist()
   }
 
-  /** `gen=<digits>` directory name → generation number; anything else
-    * (a `gen=tmp` left by a tool, a stray file) is None rather than a
-    * NumberFormatException that fails the whole micro-batch. */
-  private def genNumber(name: String): Option[Long] =
-    if (name.startsWith("gen=")) {
-      val s = name.stripPrefix("gen=")
-      if (s.nonEmpty && s.forall(_.isDigit)) Some(s.toLong) else None
-    } else None
-
-  private def urlFpGenSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("canonical",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("url",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("fp",
-      org.apache.spark.sql.types.StringType)))
-
-  /** Every `gen=<n>` generation directory under `storePath` as (n, dir);
-    * a store that does not exist yet has none. */
-  private def generations(fs: FileSystem, storePath: String): Seq[(Long, Path)] = {
-    val dir = new Path(storePath)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath)
-      .flatMap(p => genNumber(p.getName).map(_ -> p))
-  }
-
-  /** The newest COMMITTED generation strictly OLDER than `before`:
-    * committed = its `_BANDS` manifest is present (written after the band
-    * data, so its presence proves the whole generation); a dir without it
-    * is a crashed write, skipped. Strictly-older is the replay guarantee:
-    * batch N's own generation is never its read, so a batch replayed
-    * AFTER its merge committed still sees the pre-merge state it first
-    * saw. */
-  private def newestCommittedGen(fs: FileSystem, storePath: String,
-      before: Long): Option[Long] =
-    generations(fs, storePath).map(_._1)
-      .filter(g => g < before && fs.exists(new Path(s"$storePath/gen=$g/_BANDS")))
-      .maxOption
-
-  /** Delete every generation whose number is `dead`; returns how many. */
-  private def pruneGenerations(fs: FileSystem, storePath: String)(
-      dead: Long => Boolean): Int = {
-    val stale = generations(fs, storePath).filter(g => dead(g._1))
-    stale.foreach { case (_, p) => fs.delete(p, true) }
-    stale.length
-  }
-
-  /** One row per canonical URL of a (doc_id, url, text) batch: the latest
-    * arrival (max doc_id) wins — the keyed-batch MERGE contract, applied
-    * batch-side. Columns (canonical, doc_id, url, fp = md5(text)). */
-  private def urlKeyed(batch: DataFrame): DataFrame =
-    batch.dropDuplicates("doc_id")
+  /** The URL-MERGE crawl frontier — the streaming twin of `dedup_url_merge`
+    * (the re-crawl CONTENT-CHANGE case [[ingestBatchUrl]] cannot express:
+    * that loop drops every re-crawl of a seen canonical key; this one
+    * REPLACES the stale row when the content moved). The reference's KTable
+    * upsert (kafka-streams-aggregate's aggregate keeps the latest value per
+    * key — `KafkaStreamsInventoryCountApplication.java:78-82`) on the same
+    * keyed-state operator as [[InventoryStream.foldStream]]: per
+    * micro-batch, canonicalize ([[graft.operators.Dedup.canonicalUrl]]) and
+    * fingerprint (`fp = md5(text)`) each crawl — the keys of the batch
+    * twins — keep the latest (max doc_id) crawl per canonical key, emit its
+    * provenance against the key's state — `new` (no state), `unchanged`
+    * (same fp: skippable) or `changed` (must re-enter the content pipeline)
+    * — and replace the state with it, last-writer-wins. `docs` needs
+    * (doc_id, url, text); the output is one [[UrlProvenance]] per touched
+    * key per batch, in append mode.
+    *
+    * The frontier IS the state: one [[UrlCrawl]] per canonical key in the
+    * checkpointed state store, read with
+    * `spark.read.format("statestore").load(checkpoint)`. Exactly-once comes
+    * from the query's checkpoint plus an append sink with its own commit
+    * log (the file sink's `_spark_metadata`): a batch replayed after a crash
+    * recomputes against the state version its first attempt read. Per batch
+    * only the touched keys' state is read and written, never the whole
+    * frontier. */
+  def urlMergeStream(docs: DataFrame): Dataset[UrlProvenance] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs
       .select(graft.operators.Dedup.canonicalUrl(col("url")).as("canonical"),
         col("doc_id"), col("url"), md5(col("text")).as("fp"))
-      .groupBy(col("canonical"))
-      .agg(max(struct(col("doc_id"), col("url"), col("fp"))).as("m"))
-      .select(col("canonical"), col("m.doc_id").as("doc_id"),
-        col("m.url").as("url"), col("m.fp").as("fp"))
-
-  /** Emit each batch key's provenance against the PRE-merge `history` —
-    * `new`, `unchanged` (skippable) or `changed` (must re-enter the
-    * content pipeline) — under this batch's own dynamic-overwrite
-    * `batch_id=<id>` partition, so a replay overwrites it. */
-  private def emitProvenance(keyed: DataFrame, history: DataFrame,
-      outPath: String, batchId: Long): Unit =
-    overwriteBatch(keyed
-      .join(history.select(col("canonical"), col("fp").as("h_fp")),
-        Seq("canonical"), "left")
-      .select(col("canonical"), col("doc_id"), col("url"), col("fp"),
-        when(col("h_fp").isNull, "new")
-          .when(col("fp") === col("h_fp"), "unchanged")
-          .otherwise("changed").as("status")),
-      "batch_id", batchId, outPath)
-
-  /** One micro-batch of the URL-MERGE ingest loop — the streaming twin of
-    * `dedup_url_merge` (the re-crawl CONTENT-CHANGE case [[ingestBatchUrl]]
-    * cannot express: that loop drops every re-crawl of a seen canonical
-    * key; this one REPLACES the stale row when the content moved). The
-    * KTable-upsert semantics of the reference topology
-    * (kafka-streams-aggregate's aggregate keeps the latest value per key —
-    * `KafkaStreamsInventoryCountApplication.java:78-82`) as a crawl
-    * frontier: per batch, canonicalize + fingerprint, collapse to ONE row
-    * per canonical (latest doc_id — the keyed-batch contract
-    * [[graft.sources.ParquetSink.mergeBucketed]] enforces in the batch
-    * form), emit each batch key's provenance downstream (`new` /
-    * `unchanged` — skippable / `changed` — must re-enter the content
-    * pipeline), then fold the batch into the store last-writer-wins.
-    * `batch` needs (doc_id, url, text).
-    *
-    * The store is a GENERATION per merge (`gen=<batchId>`) rather than
-    * [[graft.sources.ParquetSink.writeBucketed]]'s managed-table swap — the
-    * batch query's documented alternative for the streaming cadence: a
-    * catalog swap per micro-batch would serialize every batch behind two
-    * catalog calls, and generations make replay exact (below). A
-    * generation holds ONLY the hash bands containing batch keys, in the
-    * [[graft.sources.ParquetSink.writePartitionedBucketed]] layout, plus a
-    * `_BANDS` manifest pointing every band ever written at the generation
-    * that last wrote it, so per micro-batch the store read AND the store write
-    * are O(touched bands), never O(store). At 100 TB with a daily batch
-    * touching a sliver of the key space, the crawl frontier pays the
-    * sliver — the reference's own posture: the KTable changelog is an
-    * incremental store update, never a snapshot. With `numBands = 1` every
-    * generation is the whole store (the copy-on-write MERGE trade: O(store
-    * + batch) IO per batch).
-    *
-    * Layout under `storePath`:
-    * {{{
-    * gen=<id>/band=<b>/part-*.parquet   touched bands only
-    * gen=<id>/_BANDS                    manifest: "numBands=<n>", then
-    *                                    "<band>=<gen>" for every band ever
-    *                                    written; written LAST = the commit
-    *                                    marker
-    * }}}
-    * `band = pmod(xxhash64(canonical), numBands)` — a pure function of the
-    * key (the [[graft.sources.ParquetSink.mergePartitionedBucketed]]
-    * contract), so a key's history row lives exactly in its own band:
-    * provenance needs only the touched bands' slice, and a replacement
-    * lands where its stale row lies. `numBands` is fixed for a store's
-    * life: the manifest's band numbers mean nothing under another count,
-    * so the manifest records it and a batch whose `numBands` differs from
-    * the one its read generation recorded fails LOUD before it writes
-    * anything.
-    *
-    * Replay is EXACT: the store read resolves through the newest COMMITTED
-    * (`_BANDS` present) generation STRICTLY OLDER than `batchId`, so a
-    * batch replayed after any crash point — mid band write, after the
-    * bands but before the manifest, after the manifest but before
-    * checkpoint commit — sees the identical pre-merge state, recomputes
-    * identical provenance, and rewrites its own `batch_id=<id>` emit
-    * partition, `gen=<batchId>` (static overwrite of a directory that is
-    * exclusively this batch's) and its manifest bit-for-bit: a fixpoint,
-    * never a double-merge.
-    *
-    * Pruning is REFERENCE-AWARE and anchored on the generation this batch
-    * READ: a generation stays live for as long as the read generation's
-    * manifest — or the one just written — still points at it, and only
-    * generations strictly older than the read one and referenced by
-    * neither are deleted; at steady state the live set is the distinct
-    * generations the manifest spans (two with `numBands = 1`). The anchor
-    * is the committed generation the read used, never a crashed
-    * uncommitted newer dir (dir present, no `_BANDS`): anchoring on that
-    * would delete the generation this batch read, and a replay would then
-    * see an empty store. When no committed generation older than
-    * `batchId` exists — a checkpoint reset restarting batch ids against an
-    * existing store — nothing is deleted. Pruning is best-effort: a
-    * leftover generation is storage, a deleted live one would be data
-    * loss. */
-  def ingestBatchUrlMerge(batch: DataFrame, storePath: String,
-      outPath: String, batchId: Long, numBands: Int = 8): Unit = {
-    val spark = batch.sparkSession
-    val bandExpr = pmod(xxhash64(col("canonical")), lit(numBands.toLong))
-    val keyed = urlKeyed(batch).persist()
-    try {
-      val fs = fsOf(spark, storePath)
-      // compaction high-water mark: an id collision with a published
-      // compaction would static-overwrite the compacted generation and
-      // mask it behind resolving parent pointers — fail loud instead
-      // (the half of compactPartedStore's contract only ingest can check)
-      readCompactMarker(fs, storePath).foreach { hw =>
-        require(batchId > hw,
-          s"ingestBatchUrlMerge: batchId=$batchId collides with (or " +
-            s"precedes) the published compaction high-water mark gen=$hw — " +
-            "a replay from a pre-compaction checkpoint or a compactId the " +
-            "stream has since reached; restart the stream from a checkpoint " +
-            "committed past the compaction")
-      }
-      // the touched-band list is bounded by numBands — a driver-side
-      // pruning predicate, not data movement
-      val touched = keyed.select(bandExpr.as("band")).distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      val keep = newestCommittedGen(fs, storePath, batchId)
-      val read = keep.map(g => readBandManifest(fs, s"$storePath/gen=$g"))
-      read.flatMap(_.numBands).foreach { n =>
-        require(n == numBands,
-          s"ingestBatchUrlMerge: numBands=$numBands, but the store at " +
-            s"$storePath was written with numBands=$n — a key's band is " +
-            "pmod(xxhash64(canonical), numBands), so another count resolves " +
-            s"keys to the wrong bands; keep numBands=$n or start a new store")
-      }
-      val parent = read.map(_.bands).getOrElse(Map.empty[Long, Long])
-      // pre-merge slice of the TOUCHED bands only
-      val slice = bandView(spark, storePath, parent.filter(e => touched.contains(e._1)))
-        .map(_.drop("band"))
-        .getOrElse(empty(spark, urlFpGenSchema))
-      // provenance vs the pre-merge slice (a key's history row can live
-      // nowhere but its own band), emitted first under this batch's own
-      // dynamic-overwrite partition (replay overwrites)
-      emitProvenance(keyed, slice, outPath, batchId)
-      // MERGE of the touched bands only: unmatched slice rows carry over,
-      // batch rows replace/insert; static overwrite of gen=<batchId> —
-      // a directory exclusively this batch's, so replay rewrites it whole
-      slice.join(keyed.select(col("canonical")), Seq("canonical"), "left_anti")
-        .unionByName(keyed)
-        .withColumn("band", bandExpr)
-        .write.mode("overwrite").partitionBy("band")
-        .parquet(s"$storePath/gen=$batchId")
-      // manifest LAST — the commit point: parent pointers for untouched
-      // bands, this generation for touched ones
-      val manifest = parent ++ touched.map(_ -> batchId)
-      writeBandManifest(fs, s"$storePath/gen=$batchId",
-        BandManifest(Some(numBands), manifest))
-      // reference-aware prune: a generation survives while the read
-      // generation (replay anchor), its manifest, or the manifest just
-      // written still reaches it; only strictly-older unreferenced gens
-      // go. Nothing is deleted when no older generation exists.
-      keep.foreach { k =>
-        val live = parent.values.toSet ++ manifest.values.toSet + k
-        pruneGenerations(fs, storePath)(g => g < k && !live(g))
-      }
-    } finally keyed.unpersist()
+      .as[UrlCrawl]
+      .groupByKey(_.canonical)
+      .flatMapGroupsWithState[UrlCrawl, UrlProvenance](
+        OutputMode.Append, GroupStateTimeout.NoTimeout)(urlMergeGroup)
   }
 
-  /** The SERVING read of a [[ingestBatchUrlMerge]] store: every band
-    * resolved through the newest committed manifest — the view a frontier
-    * consumer (or the next compaction) scans. Empty store → empty frame. */
-  def urlMergePartedStore(spark: SparkSession, storePath: String): DataFrame = {
-    val fs = fsOf(spark, storePath)
-    newestCommittedGen(fs, storePath, Long.MaxValue)
-      .flatMap(g => bandView(spark, storePath, readBandManifest(fs, s"$storePath/gen=$g").bands))
-      .map(_.drop("band"))
-      .getOrElse(empty(spark, urlFpGenSchema))
-  }
-
-  /** A parted store's rows as `manifest` (band → the generation holding
-    * it) resolves them: one partition-pruned read per source generation.
-    * Columns (canonical, doc_id, url, fp, band); None for an empty
-    * manifest. */
-  private def bandView(spark: SparkSession, storePath: String,
-      manifest: Map[Long, Long]): Option[DataFrame] =
-    manifest.toSeq.groupMap(_._2)(_._1).toSeq.map { case (g, bands) =>
-      spark.read.parquet(s"$storePath/gen=$g")
-        .filter(col("band").isInCollection(bands))
-        .select(col("canonical"), col("doc_id"), col("url"), col("fp"), col("band"))
-    }.reduceOption(_ unionByName _)
-
-  /** A `_BANDS` manifest: the store's band count (None in a manifest
-    * written before the count was recorded) and band → generation. */
-  private case class BandManifest(numBands: Option[Int], bands: Map[Long, Long])
-
-  /** The `_BANDS` manifest of `genDir`. A line that does not parse fails
-    * LOUD: skipping it would drop its band from the next manifest, and the
-    * batch after that would prune the generation holding the band's rows.
-    * The empty line of an empty manifest is no entry. */
-  private def readBandManifest(fs: org.apache.hadoop.fs.FileSystem,
-      genDir: String): BandManifest = {
-    val p = new org.apache.hadoop.fs.Path(s"$genDir/_BANDS")
-    val in = fs.open(p)
-    def number(v: String): Boolean = v.nonEmpty && v.forall(_.isDigit)
-    try {
-      val entries = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .zipWithIndex.filter(_._1.nonEmpty)
-        .map { case (line, i) =>
-          line.split("=", 2) match {
-            case Array("numBands", n) if number(n) && n.length < 10 =>
-              Left(n.toInt)
-            case Array(b, g) if number(b) && number(g) =>
-              Right(b.toLong -> g.toLong)
-            case _ => throw new IllegalStateException(
-              s"corrupt _BANDS manifest at $p line ${i + 1}: '$line' — " +
-                "expected numBands=<count> or <band>=<generation>")
-          }
-        }.toSeq
-      BandManifest(entries.collectFirst { case Left(n) => n },
-        entries.collect { case Right(e) => e }.toMap)
-    } finally in.close()
-  }
-
-  /** Publish the `_BANDS` manifest ATOMICALLY: write to a dot-prefixed
-    * temp path, then rename into place. The manifest IS the commit marker
-    * — `newestCommittedGen` treats its presence as proof the generation is
-    * whole — so an in-place `create` would let a crash mid-write (or a
-    * concurrent read racing the write) observe a zero-length/truncated
-    * marker and serve a generation with missing bands. Rename is a single
-    * metadata operation on HDFS-like stores. A healed replay's leftover
-    * `_BANDS` is renamed OVER in the same atomic operation
-    * (`Options.Rename.OVERWRITE` via FileContext) — a delete-then-rename
-    * pair would open a window where a concurrent `newestCommittedGen`
-    * reader sees the generation as uncommitted and anchors to an older
-    * one, and a crash between the two calls would leave a previously
-    * committed generation unmarked until the next replay (r16 ADVICE). A
-    * stale temp from a crashed attempt is simply overwritten next time. */
-  private def writeBandManifest(fs: org.apache.hadoop.fs.FileSystem,
-      genDir: String, manifest: BandManifest): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$genDir/.bands.tmp")
-    val dest = new org.apache.hadoop.fs.Path(s"$genDir/_BANDS")
-    val out = fs.create(tmp, true)
-    try out.write((manifest.numBands.map(n => s"numBands=$n").toSeq ++
-        manifest.bands.toSeq.sorted.map { case (b, g) => s"$b=$g" })
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    renameOver(fs, tmp, dest)
-  }
-
-  /** Rename `tmp` OVER `dest` in one metadata operation where the
-    * filesystem supports it (FileContext + `Options.Rename.OVERWRITE` —
-    * HDFS, local). A store with only a FileSystem connector and no
-    * `fs.AbstractFileSystem.<scheme>.impl` binding (e.g. bare s3a) throws
-    * `UnsupportedFileSystemException` from `getFileContext`; fall back to
-    * delete-then-rename there — on such object stores rename is
-    * copy-based and NOT atomic regardless, so the fallback gives up
-    * nothing the store could have provided, and the reader grace-window
-    * note in the module contract is the operative protection. */
-  private def renameOver(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path): Unit =
-    try org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-      .rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        if (fs.exists(dest)) fs.delete(dest, false)
-        if (!fs.rename(tmp, dest))
-          throw new java.io.IOException(s"publish failed: $tmp -> $dest")
+  private def urlMergeGroup(canonical: String, crawls: Iterator[UrlCrawl],
+      state: GroupState[UrlCrawl]): Iterator[UrlProvenance] = {
+    val latest = crawls.maxBy(_.doc_id)
+    val status = state.getOption match {
+      case None => "new"
+      case Some(prev) if prev.fp == latest.fp => "unchanged"
+      case _ => "changed"
     }
-
-  /** The compaction HIGH-WATER MARK: `<store>/_COMPACT` records the largest
-    * compactId ever published, so the half of [[compactPartedStore]]'s id
-    * contract the compactor cannot verify itself (compactId strictly below
-    * the stream's NEXT batchId) fails loud at the ingest side instead of
-    * silently corrupting: without it, a resumed stream whose batchId
-    * reaches the compaction id would static-overwrite `gen=<compactId>` —
-    * replacing the compacted serving view with one batch's touched bands
-    * under a manifest whose parent pointers still resolve, masking the
-    * mistake entirely (r16 ADVICE). MONOTONE by CONSTRUCTION, not by
-    * check-then-act (r18 ADVICE closed the residual race): each publish
-    * lands at its own UNIQUE name `_COMPACT.<compactId>` and the read side
-    * takes the MAX over every `_COMPACT*` file, so a concurrent newer
-    * compaction committing between this writer's read and its rename can
-    * never be overwritten — no file is ever replaced with a smaller value,
-    * and the high-water mark is a pure max over immutable publishes. A
-    * replayed older compaction (the selfCommitted retry path, reachable
-    * only after out-of-band store surgery removed a newer generation)
-    * likewise cannot regress it. Superseded markers (strictly below the
-    * current max) are pruned opportunistically so the directory holds O(1)
-    * marker files at steady state; deleting a non-max marker never moves
-    * the max. The legacy single-file `_COMPACT` form is still read (max
-    * includes it) but no longer written. */
-  private def writeCompactMarker(fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String, compactId: Long): Unit = {
-    if (readCompactMarker(fs, storePath).exists(_ >= compactId)) return
-    // tmp name unique per compactId: two concurrent compactors must not
-    // clobber each other's staging file either
-    val tmp = new org.apache.hadoop.fs.Path(s"$storePath/.compact.$compactId.tmp")
-    val dest = new org.apache.hadoop.fs.Path(s"$storePath/_COMPACT.$compactId")
-    val out = fs.create(tmp, true)
-    try out.write(s"$compactId\n".getBytes("UTF-8")) finally out.close()
-    renameOver(fs, tmp, dest)
-    // prune superseded markers: everything strictly below the max is dead
-    // weight; the max itself is never deleted, so no interleaving of
-    // concurrent pruners can lower the high-water mark
-    val markers = listCompactMarkers(fs, storePath)
-    if (markers.nonEmpty) {
-      val hw = markers.map(_._2).max
-      markers.filter(_._2 < hw).foreach { case (p, _) => fs.delete(p, false) }
-    }
-  }
-
-  /** Every `_COMPACT*` marker in the store with its parsed id — the bare
-    * legacy `_COMPACT` and the per-publish `_COMPACT.<id>` forms both carry
-    * the id as file CONTENT (the suffix is only a uniqueness device), so
-    * one parse covers both. */
-  private def listCompactMarkers(fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String): Seq[(org.apache.hadoop.fs.Path, Long)] = {
-    val glob = new org.apache.hadoop.fs.Path(s"$storePath/_COMPACT*")
-    val stats = Option(fs.globStatus(glob)).map(_.toSeq).getOrElse(Seq.empty)
-    stats.map(_.getPath).flatMap { p =>
-      // a marker can legitimately vanish between glob and open:
-      // writeCompactMarker prunes superseded (non-max) markers, so a
-      // concurrent reader racing a pruner would crash on a file whose
-      // absence is harmless — a pruned marker is BY CONSTRUCTION below the
-      // surviving max, so skipping it never lowers the high-water mark
-      // (r19 ADVICE). Only the missing-file case is absorbed; a marker
-      // that opens but does not parse still fails LOUD below.
-      val opened =
-        try Some(fs.open(p))
-        catch { case _: java.io.FileNotFoundException => None }
-      opened.map { in =>
-        val first =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-            .toSeq.headOption.map(_.trim)
-          finally in.close()
-        val id = first.filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-          .getOrElse(throw new IllegalStateException(
-            // a marker that exists but does not parse must fail LOUD: treating
-            // it as absent would disable the collision guard — the exact
-            // silent-overwrite failure the marker exists to prevent
-            s"corrupt _COMPACT marker at $p: ${first.getOrElse("<empty>")} — " +
-              "expected a single non-negative integer compaction id; repair or " +
-              "remove the marker only after verifying no compaction is live"))
-        (p, id)
-      }
-    }
-  }
-
-  private def readCompactMarker(fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String): Option[Long] = {
-    val ids = listCompactMarkers(fs, storePath).map(_._2)
-    if (ids.isEmpty) None else Some(ids.max)
-  }
-
-  /** COMPACTION for the parted MERGE store — the maintenance pass that
-    * bounds what the incremental loop cannot: at steady state
-    * [[ingestBatchUrlMerge]]'s manifest keeps one live generation
-    * per last-writer band, so the live-generation set — and the serving
-    * read's per-generation scan fan-out ([[urlMergePartedStore]]'s one
-    * `spark.read` per distinct source generation) — grows with
-    * write-pattern diversity and is never collapsed by the loop itself.
-    * This rewrites the full serving view into ONE self-contained
-    * generation `gen=<compactId>` (every band present, manifest pointing
-    * every band at itself), then prunes every older generation — all of
-    * them are unreferenced by the new manifest. After it: live generation
-    * count = 1, and every subsequent micro-batch's slice read resolves
-    * through at most TWO generations until the next compaction (the
-    * [[graft.sources.ParquetSink.optimizePartition]] posture at
-    * generation grain; same job as a RocksDB full compaction of the
-    * reference's KTable store).
-    *
-    * Contract (the standard no-concurrent-writer OPTIMIZE contract):
-    * - `compactId` must be STRICTLY greater than every OTHER existing
-    *   generation (asserted loud) AND strictly smaller than the stream's
-    *   next batchId — i.e. run it between micro-batches. The second half
-    *   is enforced at the INGEST side via the `_COMPACT` high-water mark
-    *   ([[writeCompactMarker]]): a later micro-batch whose id collides
-    *   with (or precedes) a published compaction fails loud instead of
-    *   silently overwriting the compacted generation. A leftover
-    *   `gen=<compactId>` directory from a CRASHED prior
-    *   attempt of this same compaction (dir present, no `_BANDS`) does
-    *   NOT count: the retry overwrites it whole — replay-heals-by-
-    *   rewriting, like every other writer in this module. A COMMITTED
-    *   `gen=<compactId>` makes the retry a publish no-op that just
-    *   finishes the vacuum.
-    * - the stream must be quiesced WITH its checkpoint committed through
-    *   the last batch: the vacuum removes the pre-compaction replay
-    *   anchor, so a batch replayed from an uncommitted checkpoint after
-    *   compaction would recompute provenance against the compacted view
-    *   (the store content stays correct either way — the compacted
-    *   generation contains that batch's own committed merge; only the
-    *   replayed provenance emit's new/changed split would differ).
-    * - CONCURRENT SERVING READERS ([[urlMergePartedStore]] callers) are
-    *   protected only if the delete is deferred past their scan: a
-    *   reader that resolved the pre-compaction manifest holds a lazy
-    *   frame over generations the vacuum removes. Pass `vacuum = false`
-    *   and run [[vacuumPartedStore]] after a grace window at least as
-    *   long as the longest in-flight read — the OPTIMIZE-then-VACUUM
-    *   retention split of the lakehouse formats. The `vacuum = true`
-    *   default is the single-tenant maintenance-window posture the specs
-    *   exercise.
-    * Cost: one full-store read + write, O(store) — paid at maintenance
-    * cadence precisely so every micro-batch stays O(touched bands).
-    * Returns the number of generations pruned (0 when `vacuum = false`).
-    * Empty/uncommitted store → no-op, -1. */
-  def compactPartedStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, compactId: Long, vacuum: Boolean = true): Int = {
-    val fs = fsOf(spark, storePath)
-    val existing = generations(fs, storePath).map(_._1)
-    val selfCommitted = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$storePath/gen=$compactId/_BANDS"))
-    require(existing.forall(g => g < compactId || g == compactId),
-      s"compactPartedStore: compactId=$compactId must exceed every existing " +
-        s"generation (${existing.sorted.mkString(",")}) — pick an id the " +
-        "stream has not reached and will not reuse")
-    if (selfCommitted) {
-      // a prior attempt committed but may have crashed before its marker
-      // or vacuum — finish both: the manifest publish is already done and
-      // idempotent to skip, the marker rewrite is idempotent by content
-      writeCompactMarker(fs, storePath, compactId)
-      if (vacuum) vacuumPartedStore(spark, storePath) else 0
-    } else newestCommittedGen(fs, storePath, compactId) match {
-      case None => -1 // nothing committed to compact
-      case Some(g) =>
-        // the serving view, band column preserved
-        val manifest = readBandManifest(fs, s"$storePath/gen=$g")
-        bandView(spark, storePath, manifest.bands) match {
-          case None => -1 // committed but empty manifest — nothing to write
-          case Some(v) =>
-            v.write.mode("overwrite").partitionBy("band")
-              .parquet(s"$storePath/gen=$compactId")
-            writeBandManifest(fs, s"$storePath/gen=$compactId",
-              manifest.copy(bands = manifest.bands.keys.map(_ -> compactId).toMap))
-            // high-water mark AFTER the commit marker: a crash between the
-            // two is healed by the selfCommitted retry branch above
-            writeCompactMarker(fs, storePath, compactId)
-            if (vacuum) vacuumPartedStore(spark, storePath) else 0
-        }
-    }
-  }
-
-  /** VACUUM for the parted MERGE store: delete every generation
-    * unreferenced by the newest committed manifest — strictly older than
-    * the newest committed generation and not a source of any of its
-    * bands. Safe with respect to the COMMITTED state at any time (it
-    * never touches a referenced or newer generation); safe with respect
-    * to in-flight readers only after a grace window, exactly like
-    * lakehouse VACUUM retention — a reader that resolved an OLDER
-    * manifest may still be scanning a generation only that manifest
-    * references. Returns the number of generations deleted; no committed
-    * generation → 0. */
-  def vacuumPartedStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String): Int = {
-    val fs = fsOf(spark, storePath)
-    newestCommittedGen(fs, storePath, Long.MaxValue) match {
-      case None => 0
-      case Some(g) =>
-        val live = readBandManifest(fs, s"$storePath/gen=$g").bands.values.toSet + g
-        pruneGenerations(fs, storePath)(n => n < g && !live(n))
-    }
+    state.update(latest)
+    Iterator.single(UrlProvenance(canonical, latest.doc_id, latest.url,
+      latest.fp, status))
   }
 
   /** One micro-batch of the IVF-PQ INDEX-MAINTENANCE loop — the streaming

@@ -8,9 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Lint: `StreamingOps.ingestLoop` is the one `foreachBatch` shell, so every
   * store-folding stream shares one checkpoint and trigger contract and a
-  * new keep rule is a batch body, not another loop. The only other
-  * `foreachBatch` allowed in the main sources is `StreamScaleProbe`'s SCD2
-  * loop. */
+  * new keep rule is a batch body, not another loop. */
 class OneIngestLoopSpec extends AnyFunSuite {
   private val ForeachBatch = """\.foreachBatch\b""".r
 
@@ -25,9 +23,8 @@ class OneIngestLoopSpec extends AnyFunSuite {
       .map(f => f.toString -> ForeachBatch.findAllMatchIn(Files.readString(f)).size)
       .filter(_._2 > 0).toMap
     val loop = "src/main/scala/graft/streaming/StreamingOps.scala"
-    val probe = "src/main/scala/graft/StreamScaleProbe.scala"
     assert(counts.get(loop) === Some(1), s"foreachBatch per file: $counts")
-    assert((counts.keySet - loop - probe).isEmpty,
+    assert((counts.keySet - loop).isEmpty,
       s"foreachBatch outside StreamingOps.ingestLoop: $counts")
   }
 }

@@ -64,21 +64,23 @@ object OrphanDefinitionSpec {
     "Explain.main" -> EntryPoint,
     "ProbeGen" -> EntryPoint,
     "ProbeGen.main" -> EntryPoint,
-    "StreamScaleProbe" -> EntryPoint,
-    "StreamScaleProbe.main" -> EntryPoint,
     "Verify.main" -> EntryPoint,
     "SparkEntry.entry" -> EntryPoint,
     "Graft.run" -> EntryPoint,
+    "InventoryStream" -> StreamingApi,
     "InventoryStream.kafkaPipeline" -> StreamingApi,
+    "InventoryStream.scd2Stream" -> StreamingApi,
     "InventoryStream.withPeek" -> StreamingApi,
     "KeyedCount.apply" -> StreamingApi,
     "EventTimeAgg" -> StreamingApi,
     "EventTimeAgg.asEventTimeStream" -> StreamingApi,
     "EventTimeAgg.hourlyByType" -> StreamingApi,
+    "StreamingOps" -> StreamingApi,
     "StreamingOps.curationStreamGated" -> StreamingApi,
     "StreamingOps.curationStreamIncremental" -> StreamingApi,
     "StreamingOps.dedupWithinWatermark" -> StreamingApi,
     "StreamingOps.enrichWithStatic" -> StreamingApi,
+    "StreamingOps.ingestBatch" -> StreamingApi,
     "StreamingOps.ingestBatchChunkSemantic" -> StreamingApi,
     "StreamingOps.ingestBatchChunks" -> StreamingApi,
     "StreamingOps.ingestBatchDrift" -> StreamingApi,
@@ -87,11 +89,12 @@ object OrphanDefinitionSpec {
     "StreamingOps.ingestBatchMedia" -> StreamingApi,
     "StreamingOps.ingestBatchNearDup" -> StreamingApi,
     "StreamingOps.ingestBatchSemantic" -> StreamingApi,
+    "StreamingOps.ingestBatchSpans" -> StreamingApi,
     "StreamingOps.ingestBatchUrl" -> StreamingApi,
     "StreamingOps.ingestLoop" -> StreamingApi,
     "StreamingOps.rangeBoundedJoin" -> StreamingApi,
     "StreamingOps.sessionWindows" -> StreamingApi,
-    "StreamingOps.urlMergePartedStore" -> StreamingApi,
+    "StreamingOps.urlMergeStream" -> StreamingApi,
     "Actions.foldAll" -> TestOracle,
     "Dedup.connectedComponents" -> TestOracle,
     "Graph.Scale" -> TestOracle,

@@ -5,9 +5,10 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamingOps
+import graft.streaming.{StreamingOps, UrlCrawl, UrlProvenance}
 
 final case class IdEvent(id: Long, ts: Timestamp, payload: String)
 final case class Click(k: String, lts: Timestamp, page: String)
@@ -631,53 +632,138 @@ class StreamingOpsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("ingestLoopUrlMerge: a re-crawled page whose content CHANGED replaces " +
-      "its stale store row across batches; unchanged re-crawls are skippable") {
+  /** [[StreamingOps.urlMergeStream]] over `batches` into a parquet sink: the
+    * query stops after `killAfter` batches and a new one resumes from the
+    * same checkpoint for the rest. `afterBatch(i, sink)` sees the sink's
+    * rows once batch `i` is committed. Returns the sink's rows and the
+    * frontier, read from the state store. */
+  private def urlMergeRun(batches: Seq[Seq[CrawlDoc]], killAfter: Int)(
+      afterBatch: (Int, Seq[UrlProvenance]) => Unit = (_, _) => ())
+      : (Seq[UrlProvenance], Map[String, UrlCrawl]) = {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft-urlmerge").toString
     val input = MemoryStream[CrawlDoc]
-    val q = StreamingOps.ingestLoop(input.toDF(), s"$base/ckpt")(
-      StreamingOps.ingestBatchUrlMerge(_, s"$base/store", s"$base/out", _))
-    try {
-      input.addData(
-        CrawlDoc(1L, "https://example.org/a", "alpha v1"),
-        CrawlDoc(2L, "https://example.org/b", "beta v1"))
-      q.processAllAvailable()
-      val b0 = spark.read.parquet(s"$base/out")
-        .filter($"batch_id" === 0L).collect()
-        .map(r => r.getString(0) -> r.getString(4)).toMap
-      assert(b0 === Map("example.org/a" -> "new", "example.org/b" -> "new"),
-        s"bootstrap batch: everything is a first crawl: $b0")
-
-      input.addData(
-        CrawlDoc(10L, "http://www.example.org/a/", "alpha v1"), // same bytes
-        CrawlDoc(11L, "HTTPS://EXAMPLE.ORG/b#frag", "beta v2"), // content moved
-        CrawlDoc(12L, "https://example.org/c", "gamma v1"))     // first crawl
-      q.processAllAvailable()
-      val b1 = spark.read.parquet(s"$base/out")
-        .filter($"batch_id" === 1L).collect()
-        .map(r => r.getString(0) -> r.getString(4)).toMap
-      assert(b1 === Map("example.org/a" -> "unchanged",
-        "example.org/b" -> "changed", "example.org/c" -> "new"),
-        s"provenance per batch key: $b1")
-      // the live generation holds the REPLACED row for b (doc 11, v2 fp),
-      // the carried-over a (unchanged re-crawl still updates to the latest
-      // crawl row — last-writer-wins), and the new c
-      val gen = spark.read.parquet(s"$base/store/gen=1").collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getString(3))).toMap
-      assert(gen("example.org/b") ===
-          ((11L, b1Fp(spark, "beta v2"))),
-        s"stale row replaced by the changed re-crawl: $gen")
-      assert(gen("example.org/a")._1 === 10L && gen.size === 3,
-        s"last-writer-wins on the unchanged re-crawl, one row per key: $gen")
-    } finally q.stop()
+    def sink(): Seq[UrlProvenance] = spark.read.parquet(s"$base/out")
+      .as[UrlProvenance].collect().toSeq
+      .sortBy(p => (p.canonical, p.doc_id, p.url, p.fp, p.status))
+    def run(from: Int, until: Int): Unit = if (from < until) {
+      val q = StreamingOps.urlMergeStream(input.toDF())
+        .writeStream.format("parquet")
+        .option("checkpointLocation", s"$base/ckpt")
+        .start(s"$base/out")
+      try (from until until).foreach { i =>
+        input.addData(batches(i))
+        q.processAllAvailable()
+        afterBatch(i, sink())
+      } finally q.stop()
+    }
+    run(0, killAfter)
+    run(killAfter, batches.size)
+    val frontier = spark.read.format("statestore").load(s"$base/ckpt")
+      .select(col("value.groupState.*")).as[UrlCrawl].collect()
+      .map(c => c.canonical -> c).toMap
+    (sink(), frontier)
   }
 
-  private def b1Fp(spark: org.apache.spark.sql.SparkSession, s: String): String = {
-    import spark.implicits._
-    Seq(s).toDF("t").select(org.apache.spark.sql.functions.md5($"t"))
-      .head.getString(0)
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString
+
+  test("urlMergeStream: a re-crawled page whose content CHANGED replaces its " +
+      "frontier row across batches; unchanged re-crawls are skippable") {
+    def statuses(rows: Seq[UrlProvenance], ids: Set[Long]): Map[String, String] =
+      rows.filter(p => ids(p.doc_id)).map(p => p.canonical -> p.status).toMap
+    val seen = scala.collection.mutable.Map.empty[Int, Map[String, String]]
+    val (_, frontier) = urlMergeRun(Seq(
+      Seq(CrawlDoc(1L, "https://example.org/a", "alpha v1"),
+        CrawlDoc(2L, "https://example.org/b", "beta v1")),
+      Seq(CrawlDoc(10L, "http://www.example.org/a/", "alpha v1"), // same bytes
+        CrawlDoc(11L, "HTTPS://EXAMPLE.ORG/b#frag", "beta v2"),    // content moved
+        CrawlDoc(12L, "https://example.org/c", "gamma v1"))),      // first crawl
+      killAfter = 2) { (i, sink) =>
+      seen(i) = statuses(sink, if (i == 0) Set(1L, 2L) else Set(10L, 11L, 12L))
+    }
+    assert(seen(0) === Map("example.org/a" -> "new", "example.org/b" -> "new"),
+      s"bootstrap batch: everything is a first crawl: ${seen(0)}")
+    assert(seen(1) === Map("example.org/a" -> "unchanged",
+      "example.org/b" -> "changed", "example.org/c" -> "new"),
+      s"provenance per batch key: ${seen(1)}")
+    // the frontier holds the REPLACED row for b (doc 11, v2 fp), the latest
+    // crawl of a (an unchanged re-crawl still replaces: last-writer-wins),
+    // and the new c
+    assert(frontier.view.mapValues(c => (c.doc_id, c.fp)).toMap === Map(
+      "example.org/a" -> ((10L, md5Hex("alpha v1"))),
+      "example.org/b" -> ((11L, md5Hex("beta v2"))),
+      "example.org/c" -> ((12L, md5Hex("gamma v1")))),
+      s"one row per key, last writer wins: $frontier")
+  }
+
+  test("urlMergeStream differential: generated multi-batch crawls equal a " +
+      "plain-Scala Map fold, batch by batch and in the final frontier") {
+    // four URL spellings of each page share one canonical key
+    def spell(page: Int, v: Int): (String, String) = (Seq(
+      s"https://example.org/p$page", s"http://www.example.org/p$page/",
+      s"HTTPS://EXAMPLE.ORG/p$page#frag", s"https://example.org/p$page?utm=x")(v),
+      s"example.org/p$page")
+    // per batch: distinct doc_ids (smaller ones may arrive later), few pages
+    // (same-canonical variants in one batch), few texts per page (unchanged
+    // and changed re-crawls)
+    val genBatch: Gen[Seq[(Long, Int, Int, Int)]] = for {
+      n <- Gen.choose(1, 8)
+      ids <- Gen.pick(n, 1L to 40L)
+      rows <- Gen.listOfN(n,
+        Gen.zip(Gen.choose(0, 3), Gen.choose(0, 3), Gen.choose(0, 1)))
+    } yield ids.toSeq.zip(rows).map { case (id, (p, v, t)) => (id, p, v, t) }
+    val genCrawl = Gen.choose(2, 4).flatMap(n => Gen.listOfN(n, genBatch))
+    val prop = Prop.forAllNoShrink(genCrawl) { crawl =>
+      val batches = crawl.map(_.map { case (id, p, v, t) =>
+        CrawlDoc(id, spell(p, v)._1, s"page $p text $t")
+      })
+      // the model: the KTable upsert over a Map, one latest crawl per key
+      var model = Map.empty[String, UrlCrawl]
+      val expected = crawl.map { b =>
+        b.groupBy { case (_, p, v, _) => spell(p, v)._2 }.toSeq.map { case (k, rows) =>
+          val (id, p, v, t) = rows.maxBy(_._1)
+          val latest = UrlCrawl(k, id, spell(p, v)._1, md5Hex(s"page $p text $t"))
+          val status = model.get(k) match {
+            case None => "new"
+            case Some(prev) if prev.fp == latest.fp => "unchanged"
+            case _ => "changed"
+          }
+          model += k -> latest
+          UrlProvenance(k, id, latest.url, latest.fp, status)
+        }
+      }
+      val (_, frontier) = urlMergeRun(batches, killAfter = batches.size) { (i, sink) =>
+        val want = expected.take(i + 1).flatten
+          .sortBy(p => (p.canonical, p.doc_id, p.url, p.fp, p.status))
+        assert(sink === want, s"after batch $i of $batches")
+      }
+      frontier == model
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("urlMergeStream killed after batch k and resumed from its checkpoint: " +
+      "the parquet sink and the state-store frontier equal an uninterrupted run") {
+    val batches = Seq(
+      Seq(CrawlDoc(1L, "https://example.org/a", "a1"),
+        CrawlDoc(2L, "https://example.org/b", "b1")),
+      Seq(CrawlDoc(3L, "http://www.example.org/a/", "a2"),
+        CrawlDoc(4L, "https://example.org/c", "c1"),
+        CrawlDoc(5L, "https://example.org/c?utm=x", "c2")),
+      Seq(CrawlDoc(6L, "https://example.org/b#top", "b1"),
+        CrawlDoc(7L, "HTTPS://EXAMPLE.ORG/a", "a2")),
+      Seq(CrawlDoc(0L, "https://example.org/d", "d1"),
+        CrawlDoc(8L, "https://example.org/c", "c1")))
+    val uninterrupted = urlMergeRun(batches, killAfter = batches.size)()
+    val resumed = urlMergeRun(batches, killAfter = 2)()
+    assert(resumed === uninterrupted,
+      "resume-from-checkpoint must be invisible in the sink and the frontier")
+    assert(uninterrupted._1.size === 8 && uninterrupted._2.size === 4)
+    assert(uninterrupted._2("example.org/c").doc_id === 8L)
   }
 
   test("ingestLoopIvfPq: the accumulated code store equals a full re-encode " +
@@ -712,491 +798,6 @@ class StreamingOpsSpec extends AnyFunSuite {
     StreamingOps.ingestBatchIvfPq(b2, cents, cb, 8, s"$base/codes", 1L)
     assert(storeRows() === acc, "replay is bit-identical, no duplicates")
     assert(spark.read.parquet(s"$base/codes").count() === 12L)
-  }
-
-  test("ingestBatchUrlMerge replay is a fixpoint: a batch replayed after its " +
-      "merge committed (crash before checkpoint commit) recomputes the SAME " +
-      "provenance against the pre-merge generation and overwrites, never " +
-      "double-merges — and a crash between emit and merge loses nothing") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-replay").toString
-    val b0 = Seq((1L, "https://example.org/a", "alpha v1"),
-      (2L, "https://example.org/b", "beta v1")).toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b0, s"$base/store", s"$base/out", 0L, 1)
-    val b1 = Seq((10L, "https://example.org/b", "beta v2"))
-      .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L, 1)
-    def prov1() = spark.read.parquet(s"$base/out")
-      .filter($"batch_id" === 1L).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(4))).toSet
-    def liveStore() = spark.read.parquet(s"$base/store/gen=1").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(3))).toSet
-    val firstProv = prov1()
-    val firstStore = liveStore()
-    assert(firstProv.map(x => (x._1, x._3)) === Set(("example.org/b", "changed")),
-      s"the content-moved re-crawl reports changed: $firstProv")
-    // replay batch 1 (any crash point: between emit and merge — the emit is
-    // re-overwritten and the merge then lands; or after the merge — the
-    // store read is the generation STRICTLY OLDER than batchId, so the
-    // pre-merge state is still what provenance is computed against)
-    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L, 1)
-    assert(prov1() === firstProv,
-      "replayed provenance identical — 'changed' stays changed, no dup rows")
-    assert(liveStore() === firstStore, "replayed merge is a fixpoint")
-    // a third batch prunes the unreachable generation 0 but keeps 1
-    val b2 = Seq((20L, "https://example.org/d", "delta v1"))
-      .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b2, s"$base/store", s"$base/out", 2L, 1)
-    val gens = new java.io.File(s"$base/store").listFiles()
-      .map(_.getName).filter(_.startsWith("gen=")).sorted.toSeq
-    assert(gens === Seq("gen=1", "gen=2"),
-      s"two live generations at steady state: $gens")
-    assert(spark.read.parquet(s"$base/store/gen=2").count() === 3L,
-      "history carried over: a, b(v2), d — one row per key")
-  }
-
-  /** Three (band, url) pairs in DISTINCT hash bands of an `nb`-band URL
-    * store, bands ascending (xxhash64 is fixed — this is deterministic). */
-  private def threeBands(nb: Int): Seq[(Long, String)] = {
-    import spark.implicits._
-    val byBand = ('a' to 'p').map(c => s"https://example.org/$c").toDF("url")
-      .select($"url", org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.xxhash64(
-          graft.operators.Dedup.canonicalUrl($"url")),
-        org.apache.spark.sql.functions.lit(nb.toLong)).as("band"))
-      .collect().map(r => r.getLong(1) -> r.getString(0))
-      .groupBy(_._1).view.mapValues(_.head._2).toMap
-    assert(byBand.size >= 3, s"fixture spans 3+ bands: ${byBand.keys}")
-    byBand.toSeq.sorted.take(3)
-  }
-
-  test("ingestBatchUrlMerge: a generation holds ONLY touched bands — " +
-      "untouched bands stay byte-identical in their original generation and " +
-      "resolve through the manifest; replay is a fixpoint; prune is " +
-      "reference-aware") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-parted").toString
-    val nb = 4
-    val Seq((bA, uA), (bB, uB), (_, uC)) = threeBands(nb)
-    def ingest(bid: Long, rows: (Long, String, String)*): Unit =
-      StreamingOps.ingestBatchUrlMerge(
-        rows.toDF("doc_id", "url", "text"),
-        s"$base/store", s"$base/out", bid, nb)
-    def snapshot(dir: String): Map[String, (Long, String)] = {
-      val d = new java.io.File(dir)
-      d.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
-        val sum = java.security.MessageDigest.getInstance("MD5")
-          .digest(java.nio.file.Files.readAllBytes(f.toPath))
-          .map("%02x".format(_)).mkString
-        f.getName -> ((f.length(), sum))
-      }.toMap
-    }
-    def gens(): Seq[String] = new java.io.File(s"$base/store").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    def prov(bid: Long) = spark.read.parquet(s"$base/out")
-      .filter($"batch_id" === bid).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(4))).toSet
-    def serving() = StreamingOps.urlMergePartedStore(spark, s"$base/store")
-      .collect().map(r => (r.getLong(1), r.getString(3))).toSet
-
-    ingest(0L, (1L, uA, "alpha v1"), (2L, uB, "beta v1"))
-    val gen0B = snapshot(s"$base/store/gen=0/band=$bB")
-    assert(gen0B.nonEmpty, "band B written by the seed batch")
-    // batch 1 touches ONLY band A (a content-changed re-crawl of uA)
-    ingest(1L, (10L, uA, "alpha v2"))
-    val gen1Bands = new java.io.File(s"$base/store/gen=1").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(gen1Bands === Seq(s"band=$bA"),
-      s"the generation holds only the touched band: $gen1Bands")
-    assert(snapshot(s"$base/store/gen=0/band=$bB") === gen0B,
-      "untouched band's files byte-identical in their original generation")
-    val p1 = prov(1L)
-    assert(p1.map(x => (x._2, x._3)) === Set((10L, "changed")),
-      s"content move detected against the manifest-resolved slice: $p1")
-    val s1 = serving()
-    assert(s1.map(_._1) === Set(10L, 2L),
-      s"band A served from gen 1, band B through the manifest from gen 0: $s1")
-    // replay batch 1 (crash before checkpoint commit): fixpoint
-    ingest(1L, (10L, uA, "alpha v2"))
-    assert(prov(1L) === p1 && serving() === s1, "replay is a fixpoint")
-    // batch 2 rewrites band B. Generation 0 is still referenced by the
-    // read generation's manifest (batch 2 can replay) — it must survive
-    ingest(2L, (20L, uB, "beta v2"))
-    assert(gens() === Seq("gen=0", "gen=1", "gen=2"),
-      s"gen 0 survives while the replay anchor references it: ${gens()}")
-    // batch 3 (band C): gen 0 is now unreachable from both the read
-    // manifest (A→1, B→2) and the new one — pruned; gen 1 stays live
-    ingest(3L, (30L, uC, "gamma v1"))
-    assert(gens() === Seq("gen=1", "gen=2", "gen=3"),
-      s"only the unreferenced generation is pruned: ${gens()}")
-    assert(serving() === Set((10L, md5Of(spark, "alpha v2")),
-      (20L, md5Of(spark, "beta v2")), (30L, md5Of(spark, "gamma v1"))),
-      "the manifest-resolved store equals the last-writer-wins fold")
-  }
-
-  test("a malformed _BANDS manifest line fails the next batch LOUD and " +
-      "deletes no generation") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-badmanifest").toString
-    val nb = 4
-    val Seq((bA, uA), (bB, uB), (_, uC)) = threeBands(nb)
-    def ingest(bid: Long, rows: (Long, String, String)*): Unit =
-      StreamingOps.ingestBatchUrlMerge(
-        rows.toDF("doc_id", "url", "text"),
-        s"$base/store", s"$base/out", bid, nb)
-    def gens(): Seq[String] = new java.io.File(s"$base/store").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    ingest(0L, (1L, uA, "alpha v1"), (2L, uB, "beta v1"))
-    ingest(1L, (10L, uA, "alpha v2")) // manifest: A -> 1, B -> 0
-    // corrupt band B's entry (line 2) through the filesystem, checksum and all
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$base/store/gen=1/_BANDS"), true)
-    try out.write(s"$bA=1\n$bB=O\n".getBytes("UTF-8")) finally out.close()
-    val before = gens()
-    assert(before === Seq("gen=0", "gen=1"))
-    // skipping the line would drop band B from batch 2's manifest and
-    // prune gen=0, the only generation holding B's rows
-    val e = intercept[IllegalStateException](ingest(2L, (30L, uC, "gamma v1")))
-    assert(e.getMessage.contains("gen=1/_BANDS") && e.getMessage.contains("line 2"),
-      e.getMessage)
-    assert(gens() === before, s"no generation deleted: ${gens()}")
-    intercept[IllegalStateException](
-      StreamingOps.urlMergePartedStore(spark, s"$base/store"))
-  }
-
-  test("ingestBatchUrlMerge: a batch whose numBands differs from the store's " +
-      "fails LOUD, naming both counts, before it writes anything") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-numbands").toString
-    val urls = ('a' to 'h').map(c => s"https://example.org/$c")
-    def ingest(bid: Long, nb: Int, text: String): Unit =
-      StreamingOps.ingestBatchUrlMerge(
-        urls.zipWithIndex.map { case (u, i) => (bid * 100 + i, u, s"$text $i") }
-          .toDF("doc_id", "url", "text"),
-        s"$base/store", s"$base/out", bid, nb)
-    def listing(): Seq[String] = {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(base))
-      try walk.iterator.asScala.map(_.toString).toList.sorted
-      finally walk.close()
-    }
-    ingest(0L, 8, "v1")
-    val before = listing()
-    // re-crawl every URL with changed text under another band count: the
-    // keys would resolve to bands 0..3 of an 8-band manifest
-    val e = intercept[IllegalArgumentException](ingest(1L, 4, "v2"))
-    assert(e.getMessage.contains("numBands=4") && e.getMessage.contains("numBands=8"),
-      e.getMessage)
-    assert(listing() === before, "the failed batch wrote nothing")
-    assert(StreamingOps.urlMergePartedStore(spark, s"$base/store").count() === 8L)
-    // the recorded count carries through compaction
-    StreamingOps.compactPartedStore(spark, s"$base/store", 5L)
-    intercept[IllegalArgumentException](ingest(6L, 4, "v2"))
-    ingest(6L, 8, "v2")
-    val status = spark.read.parquet(s"$base/out").filter($"batch_id" === 6L)
-      .select("status").as[String].collect().toSeq
-    assert(status === Seq.fill(8)("changed"), s"provenance under the store's count: $status")
-    assert(StreamingOps.urlMergePartedStore(spark, s"$base/store").count() === 8L)
-  }
-
-  test("compactPartedStore rewrites the serving view into ONE self-contained " +
-      "generation: serving frame is a fixpoint, live generation count drops " +
-      "to 1, the next batch's read resolves through the compacted gen only, " +
-      "and its replay still holds") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-parted-compact").toString
-    val nb = 4
-    val Seq((_, uA), (_, uB), (_, uC)) = threeBands(nb)
-    def ingest(bid: Long, rows: (Long, String, String)*): Unit =
-      StreamingOps.ingestBatchUrlMerge(
-        rows.toDF("doc_id", "url", "text"),
-        s"$base/store", s"$base/out", bid, nb)
-    def gens(): Seq[String] = new java.io.File(s"$base/store").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    def serving() = StreamingOps.urlMergePartedStore(spark, s"$base/store")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(3))).toSet
-    // K scattered batches, each touching a different band — the serving
-    // manifest now spans three generations (the fan-out compaction bounds)
-    ingest(0L, (1L, uA, "alpha v1"))
-    ingest(1L, (2L, uB, "beta v1"))
-    ingest(2L, (3L, uC, "gamma v1"))
-    assert(gens().size >= 3, s"scattered batches leave a spanning manifest: ${gens()}")
-    val viewBefore = serving()
-    assert(viewBefore.map(_._2) === Set(1L, 2L, 3L))
-    // compaction id must exceed every existing generation — loud otherwise
-    val e = intercept[IllegalArgumentException] {
-      StreamingOps.compactPartedStore(spark, s"$base/store", 1L)
-    }
-    assert(e.getMessage.contains("compactPartedStore"))
-    val pruned = StreamingOps.compactPartedStore(spark, s"$base/store", 100L)
-    assert(pruned >= 3, s"all pre-compaction generations pruned: $pruned")
-    assert(gens() === Seq("gen=100"), s"live generation count = 1: ${gens()}")
-    assert(serving() === viewBefore, "compaction is a serving-frame fixpoint")
-    // the next batch reads through the compacted generation only and the
-    // incremental contract is unchanged: content-move detected, replay holds
-    ingest(101L, (10L, uA, "alpha v2"))
-    def prov(bid: Long) = spark.read.parquet(s"$base/out")
-      .filter($"batch_id" === bid).collect()
-      .map(r => (r.getLong(1), r.getString(4))).toSet
-    assert(prov(101L) === Set((10L, "changed")),
-      s"provenance against the compacted view: ${prov(101L)}")
-    val afterBatch = serving()
-    assert(afterBatch.map(_._2) === Set(10L, 2L, 3L),
-      s"replacement landed, compacted history carried: $afterBatch")
-    ingest(101L, (10L, uA, "alpha v2")) // replay
-    assert(prov(101L) === Set((10L, "changed")) && serving() === afterBatch,
-      "replay after compaction is a fixpoint")
-    assert(gens() === Seq("gen=100", "gen=101"),
-      s"steady state back to the two-generation window: ${gens()}")
-    // compacting an empty store is a no-op, not an error
-    assert(StreamingOps.compactPartedStore(spark, s"$base/empty", 5L) === -1)
-
-    // RETRY AFTER A CRASH MID-COMPACTION: a leftover gen=<compactId>
-    // directory with NO _BANDS (crashed between the parquet write and
-    // the manifest publish) must not block the retry with the SAME id —
-    // replay-heals-by-rewriting, like every other writer in the module
-    val crashDir = new java.io.File(s"$base/store/gen=200")
-    assert(crashDir.mkdirs(), "simulated crashed compaction dir")
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of(s"$base/store/gen=200/partial.bin"), "junk")
-    val retried = StreamingOps.compactPartedStore(spark, s"$base/store", 200L)
-    assert(retried >= 2, s"retry with the crashed id publishes + vacuums: $retried")
-    assert(gens() === Seq("gen=200"), s"retry healed the crashed dir: ${gens()}")
-    assert(serving() === afterBatch, "retry is a serving-frame fixpoint")
-    // a COMMITTED gen=<compactId> (crash between publish and vacuum)
-    // makes the retry a publish no-op that finishes the vacuum: re-add a
-    // stale unreferenced generation and rerun with the same id
-    val staleDir = new java.io.File(s"$base/store/gen=150")
-    assert(staleDir.mkdirs())
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of(s"$base/store/gen=150/_BANDS"), "0=150\n")
-    assert(StreamingOps.compactPartedStore(spark, s"$base/store", 200L) === 1,
-      "committed-self retry just finishes the vacuum")
-    assert(gens() === Seq("gen=200"))
-
-    // DEFERRED VACUUM (the OPTIMIZE-then-VACUUM retention split): with
-    // vacuum=false the compaction publishes but deletes nothing — an
-    // in-flight reader's generations survive until vacuumPartedStore
-    ingest(201L, (2L, uB, "beta v2")) // spread the manifest again
-    val before = gens().size
-    assert(StreamingOps.compactPartedStore(spark, s"$base/store", 300L,
-      vacuum = false) === 0, "deferred: publish only, nothing deleted")
-    assert(gens().size === before + 1, s"old generations retained: ${gens()}")
-    assert(serving().map(_._2) === Set(10L, 2L, 3L))
-    assert(StreamingOps.vacuumPartedStore(spark, s"$base/store") === before,
-      "the grace-window vacuum frees exactly the unreferenced history")
-    assert(gens() === Seq("gen=300"), s"post-vacuum: ${gens()}")
-    assert(serving().map(_._2) === Set(10L, 2L, 3L),
-      "vacuum never touches the committed serving view")
-  }
-
-  test("compaction high-water mark: a micro-batch whose id collides with " +
-      "or precedes a published compaction fails LOUD — the compacted " +
-      "generation can never be silently static-overwritten (r16 ADVICE)") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-parted-hw").toString
-    def ingest(bid: Long, doc: Long, url: String, text: String): Unit =
-      StreamingOps.ingestBatchUrlMerge(
-        Seq((doc, url, text)).toDF("doc_id", "url", "text"),
-        s"$base/store", s"$base/out", bid, 4)
-    ingest(0L, 1L, "https://example.org/a", "alpha v1")
-    ingest(1L, 2L, "https://example.org/b", "beta v1")
-    StreamingOps.compactPartedStore(spark, s"$base/store", 50L)
-    val viewAfterCompact = StreamingOps
-      .urlMergePartedStore(spark, s"$base/store").collect().toSet
-    // the exact collision the contract could not previously detect: a
-    // resumed stream reaching batchId == compactId would rewrite gen=50
-    val collide = intercept[IllegalArgumentException] {
-      ingest(50L, 9L, "https://example.org/a", "poison")
-    }
-    assert(collide.getMessage.contains("high-water mark gen=50"))
-    // a pre-compaction replay (uncommitted checkpoint) fails the same way
-    val replay = intercept[IllegalArgumentException] {
-      ingest(1L, 2L, "https://example.org/b", "beta v1")
-    }
-    assert(replay.getMessage.contains("high-water"))
-    assert(StreamingOps.urlMergePartedStore(spark, s"$base/store")
-      .collect().toSet === viewAfterCompact,
-      "both rejected batches left the compacted store untouched")
-    // the stream resumed PAST the compaction proceeds normally
-    ingest(51L, 10L, "https://example.org/a", "alpha v2")
-    assert(StreamingOps.urlMergePartedStore(spark, s"$base/store")
-      .collect().map(r => (r.getLong(1), r.getString(2))).toSet ===
-      Set((10L, "https://example.org/a"), (2L, "https://example.org/b")))
-    // a SECOND compaction advances the mark (overwrite-rename, no window)
-    StreamingOps.compactPartedStore(spark, s"$base/store", 90L)
-    val old = intercept[IllegalArgumentException] {
-      ingest(60L, 11L, "https://example.org/b", "late")
-    }
-    assert(old.getMessage.contains("gen=90"), "mark advanced to the newest compaction")
-    ingest(91L, 11L, "https://example.org/b", "beta v3")
-    assert(StreamingOps.urlMergePartedStore(spark, s"$base/store")
-      .filter($"doc_id" === 11L).count() === 1L)
-  }
-
-  test("the _COMPACT high-water mark is a MAX over per-publish marker " +
-      "files (r18 ADVICE): a newer marker committed between an older " +
-      "writer's read and its publish is never regressed, and the legacy " +
-      "single-file form still participates") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-parted-max").toString
-    def ingest(bid: Long, doc: Long, url: String, text: String): Unit =
-      StreamingOps.ingestBatchUrlMerge(
-        Seq((doc, url, text)).toDF("doc_id", "url", "text"),
-        s"$base/store", s"$base/out", bid, 4)
-    ingest(0L, 1L, "https://example.org/a", "alpha v1")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def put(name: String, id: Long): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"$base/store/$name"), true)
-      try out.write(s"$id\n".getBytes("UTF-8")) finally out.close()
-    }
-    // the lost-update interleave the single-file form could not survive:
-    // compactor B commits 90 (legacy bare file), then slower compactor A —
-    // which read the marker before B's commit — publishes its 50. Under
-    // overwrite-rename A would have clobbered 90; under per-publish names
-    // both files coexist and the read side takes the max.
-    put("_COMPACT", 90L)
-    put("_COMPACT.50", 50L)
-    val collide = intercept[IllegalArgumentException] {
-      ingest(60L, 9L, "https://example.org/a", "poison")
-    }
-    assert(collide.getMessage.contains("gen=90"),
-      s"max over both marker forms must win: ${collide.getMessage}")
-    // a real compaction past both advances the mark and prunes the
-    // superseded markers — exactly one (the max) remains
-    ingest(91L, 2L, "https://example.org/b", "beta v1")
-    StreamingOps.compactPartedStore(spark, s"$base/store", 95L, vacuum = false)
-    val markers = fs.globStatus(new org.apache.hadoop.fs.Path(s"$base/store/_COMPACT*"))
-      .map(_.getPath.getName).toSet
-    assert(markers === Set("_COMPACT.95"),
-      s"superseded markers pruned, max kept: $markers")
-    val after = intercept[IllegalArgumentException] {
-      ingest(92L, 9L, "https://example.org/b", "late")
-    }
-    assert(after.getMessage.contains("gen=95"))
-  }
-
-  test("the _COMPACT high-water mark is MONOTONE: replaying an older " +
-      "committed compaction after out-of-band surgery removed the newer " +
-      "generation cannot regress the mark and re-open the collision " +
-      "window (r17 ADVICE)") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-parted-mono").toString
-    def ingest(bid: Long, doc: Long, url: String, text: String): Unit =
-      StreamingOps.ingestBatchUrlMerge(
-        Seq((doc, url, text)).toDF("doc_id", "url", "text"),
-        s"$base/store", s"$base/out", bid, 4)
-    ingest(0L, 1L, "https://example.org/a", "alpha v1")
-    ingest(1L, 2L, "https://example.org/b", "beta v1")
-    StreamingOps.compactPartedStore(spark, s"$base/store", 50L, vacuum = false)
-    StreamingOps.compactPartedStore(spark, s"$base/store", 90L, vacuum = false)
-    // out-of-band surgery: the newer compacted generation disappears, so
-    // the retry's existing-generation require sees only gens ≤ 50 and the
-    // selfCommitted branch for 50 becomes reachable again
-    val dir = new org.apache.hadoop.fs.Path(s"$base/store/gen=90")
-    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
-    StreamingOps.compactPartedStore(spark, s"$base/store", 50L)
-    // the mark must still read 90: a batch in the re-opened id range
-    // stays rejected with the NEWER mark in the message
-    val collide = intercept[IllegalArgumentException] {
-      ingest(60L, 9L, "https://example.org/a", "poison")
-    }
-    assert(collide.getMessage.contains("gen=90"),
-      s"marker must not regress to 50: ${collide.getMessage}")
-    // and the store still serves from the surviving committed generation
-    assert(StreamingOps.urlMergePartedStore(spark, s"$base/store")
-      .collect().map(_.getLong(1)).toSet === Set(1L, 2L))
-  }
-
-  private def md5Of(spark: org.apache.spark.sql.SparkSession, s: String): String =
-    b1Fp(spark, s)
-
-  test("ingestBatchUrlMerge prune is never destructive: a batchId restart " +
-      "at 0 against an existing store deletes NO history, and a stray " +
-      "non-numeric gen directory neither crashes the batch nor gets " +
-      "swept") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-restart").toString
-    val b0 = Seq((1L, "https://example.org/a", "alpha v1"))
-      .toDF("doc_id", "url", "text")
-    val b1 = Seq((10L, "https://example.org/b", "beta v1"))
-      .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b0, s"$base/store", s"$base/out", 0L, 1)
-    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L, 1)
-    val gen1Before = spark.read.parquet(s"$base/store/gen=1").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(gen1Before.map(_._1) === Set("example.org/a", "example.org/b"))
-    // a tool leaves a stray directory the gen parser must skip, not throw on
-    java.nio.file.Files.createDirectory(
-      java.nio.file.Paths.get(s"$base/store/gen=tmp"))
-    // checkpoint reset: a NEW stream restarts batch ids at 0 against the
-    // same store. Nothing older than batchId exists, so the prune's keep
-    // set is empty — it must delete NOTHING (the old rule wiped gen=1
-    // here: the entire accumulated history)
-    val r0 = Seq((20L, "https://example.org/c", "gamma v1"))
-      .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(r0, s"$base/store", s"$base/out2", 0L, 1)
-    val gens = new java.io.File(s"$base/store").listFiles()
-      .map(_.getName).filter(_.startsWith("gen=")).sorted.toSeq
-    assert(gens === Seq("gen=0", "gen=1", "gen=tmp"),
-      s"history generations and the stray dir all survive the restart: $gens")
-    assert(spark.read.parquet(s"$base/store/gen=1").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet === gen1Before,
-      "the newest pre-restart generation is untouched")
-  }
-
-  test("ingestBatchUrlMerge prune anchor is commit-marker-aware: a crashed " +
-      "uncommitted newer generation (dir present, no _BANDS) is NOT the " +
-      "keep anchor — the committed generation the batch actually read " +
-      "survives the prune, and the batch's replay fixpoint holds") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-urlmerge-crashgen").toString
-    val b0 = Seq((1L, "https://example.org/a", "alpha v1"),
-      (2L, "https://example.org/b", "beta v1")).toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b0, s"$base/store", s"$base/out", 0L, 1)
-    // simulate batch 1 crashing MID-WRITE: its generation directory exists
-    // with band data but the _BANDS manifest never landed
-    val b1 = Seq((10L, "https://example.org/b", "beta v2"))
-      .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b1, s"$base/store", s"$base/out", 1L, 1)
-    assert(java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$base/store/gen=1/_BANDS")),
-      "fixture: gen=1 exists and its commit marker is removed")
-    val gen0Before = spark.read.parquet(s"$base/store/gen=0").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(3))).toSet
-    // batch 2 runs: the read skips uncommitted gen=1 and resolves gen=0;
-    // the prune's keep anchor must apply the SAME committed filter — the
-    // old rule anchored on gen=1 and deleted gen=0, the replay anchor
-    val b2 = Seq((20L, "https://example.org/c", "gamma v1"))
-      .toDF("doc_id", "url", "text")
-    StreamingOps.ingestBatchUrlMerge(b2, s"$base/store", s"$base/out", 2L, 1)
-    def prov2() = spark.read.parquet(s"$base/out")
-      .filter($"batch_id" === 2L).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(4))).toSet
-    val firstProv = prov2()
-    assert(firstProv.map(x => (x._1, x._3)) ===
-      Set(("example.org/c", "new")),
-      s"provenance computed against committed gen=0, not the crashed dir: $firstProv")
-    val gens = new java.io.File(s"$base/store").listFiles()
-      .map(_.getName).filter(_.startsWith("gen=")).sorted.toSeq
-    assert(gens.contains("gen=0"),
-      s"the committed generation the batch read survives the prune: $gens")
-    assert(spark.read.parquet(s"$base/store/gen=0").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getString(3))).toSet
-      === gen0Before, "gen=0 untouched byte-for-byte in content")
-    // replay batch 2 (crash before checkpoint commit): reads gen=0 again —
-    // identical provenance, identical merged generation (the fixpoint the
-    // old rule broke by deleting the anchor: replay would have seen an
-    // empty store and reported everything 'new' with lost history)
-    StreamingOps.ingestBatchUrlMerge(b2, s"$base/store", s"$base/out", 2L, 1)
-    assert(prov2() === firstProv, "replay fixpoint: provenance identical")
-    assert(spark.read.parquet(s"$base/store/gen=2").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
-      === Set(("example.org/a", 1L), ("example.org/b", 2L),
-        ("example.org/c", 20L)),
-      "merged generation carries the full committed history plus the batch")
   }
 
   test("ingestLoopChunks embeds each distinct chunk once across batches") {

@@ -60,24 +60,31 @@ class TopKStrategySpec extends AnyFunSuite {
   }
 
   test("partial-phase flush keeps correctness when groups exceed the cap") {
-    // drive the flush path directly: tiny cap (10), ~150 groups per
-    // partition — multiple flushes per task, output must still reduce to
-    // exact per-group top-k
-    val k = 2
-    val grouped = scored // 3 base groups; synthesize many via modulo
-      .withColumn("grp", concat(col("grp"), (col("tie") % 50).cast("string")))
-    sys.props("graft.topk.maxPartialGroups") = "10"
-    try {
-      val viaStrategy = TopKPerGroup(grouped, Seq(col("grp")), col("score"), col("tie"), k)
-        .collect().map(r => (r.getString(0), r.getLong(2))).toSet
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("grp")).orderBy(col("score").desc, col("tie"))
-      val viaWindow = grouped.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .collect().map(r => (r.getString(0), r.getLong(2))).toSet
-      assert(viaStrategy === viaWindow)
-      assert(viaWindow.size > 100, "fixture must have enough groups to force flushes")
-    } finally sys.props -= "graft.topk.maxPartialGroups"
+    // each of two input partitions holds more distinct groups than the
+    // partial phase buffers: every group's two rows per partition straddle
+    // a flush, so the partial phase emits every row and the final phase
+    // must reduce them
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.expressions.Window
+    GraftExtensions.register(spark)
+    val groups = 70000L
+    assert(groups > graft.plans.TopKPerGroupExec.MaxPartialGroups)
+    val rows = spark.range(0L, 4 * groups, 1L, 2)
+      .select((col("id") % groups).as("grp"),
+        (col("id") * 7919L % 1000L).cast("double").as("score"), col("id").as("tie"))
+    val top = TopKPerGroup(rows, Seq(col("grp")), col("score"), col("tie"), 1)
+    val viaStrategy = top.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val w = Window.partitionBy(col("grp")).orderBy(col("score").desc, col("tie"))
+    val viaWindow = rows.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    assert(viaStrategy === viaWindow)
+    assert(viaWindow.size === groups)
+    val shuffled = PlanStages.collect(top.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.metrics("shuffleRecordsWritten").value
+    }.sum
+    assert(shuffled > 2 * groups,
+      s"the partial phase must flush: $shuffled partial rows for $groups groups")
   }
 
   test("NaN scores agree with the window form (ordered above every value)") {
@@ -155,3 +162,6 @@ class TopKStrategySpec extends AnyFunSuite {
     assert(perGroup.values.exists(_ === 4), "populous groups must fill k")
   }
 }
+
+/** Plan traversal that descends into adaptive query stages. */
+private object PlanStages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
