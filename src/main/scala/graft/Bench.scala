@@ -1,5 +1,6 @@
 package graft
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
@@ -64,9 +65,12 @@ object Bench {
         Option(d.listFiles()).map(_.flatMap(f =>
           if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
           else Array(f)).map(_.length()).sum).getOrElse(0L)
-      } catch { case _: Throwable => 0L }
-    if (bytes <= 0L) cpus
-    else math.max(1L, math.min(cpus.toLong, (bytes + (1L << 20) - 1) >> 20)).toInt
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] listing $sfDir failed: $e"); 0L }
+    if (bytes <= 0L) {
+      System.err.println(s"[bench] no table bytes under $sfDir: shuffle partitions = $cpus")
+      cpus
+    } else math.max(1L, math.min(cpus.toLong, (bytes + (1L << 20) - 1) >> 20)).toInt
   }
 
   /** Scheduler and task counters of one timed run: the per-layer split of
@@ -233,19 +237,18 @@ object Bench {
     // The driver's stdout capture has truncated past rounds' artifacts to a
     // 2000-char tail (BENCH_r07.json: parsed null, no total, 57/110 query
     // times) — so the COMPLETE line also lands at a stable path the driver
-    // (or the judge) can copy verbatim. Best-effort: a read-only workdir
-    // must not fail the bench. An SPARK_GRAFT_ONLY subset run writes to a
-    // SIDECAR path instead: BENCH_LAST.json is the standing contract for
-    // the complete committed bench, and a local-iteration subset silently
-    // replacing it is exactly how round 15 broke that contract.
+    // can copy verbatim. Best-effort: a read-only workdir must not fail the
+    // bench, so a failed write is reported on stderr and the run goes on.
+    // An SPARK_GRAFT_ONLY subset run writes to a SIDECAR path instead:
+    // BENCH_LAST.json is the standing contract for the complete committed
+    // bench, and a local-iteration subset silently replacing it is exactly
+    // how round 15 broke that contract.
     val defaultOut =
       if (only.isEmpty) "/root/repo/BENCH_LAST.json"
       else "/root/repo/BENCH_SUBSET.json"
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)),
-      line + "\n")
-    catch { case _: Throwable => () }
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
+    catch { case NonFatal(e) => System.err.println(s"[bench] record not written to $out: $e") }
     line
   }
 }

@@ -20,6 +20,12 @@ object Analytics {
       |       CAST(SUM(CASE WHEN o_orderstatus='O' THEN 1 ELSE 0 END) AS BIGINT) AS status_o,
       |       CAST(SUM(CASE WHEN o_orderstatus='P' THEN 1 ELSE 0 END) AS BIGINT) AS status_p
       |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
+    statusCounts(s, d).orderBy("o_orderpriority")
+  }
+
+  /** Per-priority order counts by status, one column each (status_f,
+    * status_o, status_p), 0 where a status is absent. */
+  private def statusCounts(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)
       .groupBy(col("o_orderpriority"))
       .pivot("o_orderstatus", Seq("F", "O", "P"))
@@ -29,8 +35,6 @@ object Analytics {
         coalesce(col("F"), lit(0L)).as("status_f"),
         coalesce(col("O"), lit(0L)).as("status_o"),
         coalesce(col("P"), lit(0L)).as("status_p"))
-      .orderBy("o_orderpriority")
-  }
 
   /** UNPIVOT (melt) — the inverse relational operator to [[pivotOrders]]:
     * the wide per-priority status counts back to (priority, status, n)
@@ -52,15 +56,7 @@ object Analytics {
       |UNION ALL
       |SELECT o_orderpriority, 'status_p', CAST(status_p AS BIGINT) FROM wide
       |ORDER BY o_orderpriority, status""".stripMargin) { (s, d) =>
-    Tables.orders(s, d)
-      .groupBy(col("o_orderpriority"))
-      .pivot("o_orderstatus", Seq("F", "O", "P"))
-      .agg(count(lit(1)))
-      .select(
-        col("o_orderpriority"),
-        coalesce(col("F"), lit(0L)).as("status_f"),
-        coalesce(col("O"), lit(0L)).as("status_o"),
-        coalesce(col("P"), lit(0L)).as("status_p"))
+    statusCounts(s, d)
       .unpivot(
         Array(col("o_orderpriority")),
         Array(col("status_f"), col("status_o"), col("status_p")),

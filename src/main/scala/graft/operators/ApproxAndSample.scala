@@ -254,17 +254,9 @@ object ApproxAndSample {
     * map-side-combined aggregation. */
   val clusterBalancedSample: QueryDef = QueryDef.sql(
     "sample_cluster_balanced",
-    """WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings),
-      |cents AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm FROM n
-      |          ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-      |asg AS (SELECT n.vec_id, c.cid,
-      |               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-      |                 ORDER BY list_sum(list_transform(list_zip(n.e, c.ce), x -> x[1]*x[2]))
-      |                            / (n.nrm * c.cnrm) DESC,
-      |                          c.cid) AS rk
-      |        FROM n CROSS JOIN cents c),
+    s"""WITH ${Similarity.normedCte},
+      |${Similarity.md5CentsCte},
+      |${Similarity.asgCte("n.vec_id")},
       |lists AS (SELECT vec_id, cid FROM asg WHERE rk = 1),
       |sized AS (SELECT cid, COUNT(*) AS cluster_n FROM lists GROUP BY cid),
       |picked AS (SELECT cid, vec_id,

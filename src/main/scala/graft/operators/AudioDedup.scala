@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
 
 /** PERCEPTUAL audio dedup — the audio leg of the modality triangle
   * (text → `dedup_*`, image → `dedup_image_dhash`, audio → here), a
@@ -64,21 +63,12 @@ object AudioDedup {
   /** Batched decode → envelope hash. Undecodable or empty payloads
     * surface as all-(-1) bands and join no band bucket downstream. */
   def fingerprints(spark: SparkSession,
-      payloads: Dataset[MediaRecord]): Dataset[DHashBands] = {
-    import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.grouped(Multimodal.BatchSize).flatMap { batch =>
-        batch.map { rec =>
-          MediaCodec.decodeAudioPcm(rec.payload) match {
-            case Some((_, s)) if s.nonEmpty =>
-              val b = afpBands(s)
-              DHashBands(rec.doc_id, b(0), b(1), b(2), b(3))
-            case _ => DHashBands(rec.doc_id, -1L, -1L, -1L, -1L)
-          }
-        }
-      }
-    }
-  }
+      payloads: Dataset[MediaRecord]): Dataset[DHashBands] =
+    ImageDedup.batchedBands(spark, payloads)(rec =>
+      MediaCodec.decodeAudioPcm(rec.payload) match {
+        case Some((_, s)) if s.nonEmpty => afpBands(s)
+        case _ => ImageDedup.Unhashed
+      })
 
   /** Oracle: fixture formula → envelope → gradient bits, then the exact
     * banding replay shared with the image oracle. Sample k of clip
@@ -106,36 +96,14 @@ object AudioDedup {
       |       FROM s)""".stripMargin
   }
 
-  private def oracleSql: String =
-    s"""WITH $fpCte,
-      |${ImageDedup.reportTailSql("afp")}""".stripMargin
+  /** The envelope-hash modality: its fingerprint table is a train-once
+    * artifact like [[ImageDedup.media]]'s, so PCM decode + envelope
+    * hashing runs once per corpus content while the oracle keeps
+    * replaying the derivation in SQL. */
+  private[graft] val media = MediaFixture("aud", Multimodal.renderAudioFixture,
+    fingerprints, fpCte)
 
-  /** The envelope-hash fingerprint table as a train-once ModelStore
-    * artifact — same ingest-time indexing posture as
-    * [[ImageDedup.fpArtifact]]: PCM decode + envelope hashing runs once
-    * per corpus content, the report serves from the persisted table, the
-    * oracle keeps replaying the derivation in SQL. */
-  private[graft] def fpArtifact(s: SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    graft.sources.ModelStore.getOrBuild(s, d, "documents.parquet", "audfp") {
-      fixtureFingerprints(s, Tables.documents(s, d)
-        .select(col("doc_id"), col("text")))
-    }
-
-  val query: QueryDef = QueryDef.sql("dedup_audio_fingerprint", oracleSql) { (s, d) =>
-    ImageDedup.report(fpArtifact(s, d), hashCol = "afp")
-  }
-
-  /** Engine-side fingerprints over the registered fixture — shared by
-    * the one-shot and incremental queries. */
-  private[graft] def fixtureFingerprints(s: SparkSession,
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val payloads = Tables.fanOut(docs).as[(Long, String)]
-      .map { case (id, text) =>
-        MediaRecord(id, Multimodal.renderAudioFixture(id, text)) }
-    fingerprints(s, payloads).toDF()
-  }
+  val query: QueryDef = media.report("dedup_audio_fingerprint", "afp")
 
   /** INCREMENTAL perceptual audio dedup — the NINTH incremental-family
     * member, closing the perceptual modality triangle's incremental
@@ -146,37 +114,7 @@ object AudioDedup {
     * keep rule are [[ImageDedup.incrementalDropped]] VERBATIM (an
     * envelope hash is the same four-band shape), the oracle the SAME
     * incremental SQL tail over this fixture's fp replay. */
-  val incremental: QueryDef = QueryDef.sql(
-    "dedup_incremental_audio",
-    s"""WITH $fpCte,
-      |${ImageDedup.incrementalTailSql}""".stripMargin) { (s, d) =>
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val fpT = s"graft_aud_fp_store_${Dedup.dirKey(d)}"
-    val bandT = s"graft_aud_band_store_${Dedup.dirKey(d)}"
-    val fpStore = graft.sources.ParquetSink.tableOrBuild(s, fpT) {
-      val hf = fixtureFingerprints(s, docs.filter(col("doc_id") % 10 < 8))
-        .filter(col("b0") >= 0)
-        .groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-      graft.sources.ParquetSink.writeBucketed(
-        ImageDedup.bandRowsOf(hf), bandT, "bh", Dedup.storeBuckets(s))
-      graft.sources.ParquetSink.writeBucketed(
-        hf, fpT, "doc_id", Dedup.storeBuckets(s))
-    }
-    val newDocs = docs.filter(col("doc_id") % 10 >= 8)
-    // no cache: the fused probe body consumes the decode exactly once
-    val bfp = fixtureFingerprints(s, newDocs).filter(col("b0") >= 0)
-    // counted bound on the RAW batch doc count (cheap scan, no decode) —
-    // see ImageDedup.MaxBroadcastProbeDocs
-    val bounded = newDocs.limit((ImageDedup.MaxBroadcastProbeDocs + 1).toInt)
-      .count() <= ImageDedup.MaxBroadcastProbeDocs
-    val dropped = ImageDedup.incrementalDropped(bfp, fpStore, s.table(bandT), bounded)
-    newDocs.select(col("doc_id"))
-      .join(if (bounded) broadcast(dropped) else dropped.hint("shuffle_hash"),
-        Seq("doc_id"), "left_anti")
-      .orderBy("doc_id")
-  }
+  val incremental: QueryDef = media.incremental("dedup_incremental_audio")
 
   val all: Seq[QueryDef] = Seq(query, incremental)
 }

@@ -277,13 +277,7 @@ object Dedup {
       // unique).
       val card = post.select(explode(col("ds")).as("doc_id"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = post.filter(col("n") >= 2)
-        .select(col("ds"), posexplode(col("ds")))
-        .select(col("col").as("d1"),
-          explode(slice(col("ds"), col("pos") + lit(2), size(col("ds")))).as("d2"))
-        .groupBy(col("d1"), col("d2"))
-        .agg(count(lit(1)).as("i"))
-      (card, inter)
+      (card, postingPairs(post.filter(col("n") >= 2)))
     } else {
       // PREFIX form (duplicate-dense / boilerplate-heavy regime): prune
       // candidates before they exist, verify survivors row-locally.
@@ -365,18 +359,30 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
-  val containment: QueryDef = QueryDef.sql(
-    "dedup_containment",
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+  /** Oracle CTEs `toks` and `sh0(doc_id, s)`: each document's distinct
+    * word 3-gram shingles, the replay of [[shingles]]. */
+  private val shinglesCte: String =
+    """toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
       |sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
       |          generate_series(1, len(w)-2), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-      |       FROM toks WHERE len(w) >= 3),
+      |       FROM toks WHERE len(w) >= 3)""".stripMargin
+
+  /** Oracle CTEs through `card(doc_id, n)` and `inter(d1, d2, i)`: shingles
+    * with df ≤ [[MaxShingleDf]], each doc's shingle count and each
+    * co-occurring pair's intersection, the replay of
+    * [[shingleIntersections]]. */
+  private val shingleInterCtes: String =
+    s"""$shinglesCte,
       |sh AS (SELECT doc_id, s FROM (
       |          SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM sh0)
       |       WHERE df <= $MaxShingleDf),
       |card AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
       |inter AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) AS i
-      |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+      |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)""".stripMargin
+
+  val containment: QueryDef = QueryDef.sql(
+    "dedup_containment",
+    s"""WITH $shingleInterCtes,
       |dirs AS (SELECT d1 AS d_sub, d2 AS d_sup, i FROM inter
       |         UNION ALL SELECT d2, d1, i FROM inter)
       |SELECT d_sub, d_sup, CAST(i AS DOUBLE) / ca.n AS containment
@@ -388,16 +394,7 @@ object Dedup {
 
   val shingleJaccard: QueryDef = QueryDef.sql(
     "dedup_shingle_jaccard",
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-      |          generate_series(1, len(w)-2), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-      |       FROM toks WHERE len(w) >= 3),
-      |sh AS (SELECT doc_id, s FROM (
-      |          SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM sh0)
-      |       WHERE df <= $MaxShingleDf),
-      |card AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      |inter AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) AS i
-      |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
+    s"""WITH $shingleInterCtes
       |SELECT d1, d2, CAST(i AS DOUBLE) / (ca.n + cb.n - i) AS jaccard
       |FROM inter JOIN card ca ON ca.doc_id = d1 JOIN card cb ON cb.doc_id = d2
       |WHERE CAST(i AS DOUBLE) / (ca.n + cb.n - i) >= 0.5
@@ -599,16 +596,7 @@ object Dedup {
     * and its attrition report so the edge rule and the component fold
     * cannot drift between them (the `urlCanonCtes` discipline). */
   private val clustersCtes: String =
-    s"""WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-      |          generate_series(1, len(w)-2), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-      |       FROM toks WHERE len(w) >= 3),
-      |sh AS (SELECT doc_id, s FROM (
-      |          SELECT doc_id, s, COUNT(*) OVER (PARTITION BY s) AS df FROM sh0)
-      |       WHERE df <= $MaxShingleDf),
-      |card AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      |inter AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) AS i
-      |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+    s"""WITH RECURSIVE $shingleInterCtes,
       |pairs AS (SELECT d1, d2
       |          FROM inter JOIN card ca ON ca.doc_id = d1 JOIN card cb ON cb.doc_id = d2
       |          WHERE CAST(i AS DOUBLE) / (ca.n + cb.n - i) >= 0.5),
@@ -934,10 +922,15 @@ object Dedup {
     * incremental contract's own bound (one day's data is the movable
     * unit). */
   private def batchPairCounts(bs: DataFrame): DataFrame =
-    bs.groupBy(col("sid"))
+    postingPairs(bs.groupBy(col("sid"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(col("ds"), posexplode(col("ds")))
+      .filter(size(col("ds")) >= 2))
+
+  /** Every (d1 < d2, i) pair of docs sharing i posting lists, from
+    * sorted posting lists `ds`: each list fans its pairs out through two
+    * chained generators and one aggregate counts them. */
+  private def postingPairs(posts: DataFrame): DataFrame =
+    posts.select(col("ds"), posexplode(col("ds")))
       .select(col("col").as("d1"),
         explode(slice(col("ds"), col("pos") + lit(2), size(col("ds")))).as("d2"))
       .groupBy(col("d1"), col("d2"))
@@ -945,18 +938,7 @@ object Dedup {
 
   def dedupIncrementalJaccardOn(newDocs: DataFrame, postings: DataFrame,
       stoplist: DataFrame, threshold: Double = 0.5): DataFrame = {
-    // batch shingles feed history scoring AND the within-batch self-join:
-    // materialize once (production would stage the day's shingles to parquet)
-    val bs = Tables.materialize(batchShingles(newDocs, stoplist))
-    // bcard feeds FOUR consumers (the history-score filter, both sides of
-    // the within-batch pair filter, and the final n_shingles left join) —
-    // unmaterialized, each consumer re-aggregated the cached shingle stream
-    // and paid its own exchange; the cache retains the aggregation's
-    // doc_id hash-partitioning, so every doc_id-keyed join side reads it
-    // in place (r21: 23 → 20 jobs / 431 → 395 tasks per run measured on
-    // this query). Batch-day-sized — cache pressure is bounded by contract.
-    val bcard = Tables.materialize(
-      bs.groupBy(col("doc_id")).agg(count(lit(1)).as("bn")))
+    val (bs, bcard) = batchShingleCards(newDocs, stoplist)
     val jac = (i: Column, a: Column, b: Column) => i.cast("double") / (a + b - i)
     // shuffle_hash pins throughout (r19 cliff discipline, standing gate in
     // BroadcastGeneratorGateSpec): the batch shingle stream, its per-doc
@@ -979,11 +961,33 @@ object Dedup {
         .hint("shuffle_hash"), Seq("d2"))
       .filter(jac(col("i"), col("n1"), col("n2")) >= threshold)
       .select(col("d2").as("doc_id"))
-    // ONE distinct over the union, ONE anti join (r21, guide §2.4): the
-    // per-side distincts + two sequential anti joins each paid an exchange
-    // and a build — "drop if matched in history OR earlier in batch" is a
-    // set union, so a single distinct bounds the build side by batch size
-    // exactly as the two did. Same keep rule, fewer exchanges.
+    unmatchedBatch(newDocs, bcard, histMatched, batchMatched)
+  }
+
+  /** The batch side of both incremental shingle rules: the day's
+    * stoplisted shingle stream `bs` and each doc's shingle count `bn`.
+    * Both are materialized. `bs` feeds history scoring and the
+    * within-batch pairs (production would stage the day's shingles to
+    * parquet). `bcard` feeds the history filter, the batch-pair filter and
+    * the final left join; unmaterialized, each consumer re-aggregated the
+    * cached stream and paid its own exchange, while the cache keeps the
+    * aggregation's doc_id hash-partitioning for every doc_id-keyed join
+    * (r21: 23 → 20 jobs on the Jaccard rule, 20 → 18 on containment).
+    * Batch-day-sized, so cache pressure is bounded by contract. */
+  private def batchShingleCards(newDocs: DataFrame,
+      stoplist: DataFrame): (DataFrame, DataFrame) = {
+    val bs = Tables.materialize(batchShingles(newDocs, stoplist))
+    (bs, Tables.materialize(bs.groupBy(col("doc_id")).agg(count(lit(1)).as("bn"))))
+  }
+
+  /** The batch docs matched neither in history nor earlier in the batch,
+    * with their shingle count. ONE distinct over the union, ONE anti join
+    * (r21, guide §2.4): per-side distincts + two sequential anti joins
+    * each paid an exchange and a build, and "drop if matched in history
+    * OR earlier in batch" is a set union, so one distinct bounds the
+    * build side by batch size exactly as the two did. */
+  private def unmatchedBatch(newDocs: DataFrame, bcard: DataFrame,
+      histMatched: DataFrame, batchMatched: DataFrame): DataFrame = {
     val matched = histMatched.unionByName(batchMatched).distinct()
     newDocs.select(col("doc_id"))
       .join(matched.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
@@ -992,6 +996,18 @@ object Dedup {
       .orderBy("doc_id")
   }
 
+  /** The batch-side oracle tail of both incremental shingle rules: the
+    * batch docs in neither `hmatch` nor `bmatch`, with their `bcard`
+    * shingle count. */
+  private val incrementalKeptSql: String =
+    """SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
+      |       CAST(COALESCE(bc.n, 0) AS BIGINT) AS n_shingles
+      |FROM documents d LEFT JOIN bcard bc ON bc.doc_id = d.doc_id
+      |WHERE d.doc_id % 10 >= 8
+      |  AND d.doc_id NOT IN (SELECT doc_id FROM hmatch)
+      |  AND d.doc_id NOT IN (SELECT doc_id FROM bmatch)
+      |ORDER BY doc_id""".stripMargin
+
   /** Registered form: same deterministic history/batch split as
     * [[incremental]] (`doc_id % 10`), with the postings and stoplist
     * genuinely persisted as bucketed tables and the batch deduped against
@@ -999,10 +1015,7 @@ object Dedup {
     * join-in-place, not an in-session shortcut. */
   val incrementalJaccard: QueryDef = QueryDef.sql(
     "dedup_incremental_jaccard",
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-      |          generate_series(1, len(w)-2), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-      |       FROM toks WHERE len(w) >= 3),
+    s"""WITH $shinglesCte,
       |stop AS (SELECT s FROM sh0 WHERE doc_id % 10 < 8
       |         GROUP BY s HAVING COUNT(*) > $MaxShingleDf),
       |hist AS (SELECT doc_id, s FROM sh0 WHERE doc_id % 10 < 8
@@ -1024,14 +1037,18 @@ object Dedup {
       |           JOIN bcard ca ON ca.doc_id = x.d1
       |           JOIN bcard cb ON cb.doc_id = x.d2
       |           WHERE CAST(x.i AS DOUBLE) / (ca.n + cb.n - x.i) >= 0.5)
-      |SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-      |       CAST(COALESCE(bc.n, 0) AS BIGINT) AS n_shingles
-      |FROM documents d LEFT JOIN bcard bc ON bc.doc_id = d.doc_id
-      |WHERE d.doc_id % 10 >= 8
-      |  AND d.doc_id NOT IN (SELECT doc_id FROM hmatch)
-      |  AND d.doc_id NOT IN (SELECT doc_id FROM bmatch)
-      |ORDER BY doc_id""".stripMargin) { (s, d) =>
+      |$incrementalKeptSql""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
+    val (postStore, stopStore) = shingleStores(s, d, docs)
+    dedupIncrementalJaccardOn(docs.filter(col("doc_id") % 10 >= 8), postStore, stopStore)
+  }
+
+  /** The persisted history stores both incremental shingle rules probe:
+    * the sid-bucketed postings and the boilerplate stoplist of the
+    * `doc_id % 10 < 8` split. Whichever query runs first builds them, the
+    * other reads. */
+  private def shingleStores(s: SparkSession, d: String,
+      docs: DataFrame): (DataFrame, DataFrame) = {
     val (postTbl, stopTbl) = (s"graft_sh_store_${dirKey(d)}", s"graft_sh_stop_${dirKey(d)}")
     val postStore = graft.sources.ParquetSink.tableOrBuild(s, postTbl) {
       val (postings, stop) = shingleStoreSnapshot(docs.filter(col("doc_id") % 10 < 8))
@@ -1039,8 +1056,7 @@ object Dedup {
       graft.sources.ParquetSink.writeTable(stop, stopTbl)
       graft.sources.ParquetSink.writeBucketed(postings, postTbl, "sid", storeBuckets(s))
     }
-    val stopStore = s.table(stopTbl)
-    dedupIncrementalJaccardOn(docs.filter(col("doc_id") % 10 >= 8), postStore, stopStore)
+    (postStore, s.table(stopTbl))
   }
 
   /** Incremental CONTAINMENT dedup — the TENTH incremental-family member,
@@ -1062,12 +1078,7 @@ object Dedup {
     * day's shingles the only shuffled data. */
   def dedupIncrementalContainmentOn(newDocs: DataFrame, postings: DataFrame,
       stoplist: DataFrame, threshold: Double = 0.8): DataFrame = {
-    val bs = Tables.materialize(batchShingles(newDocs, stoplist))
-    // materialized for the same three-consumer reuse as the Jaccard twin
-    // (history filter, batch-pair filter, final left join — r21: 20 → 18
-    // jobs / 364 → 331 tasks per run measured)
-    val bcard = Tables.materialize(
-      bs.groupBy(col("doc_id")).agg(count(lit(1)).as("bn")))
+    val (bs, bcard) = batchShingleCards(newDocs, stoplist)
     // shuffle_hash pins: same movement contract (and same generator-
     // suppressed estimates) as the Jaccard twin directly above
     val histMatched = bs.hint("shuffle_hash")
@@ -1081,14 +1092,7 @@ object Dedup {
         .hint("shuffle_hash"), Seq("d2"))
       .filter(col("i").cast("double") / col("n2") >= threshold)
       .select(col("d2").as("doc_id"))
-    // one distinct over the union, one anti join — the Jaccard twin's r21
-    // restructure (set-union keep rule, batch-bounded build side)
-    val matched = histMatched.unionByName(batchMatched).distinct()
-    newDocs.select(col("doc_id"))
-      .join(matched.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-      .join(bcard.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("bn"), lit(0L)).as("n_shingles"))
-      .orderBy("doc_id")
+    unmatchedBatch(newDocs, bcard, histMatched, batchMatched)
   }
 
   /** Registered form: probes the Jaccard twin's stores (shared
@@ -1096,10 +1100,7 @@ object Dedup {
     * reads). */
   val incrementalContainment: QueryDef = QueryDef.sql(
     "dedup_incremental_containment",
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-      |          generate_series(1, len(w)-2), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-      |       FROM toks WHERE len(w) >= 3),
+    s"""WITH $shinglesCte,
       |stop AS (SELECT s FROM sh0 WHERE doc_id % 10 < 8
       |         GROUP BY s HAVING COUNT(*) > $MaxShingleDf),
       |hist AS (SELECT doc_id, s FROM sh0 WHERE doc_id % 10 < 8
@@ -1118,21 +1119,9 @@ object Dedup {
       |                 ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2) x
       |           JOIN bcard cb ON cb.doc_id = x.d2
       |           WHERE CAST(x.i AS DOUBLE) / cb.n >= 0.8)
-      |SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-      |       CAST(COALESCE(bc.n, 0) AS BIGINT) AS n_shingles
-      |FROM documents d LEFT JOIN bcard bc ON bc.doc_id = d.doc_id
-      |WHERE d.doc_id % 10 >= 8
-      |  AND d.doc_id NOT IN (SELECT doc_id FROM hmatch)
-      |  AND d.doc_id NOT IN (SELECT doc_id FROM bmatch)
-      |ORDER BY doc_id""".stripMargin) { (s, d) =>
+      |$incrementalKeptSql""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val (postTbl, stopTbl) = (s"graft_sh_store_${dirKey(d)}", s"graft_sh_stop_${dirKey(d)}")
-    val postStore = graft.sources.ParquetSink.tableOrBuild(s, postTbl) {
-      val (postings, stop) = shingleStoreSnapshot(docs.filter(col("doc_id") % 10 < 8))
-      graft.sources.ParquetSink.writeTable(stop, stopTbl)
-      graft.sources.ParquetSink.writeBucketed(postings, postTbl, "sid", storeBuckets(s))
-    }
-    val stopStore = s.table(stopTbl)
+    val (postStore, stopStore) = shingleStores(s, d, docs)
     dedupIncrementalContainmentOn(docs.filter(col("doc_id") % 10 >= 8),
       postStore, stopStore)
   }

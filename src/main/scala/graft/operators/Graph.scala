@@ -135,45 +135,6 @@ object Graph {
     ranks
   }
 
-  /** Early-stopping variant: iterate until the max per-node rank change is
-    * ≤ `tolFp` (fixed-point units, i.e. 10⁻⁹ rank) or `maxIterations`.
-    * Convergence is checked only at [[CheckpointEvery]] boundaries so the
-    * one driver-side delta action per check rides the checkpoint
-    * materialization the deep chain needs anyway — no extra job per
-    * iteration, the collect-free posture the fixed 5-round chain pins.
-    * Returns (ranks, iterationsRun, lastMaxDeltaFp). */
-  private[graft] def pagerankUntil(docs0: DataFrame, maxIterations: Int,
-      tolFp: Long): (DataFrame, Int, Long) = {
-    val (edges, docs, n) = graphTables(docs0)
-    var ranks = docs.select(col("doc_id").as("v")).crossJoin(broadcast(n))
-      .select(col("v"), expr("CAST(1000000000 AS BIGINT) div n").as("r"))
-      .localCheckpoint(true)
-    var done = 0
-    var lastDelta = Long.MaxValue
-    while (done < maxIterations && lastDelta > tolFp) {
-      val prev = ranks
-      val steps = math.min(CheckpointEvery, maxIterations - done)
-      for (_ <- 1 to steps) {
-        ranks = edges.join(ranks, edges("src") === ranks("v"))
-          .select(col("dst"), expr("r div deg").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-          .crossJoin(broadcast(n))
-          .select(col("dst").as("v"), expr(
-            "(15 * (CAST(1000000000 AS BIGINT) div n) + 85 * s) div 100"
-          ).as("r"))
-      }
-      ranks = ranks.localCheckpoint(true)
-      done += steps
-      // max(...) over an empty graph yields NULL; treat "no nodes" as converged.
-      val deltaRow = ranks.as("cur")
-        .join(prev.as("p"), col("cur.v") === col("p.v"))
-        .agg(max(abs(col("cur.r") - col("p.r"))).as("d"))
-        .head
-      lastDelta = if (deltaRow.isNullAt(0)) 0L else deltaRow.getLong(0)
-    }
-    (ranks, done, lastDelta)
-  }
-
   val pagerank: QueryDef = QueryDef.sql(
     "graph_pagerank",
     """WITH n AS (SELECT COUNT(*) AS n FROM documents),

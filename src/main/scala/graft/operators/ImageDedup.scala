@@ -94,20 +94,24 @@ object ImageDedup {
     * bands (the imageFeatures null-row contract); they join no band
     * bucket downstream. */
   def fingerprints(spark: SparkSession,
-      payloads: Dataset[MediaRecord]): Dataset[DHashBands] = {
+      payloads: Dataset[MediaRecord]): Dataset[DHashBands] =
+    batchedBands(spark, payloads)(rec =>
+      MediaCodec.decodeRaster(rec.payload).fold(Unhashed)(dhashBands))
+
+  /** The bands of a payload no fingerprinter can hash: −1 is no 16-bit
+    * band value, so such a doc joins no band bucket. */
+  private[operators] val Unhashed: Array[Long] = Array(-1L, -1L, -1L, -1L)
+
+  /** Every media fingerprinter in [[Multimodal.batched]]'s shell: `bands`
+    * maps one payload to its four bands. */
+  private[operators] def batchedBands(spark: SparkSession,
+      payloads: Dataset[MediaRecord])(
+      bands: MediaRecord => Array[Long]): Dataset[DHashBands] = {
     import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.grouped(Multimodal.BatchSize).flatMap { batch =>
-        batch.map { rec =>
-          MediaCodec.decodeRaster(rec.payload) match {
-            case Some(r) =>
-              val b = dhashBands(r)
-              DHashBands(rec.doc_id, b(0), b(1), b(2), b(3))
-            case None => DHashBands(rec.doc_id, -1L, -1L, -1L, -1L)
-          }
-        }
-      }
-    }
+    Multimodal.batched(payloads)(_.map { rec =>
+      val b = bands(rec)
+      DHashBands(rec.doc_id, b(0), b(1), b(2), b(3))
+    })
   }
 
   /** Per-doc perceptual-dedup report over a fingerprint table:
@@ -244,34 +248,13 @@ object ImageDedup {
       |FROM fpx LEFT JOIN near USING (doc_id)
       |ORDER BY fpx.doc_id""".stripMargin
 
-  private def oracleSql: String =
-    s"""WITH $bandsCte,
-      |${reportTailSql("dhash")}""".stripMargin
+  /** The dHash modality over the raster fixture. Both full-corpus
+    * consumers (the report and the cross-modal audit) read its persisted
+    * fingerprint table. */
+  private[graft] val media = MediaFixture("img", Multimodal.renderFixture,
+    fingerprints, bandsCte)
 
-  /** The per-doc dHash fingerprint table as a train-once
-    * [[graft.sources.ModelStore]] artifact — the ingest-time posture real
-    * media pipelines run: perceptual fingerprints are computed when a file
-    * lands and INDEXED, not re-decoded per query. Keyed on the corpus
-    * content; both full-corpus consumers (the one-shot report and the
-    * cross-modal audit) read the persisted table, while the oracles keep
-    * replaying the full decode chain in SQL — the artifact-equals-fresh-
-    * decode check, the same discipline as the NB/BM25/LM artifacts. (The
-    * incremental twins still decode their own batch — that IS the daily
-    * cost they model.) */
-  private[graft] def fpArtifact(s: SparkSession, d: String): DataFrame =
-    graft.sources.ModelStore.getOrBuild(s, d, "documents.parquet", "imgfp") {
-      import s.implicits._
-      // fan out before the render/decode map: the documents scan is a few
-      // parquet splits, and the decode chain should use every core
-      val payloads = Tables.fanOut(Tables.documents(s, d)
-        .select(col("doc_id"), col("text"))).as[(Long, String)]
-        .map { case (id, text) => MediaRecord(id, Multimodal.renderFixture(id, text)) }
-      fingerprints(s, payloads).toDF()
-    }
-
-  val query: QueryDef = QueryDef.sql("dedup_image_dhash", oracleSql) { (s, d) =>
-    report(fpArtifact(s, d))
-  }
+  val query: QueryDef = media.report("dedup_image_dhash", "dhash")
 
   /** CROSS-MODAL pair-consistency audit — the image-text analogue of
     * [[Similarity]]'s `embedding_consistency_audit`, and a standard pass
@@ -311,8 +294,8 @@ object ImageDedup {
       |WHERE tg.n_text_dup > 1 OR ig.n_image_dup > 1
       |ORDER BY base.doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    // image side serves from the persisted fingerprint index ([[fpArtifact]])
-    val img = fpArtifact(s, d)
+    // image side serves from the persisted fingerprint index ([[MediaFixture.fpArtifact]])
+    val img = media.fpArtifact(s, d)
     val base = Tables.materialize(
       docs.select(col("doc_id"), Dedup.tokenSetFp(col("text")).as("tfp"))
         .join(img, Seq("doc_id")))
@@ -335,25 +318,11 @@ object ImageDedup {
   /** 4-row band explode of a fingerprint table — the store layout the
     * incremental twin persists (band-bucketed, so a batch's candidate
     * probe joins the store in place). */
-  private def bandRows(fp: DataFrame): DataFrame =
+  private[graft] def bandRows(fp: DataFrame): DataFrame =
     fp.select(col("doc_id"), explode(array((0 until 4).map(i => struct(
         lit(i).as("band"), col(s"b$i").as("bh"))): _*)).as("p"))
       .select(col("doc_id"), col("p.band").as("band"), col("p.bh").as("bh"))
 
-  /** INCREMENTAL perceptual image dedup — the image member of the
-    * cross-snapshot family (exact/jaccard/minhash/semantic/span/df/nb all
-    * have one): yesterday's corpus persists as a dHash fingerprint store
-    * (band table bucketed by band hash, band-values table bucketed by
-    * doc_id, both through the real write path), and a new batch pays only
-    * its own decode+hash plus a band-bucket probe of the store IN PLACE —
-    * the history rasters are never re-decoded. Keep rule mirrors the
-    * MinHash twin verbatim: a batch image is dropped iff any history
-    * image — or any earlier-id batch image — lies within Hamming ≤
-    * [[MaxDist]] (exact copies are Hamming 0), candidates from the band
-    * equi-join, `bit_count(xor)` verifying. The oracle replays the
-    * fingerprint derivation from the raw corpus via [[bandsCte]] — sound
-    * because the store build is a deterministic function of the history
-    * split, the same argument as `dedup_incremental_minhash_md5`. */
   /** The incremental-keep-rule oracle TAIL — everything downstream of a
     * `fp(doc_id, b0..b3)` CTE: 80/20 split, band-bucket candidate
     * generation against the history side, Hamming ≤ [[MaxDist]] verify on
@@ -386,44 +355,22 @@ object ImageDedup {
       |  AND doc_id NOT IN (SELECT doc_id FROM batchm)
       |ORDER BY doc_id""".stripMargin
 
-  val incremental: QueryDef = QueryDef.sql(
-    "dedup_incremental_image",
-    s"""WITH $bandsCte,
-      |$incrementalTailSql""".stripMargin) { (s, d) =>
-    import s.implicits._
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    def fps(df: DataFrame) = fingerprints(s, df.as[(Long, String)]
-      .map { case (id, text) => MediaRecord(id, Multimodal.renderFixture(id, text)) })
-      .toDF().filter(col("b0") >= 0)
-    val fpT = s"graft_img_fp_store_${Dedup.dirKey(d)}"
-    val bandT = s"graft_img_band_store_${Dedup.dirKey(d)}"
-    val fpStore = graft.sources.ParquetSink.tableOrBuild(s, fpT) {
-      // ONE ROW PER SIGNATURE (earliest id as representative): the store
-      // is probed at signature granularity, and a mega-duplicate group
-      // must cost one row, not its copy count
-      val hf = fps(docs.filter(col("doc_id") % 10 < 8))
-        .groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-      graft.sources.ParquetSink.writeBucketed(
-        bandRows(hf), bandT, "bh", Dedup.storeBuckets(s))
-      graft.sources.ParquetSink.writeBucketed(
-        hf, fpT, "doc_id", Dedup.storeBuckets(s))
-    }
-    val bandStore = s.table(bandT)
-    val newDocs = docs.filter(col("doc_id") % 10 >= 8)
-    // no cache: the fused probe body consumes the decode exactly once
-    val bfp = fps(newDocs)
-    // counted bound on the RAW batch doc count (cheap scan, no decode)
-    // drives every probe-side broadcast decision — see MaxBroadcastProbeDocs
-    val bounded = newDocs.limit((MaxBroadcastProbeDocs + 1).toInt)
-      .count() <= MaxBroadcastProbeDocs
-    val dropped = incrementalDropped(bfp, fpStore, bandStore, bounded)
-    newDocs.select(col("doc_id"))
-      .join(if (bounded) broadcast(dropped) else dropped.hint("shuffle_hash"),
-        Seq("doc_id"), "left_anti")
-      .orderBy("doc_id")
-  }
+  /** INCREMENTAL perceptual image dedup — the image member of the
+    * cross-snapshot family (exact/jaccard/minhash/semantic/span/df/nb all
+    * have one): yesterday's corpus persists as a dHash fingerprint store
+    * (band table bucketed by band hash, band-values table bucketed by
+    * doc_id, both through the real write path), and a new batch pays only
+    * its own decode+hash plus a band-bucket probe of the store IN PLACE —
+    * the history rasters are never re-decoded. Keep rule mirrors the
+    * MinHash twin verbatim: a batch image is dropped iff any history
+    * image — or any earlier-id batch image — lies within Hamming ≤
+    * [[MaxDist]] (exact copies are Hamming 0), candidates from the band
+    * equi-join, `bit_count(xor)` verifying. The oracle replays the
+    * fingerprint derivation from the raw corpus via [[bandsCte]] — sound
+    * because the store build is a deterministic function of the history
+    * split, the same argument as `dedup_incremental_minhash_md5`. */
+  val incremental: QueryDef =
+    media.incremental("dedup_incremental_image", batchInput = identity)
 
   /** Batch doc_ids DROPPED against a history fp/band store and the batch
     * itself: any history image — or any earlier-id batch image — within
@@ -527,8 +474,92 @@ object ImageDedup {
       .select(col("doc_id"))
   }
 
-  /** [[bandRows]] exposed for the streaming loop's store append. */
-  private[graft] def bandRowsOf(fp: DataFrame): DataFrame = bandRows(fp)
-
   val all: Seq[QueryDef] = Seq(query, crossModal, incremental)
+}
+
+/** One perceptual-hash modality over the registered document fixture:
+  * `render` draws a document's payload, `fingerprints` hashes a batch of
+  * payloads, and `fpCte` is the DuckDB replay of both, a CTE prefix
+  * ending in `fp(doc_id, b0..b3)`. `tag` names the fingerprint artifact
+  * (`<tag>fp`) and the incremental stores (`graft_<tag>_fp_store_*`,
+  * `graft_<tag>_band_store_*`). The image, video and audio report and
+  * incremental queries are built here. */
+private[graft] final case class MediaFixture(tag: String,
+    render: (Long, String) => Array[Byte],
+    fingerprints: (SparkSession, Dataset[MediaRecord]) => Dataset[DHashBands],
+    fpCte: String) {
+
+  private def hash(s: SparkSession, docs: DataFrame): DataFrame = {
+    import s.implicits._
+    val draw = render
+    fingerprints(s, docs.as[(Long, String)]
+      .map { case (id, text) => MediaRecord(id, draw(id, text)) }).toDF()
+  }
+
+  /** Fingerprints of (doc_id, text) rows. The input fans out before the
+    * render/decode map: the documents scan is a few parquet splits, and
+    * the decode chain should use every core. */
+  private[graft] def fixtureFingerprints(s: SparkSession,
+      docs: DataFrame): DataFrame = hash(s, Tables.fanOut(docs))
+
+  /** The per-doc fingerprint table as a train-once
+    * [[graft.sources.ModelStore]] artifact: perceptual fingerprints are
+    * computed once per corpus content and indexed, not re-decoded per
+    * query, while the oracles keep replaying the full decode chain in
+    * SQL. (The incremental queries still decode their own batch; that is
+    * the daily cost they model.) */
+  private[graft] def fpArtifact(s: SparkSession, d: String): DataFrame =
+    graft.sources.ModelStore.getOrBuild(s, d, "documents.parquet", s"${tag}fp") {
+      fixtureFingerprints(s, Tables.documents(s, d)
+        .select(col("doc_id"), col("text")))
+    }
+
+  /** The per-doc near-dup report ([[ImageDedup.report]]) served from
+    * [[fpArtifact]]. */
+  def report(name: String, hashCol: String): QueryDef = QueryDef.sql(name,
+    s"""WITH $fpCte,
+      |${ImageDedup.reportTailSql(hashCol)}""".stripMargin) { (s, d) =>
+    ImageDedup.report(fpArtifact(s, d), hashCol)
+  }
+
+  /** The incremental query: the 80% history split persists as a
+    * signature store plus its band store, and the 20% batch is probed
+    * against both with [[ImageDedup.incrementalDropped]]. `batchInput`
+    * spreads each split before it is hashed. */
+  def incremental(name: String,
+      batchInput: DataFrame => DataFrame = Tables.fanOut): QueryDef =
+    QueryDef.sql(name,
+      s"""WITH $fpCte,
+        |${ImageDedup.incrementalTailSql}""".stripMargin) { (s, d) =>
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      def fps(df: DataFrame) = hash(s, batchInput(df)).filter(col("b0") >= 0)
+      val fpT = s"graft_${tag}_fp_store_${Dedup.dirKey(d)}"
+      val bandT = s"graft_${tag}_band_store_${Dedup.dirKey(d)}"
+      val fpStore = graft.sources.ParquetSink.tableOrBuild(s, fpT) {
+        // ONE ROW PER SIGNATURE (earliest id as representative): the store
+        // is probed at signature granularity, and a mega-duplicate group
+        // must cost one row, not its copy count
+        val hf = fps(docs.filter(col("doc_id") % 10 < 8))
+          .groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
+          .agg(min(col("doc_id")).as("doc_id"))
+          .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
+        graft.sources.ParquetSink.writeBucketed(
+          ImageDedup.bandRows(hf), bandT, "bh", Dedup.storeBuckets(s))
+        graft.sources.ParquetSink.writeBucketed(
+          hf, fpT, "doc_id", Dedup.storeBuckets(s))
+      }
+      val newDocs = docs.filter(col("doc_id") % 10 >= 8)
+      // no cache: the fused probe body consumes the decode exactly once
+      val bfp = fps(newDocs)
+      // counted bound on the RAW batch doc count (cheap scan, no decode)
+      // drives every probe-side broadcast decision — see
+      // ImageDedup.MaxBroadcastProbeDocs
+      val bounded = newDocs.limit((ImageDedup.MaxBroadcastProbeDocs + 1).toInt)
+        .count() <= ImageDedup.MaxBroadcastProbeDocs
+      val dropped = ImageDedup.incrementalDropped(bfp, fpStore, s.table(bandT), bounded)
+      newDocs.select(col("doc_id"))
+        .join(if (bounded) broadcast(dropped) else dropped.hint("shuffle_hash"),
+          Seq("doc_id"), "left_anti")
+        .orderBy("doc_id")
+    }
 }

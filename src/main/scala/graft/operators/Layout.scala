@@ -26,10 +26,9 @@ import graft.{QueryDef, Tables}
   * The z-value is a plain column expression (shift/mask/add over disjoint
   * bits — addition IS bitwise-or here), codegen-friendly and shuffle-free:
   * at scale the only cost of z-clustering the write is the range exchange
-  * the writer already pays to control file count. The write path itself is
-  * [[graft.sources.ParquetSink.writeClustered]] (round 9), whose
-  * `rowGroupsHit` audit re-proves this query's punchline on REAL parquet
-  * footer statistics. */
+  * the writer already pays to control file count. `ParquetSinkSpec` writes
+  * z-clustered parquet with this key and re-proves the punchline on REAL
+  * parquet footer statistics (`rowGroupsHit`). */
 object Layout {
 
   /** bits per dimension in the general interleave (32-bit Morton code). */
@@ -62,6 +61,30 @@ object Layout {
   private val Xq0 = 50L; private val Xq1 = 80L
   private val Yq0 = 100L; private val Yq1 = 150L
 
+  /** Oracle CTE `xy(x, y)`: the replay of [[gridXy]]. */
+  private val gridXyCte: String = {
+    val mask = (1L << GridBits) - 1
+    s"""xy AS (
+      |  SELECT CAST(o_custkey AS BIGINT) & $mask AS x,
+      |         CAST(date_diff('day', TIMESTAMP '1992-01-01 00:00:00', o_orderdate) AS BIGINT) & $mask AS y
+      |  FROM orders)""".stripMargin
+  }
+
+  /** Oracle CTE `alias`: one [[bucketBoxes]] side, the row count and (x, y)
+    * bounding box of each `bucket` of the `keyed` CTE. */
+  private def bucketBoxCte(alias: String, layout: String, bucket: String): String =
+    s"""$alias AS (SELECT '$layout' AS layout, $bucket AS bucket, COUNT(*) AS n_rows,
+      |             MIN(x) AS x_min, MAX(x) AS x_max, MIN(y) AS y_min, MAX(y) AS y_max
+      |      FROM keyed GROUP BY $bucket)""".stripMargin
+
+  /** Oracle tail of [[bucketBoxes]] over the union `u` of its sides. */
+  private val auditTailSql: String =
+    s"""SELECT layout, CAST(bucket AS BIGINT) AS bucket, CAST(n_rows AS BIGINT) AS n_rows,
+      |       x_min, x_max, y_min, y_max,
+      |       CAST(CASE WHEN x_min <= $Xq1 AND x_max >= $Xq0
+      |                  AND y_min <= $Yq1 AND y_max >= $Yq0 THEN 1 ELSE 0 END AS BIGINT) AS hit
+      |FROM u ORDER BY layout, bucket""".stripMargin
+
   /** Per-bucket layout audit over orders, both layouts in one result:
     * `layout` ∈ {zorder, lexico}, bucket id (top GridBits (8) bits of the
     * 2·GridBits-wide layout key — the stand-in for one file), row count, the bucket's bounding
@@ -70,48 +93,20 @@ object Layout {
   val zorderAudit: QueryDef = QueryDef.sql(
     "layout_zorder", {
       val z = zValueSql("x", "y", GridBits)
-      val mask = (1L << GridBits) - 1
-      s"""WITH xy AS (
-      |  SELECT CAST(o_custkey AS BIGINT) & $mask AS x,
-      |         CAST(date_diff('day', TIMESTAMP '1992-01-01 00:00:00', o_orderdate) AS BIGINT) & $mask AS y
-      |  FROM orders),
+      s"""WITH $gridXyCte,
       |keyed AS (SELECT x, y, ($z) >> $GridBits AS zbucket, (x << $GridBits | y) >> $GridBits AS lbucket FROM xy),
-      |z AS (SELECT 'zorder' AS layout, zbucket AS bucket, COUNT(*) AS n_rows,
-      |             MIN(x) AS x_min, MAX(x) AS x_max, MIN(y) AS y_min, MAX(y) AS y_max
-      |      FROM keyed GROUP BY zbucket),
-      |l AS (SELECT 'lexico' AS layout, lbucket AS bucket, COUNT(*) AS n_rows,
-      |             MIN(x) AS x_min, MAX(x) AS x_max, MIN(y) AS y_min, MAX(y) AS y_max
-      |      FROM keyed GROUP BY lbucket),
+      |${bucketBoxCte("z", "zorder", "zbucket")},
+      |${bucketBoxCte("l", "lexico", "lbucket")},
       |u AS (SELECT * FROM z UNION ALL SELECT * FROM l)
-      |SELECT layout, CAST(bucket AS BIGINT) AS bucket, CAST(n_rows AS BIGINT) AS n_rows,
-      |       x_min, x_max, y_min, y_max,
-      |       CAST(CASE WHEN x_min <= $Xq1 AND x_max >= $Xq0
-      |                  AND y_min <= $Yq1 AND y_max >= $Yq0 THEN 1 ELSE 0 END AS BIGINT) AS hit
-      |FROM u ORDER BY layout, bucket""".stripMargin
+      |$auditTailSql""".stripMargin
     }) { (s, d) => audit(Tables.orders(s, d)) }
 
   private[graft] def audit(orders: DataFrame): DataFrame = {
-    val mask = (1L << GridBits) - 1
-    val xy = orders.select(
-      col("o_custkey").bitwiseAND(lit(mask)).as("x"),
-      datediff(col("o_orderdate"), lit("1992-01-01").cast("date"))
-        .cast("long").bitwiseAND(lit(mask)).as("y"))
-    val keyed = xy.select(
+    val keyed = gridXy(orders).select(
       col("x"), col("y"),
       shiftright(zValue(col("x"), col("y"), GridBits), GridBits).as("zbucket"),
       shiftright(shiftleft(col("x"), GridBits).bitwiseOR(col("y")), GridBits).as("lbucket"))
-    def side(name: String, bucket: String) =
-      keyed.groupBy(col(bucket).as("bucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("x")).as("x_min"), max(col("x")).as("x_max"),
-          min(col("y")).as("y_min"), max(col("y")).as("y_max"))
-        .select(lit(name).as("layout"), col("bucket"), col("n_rows"),
-          col("x_min"), col("x_max"), col("y_min"), col("y_max"))
-    side("zorder", "zbucket").unionAll(side("lexico", "lbucket"))
-      .withColumn("hit",
-        when(col("x_min") <= Xq1 && col("x_max") >= Xq0 &&
-          col("y_min") <= Yq1 && col("y_max") >= Yq0, 1L).otherwise(0L))
-      .orderBy("layout", "bucket")
+    bucketBoxes(keyed, "zorder" -> "zbucket", "lexico" -> "lbucket")
   }
 
   /** HILBERT-curve clustering audit — the same bucket/bbox/hit
@@ -146,44 +141,25 @@ object Layout {
 
   val hilbertAudit: QueryDef = QueryDef.sql(
     "layout_hilbert", {
-      val mask = (1L << GridBits) - 1
       val (hilbertCtes, hfin) =
         graft.functions.HilbertCurve.unrolledSqlCtes(GridBits, "xy0", Seq("ox", "oy"))
-      s"""WITH xy AS (
-      |  SELECT CAST(o_custkey AS BIGINT) & $mask AS x,
-      |         CAST(date_diff('day', TIMESTAMP '1992-01-01 00:00:00', o_orderdate) AS BIGINT) & $mask AS y
-      |  FROM orders),
+      s"""WITH $gridXyCte,
       |xy0 AS (SELECT x, y, x AS ox, y AS oy FROM xy),
       |$hilbertCtes,
       |keyed AS (SELECT ox AS x, oy AS y, hd // $FileCells AS hbucket,
       |                 (${zValueSql("ox", "oy", GridBits)}) // $FileCells AS zbucket,
       |                 (ox << $GridBits | oy) // $FileCells AS lbucket
       |          FROM $hfin),
-      |h AS (SELECT 'hilbert' AS layout, hbucket AS bucket, COUNT(*) AS n_rows,
-      |             MIN(x) AS x_min, MAX(x) AS x_max, MIN(y) AS y_min, MAX(y) AS y_max
-      |      FROM keyed GROUP BY hbucket),
-      |z AS (SELECT 'zorder' AS layout, zbucket AS bucket, COUNT(*) AS n_rows,
-      |             MIN(x) AS x_min, MAX(x) AS x_max, MIN(y) AS y_min, MAX(y) AS y_max
-      |      FROM keyed GROUP BY zbucket),
-      |l AS (SELECT 'lexico' AS layout, lbucket AS bucket, COUNT(*) AS n_rows,
-      |             MIN(x) AS x_min, MAX(x) AS x_max, MIN(y) AS y_min, MAX(y) AS y_max
-      |      FROM keyed GROUP BY lbucket),
+      |${bucketBoxCte("h", "hilbert", "hbucket")},
+      |${bucketBoxCte("z", "zorder", "zbucket")},
+      |${bucketBoxCte("l", "lexico", "lbucket")},
       |u AS (SELECT * FROM h UNION ALL SELECT * FROM z UNION ALL SELECT * FROM l)
-      |SELECT layout, CAST(bucket AS BIGINT) AS bucket, CAST(n_rows AS BIGINT) AS n_rows,
-      |       x_min, x_max, y_min, y_max,
-      |       CAST(CASE WHEN x_min <= $Xq1 AND x_max >= $Xq0
-      |                  AND y_min <= $Yq1 AND y_max >= $Yq0 THEN 1 ELSE 0 END AS BIGINT) AS hit
-      |FROM u ORDER BY layout, bucket""".stripMargin
+      |$auditTailSql""".stripMargin
     }) { (s, d) => hilbertAuditDf(Tables.orders(s, d)) }
 
   private[graft] def hilbertAuditDf(orders: DataFrame): DataFrame = {
     import graft.functions.LayoutFunctions.hilbertD
-    val mask = (1L << GridBits) - 1
-    val xy = orders.select(
-      col("o_custkey").bitwiseAND(lit(mask)).as("x"),
-      datediff(col("o_orderdate"), lit("1992-01-01").cast("date"))
-        .cast("long").bitwiseAND(lit(mask)).as("y"))
-    val keyed = xy.select(
+    val keyed = gridXy(orders).select(
       col("x"), col("y"),
       hilbertD(col("x"), col("y"), GridBits).as("hd"),
       zValue(col("x"), col("y"), GridBits).as("zv"),
@@ -192,6 +168,24 @@ object Layout {
         expr(s"hd div $FileCells").as("hbucket"),
         expr(s"zv div $FileCells").as("zbucket"),
         expr(s"lv div $FileCells").as("lbucket"))
+    bucketBoxes(keyed,
+      "hilbert" -> "hbucket", "zorder" -> "zbucket", "lexico" -> "lbucket")
+  }
+
+  /** Orders on the audit grid: x = custkey, y = days since 1992-01-01, each
+    * masked to [[GridBits]] bits. */
+  private def gridXy(orders: DataFrame): DataFrame = {
+    val mask = (1L << GridBits) - 1
+    orders.select(
+      col("o_custkey").bitwiseAND(lit(mask)).as("x"),
+      datediff(col("o_orderdate"), lit("1992-01-01").cast("date"))
+        .cast("long").bitwiseAND(lit(mask)).as("y"))
+  }
+
+  /** Per layout (name → bucket column of `keyed`), each bucket's row count
+    * and (x, y) bounding box, unioned in order, with `hit` = 1 iff the
+    * fixed query rectangle intersects the box. */
+  private def bucketBoxes(keyed: DataFrame, layouts: (String, String)*): DataFrame = {
     def side(name: String, bucket: String) =
       keyed.groupBy(col(bucket).as("bucket"))
         .agg(count(lit(1)).as("n_rows"),
@@ -199,9 +193,7 @@ object Layout {
           min(col("y")).as("y_min"), max(col("y")).as("y_max"))
         .select(lit(name).as("layout"), col("bucket"), col("n_rows"),
           col("x_min"), col("x_max"), col("y_min"), col("y_max"))
-    side("hilbert", "hbucket")
-      .unionAll(side("zorder", "zbucket"))
-      .unionAll(side("lexico", "lbucket"))
+    layouts.map { case (name, bucket) => side(name, bucket) }.reduce(_ unionAll _)
       .withColumn("hit",
         when(col("x_min") <= Xq1 && col("x_max") >= Xq0 &&
           col("y_min") <= Yq1 && col("y_max") >= Yq0, 1L).otherwise(0L))

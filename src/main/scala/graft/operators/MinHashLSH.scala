@@ -89,9 +89,11 @@ object MinHashLSH {
     (members, repDocs)
   }
 
-  val queryMd5: QueryDef = QueryDef.sql(
-    "dedup_minhash_lsh_md5",
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+  /** Oracle CTEs `arr(doc_id, sh)` (word 3-gram shingle arrays), `sig`
+    * and `bands(doc_id, band, bh)`: the replay of [[md5Signatures]] and
+    * [[md5Bands]]. */
+  private val md5BandsCtes: String =
+    s"""toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
       |arr AS (SELECT doc_id, list_distinct(list_transform(
       |          generate_series(1, len(w)-2), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
       |        FROM toks WHERE len(w) >= 3),
@@ -100,7 +102,11 @@ object MinHashLSH {
       |        FROM arr),
       |bands AS (SELECT doc_id, b.band,
       |            md5(sig[band*${Md5RowsPerBand}+1] || '|' || sig[band*${Md5RowsPerBand}+2]) AS bh
-      |          FROM sig, (SELECT unnest(range(${Md5Bands})) AS band) b),
+      |          FROM sig, (SELECT unnest(range(${Md5Bands})) AS band) b)""".stripMargin
+
+  val queryMd5: QueryDef = QueryDef.sql(
+    "dedup_minhash_lsh_md5",
+    s"""WITH $md5BandsCtes,
       |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
       |         FROM bands a JOIN bands b
       |           ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
@@ -271,16 +277,7 @@ object MinHashLSH {
     * 8 lanes → the lane-agreement threshold is ceil(0.5·8) = 4 of 8. */
   val incrementalMinHashMd5: QueryDef = QueryDef.sql(
     "dedup_incremental_minhash_md5",
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |arr AS (SELECT doc_id, list_distinct(list_transform(
-      |          generate_series(1, len(w)-2), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-      |        FROM toks WHERE len(w) >= 3),
-      |sig AS (SELECT doc_id, list_transform(generate_series(0, ${Md5Lanes - 1}),
-      |          k -> list_min(list_transform(sh, s -> md5(k || ':' || s)))) AS sig
-      |        FROM arr),
-      |bands AS (SELECT doc_id, b.band,
-      |            md5(sig[band*${Md5RowsPerBand}+1] || '|' || sig[band*${Md5RowsPerBand}+2]) AS bh
-      |          FROM sig, (SELECT unnest(range(${Md5Bands})) AS band) b),
+    s"""WITH $md5BandsCtes,
       |hb AS (SELECT * FROM bands WHERE doc_id % 10 < 8),
       |nb AS (SELECT * FROM bands WHERE doc_id % 10 >= 8),
       |candh AS (SELECT DISTINCT nb.doc_id AS bid, hb.doc_id AS hid

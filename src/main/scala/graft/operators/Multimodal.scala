@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -63,15 +63,18 @@ object Multimodal {
   /** documents → binary payload column → batched decode. */
   def features(spark: SparkSession, docs: DataFrame): Dataset[MediaFeatures] = {
     import spark.implicits._
-    docs
+    batched(docs
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-      .as[MediaRecord]
-      .mapPartitions { it =>
-        // Batch shape: decode in fixed-size chunks like a vectorized UDF —
-        // a real decoder would init its handle once per batch here.
-        it.grouped(BatchSize).flatMap { batch => batch.map(decodeStub) }
-      }
+      .as[MediaRecord])(_.map(decodeStub))
   }
+
+  /** The batched shell every media decoder runs in: each partition hands
+    * `decode` fixed-size chunks of [[BatchSize]] payloads, like a
+    * vectorized UDF (a real decoder would init its handle once per batch
+    * here). */
+  private[operators] def batched[T: Encoder](payloads: Dataset[MediaRecord])(
+      decode: Seq[MediaRecord] => Seq[T]): Dataset[T] =
+    payloads.mapPartitions(_.grouped(BatchSize).flatMap(decode))
 
   /** Oracle-checked metadata extraction. Documents are ASCII (verified), so
     * byte positions and char positions coincide and the fake-decode is
@@ -140,20 +143,16 @@ object Multimodal {
   def imageFeatures(spark: SparkSession,
       payloads: Dataset[MediaRecord]): Dataset[ImageFeatures] = {
     import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.map { rec =>
-          MediaCodec.decode(rec.payload) match {
-            case Some(img) => ImageFeatures(rec.doc_id, img.format,
-              img.width.toLong, img.height.toLong,
-              img.width.toLong * img.height, img.sumR, img.sumG, img.sumB,
-              img.posHash)
-            case None => ImageFeatures(rec.doc_id, null, -1L, -1L, -1L,
-              -1L, -1L, -1L, -1L)
-          }
-        }
+    batched(payloads)(_.map { rec =>
+      MediaCodec.decode(rec.payload) match {
+        case Some(img) => ImageFeatures(rec.doc_id, img.format,
+          img.width.toLong, img.height.toLong,
+          img.width.toLong * img.height, img.sumR, img.sumG, img.sumB,
+          img.posHash)
+        case None => ImageFeatures(rec.doc_id, null, -1L, -1L, -1L,
+          -1L, -1L, -1L, -1L)
       }
-    }
+    })
   }
 
   /** Render fixture rasters from the documents table and REALLY decode
@@ -289,17 +288,13 @@ object Multimodal {
   def audioFeatures(spark: SparkSession,
       payloads: Dataset[MediaRecord]): Dataset[AudioFeatures] = {
     import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.map { rec =>
-          MediaCodec.decodeAudio(rec.payload) match {
-            case Some(a) => AudioFeatures(rec.doc_id, a.sampleRate.toLong,
-              a.nSamples.toLong, a.durationMicros, a.sumAbs, a.posHash)
-            case None => AudioFeatures(rec.doc_id, -1L, -1L, -1L, -1L, -1L)
-          }
-        }
+    batched(payloads)(_.map { rec =>
+      MediaCodec.decodeAudio(rec.payload) match {
+        case Some(a) => AudioFeatures(rec.doc_id, a.sampleRate.toLong,
+          a.nSamples.toLong, a.durationMicros, a.sumAbs, a.posHash)
+        case None => AudioFeatures(rec.doc_id, -1L, -1L, -1L, -1L, -1L)
       }
-    }
+    })
   }
 
   /** Render fixture WAVs from the documents table and REALLY decode them:
@@ -358,22 +353,18 @@ object Multimodal {
   def resizedFeatures(spark: SparkSession, payloads: Dataset[MediaRecord],
       dstW: Long => Int, dstH: Long => Int): Dataset[ResizedFeatures] = {
     import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.map { rec =>
-          MediaCodec.decodeRaster(rec.payload) match {
-            case Some(src) =>
-              val out = MediaCodec.stats(
-                MediaCodec.resizeNearest(src, dstW(rec.doc_id), dstH(rec.doc_id)))
-              ResizedFeatures(rec.doc_id, out.format, src.width.toLong,
-                src.height.toLong, out.width.toLong, out.height.toLong,
-                out.sumR, out.sumG, out.sumB, out.posHash)
-            case None => ResizedFeatures(rec.doc_id, null, -1L, -1L, -1L, -1L,
-              -1L, -1L, -1L, -1L)
-          }
-        }
+    batched(payloads)(_.map { rec =>
+      MediaCodec.decodeRaster(rec.payload) match {
+        case Some(src) =>
+          val out = MediaCodec.stats(
+            MediaCodec.resizeNearest(src, dstW(rec.doc_id), dstH(rec.doc_id)))
+          ResizedFeatures(rec.doc_id, out.format, src.width.toLong,
+            src.height.toLong, out.width.toLong, out.height.toLong,
+            out.sumR, out.sumG, out.sumB, out.posHash)
+        case None => ResizedFeatures(rec.doc_id, null, -1L, -1L, -1L, -1L,
+          -1L, -1L, -1L, -1L)
       }
-    }
+    })
   }
 
   /** Render the BMP/PPM/PNG fixtures and decode + nearest-neighbor resize
@@ -461,23 +452,19 @@ object Multimodal {
   def frameSampleFeatures(spark: SparkSession, payloads: Dataset[MediaRecord],
       strideOf: Long => Int): Dataset[FrameFeatures] = {
     import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.flatMap { rec =>
-          MediaCodec.decodeGvidHeader(rec.payload) match {
-            case Some((w, h, nf)) =>
-              val stride = math.max(1, strideOf(rec.doc_id))
-              (0 until nf by stride).map { f =>
-                val st = MediaCodec.stats(MediaCodec.gvidFrame(rec.payload, w, h, f))
-                FrameFeatures(rec.doc_id, f.toLong, w.toLong, h.toLong,
-                  st.sumR, st.sumG, st.sumB, st.posHash)
-              }
-            case None =>
-              Seq(FrameFeatures(rec.doc_id, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
+    batched(payloads)(_.flatMap { rec =>
+      MediaCodec.decodeGvidHeader(rec.payload) match {
+        case Some((w, h, nf)) =>
+          val stride = math.max(1, strideOf(rec.doc_id))
+          (0 until nf by stride).map { f =>
+            val st = MediaCodec.stats(MediaCodec.gvidFrame(rec.payload, w, h, f))
+            FrameFeatures(rec.doc_id, f.toLong, w.toLong, h.toLong,
+              st.sumR, st.sumG, st.sumB, st.posHash)
           }
-        }
+        case None =>
+          Seq(FrameFeatures(rec.doc_id, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
       }
-    }
+    })
   }
 
   /** Render GVID fixtures and sample every s-th frame (s = 1 + doc_id % 3,
@@ -560,25 +547,21 @@ object Multimodal {
   def mjpegFrameFeatures(spark: SparkSession, payloads: Dataset[MediaRecord],
       strideOf: Long => Int): Dataset[FrameFeatures] = {
     import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.flatMap { rec =>
-          (MediaCodec.decodeAviHeader(rec.payload), MediaCodec.aviFrameIndex(rec.payload)) match {
-            case (Some((w, h, nf)), Some(index)) if index.length == nf =>
-              val stride = math.max(1, strideOf(rec.doc_id))
-              (0 until nf by stride).flatMap { f =>
-                MediaCodec.aviFrame(rec.payload, index(f)).map { raster =>
-                  val st = MediaCodec.stats(raster)
-                  FrameFeatures(rec.doc_id, f.toLong, st.width.toLong, st.height.toLong,
-                    st.sumR, st.sumG, st.sumB, st.posHash)
-                }
-              }
-            case _ =>
-              Seq(FrameFeatures(rec.doc_id, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
+    batched(payloads)(_.flatMap { rec =>
+      (MediaCodec.decodeAviHeader(rec.payload), MediaCodec.aviFrameIndex(rec.payload)) match {
+        case (Some((w, h, nf)), Some(index)) if index.length == nf =>
+          val stride = math.max(1, strideOf(rec.doc_id))
+          (0 until nf by stride).flatMap { f =>
+            MediaCodec.aviFrame(rec.payload, index(f)).map { raster =>
+              val st = MediaCodec.stats(raster)
+              FrameFeatures(rec.doc_id, f.toLong, st.width.toLong, st.height.toLong,
+                st.sumR, st.sumG, st.sumB, st.posHash)
+            }
           }
-        }
+        case _ =>
+          Seq(FrameFeatures(rec.doc_id, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
       }
-    }
+    })
   }
 
   /** Render MJPEG-AVI fixtures and sample every s-th frame (s = 1 +
@@ -669,25 +652,21 @@ object Multimodal {
   def gifFrameSampleFeatures(spark: SparkSession, payloads: Dataset[MediaRecord],
       strideOf: Long => Int): Dataset[GifFrameFeatures] = {
     import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.flatMap { rec =>
-          MediaCodec.decodeGifFrames(rec.payload) match {
-            case Some(anim) =>
-              val stride = math.max(1, strideOf(rec.doc_id))
-              anim.frames.zipWithIndex.collect {
-                case (f, i) if i % stride == 0 =>
-                  val st = MediaCodec.stats(MediaCodec.gifFrameRaster(f))
-                  GifFrameFeatures(rec.doc_id, i.toLong, f.width.toLong,
-                    f.height.toLong, f.delayCs.toLong,
-                    st.sumR, st.sumG, st.sumB, st.posHash)
-              }
-            case None =>
-              Seq(GifFrameFeatures(rec.doc_id, -1L, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
+    batched(payloads)(_.flatMap { rec =>
+      MediaCodec.decodeGifFrames(rec.payload) match {
+        case Some(anim) =>
+          val stride = math.max(1, strideOf(rec.doc_id))
+          anim.frames.zipWithIndex.collect {
+            case (f, i) if i % stride == 0 =>
+              val st = MediaCodec.stats(MediaCodec.gifFrameRaster(f))
+              GifFrameFeatures(rec.doc_id, i.toLong, f.width.toLong,
+                f.height.toLong, f.delayCs.toLong,
+                st.sumR, st.sumG, st.sumB, st.posHash)
           }
-        }
+        case None =>
+          Seq(GifFrameFeatures(rec.doc_id, -1L, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
       }
-    }
+    })
   }
 
   /** Render animated-GIF fixtures and sample every s-th frame through the
@@ -753,35 +732,31 @@ object Multimodal {
   def audioWindowFeatures(spark: SparkSession,
       payloads: Dataset[MediaRecord]): Dataset[AudioWindowFeatures] = {
     import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap { batch =>
-        batch.map { rec =>
-          MediaCodec.decodeAudioPcm(rec.payload) match {
-            case Some((_, s)) =>
-              val n = s.length
-              val nw = (n + AudioWindow - 1) / AudioWindow
-              var zc = 0L; var maxE = 0L; var winHash = 0L
-              var w = 0
-              while (w < nw) {
-                var e = 0L
-                var k = w * AudioWindow
-                val end = math.min(k + AudioWindow, n)
-                while (k < end) { e += math.abs(s(k)); k += 1 }
-                if (e > maxE) maxE = e
-                winHash += (w + 1).toLong * e
-                w += 1
-              }
-              var k = 1
-              while (k < n) {
-                if (s(k - 1).toLong * s(k) < 0) zc += 1
-                k += 1
-              }
-              AudioWindowFeatures(rec.doc_id, n.toLong, nw.toLong, zc, maxE, winHash)
-            case None => AudioWindowFeatures(rec.doc_id, -1L, -1L, -1L, -1L, -1L)
+    batched(payloads)(_.map { rec =>
+      MediaCodec.decodeAudioPcm(rec.payload) match {
+        case Some((_, s)) =>
+          val n = s.length
+          val nw = (n + AudioWindow - 1) / AudioWindow
+          var zc = 0L; var maxE = 0L; var winHash = 0L
+          var w = 0
+          while (w < nw) {
+            var e = 0L
+            var k = w * AudioWindow
+            val end = math.min(k + AudioWindow, n)
+            while (k < end) { e += math.abs(s(k)); k += 1 }
+            if (e > maxE) maxE = e
+            winHash += (w + 1).toLong * e
+            w += 1
           }
-        }
+          var k = 1
+          while (k < n) {
+            if (s(k - 1).toLong * s(k) < 0) zc += 1
+            k += 1
+          }
+          AudioWindowFeatures(rec.doc_id, n.toLong, nw.toLong, zc, maxE, winHash)
+        case None => AudioWindowFeatures(rec.doc_id, -1L, -1L, -1L, -1L, -1L)
       }
-    }
+    })
   }
 
   /** Render the WAV fixtures and extract windowed features from the REALLY

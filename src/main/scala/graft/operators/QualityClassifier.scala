@@ -442,6 +442,18 @@ object QualityClassifier {
           .as("baseline_milli"))
   }
 
+  /** Oracle CTEs ending in `k(label, score, bin)`: the replay of
+    * [[binnedEvalScores]]. */
+  private val binnedEvalSql: String =
+    s"""${oracleCtes(scoreAll = false)},
+       |r AS (SELECT l.label, ${scoreExpr(duck = true)} AS score
+       |      FROM lab l JOIN sc ON l.doc_id = sc.doc_id
+       |      CROSS JOIN tot CROSS JOIN pri
+       |      WHERE l.split = 'eval'),
+       |k AS (SELECT label, score,
+       |             (GREATEST(-20000, LEAST(20999, score)) + 20000) // 1000 - 20 AS bin
+       |      FROM r)""".stripMargin
+
   /** CALIBRATION curve — the companion report to [[nbEval]]: bucket the
     * held-out slice by score and compare the model's implied confidence
     * to the observed good rate per bucket (a filter whose score means
@@ -456,14 +468,7 @@ object QualityClassifier {
     * calibration signal; QualityClassifierSpec pins it coarsely. */
   val nbCalibration: QueryDef = QueryDef.sql(
     "quality_nb_calibration",
-    s"""${oracleCtes(scoreAll = false)},
-       |r AS (SELECT l.label, ${scoreExpr(duck = true)} AS score
-       |      FROM lab l JOIN sc ON l.doc_id = sc.doc_id
-       |      CROSS JOIN tot CROSS JOIN pri
-       |      WHERE l.split = 'eval'),
-       |k AS (SELECT label, score,
-       |             (GREATEST(-20000, LEAST(20999, score)) + 20000) // 1000 - 20 AS bin
-       |      FROM r)
+    s"""$binnedEvalSql
        |SELECT CAST(bin AS BIGINT) AS bin,
        |       CAST(COUNT(*) AS BIGINT) AS n_docs,
        |       CAST(SUM(label) AS BIGINT) AS n_good,
@@ -518,14 +523,7 @@ object QualityClassifier {
     * calibration pays; everything after is the bin grid. */
   val nbThresholdSweep: QueryDef = QueryDef.sql(
     "quality_nb_threshold_sweep",
-    s"""${oracleCtes(scoreAll = false)},
-       |r AS (SELECT l.label, ${scoreExpr(duck = true)} AS score
-       |      FROM lab l JOIN sc ON l.doc_id = sc.doc_id
-       |      CROSS JOIN tot CROSS JOIN pri
-       |      WHERE l.split = 'eval'),
-       |k AS (SELECT label, score,
-       |             (GREATEST(-20000, LEAST(20999, score)) + 20000) // 1000 - 20 AS bin
-       |      FROM r),
+    s"""$binnedEvalSql,
        |g AS (SELECT bin, COUNT(*) AS n_bin, SUM(label) AS n_good FROM k GROUP BY bin),
        |a AS (SELECT SUM(n_bin) AS all_docs, SUM(n_good) AS all_good FROM g),
        |c AS (SELECT bin, SUM(n_bin) OVER (ORDER BY bin DESC) AS n_kept,

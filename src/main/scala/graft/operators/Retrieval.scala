@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
@@ -46,6 +46,34 @@ object Retrieval {
 
   /** RRF constant — the SIGIR'09 default, shared by both dialects. */
   val RrfK = 60
+
+  /** Oracle CTE `f`: the `a` (lex_rank) and `b` (dense_rank) legs full-outer
+    * joined on (query_id, doc_id) with their integer RRF score;
+    * `rankCols` are inserted before the score. */
+  private def rrfFuseCte(lex: String, den: String, rankCols: String = ""): String =
+    s"""f AS (SELECT COALESCE(a.query_id, b.query_id) AS query_id,
+      |             COALESCE(a.doc_id, b.doc_id) AS doc_id,$rankCols
+      |             (CASE WHEN a.lex_rank IS NOT NULL THEN 1000000 // ($RrfK + a.lex_rank) ELSE 0 END
+      |            + CASE WHEN b.dense_rank IS NOT NULL THEN 1000000 // ($RrfK + b.dense_rank) ELSE 0 END) AS rrf_score
+      |      FROM $lex a FULL OUTER JOIN $den b
+      |        ON a.query_id = b.query_id AND a.doc_id = b.doc_id)""".stripMargin
+
+  /** The oracle of the fused report ([[rrfFuseUnordered]]'s top 10) over
+    * `lex(query_id, doc_id, lex_rank)` and `den(query_id, doc_id,
+    * dense_rank)` CTEs: each leg's rank (0 when absent), the RRF score and
+    * the fused rank. */
+  private val rrfFusedSql: String = {
+    val ranks = "\n             COALESCE(a.lex_rank, 0) AS lex_rank," +
+      "\n             COALESCE(b.dense_rank, 0) AS dense_rank,"
+    s"""${rrfFuseCte("lex", "den", ranks)},
+      |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+      |                  ORDER BY rrf_score DESC, doc_id) AS rnk FROM f)
+      |SELECT CAST(query_id AS BIGINT) AS query_id, CAST(doc_id AS BIGINT) AS doc_id,
+      |       CAST(lex_rank AS BIGINT) AS lex_rank,
+      |       CAST(dense_rank AS BIGINT) AS dense_rank,
+      |       CAST(rrf_score AS BIGINT) AS rrf_score, CAST(rnk AS BIGINT) AS rnk
+      |FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin
+  }
 
   /** The lexical serving rank table (query_id, doc_id, milli_score, rnk) as
     * a train-once artifact keyed on the documents corpus — built by the
@@ -167,21 +195,7 @@ object Retrieval {
     s"""WITH lex AS (SELECT query_id, doc_id, rnk AS lex_rank FROM ($lexSql)),
       |den AS (SELECT query_id, neighbor_id AS doc_id, rnk AS dense_rank
       |        FROM ($denSql)),
-      |f AS (SELECT COALESCE(a.query_id, b.query_id) AS query_id,
-      |             COALESCE(a.doc_id, b.doc_id) AS doc_id,
-      |             COALESCE(a.lex_rank, 0) AS lex_rank,
-      |             COALESCE(b.dense_rank, 0) AS dense_rank,
-      |             (CASE WHEN a.lex_rank IS NOT NULL THEN 1000000 // (${RrfK} + a.lex_rank) ELSE 0 END
-      |            + CASE WHEN b.dense_rank IS NOT NULL THEN 1000000 // (${RrfK} + b.dense_rank) ELSE 0 END) AS rrf_score
-      |      FROM lex a FULL OUTER JOIN den b
-      |        ON a.query_id = b.query_id AND a.doc_id = b.doc_id),
-      |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      |                  ORDER BY rrf_score DESC, doc_id) AS rnk FROM f)
-      |SELECT CAST(query_id AS BIGINT) AS query_id, CAST(doc_id AS BIGINT) AS doc_id,
-      |       CAST(lex_rank AS BIGINT) AS lex_rank,
-      |       CAST(dense_rank AS BIGINT) AS dense_rank,
-      |       CAST(rrf_score AS BIGINT) AS rrf_score, CAST(rnk AS BIGINT) AS rnk
-      |FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin
+      |$rrfFusedSql""".stripMargin
   } { (s, d) =>
     docHybridRanksUnordered(s, d).orderBy("query_id", "rnk")
   }
@@ -206,6 +220,34 @@ object Retrieval {
     val d = if (duck) "//" else "div"
     s"(1000000 $d ${QualityClassifier.ml2(x, duck)})"
   }
+
+  /** Oracle CTEs `q`, `lab` and `relc`: the replay of [[relevance]]. */
+  private val relevanceCtes: String =
+    """q AS (SELECT vec_id AS query_id, label AS qlabel FROM embeddings WHERE vec_id < 10),
+      |lab AS (SELECT vec_id, label FROM embeddings),
+      |relc AS (SELECT q.query_id, COUNT(*) AS n_rel FROM q JOIN lab
+      |           ON lab.label = q.qlabel AND lab.vec_id <> q.query_id GROUP BY q.query_id)""".stripMargin
+
+  /** Label relevance of the query set (vec_id < 10): `lab` (vec_id,
+    * label) over the corpus, `q` (query_id, qlabel) and `relc` (query_id,
+    * n_rel), each query's count of other vectors sharing its label. */
+  private def relevance(s: SparkSession,
+      d: String): (DataFrame, DataFrame, DataFrame) = {
+    val lab = graft.Tables.embeddings(s, d).select(col("vec_id"), col("label"))
+    val q = lab.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("label").as("qlabel"))
+    val relc = lab.join(broadcast(q),
+        col("label") === col("qlabel") && col("vec_id") =!= col("query_id"))
+      .groupBy(col("query_id")).agg(count(lit(1)).as("n_rel"))
+    (lab, q, relc)
+  }
+
+  /** nDCG@10 in milli of a per-query DCG column against the ideal DCG of
+    * `n_rel` relevant items, 0 when undefined. */
+  private def ndcgOf(dcgCol: String, out: String): Column =
+    coalesce(expr(s"(1000 * $dcgCol) div " +
+        s"aggregate(sequence(cast(1 as bigint), least(n_rel, cast(10 as bigint))), cast(0 as bigint), (acc, i) -> acc + ${gain("(i + 1)", duck = false)})"),
+      lit(0L)).as(out)
 
   /** RETRIEVAL QUALITY EVAL — the serving-side counterpart of
     * `knn_ivf_recall_sweep`: measure, as a relational operator with an
@@ -248,19 +290,11 @@ object Retrieval {
     s"""WITH lex0 AS (SELECT query_id, doc_id, rnk AS lex_rank FROM ($lexSql)),
       |den0 AS (SELECT query_id, neighbor_id AS doc_id, rnk AS dense_rank FROM ($denSql)),
       |bf0 AS (SELECT query_id, neighbor_id AS doc_id, rnk AS bf_rank FROM ($bfSql)),
-      |f AS (SELECT COALESCE(a.query_id, b.query_id) AS query_id,
-      |             COALESCE(a.doc_id, b.doc_id) AS doc_id,
-      |             (CASE WHEN a.lex_rank IS NOT NULL THEN 1000000 // ($RrfK + a.lex_rank) ELSE 0 END
-      |            + CASE WHEN b.dense_rank IS NOT NULL THEN 1000000 // ($RrfK + b.dense_rank) ELSE 0 END) AS rrf_score
-      |      FROM lex0 a FULL OUTER JOIN den0 b
-      |        ON a.query_id = b.query_id AND a.doc_id = b.doc_id),
+      |${rrfFuseCte("lex0", "den0")},
       |fr AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
       |                   ORDER BY rrf_score DESC, doc_id) AS rnk FROM f),
       |fused AS (SELECT query_id, doc_id, rnk FROM fr WHERE rnk <= 10),
-      |q AS (SELECT vec_id AS query_id, label AS qlabel FROM embeddings WHERE vec_id < 10),
-      |lab AS (SELECT vec_id, label FROM embeddings),
-      |relc AS (SELECT q.query_id, COUNT(*) AS n_rel FROM q JOIN lab
-      |           ON lab.label = q.qlabel AND lab.vec_id <> q.query_id GROUP BY q.query_id),
+      |$relevanceCtes,
       |lh AS (SELECT l.query_id, COUNT(*) AS c,
       |              MIN(CASE WHEN l.lex_rank <= 10 THEN l.lex_rank END) AS first_rel,
       |              SUM(CASE WHEN l.lex_rank <= 10 THEN ${gain("(l.lex_rank + 1)", duck = true)} ELSE 0 END) AS dcg
@@ -320,12 +354,7 @@ object Retrieval {
     // presentation sort would be a wasted range exchange mid-plan
     val fused = rrfFuseUnordered(lex, den, topK = 10)
       .select(col("query_id"), col("doc_id"), col("rnk"))
-    val lab = graft.Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    val q = lab.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"))
-    val relc = lab.join(broadcast(q),
-        col("label") === col("qlabel") && col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_rel"))
+    val (lab, q, relc) = relevance(s, d)
     // ONE label-lookup pass for all four lists: tag and union the (tiny)
     // serving lists — each row carries its OWN leg's rank — join the corpus
     // label table once, and split the hit counts plus EVERY leg's MRR@10 /
@@ -357,10 +386,6 @@ object Retrieval {
         firstRel("rrf").as("first_rel"), dcg("rrf").as("dcg"))
     def mrrOf(firstRelCol: String, out: String) =
       coalesce(expr(s"1000 div $firstRelCol"), lit(0L)).as(out)
-    def ndcgOf(dcgCol: String, out: String) =
-      coalesce(expr(s"(1000 * $dcgCol) div " +
-          s"aggregate(sequence(cast(1 as bigint), least(n_rel, cast(10 as bigint))), cast(0 as bigint), (acc, i) -> acc + ${gain("(i + 1)", duck = false)})"),
-        lit(0L)).as(out)
     q.select(col("query_id"))
       .join(relc, Seq("query_id"))
       .join(hits, Seq("query_id"), "left")
@@ -497,13 +522,7 @@ object Retrieval {
       |                     ORDER BY dfreq.df DESC, q.tk) AS r
       |            FROM qtok q JOIN dfreq ON q.tk = dfreq.tk) WHERE r <= 3),
       |scoredc AS (SELECT qterms.query_id, tf.chunk_hash,
-      |        SUM( ln((CAST(stats.n_docs - qterms.df AS DOUBLE) + 0.5)
-      |                / (CAST(qterms.df AS DOUBLE) + 0.5) + 1.0)
-      |             * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE))
-      |             / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-      |                * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE)
-      |                   * CAST(dl.dl * stats.n_docs AS DOUBLE)
-      |                   / CAST(stats.sum_dl AS DOUBLE))) ) AS s
+      |        ${TextAnalysis.bm25SumSql}
       |        FROM tf JOIN qterms ON tf.tk = qterms.tk
       |             JOIN dl ON tf.chunk_hash = dl.chunk_hash CROSS JOIN stats
       |        GROUP BY qterms.query_id, tf.chunk_hash),
@@ -557,21 +576,7 @@ object Retrieval {
       |                 ROW_NUMBER() OVER (PARTITION BY query_id
       |                   ORDER BY micro_cos DESC, doc_id) AS dense_rank
       |          FROM densedoc) WHERE dense_rank <= 5),
-      |f AS (SELECT COALESCE(a.query_id, b.query_id) AS query_id,
-      |             COALESCE(a.doc_id, b.doc_id) AS doc_id,
-      |             COALESCE(a.lex_rank, 0) AS lex_rank,
-      |             COALESCE(b.dense_rank, 0) AS dense_rank,
-      |             (CASE WHEN a.lex_rank IS NOT NULL THEN 1000000 // ($RrfK + a.lex_rank) ELSE 0 END
-      |            + CASE WHEN b.dense_rank IS NOT NULL THEN 1000000 // ($RrfK + b.dense_rank) ELSE 0 END) AS rrf_score
-      |      FROM lex a FULL OUTER JOIN den b
-      |        ON a.query_id = b.query_id AND a.doc_id = b.doc_id),
-      |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      |                  ORDER BY rrf_score DESC, doc_id) AS rnk FROM f)
-      |SELECT CAST(query_id AS BIGINT) AS query_id, CAST(doc_id AS BIGINT) AS doc_id,
-      |       CAST(lex_rank AS BIGINT) AS lex_rank,
-      |       CAST(dense_rank AS BIGINT) AS dense_rank,
-      |       CAST(rrf_score AS BIGINT) AS rrf_score, CAST(rnk AS BIGINT) AS rnk
-      |FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin
+      |$rrfFusedSql""".stripMargin
     }) { (s, d) =>
     chunkHybridServed(s, d).orderBy("query_id", "rnk")
   }
@@ -689,19 +694,11 @@ object Retrieval {
     s"""WITH ch AS (SELECT query_id, doc_id, rnk FROM ($chunkSql)),
       |lex0 AS (SELECT query_id, doc_id, rnk AS lex_rank FROM ($lexSql)),
       |den0 AS (SELECT query_id, neighbor_id AS doc_id, rnk AS dense_rank FROM ($denSql)),
-      |f AS (SELECT COALESCE(a.query_id, b.query_id) AS query_id,
-      |             COALESCE(a.doc_id, b.doc_id) AS doc_id,
-      |             (CASE WHEN a.lex_rank IS NOT NULL THEN 1000000 // ($RrfK + a.lex_rank) ELSE 0 END
-      |            + CASE WHEN b.dense_rank IS NOT NULL THEN 1000000 // ($RrfK + b.dense_rank) ELSE 0 END) AS rrf_score
-      |      FROM lex0 a FULL OUTER JOIN den0 b
-      |        ON a.query_id = b.query_id AND a.doc_id = b.doc_id),
+      |${rrfFuseCte("lex0", "den0")},
       |fr AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
       |                   ORDER BY rrf_score DESC, doc_id) AS rnk FROM f),
       |doc AS (SELECT query_id, doc_id, rnk FROM fr WHERE rnk <= 10),
-      |q AS (SELECT vec_id AS query_id, label AS qlabel FROM embeddings WHERE vec_id < 10),
-      |lab AS (SELECT vec_id, label FROM embeddings),
-      |relc AS (SELECT q.query_id, COUNT(*) AS n_rel FROM q JOIN lab
-      |           ON lab.label = q.qlabel AND lab.vec_id <> q.query_id GROUP BY q.query_id),
+      |$relevanceCtes,
       |chh AS (SELECT l.query_id, COUNT(*) AS c, MIN(l.rnk) AS first_rel,
       |               SUM(${gain("(l.rnk + 1)", duck = true)}) AS dcg
       |        FROM ch l JOIN q ON l.query_id = q.query_id
@@ -734,12 +731,7 @@ object Retrieval {
       col("rnk").cast("long").as("rnk"))
     val doc = docHybridRanksUnordered(s, d).select(col("query_id"), col("doc_id"),
       col("rnk").cast("long").as("rnk"))
-    val lab = graft.Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    val q = lab.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"))
-    val relc = lab.join(broadcast(q),
-        col("label") === col("qlabel") && col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_rel"))
+    val (lab, q, relc) = relevance(s, d)
     // one label-lookup pass over the tagged union of the two tiny lists —
     // the rrfEval discipline at two legs
     val tagged = ch.withColumn("leg", lit("chunk"))
@@ -754,10 +746,6 @@ object Retrieval {
         sum(when(col("leg") === "doc", 1L).otherwise(0L)).as("doc_hits"),
         firstRel("chunk").as("ch_first"), dcg("chunk").as("ch_dcg"),
         firstRel("doc").as("do_first"), dcg("doc").as("do_dcg"))
-    def ndcgOf(dcgCol: String, out: String) =
-      coalesce(expr(s"(1000 * $dcgCol) div " +
-          s"aggregate(sequence(cast(1 as bigint), least(n_rel, cast(10 as bigint))), cast(0 as bigint), (acc, i) -> acc + ${gain("(i + 1)", duck = false)})"),
-        lit(0L)).as(out)
     q.select(col("query_id"))
       .join(relc, Seq("query_id"))
       .join(hits, Seq("query_id"), "left")

@@ -73,6 +73,22 @@ object Similarity {
       .select(col("query_id"), id.as("neighbor_id"))
   }
 
+  /** Oracle CTE `n(vec_id, e, nrm)`: the embeddings as doubles with their
+    * L2 norms, the replay of [[withNorm]]. */
+  private[operators] val normedCte: String =
+    """n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
+      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
+      |           FROM embeddings)""".stripMargin
+
+  /** Oracle tail over an `s(query_id, neighbor_id, cos)` CTE: each query's
+    * top 5 by (cos DESC, neighbor_id), the replay of `topKRanked(_, 5)`. */
+  private val top5OracleSql: String =
+    """r AS (SELECT query_id, neighbor_id, cos,
+      |             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
+      |      FROM s)
+      |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 6) AS cosine
+      |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
+
   /** Brute-force exact cosine top-k: the correctness baseline. The query set
     * (vec_id < 10) broadcasts against the full corpus — one corpus scan, no
     * shuffle of scored rows except each partition's ≤ k·|queries| heap
@@ -81,27 +97,27 @@ object Similarity {
     * scored set. */
   val knnBruteForce: QueryDef = QueryDef.sql(
     "knn_cosine_bruteforce",
-    """WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings),
+    s"""WITH $normedCte,
       |q AS (SELECT * FROM n WHERE vec_id < 10),
       |s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
       |             list_sum(list_transform(list_zip(q.e, c.e), x -> x[1]*x[2])) / (q.nrm * c.nrm) AS cos
       |      FROM q, n c WHERE q.vec_id <> c.vec_id),
-      |r AS (SELECT query_id, neighbor_id, cos,
-      |             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-      |      FROM s)
-      |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 6) AS cosine
-      |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, d) =>
+      |$top5OracleSql""".stripMargin) { (s, d) =>
     val n = withNorm(Tables.embeddings(s, d))
+    topKRanked(exactScored(n), 5)
+  }
+
+  /** Every (query, corpus vector) pair of the normed corpus `n` with its
+    * exact cosine: the query set (vec_id < 10) broadcasts against one
+    * corpus scan. */
+  private def exactScored(n: DataFrame): DataFrame = {
     val q = n.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm"))
-    val scored = n.crossJoin(broadcast(q))
+    n.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("vec_id"))
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"),
         (dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("cos"))
-    topKRanked(scored, 5)
   }
 
   /** Metadata-FILTERED vector search — top-5 among candidates sharing the
@@ -115,35 +131,9 @@ object Similarity {
     * prunes candidates at join time, not after scoring. Same bounded-heap
     * TopKPerGroup tail as every serving path; nothing sorts the scored
     * set. */
-  val knnFiltered: QueryDef = QueryDef.sql(
-    "knn_cosine_filtered",
-    """WITH n AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings),
-      |q AS (SELECT * FROM n WHERE vec_id < 10),
-      |s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |             list_sum(list_transform(list_zip(q.e, c.e), x -> x[1]*x[2])) / (q.nrm * c.nrm) AS cos
-      |      FROM q JOIN n c ON c.label = q.label AND q.vec_id <> c.vec_id),
-      |r AS (SELECT query_id, neighbor_id, cos,
-      |             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-      |      FROM s)
-      |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 6) AS cosine
-      |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, d) =>
-    val emb = Tables.embeddings(s, d)
-    val e = transform(col("embedding"), x => x.cast("double"))
-    val n = Tables.fanOut(emb)
-      .select(col("vec_id"), col("label"), e.as("e"))
-      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
-    val q = n.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("e").as("qe"), col("nrm").as("qnrm"))
-    val scored = n.join(broadcast(q),
-        col("label") === col("qlabel") && col("query_id") =!= col("vec_id"))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("cos"))
-    topKRanked(scored, 5)
-  }
+  val knnFiltered: QueryDef = labelKnn("knn_cosine_filtered",
+    "c.label = q.label AND q.vec_id <> c.vec_id",
+    col("label") === col("qlabel") && col("query_id") =!= col("vec_id"))
 
   /** HARD-NEGATIVE mining — [[knnFiltered]]'s complement and the other half
     * of a contrastive-training data pipeline: for each query, the top-5
@@ -154,34 +144,36 @@ object Similarity {
     * candidate stream shrinks at join time and nothing sorts the scored
     * set. At 100 TB this is the mining pass run per training epoch —
     * partition-parallel over the corpus with the query set broadcast. */
-  val knnHardNegatives: QueryDef = QueryDef.sql(
-    "knn_hard_negatives",
-    """WITH n AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings),
-      |q AS (SELECT * FROM n WHERE vec_id < 10),
-      |s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |             list_sum(list_transform(list_zip(q.e, c.e), x -> x[1]*x[2])) / (q.nrm * c.nrm) AS cos
-      |      FROM q JOIN n c ON c.label <> q.label),
-      |r AS (SELECT query_id, neighbor_id, cos,
-      |             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-      |      FROM s)
-      |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 6) AS cosine
-      |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, d) =>
-    val emb = Tables.embeddings(s, d)
-    val e = transform(col("embedding"), x => x.cast("double"))
-    val n = Tables.fanOut(emb)
-      .select(col("vec_id"), col("label"), e.as("e"))
-      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
-    val q = n.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("e").as("qe"), col("nrm").as("qnrm"))
-    val scored = n.join(broadcast(q), col("label") =!= col("qlabel"))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("cos"))
-    topKRanked(scored, 5)
-  }
+  val knnHardNegatives: QueryDef = labelKnn("knn_hard_negatives",
+    "c.label <> q.label", col("label") =!= col("qlabel"))
+
+  /** Top-5 cosine neighbors of each query (vec_id < 10) among the vectors
+    * a label predicate admits: `sqlOn` in the oracle's join, `on` (over
+    * the corpus row and the broadcast query's `qlabel`) in the engine's. */
+  private def labelKnn(name: String, sqlOn: String, on: Column): QueryDef =
+    QueryDef.sql(name,
+      s"""WITH n AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
+        |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
+        |           FROM embeddings),
+        |q AS (SELECT * FROM n WHERE vec_id < 10),
+        |s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |             list_sum(list_transform(list_zip(q.e, c.e), x -> x[1]*x[2])) / (q.nrm * c.nrm) AS cos
+        |      FROM q JOIN n c ON $sqlOn),
+        |$top5OracleSql""".stripMargin) { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      val e = transform(col("embedding"), x => x.cast("double"))
+      val n = Tables.fanOut(emb)
+        .select(col("vec_id"), col("label"), e.as("e"))
+        .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
+      val q = n.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
+          col("e").as("qe"), col("nrm").as("qnrm"))
+      val scored = n.join(broadcast(q), on)
+        .select(
+          col("query_id"), col("vec_id").as("neighbor_id"),
+          (dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("cos"))
+      topKRanked(scored, 5)
+    }
 
   /** The exact all-pairs form refuses corpora past this size: it exists as
     * the exactness baseline / spec oracle for the banded twin, and an
@@ -207,9 +199,7 @@ object Similarity {
     * refuses past [[MaxExactAllPairsCorpus]]. */
   val cosinePairs: QueryDef = QueryDef.sql(
     "embedding_cosine_pairs",
-    """WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings)
+    s"""WITH $normedCte
       |SELECT a.vec_id AS id1, b.vec_id AS id2,
       |       ROUND(list_sum(list_transform(list_zip(a.e, b.e), x -> x[1]*x[2])) / (a.nrm * b.nrm), 6) AS cosine
       |FROM n a, n b
@@ -290,9 +280,7 @@ object Similarity {
     * hash-checked against an independent engine. */
   val knnLshBucketed: QueryDef = QueryDef.sql(
     "knn_cosine_lsh",
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings),
+    s"""WITH $normedCte,
       |sig AS (SELECT vec_id, e, nrm, ${sigSql("e", 16)} AS sig FROM n),
       |banded AS (SELECT vec_id, band, (sig >> (band * 4)) % 16 AS bh
       |           FROM sig, (SELECT unnest(range(4)) AS band) b),
@@ -304,11 +292,7 @@ object Similarity {
       |             list_sum(list_transform(list_zip(qq.e, cc.e), x -> x[1]*x[2])) / (qq.nrm * cc.nrm) AS cos
       |      FROM cand JOIN n qq ON qq.vec_id = cand.query_id
       |                JOIN n cc ON cc.vec_id = cand.neighbor_id),
-      |r AS (SELECT query_id, neighbor_id, cos,
-      |             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-      |      FROM s)
-      |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 6) AS cosine
-      |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, d) =>
+      |$top5OracleSql""".stripMargin) { (s, d) =>
     val n = withNorm(Tables.embeddings(s, d))
       .withColumn("sig", lshSignature(col("e")))
     // 4 bands of 4 bits each: candidates agree on >=1 band.
@@ -512,9 +496,7 @@ object Similarity {
     * math. */
   val cosinePairsLsh: QueryDef = QueryDef.sql(
     "embedding_cosine_pairs_lsh",
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings),
+    s"""WITH $normedCte,
       |g AS (SELECT e, nrm, MIN(vec_id) AS rep, list(vec_id) AS members
       |      FROM n GROUP BY e, nrm),
       |sig AS (SELECT rep, e, nrm, ${sigSql("e", 32)} AS sig FROM g),
@@ -622,21 +604,14 @@ object Similarity {
 
   /** Normed corpus + centroid table → inverted lists: each vector keyed by
     * its nearest centroid via a row-local argmax over the broadcast one-row
-    * centroid table. The single list-building expression — [[ivfLists]] and
-    * [[knnIvf]] both run exactly this, so the plan TrainingOpsSpec asserts
-    * shuffle-free is the plan production queries execute. */
+    * centroid table. The single list-building expression: [[knnIvf]] and
+    * every IVF query run exactly this, so the plan TrainingOpsSpec asserts
+    * shuffle-free is the plan production queries execute. The whole
+    * assignment is scan → broadcast-join(1 row) → project. */
   private[graft] def ivfListsFrom(n: DataFrame, centArr: DataFrame): DataFrame =
     withCentroidScores(n, centArr)
       .withColumn("best", array_max(col("scored")))
       .select(col("vec_id"), col("e"), col("nrm"), col("best.cid").as("cid"))
-
-  /** Corpus → inverted lists: each vector keyed by its nearest centroid.
-    * The whole assignment is scan → broadcast-join(1 row) → project: the
-    * only exchange in the plan is [[Tables.fanOut]]'s input rebalance. */
-  private[graft] def ivfLists(embeddings: DataFrame, numCentroids: Int = 16): DataFrame = {
-    val n = withNorm(embeddings)
-    ivfListsFrom(n, centroidArray(n, numCentroids))
-  }
 
   /** IVF (inverted-file) ANN: the coarse-quantizer scale path. K centroids
     * partition the corpus into inverted lists; a query exactly scores only
@@ -683,6 +658,46 @@ object Similarity {
     topKRanked(scored, k)
   }
 
+  /** Oracle CTE `cents(cid, ce, cnrm)`: the 16 md5-ranked centroid seeds
+    * of `n`, the replay of [[centroidArray]]. */
+  private[operators] val md5CentsCte: String =
+    """cents AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm FROM n
+      |          ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16)""".stripMargin
+
+  /** Oracle CTE `cents(cid, ce, cnrm)` read from a persisted centroid
+    * artifact (one row holding the `cents` array) at `path`. */
+  private def artifactCentsCte(path: String): String =
+    s"""cents AS (SELECT c.cid AS cid, c.ce AS ce, c.cnrm AS cnrm
+      |          FROM (SELECT unnest(cents) AS c FROM read_parquet('$path/*.parquet')))""".stripMargin
+
+  /** Oracle CTE `asg`: every vector of `n` against every centroid of
+    * `cents` with its cosine rank `rk` (1 = nearest, ties to the lower
+    * cid, the order [[withCentroidScores]]' struct encodes); `cols` are
+    * the `n` columns it carries. */
+  private[operators] def asgCte(cols: String): String =
+    s"""asg AS (SELECT $cols, c.cid,
+      |               ROW_NUMBER() OVER (PARTITION BY n.vec_id
+      |                 ORDER BY list_sum(list_transform(list_zip(n.e, c.ce), x -> x[1]*x[2]))
+      |                            / (n.nrm * c.cnrm) DESC,
+      |                          c.cid) AS rk
+      |        FROM n CROSS JOIN cents c)""".stripMargin
+
+  /** The IVF serving replay over a `cents` CTE: nearest-centroid lists,
+    * each query's 8 nearest centroids as probes, candidate scoring within
+    * the probed lists and the top-5 tail. */
+  private def ivfServeOracleSql(centsCte: String): String =
+    s"""WITH $normedCte,
+      |$centsCte,
+      |${asgCte("n.vec_id, n.e, n.nrm")},
+      |lists AS (SELECT vec_id, e, nrm, cid FROM asg WHERE rk = 1),
+      |probes AS (SELECT vec_id AS query_id, e AS qe, nrm AS qnrm, cid
+      |           FROM asg WHERE vec_id < 10 AND rk <= 8),
+      |s AS (SELECT p.query_id, l.vec_id AS neighbor_id,
+      |             list_sum(list_transform(list_zip(p.qe, l.e), x -> x[1]*x[2])) / (p.qnrm * l.nrm) AS cos
+      |      FROM probes p JOIN lists l USING (cid)
+      |      WHERE p.query_id <> l.vec_id),
+      |$top5OracleSql""".stripMargin
+
   /** Oracled end to end (round 8): the md5-ranked centroid sample makes
     * every stage SQL-expressible, so the oracle replays the full IVF
     * pipeline — centroid selection (top-16 by md5(vec_id)), nearest-centroid
@@ -692,29 +707,7 @@ object Similarity {
     * tie-breaks the Spark plan's struct orderings encode. */
   val knnIvfQuery: QueryDef = QueryDef.sql(
     "knn_cosine_ivf",
-    """WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings),
-      |cents AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm FROM n
-      |          ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-      |asg AS (SELECT n.vec_id, n.e, n.nrm, c.cid,
-      |               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-      |                 ORDER BY list_sum(list_transform(list_zip(n.e, c.ce), x -> x[1]*x[2]))
-      |                            / (n.nrm * c.cnrm) DESC,
-      |                          c.cid) AS rk
-      |        FROM n CROSS JOIN cents c),
-      |lists AS (SELECT vec_id, e, nrm, cid FROM asg WHERE rk = 1),
-      |probes AS (SELECT vec_id AS query_id, e AS qe, nrm AS qnrm, cid
-      |           FROM asg WHERE vec_id < 10 AND rk <= 8),
-      |s AS (SELECT p.query_id, l.vec_id AS neighbor_id,
-      |             list_sum(list_transform(list_zip(p.qe, l.e), x -> x[1]*x[2])) / (p.qnrm * l.nrm) AS cos
-      |      FROM probes p JOIN lists l USING (cid)
-      |      WHERE p.query_id <> l.vec_id),
-      |r AS (SELECT query_id, neighbor_id, cos,
-      |             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-      |      FROM s)
-      |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 6) AS cosine
-      |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin) { (s, d) =>
+    ivfServeOracleSql(md5CentsCte)) { (s, d) =>
     knnIvf(Tables.embeddings(s, d))
   }
 
@@ -801,37 +794,22 @@ object Similarity {
   // Tag suffix "s2" = the md5-ranked Lloyd seed generation (the seed scheme
   // is a training param, so it lives in the tag: changing it must produce a
   // fresh artifact, not silently serve one trained from the old seeds).
+  private val IvfKmeansTag = "ivf16x3s2"
+
+  /** The persisted 16-centroid, 3-iteration Lloyd codebook over `n`, the
+    * one the kmeans IVF queries and the embedding drift report share. */
+  private def ivfKmeansCents(s: SparkSession, d: String, n: DataFrame): DataFrame =
+    trainOnce(s, d, IvfKmeansTag) { kmeansCentroidArray(n, 16, 3) }
+
+  /** Oracle CTE `cents` read from the [[ivfKmeansCents]] artifact. */
+  private def ivfKmeansCentsCte(s: SparkSession, d: String): String =
+    artifactCentsCte(artifactFsPath(s, d, IvfKmeansTag))
+
   val knnIvfKmeansQuery: QueryDef = QueryDef.sqlDynamic("knn_cosine_ivf_kmeans") { (s, d) =>
-    val path = artifactFsPath(s, d, "ivf16x3s2")
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-       |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-       |           FROM embeddings),
-       |cents AS (SELECT c.cid AS cid, c.ce AS ce, c.cnrm AS cnrm
-       |          FROM (SELECT unnest(cents) AS c FROM read_parquet('$path/*.parquet'))),
-       |asg AS (SELECT n.vec_id, n.e, n.nrm, c.cid,
-       |               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-       |                 ORDER BY list_sum(list_transform(list_zip(n.e, c.ce), x -> x[1]*x[2]))
-       |                            / (n.nrm * c.cnrm) DESC,
-       |                          c.cid) AS rk
-       |        FROM n CROSS JOIN cents c),
-       |lists AS (SELECT vec_id, e, nrm, cid FROM asg WHERE rk = 1),
-       |probes AS (SELECT vec_id AS query_id, e AS qe, nrm AS qnrm, cid
-       |           FROM asg WHERE vec_id < 10 AND rk <= 8),
-       |s AS (SELECT p.query_id, l.vec_id AS neighbor_id,
-       |             list_sum(list_transform(list_zip(p.qe, l.e), x -> x[1]*x[2])) / (p.qnrm * l.nrm) AS cos
-       |      FROM probes p JOIN lists l USING (cid)
-       |      WHERE p.query_id <> l.vec_id),
-       |r AS (SELECT query_id, neighbor_id, cos,
-       |             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-       |      FROM s)
-       |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 6) AS cosine
-       |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
+    ivfServeOracleSql(ivfKmeansCentsCte(s, d))
   } { (s, d) =>
     val n = withNorm(Tables.embeddings(s, d))
-    val cents = trainOnce(s, d, "ivf16x3s2") {
-      kmeansCentroidArray(n, 16, 3)
-    }
-    knnIvfWith(n, cents)
+    knnIvfWith(n, ivfKmeansCents(s, d, n))
   }
 
   /** Exact embedding dedup: collapse bit-identical vectors to one
@@ -874,9 +852,7 @@ object Similarity {
     * though the operator behaves as specified. */
   val dedupEmbeddingCosine: QueryDef = QueryDef.sql(
     "dedup_embedding_cosine",
-    """WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings)
+    s"""WITH $normedCte
       |SELECT b.vec_id AS vec_id, CAST(emb.label AS BIGINT) AS label
       |FROM n b JOIN embeddings emb ON emb.vec_id = b.vec_id
       |WHERE NOT EXISTS (
@@ -1168,9 +1144,7 @@ object Similarity {
     * products, rows gathered cid-then-m ordered exactly like [[pqLut]]'s
     * array_sort(collect_list(struct)) nesting. */
   private def pqOracleLutCtes(ds: Int): String =
-    s"""n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-       |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-       |           FROM embeddings),
+    s"""$normedCte,
        |q AS (SELECT vec_id AS query_id, e, nrm FROM n WHERE vec_id < 10),
        |qsub AS (SELECT query_id, mm.m AS m,
        |                list_slice(e, mm.m * $ds + 1, (mm.m + 1) * $ds) AS sub
@@ -1359,10 +1333,11 @@ object Similarity {
     * producing (vec_id, codes, cid, nrm), replay probes → coarse term →
     * residual-LUT ADC → candidate top-2·[[PqCandidates]] → exact rerank.
     * One builder so the one-shot and incremental twins cannot drift. */
-  private def ivfPqServeOracleSql(centsPath: String, cbPath: String,
-      idxCte: String, ds: Int): String =
-    s"""WITH cents AS (SELECT c.cid AS cid, c.ce AS ce, c.cnrm AS cnrm
-       |          FROM (SELECT unnest(cents) AS c FROM read_parquet('$centsPath/*.parquet'))),
+  private def ivfPqServeOracleSql(s: SparkSession, d: String,
+      idxCte: String, ds: Int): String = {
+    val centsPath = artifactFsPath(s, d, IvfPqCoarseTag)
+    val cbPath = artifactFsPath(s, d, IvfPqCodebookTag)
+    s"""WITH ${artifactCentsCte(centsPath)},
        |cb AS (SELECT m, cid, ce FROM read_parquet('$cbPath/*.parquet')),
        |${pqOracleLutCtes(ds)},
        |$idxCte,
@@ -1386,23 +1361,29 @@ object Similarity {
        |                        ORDER BY approx_cos DESC, vec_id) AS crk FROM ac)
        |         WHERE crk <= ${2 * PqCandidates}),
        |$pqOracleRerankTail""".stripMargin
+  }
+
+  private val IvfPqCoarseTag = "ivfpq_c16x2s2_coarse"
+  private val IvfPqCodebookTag = "ivfpq_c16x2s2_pq8x16x2_cb"
+
+  /** The persisted IVF-PQ coarse quantizer (16 centroids, 2 Lloyd
+    * iterations) and residual codebook over `n`, the pair the one-shot and
+    * incremental IVF-PQ queries serve from. */
+  private def ivfPqQuantizers(s: SparkSession, d: String, n: DataFrame,
+      dim: Int): (DataFrame, DataFrame) = {
+    val cents = trainOnce(s, d, IvfPqCoarseTag) { kmeansCentroidArray(n, 16, 2) }
+    (cents, trainOnce(s, d, IvfPqCodebookTag) { ivfPqCodebook(n, dim, cents, 2) })
+  }
 
   val knnIvfPqQuery: QueryDef = QueryDef.sqlDynamic("knn_cosine_ivf_pq") { (s, d) =>
     val idxPath = artifactFsPath(s, d, "ivfpq_c16x2s2_pq8x16x2_index")
-    ivfPqServeOracleSql(
-      artifactFsPath(s, d, "ivfpq_c16x2s2_coarse"),
-      artifactFsPath(s, d, "ivfpq_c16x2s2_pq8x16x2_cb"),
+    ivfPqServeOracleSql(s, d,
       s"idx AS (SELECT vec_id, codes, cid, nrm FROM read_parquet('$idxPath/*.parquet'))",
       embeddingDim(s, d, withNorm(Tables.embeddings(s, d))) / PqSubspaces)
   } { (s, d) =>
     val n = Tables.materialize(withNorm(Tables.embeddings(s, d)))
     val dim = embeddingDim(s, d, n)
-    val cents = trainOnce(s, d, "ivfpq_c16x2s2_coarse") {
-      kmeansCentroidArray(n, 16, 2)
-    }
-    val cb = trainOnce(s, d, "ivfpq_c16x2s2_pq8x16x2_cb") {
-      ivfPqCodebook(n, dim, cents, 2)
-    }
+    val (cents, cb) = ivfPqQuantizers(s, d, n, dim)
     val index = trainOnce(s, d, "ivfpq_c16x2s2_pq8x16x2_index") {
       ivfPqIndex(n, dim, cents, cb)
     }
@@ -1455,19 +1436,12 @@ object Similarity {
          |           FROM encv WHERE ark = 1 GROUP BY vec_id),
          |idx AS (SELECT c2.vec_id, c2.codes, r2.cid, r2.nrm
          |        FROM codesr c2 JOIN resid r2 ON r2.vec_id = c2.vec_id)""".stripMargin
-    ivfPqServeOracleSql(
-      artifactFsPath(s, d, "ivfpq_c16x2s2_coarse"),
-      artifactFsPath(s, d, "ivfpq_c16x2s2_pq8x16x2_cb"),
+    ivfPqServeOracleSql(s, d,
       idxReplay, ds)
   } { (s, d) =>
     val n = Tables.materialize(withNorm(Tables.embeddings(s, d)))
     val dim = embeddingDim(s, d, n)
-    val cents = trainOnce(s, d, "ivfpq_c16x2s2_coarse") {
-      kmeansCentroidArray(n, 16, 2)
-    }
-    val cb = trainOnce(s, d, "ivfpq_c16x2s2_pq8x16x2_cb") {
-      ivfPqCodebook(n, dim, cents, 2)
-    }
+    val (cents, cb) = ivfPqQuantizers(s, d, n, dim)
     // content-keyed, not just path-keyed (advisor round 14, matching the
     // dedup_url_merge discipline): the code store is fully derivable from
     // the corpus, so an in-place corpus regeneration must produce a fresh
@@ -1541,6 +1515,15 @@ object Similarity {
       .orderBy("d1", "d2")
   }
 
+  /** Oracle CTE `dups(vec_id, dup_of)` over a `mem(vec_id, e, nrm, cid)`
+    * CTE: the replay of [[clusterDups]]. */
+  private val clusterDupsCte: String =
+    """dups AS (SELECT a.vec_id AS vec_id, MIN(b.vec_id) AS dup_of
+      |         FROM mem a JOIN mem b ON a.cid = b.cid AND a.vec_id > b.vec_id
+      |         WHERE list_sum(list_transform(list_zip(a.e, b.e), x -> x[1]*x[2]))
+      |                 / (a.nrm * b.nrm) >= 0.99
+      |         GROUP BY a.vec_id)""".stripMargin
+
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     * cluster the corpus with the IVF coarse quantizer, then run pairwise
     * cosine ONLY within each cluster — the quadratic stage is bounded by
@@ -1560,23 +1543,11 @@ object Similarity {
     * makes clustering + pairing + verify replayable in DuckDB. */
   val semanticDedup: QueryDef = QueryDef.sql(
     "dedup_semantic",
-    """WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings),
-      |cents AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm FROM n
-      |          ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-      |asg AS (SELECT n.vec_id, n.e, n.nrm, c.cid,
-      |               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-      |                 ORDER BY list_sum(list_transform(list_zip(n.e, c.ce), x -> x[1]*x[2]))
-      |                            / (n.nrm * c.cnrm) DESC,
-      |                          c.cid) AS rk
-      |        FROM n CROSS JOIN cents c),
+    s"""WITH $normedCte,
+      |$md5CentsCte,
+      |${asgCte("n.vec_id, n.e, n.nrm")},
       |mem AS (SELECT vec_id, e, nrm, cid FROM asg WHERE rk = 1),
-      |dups AS (SELECT a.vec_id AS vec_id, MIN(b.vec_id) AS dup_of
-      |         FROM mem a JOIN mem b ON a.cid = b.cid AND a.vec_id > b.vec_id
-      |         WHERE list_sum(list_transform(list_zip(a.e, b.e), x -> x[1]*x[2]))
-      |                 / (a.nrm * b.nrm) >= 0.99
-      |         GROUP BY a.vec_id)
+      |$clusterDupsCte
       |SELECT m.vec_id, m.cid, COALESCE(d.dup_of, -1) AS dup_of,
       |       CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
       |FROM mem m LEFT JOIN dups d ON m.vec_id = d.vec_id
@@ -1584,12 +1555,7 @@ object Similarity {
     val n = withNorm(Tables.embeddings(s, d))
     // one cluster-assignment pass feeds both sides of the pair join
     val mem = Tables.materialize(ivfListsFrom(n, centroidArray(n, 16)))
-    val dups = mem.as("a")
-      .join(mem.as("b"),
-        col("a.cid") === col("b.cid") && col("a.vec_id") > col("b.vec_id"))
-      .filter(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")) >= 0.99)
-      .groupBy(col("a.vec_id").as("vec_id"))
-      .agg(min(col("b.vec_id")).as("dup_of"))
+    val dups = clusterDups(mem)
     mem.select(col("vec_id"), col("cid"))
       .join(dups, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cid"),
@@ -1597,6 +1563,16 @@ object Similarity {
         when(col("dup_of").isNull, lit(1L)).otherwise(lit(0L)).as("kept"))
       .orderBy("vec_id")
   }
+
+  /** Each clustered (vec_id, e, nrm, cid) row's smallest-id same-cluster
+    * neighbor at cosine ≥ 0.99, as (vec_id, dup_of). */
+  private def clusterDups(mem: DataFrame): DataFrame =
+    mem.as("a")
+      .join(mem.as("b"),
+        col("a.cid") === col("b.cid") && col("a.vec_id") > col("b.vec_id"))
+      .filter(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")) >= 0.99)
+      .groupBy(col("a.vec_id").as("vec_id"))
+      .agg(min(col("b.vec_id")).as("dup_of"))
 
   /** Incremental SEMANTIC dedup — [[semanticDedup]]'s cross-snapshot form
     * and the embedding-space member of the incremental family
@@ -1622,9 +1598,7 @@ object Similarity {
     * bucketed cid join — either way the store side stays put. */
   val incrementalSemantic: QueryDef = QueryDef.sql(
     "dedup_incremental_semantic",
-    """WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings),
+    s"""WITH $normedCte,
       |hist AS (SELECT * FROM n WHERE vec_id % 10 < 8),
       |nw AS (SELECT * FROM n WHERE vec_id % 10 >= 8),
       |cents AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm FROM hist
@@ -1697,9 +1671,7 @@ object Similarity {
     * audit you run on a sample at 100 TB, not per serving query. */
   val knnIvfRecallSweep: QueryDef = QueryDef.sql(
     "knn_ivf_recall_sweep",
-    """WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-      |           FROM embeddings),
+    s"""WITH $normedCte,
       |q AS (SELECT * FROM n WHERE vec_id < 10),
       |ex AS (SELECT query_id, neighbor_id FROM (
       |        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -1708,14 +1680,8 @@ object Similarity {
       |                            / (q.nrm * c.nrm) DESC, c.vec_id) AS rnk
       |        FROM q, n c WHERE q.vec_id <> c.vec_id)
       |       WHERE rnk <= 5),
-      |cents AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm FROM n
-      |          ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-      |asg AS (SELECT n.vec_id, n.e, n.nrm, c.cid,
-      |               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-      |                 ORDER BY list_sum(list_transform(list_zip(n.e, c.ce), x -> x[1]*x[2]))
-      |                            / (n.nrm * c.cnrm) DESC,
-      |                          c.cid) AS rk
-      |        FROM n CROSS JOIN cents c),
+      |$md5CentsCte,
+      |${asgCte("n.vec_id, n.e, n.nrm")},
       |lists AS (SELECT vec_id, e, nrm, cid FROM asg WHERE rk = 1),
       |probes AS (SELECT p.nprobe, a.vec_id AS query_id, a.e AS qe, a.nrm AS qnrm, a.cid
       |           FROM asg a CROSS JOIN (VALUES (1), (2), (4), (8)) p(nprobe)
@@ -1738,15 +1704,7 @@ object Similarity {
       |ORDER BY nprobe, query_id""".stripMargin) { (s, d) =>
     val n = Tables.materialize(withNorm(Tables.embeddings(s, d)))
     val cents = centroidArray(n, 16)
-    val exact = {
-      val q = n.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm"))
-      val scored = n.crossJoin(broadcast(q))
-        .filter(col("query_id") =!= col("vec_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          (dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("cos"))
-      topKRanked(scored, 5).select(col("query_id"), col("neighbor_id"))
-    }
+    val exact = topKRanked(exactScored(n), 5).select(col("query_id"), col("neighbor_id"))
     // One shared pass for all four nprobe runs (round 11; previously each
     // ran knnIvfWith independently — 4 corpus×K assignment passes and 4
     // candidate scorings of mostly the same pairs). The nprobe=p candidate
@@ -1832,9 +1790,7 @@ object Similarity {
          |) WHERE rn = 1),
          |cum$r AS (SELECT * FROM cum${r - 1} UNION ALL SELECT * FROM sel$r)""".stripMargin
     }.mkString(",\n")
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-       |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-       |           FROM embeddings),
+    s"""WITH $normedCte,
        |q AS (SELECT * FROM n WHERE vec_id < 10),
        |s AS (SELECT q.vec_id AS query_id, c.vec_id AS cid,
        |             ${mmrDot.format("q.e", "c.e")} / (q.nrm * c.nrm) AS rel
@@ -1881,14 +1837,8 @@ object Similarity {
   val knnMmrDiversify: QueryDef = QueryDef.sql(
     "knn_mmr_diversify", mmrOracleSql) { (s, d) =>
     val n = withNorm(Tables.embeddings(s, d))
-    val q = n.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm"))
-    val scored = n.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("qe"), col("e")) / (col("qnrm") * col("nrm"))).as("cos"))
     val cands = Tables.materialize(
-      graft.plans.TopKPerGroup(scored, Seq(col("query_id")), col("cos"),
+      graft.plans.TopKPerGroup(exactScored(n), Seq(col("query_id")), col("cos"),
           col("neighbor_id"), MmrC)
         .select(col("query_id"), col("neighbor_id").as("cid"), col("cos").as("rel")))
     val gathered = n.join(broadcast(cands), col("vec_id") === col("cid"))
@@ -1951,33 +1901,10 @@ object Similarity {
     * reuse. Serving is [[ivfServe]]: the lists side (store scanned in
     * place ∪ the day's assignments) never shuffles; probes broadcast. */
   val knnIvfIncremental: QueryDef = QueryDef.sqlDynamic("knn_ivf_incremental") { (s, d) =>
-    val path = artifactFsPath(s, d, "ivf16x3s2")
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-       |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-       |           FROM embeddings),
-       |cents AS (SELECT c.cid AS cid, c.ce AS ce, c.cnrm AS cnrm
-       |          FROM (SELECT unnest(cents) AS c FROM read_parquet('$path/*.parquet'))),
-       |asg AS (SELECT n.vec_id, n.e, n.nrm, c.cid,
-       |               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-       |                 ORDER BY list_sum(list_transform(list_zip(n.e, c.ce), x -> x[1]*x[2]))
-       |                            / (n.nrm * c.cnrm) DESC,
-       |                          c.cid) AS rk
-       |        FROM n CROSS JOIN cents c),
-       |lists AS (SELECT vec_id, e, nrm, cid FROM asg WHERE rk = 1),
-       |probes AS (SELECT vec_id AS query_id, e AS qe, nrm AS qnrm, cid
-       |           FROM asg WHERE vec_id < 10 AND rk <= 8),
-       |s AS (SELECT p.query_id, l.vec_id AS neighbor_id,
-       |             list_sum(list_transform(list_zip(p.qe, l.e), x -> x[1]*x[2])) / (p.qnrm * l.nrm) AS cos
-       |      FROM probes p JOIN lists l USING (cid)
-       |      WHERE p.query_id <> l.vec_id),
-       |r AS (SELECT query_id, neighbor_id, cos,
-       |             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-       |      FROM s)
-       |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 6) AS cosine
-       |FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin
+    ivfServeOracleSql(ivfKmeansCentsCte(s, d))
   } { (s, d) =>
     val n = withNorm(Tables.embeddings(s, d))
-    val cents = trainOnce(s, d, "ivf16x3s2") { kmeansCentroidArray(n, 16, 3) }
+    val cents = ivfKmeansCents(s, d, n)
     // content-keyed like the IVF-PQ code store (advisor round 14): the
     // list store derives from the corpus, so an in-place regeneration
     // must rebuild it rather than serve vectors of the old corpus
@@ -2012,46 +1939,19 @@ object Similarity {
     * the PSI formula in exact integers. Scale shape: one corpus scan +
     * broadcast argmax; everything after is |K| rows. */
   val driftEmbedding: QueryDef = QueryDef.sqlDynamic("drift_embedding_psi") { (s, d) =>
-    import QualityClassifier.ml2
-    val lr =
-      s"(${ml2("(ch + 1)", duck = true)} - ${ml2("(th + v)", duck = true)})" +
-        s" - (${ml2("(cb + 1)", duck = true)} - (${ml2("(tb + v)", duck = true)}))"
-    val path = artifactFsPath(s, d, "ivf16x3s2")
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-       |                  sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x))) AS nrm
-       |           FROM embeddings),
-       |cents AS (SELECT c.cid AS cid, c.ce AS ce, c.cnrm AS cnrm
-       |          FROM (SELECT unnest(cents) AS c FROM read_parquet('$path/*.parquet'))),
-       |asg AS (SELECT n.vec_id, c.cid,
-       |               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-       |                 ORDER BY list_sum(list_transform(list_zip(n.e, c.ce), x -> x[1]*x[2]))
-       |                            / (n.nrm * c.cnrm) DESC,
-       |                          c.cid) AS rk
-       |        FROM n CROSS JOIN cents c),
+    s"""WITH $normedCte,
+       |${ivfKmeansCentsCte(s, d)},
+       |${asgCte("n.vec_id")},
        |lists AS (SELECT vec_id, cid FROM asg WHERE rk = 1),
        |h AS (SELECT cid, COUNT(*)::BIGINT AS ch FROM lists WHERE vec_id % 10 < 8 GROUP BY cid),
        |b AS (SELECT cid, COUNT(*)::BIGINT AS cb FROM lists WHERE vec_id % 10 >= 8 GROUP BY cid),
        |m AS (SELECT CAST(COALESCE(h.cid, b.cid) AS VARCHAR) AS term,
        |             COALESCE(ch, 0) AS ch, COALESCE(cb, 0) AS cb
        |      FROM h FULL OUTER JOIN b ON h.cid = b.cid),
-       |g AS (SELECT SUM(ch) AS th, SUM(cb) AS tb, COUNT(*) AS v FROM m),
-       |x AS (SELECT term, ch, cb,
-       |             1000*(ch+1) // (th+v) AS p_milli,
-       |             1000*(cb+1) // (tb+v) AS q_milli,
-       |             $lr AS lrm
-       |      FROM m CROSS JOIN g),
-       |y AS (SELECT term, ch, cb, p_milli, q_milli,
-       |             (p_milli - q_milli) * lrm AS contrib_micro FROM x),
-       |tot AS (SELECT SUM(contrib_micro) AS total_psi_micro FROM y)
-       |SELECT term, CAST(ch AS BIGINT) AS cnt_hist, CAST(cb AS BIGINT) AS cnt_batch,
-       |       CAST(p_milli AS BIGINT) AS p_milli, CAST(q_milli AS BIGINT) AS q_milli,
-       |       CAST(contrib_micro AS BIGINT) AS contrib_micro,
-       |       CAST(total_psi_micro AS BIGINT) AS total_psi_micro
-       |FROM y CROSS JOIN tot
-       |ORDER BY contrib_micro DESC, term LIMIT 30""".stripMargin
+       |${TrainingData.psiReportSql}""".stripMargin
   } { (s, d) =>
     val n = withNorm(Tables.embeddings(s, d))
-    val cents = trainOnce(s, d, "ivf16x3s2") { kmeansCentroidArray(n, 16, 3) }
+    val cents = ivfKmeansCents(s, d, n)
     val lists = ivfListsFrom(n, cents).select(col("vec_id"), col("cid"))
     def side(p: Column, name: String) =
       lists.filter(p).groupBy(col("cid")).agg(count(lit(1)).as(name))
@@ -2170,11 +2070,7 @@ object Similarity {
       |                            / (n0.nrm * c.cnrm) DESC, c.ccid) AS rk
       |        FROM n0 CROSS JOIN cents c),
       |mem AS (SELECT vec_id, chunk_hash, e, nrm, n_copies, ccid AS cid FROM asg WHERE rk = 1),
-      |dups AS (SELECT a.vec_id AS vec_id, MIN(b.vec_id) AS dup_of
-      |         FROM mem a JOIN mem b ON a.cid = b.cid AND a.vec_id > b.vec_id
-      |         WHERE list_sum(list_transform(list_zip(a.e, b.e), x -> x[1]*x[2]))
-      |                 / (a.nrm * b.nrm) >= 0.99
-      |         GROUP BY a.vec_id)
+      |$clusterDupsCte
       |SELECT CAST(m.vec_id AS BIGINT) AS vec_id, m.chunk_hash,
       |       CAST(m.cid AS BIGINT) AS cid,
       |       CAST(COALESCE(d.dup_of, -1) AS BIGINT) AS dup_of,
@@ -2211,12 +2107,7 @@ object Similarity {
       ivfListsFrom(n0, centroidArray(n0, 16))
         .join(n0.select(col("vec_id"), col("chunk_hash"), col("n_copies")),
           Seq("vec_id")))
-    val dups = mem.as("a")
-      .join(mem.as("b"),
-        col("a.cid") === col("b.cid") && col("a.vec_id") > col("b.vec_id"))
-      .filter(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")) >= 0.99)
-      .groupBy(col("a.vec_id").as("vec_id"))
-      .agg(min(col("b.vec_id")).as("dup_of"))
+    val dups = clusterDups(mem)
     mem.select(col("vec_id"), col("chunk_hash"), col("cid"), col("n_copies"))
       .join(dups, Seq("vec_id"), "left")
       .select(col("vec_id"), col("chunk_hash"), col("cid"),

@@ -783,9 +783,32 @@ object TextAnalysis {
     * sum_dl) columns — expression shapes mirror the oracle token-for-token:
     * every operand is cast from an exact integer, each IEEE op appears
     * once, same order. */
-  private[operators] def bm25TermScore: Column =
-    log(((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5)) + lit(1.0)) *
+  private[operators] def bm25TermScore: Column = bm25Score(identity)
+
+  /** Oracle CTEs `tok(doc_id, tk)`, `dl`, `stats(n_docs, sum_dl)` and
+    * `dfreq(tk, df)`: the replay of the BM25 index artifacts. */
+  private val bm25IndexCtes: String =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+      |tok AS (SELECT doc_id, unnest(w) AS tk FROM t),
+      |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
+      |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl FROM dl),
+      |dfreq AS (SELECT tk, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY tk)""".stripMargin
+
+  /** The oracle of [[bm25TermScore]] summed over a query's terms, as `s`,
+    * over `tf`, `qterms`, `dl` and `stats` CTEs. */
+  private[operators] val bm25SumSql: String =
+    """SUM( ln((CAST(stats.n_docs - qterms.df AS DOUBLE) + 0.5)
+      |                / (CAST(qterms.df AS DOUBLE) + 0.5) + 1.0)
+      |             * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE))
+      |             / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
+      |                * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE)
+      |                   * CAST(dl.dl * stats.n_docs AS DOUBLE)
+      |                   / CAST(stats.sum_dl AS DOUBLE))) ) AS s""".stripMargin
+
+  /** The BM25 term score with `idf` applied to its log term first. */
+  private def bm25Score(idf: Column => Column): Column =
+    idf(log(((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
+        (col("df").cast("double") + lit(0.5)) + lit(1.0))) *
       (col("tf").cast("double") * lit(2.2)) /
       (col("tf").cast("double") + lit(1.2) *
         (lit(0.25) + lit(0.75) *
@@ -800,33 +823,17 @@ object TextAnalysis {
     * ulp and flip a milli-rounding — the same every-IEEE-op-appears-once-
     * in-the-same-order discipline the unweighted expression documents. */
   private[operators] def bm25TermScoreWeighted(w: Column): Column =
-    w * log(((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5)) + lit(1.0)) *
-      (col("tf").cast("double") * lit(2.2)) /
-      (col("tf").cast("double") + lit(1.2) *
-        (lit(0.25) + lit(0.75) *
-          (col("dl") * col("n_docs")).cast("double") /
-          col("sum_dl").cast("double")))
+    bm25Score(w * _)
   val bm25TopK: QueryDef = QueryDef.sql(
     "text_bm25_topk",
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |tok AS (SELECT doc_id, unnest(w) AS tk FROM t),
-      |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-      |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl FROM dl),
-      |dfreq AS (SELECT tk, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY tk),
+    s"""WITH $bm25IndexCtes,
       |qterms AS (SELECT tk, df FROM dfreq WHERE length(tk) >= 4
       |           ORDER BY df DESC, tk LIMIT 3),
       |tf AS (SELECT tok.doc_id, tok.tk, COUNT(*) AS tf
       |       FROM tok JOIN qterms ON tok.tk = qterms.tk
       |       GROUP BY tok.doc_id, tok.tk),
       |scored AS (SELECT tf.doc_id, MIN(dl.dl) AS dl,
-      |        SUM( ln((CAST(stats.n_docs - qterms.df AS DOUBLE) + 0.5)
-      |                / (CAST(qterms.df AS DOUBLE) + 0.5) + 1.0)
-      |             * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE))
-      |             / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-      |                * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE)
-      |                   * CAST(dl.dl * stats.n_docs AS DOUBLE)
-      |                   / CAST(stats.sum_dl AS DOUBLE))) ) AS s
+      |        $bm25SumSql
       |        FROM tf JOIN qterms ON tf.tk = qterms.tk
       |             JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN stats
       |        GROUP BY tf.doc_id)
@@ -868,11 +875,7 @@ object TextAnalysis {
     * scored rows. */
   val bm25PerQuery: QueryDef = QueryDef.sql(
     "text_bm25_perquery",
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |tok AS (SELECT doc_id, unnest(w) AS tk FROM t),
-      |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-      |stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl FROM dl),
-      |dfreq AS (SELECT tk, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY tk),
+    s"""WITH $bm25IndexCtes,
       |qtok AS (SELECT DISTINCT doc_id AS query_id, tk FROM tok
       |         WHERE doc_id < 10 AND length(tk) >= 4),
       |qterms AS (SELECT query_id, tk, df FROM (
@@ -884,13 +887,7 @@ object TextAnalysis {
       |       FROM tok JOIN (SELECT DISTINCT tk FROM qterms) qt ON tok.tk = qt.tk
       |       GROUP BY tok.doc_id, tok.tk),
       |scored AS (SELECT qterms.query_id, tf.doc_id,
-      |        SUM( ln((CAST(stats.n_docs - qterms.df AS DOUBLE) + 0.5)
-      |                / (CAST(qterms.df AS DOUBLE) + 0.5) + 1.0)
-      |             * (CAST(tf.tf AS DOUBLE) * CAST(2.2 AS DOUBLE))
-      |             / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-      |                * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE)
-      |                   * CAST(dl.dl * stats.n_docs AS DOUBLE)
-      |                   / CAST(stats.sum_dl AS DOUBLE))) ) AS s
+      |        $bm25SumSql
       |        FROM tf JOIN qterms ON tf.tk = qterms.tk
       |             JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN stats
       |        WHERE tf.doc_id <> qterms.query_id

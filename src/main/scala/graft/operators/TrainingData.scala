@@ -234,9 +234,10 @@ object TrainingData {
       broadcast(ev)
     else ev.hint("shuffle_hash")
 
-  val contamination: QueryDef = QueryDef.sql(
-    "contamination_ngram",
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+  /** Oracle CTEs ending in `tot(doc_id, n_sh)` and `hit(doc_id, n_hit)`:
+    * the replay of [[contaminationCounts]]. */
+  private val contaminationCtes: String =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
       |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
       |           generate_series(1, len(w)-4),
       |           i -> array_to_string(w[i:i+4], ' ')))) AS g
@@ -245,13 +246,13 @@ object TrainingData {
       |corpus AS (SELECT doc_id, g FROM sh WHERE doc_id % 97 <> 0),
       |tot AS (SELECT doc_id, COUNT(*) AS n_sh FROM corpus GROUP BY doc_id),
       |hit AS (SELECT c.doc_id, COUNT(*) AS n_hit
-      |        FROM corpus c JOIN ev ON c.g = ev.g GROUP BY c.doc_id)
-      |SELECT t.doc_id, CAST(t.n_sh AS BIGINT) AS n_shingles,
-      |       CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_contaminated,
-      |       CAST(ROUND(1000.0 * COALESCE(h.n_hit, 0) / t.n_sh) AS BIGINT) AS contam_milli
-      |FROM tot t LEFT JOIN hit h ON t.doc_id = h.doc_id
-      |ORDER BY t.doc_id""".stripMargin) { (s, d) =>
-    val docs = Tables.documents(s, d).select(col("doc_id"), split(col("text"), " ").as("w"))
+      |        FROM corpus c JOIN ev ON c.g = ev.g GROUP BY c.doc_id)""".stripMargin
+
+  /** For each corpus doc (doc_id % 97 ≠ 0) of (doc_id, w) rows:
+    * `tot(doc_id, n_sh)`, its count of distinct word 5-gram shingles, and
+    * `hit(doc_id, n_hit)`, how many of those the benchmark slice
+    * (doc_id % 97 = 0) also contains. Docs under 5 tokens have no row. */
+  private def contaminationCounts(docs: DataFrame): (DataFrame, DataFrame) = {
     // distinct 5-gram shingles per doc; feeds both the eval-set build and
     // the corpus side, so stage it once
     val sh = Tables.materialize(
@@ -269,6 +270,19 @@ object TrainingData {
     val tot = corpus.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val hit = corpus.join(evalGramSide(ev), Seq("g"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
+    (tot, hit)
+  }
+
+  val contamination: QueryDef = QueryDef.sql(
+    "contamination_ngram",
+    s"""WITH $contaminationCtes
+      |SELECT t.doc_id, CAST(t.n_sh AS BIGINT) AS n_shingles,
+      |       CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_contaminated,
+      |       CAST(ROUND(1000.0 * COALESCE(h.n_hit, 0) / t.n_sh) AS BIGINT) AS contam_milli
+      |FROM tot t LEFT JOIN hit h ON t.doc_id = h.doc_id
+      |ORDER BY t.doc_id""".stripMargin) { (s, d) =>
+    val docs = Tables.documents(s, d).select(col("doc_id"), split(col("text"), " ").as("w"))
+    val (tot, hit) = contaminationCounts(docs)
     // hit is a generator-descended aggregate with a suppressed estimate —
     // shuffle_hash, never estimator-broadcast (r19 cliff discipline)
     tot.join(hit.hint("shuffle_hash"), Seq("doc_id"), "left")
@@ -768,6 +782,86 @@ object TrainingData {
       .orderBy("split", "source")
   }
 
+  /** Oracle CTE `t(doc_id, lang, nt, r)`: the replay of [[docTokens]]. */
+  private val docTokensCte: String =
+    """t AS (SELECT doc_id, lang, len(string_split(text,' ')) AS nt,
+      |                 md5(CAST(doc_id AS VARCHAR)) AS r FROM documents)""".stripMargin
+
+  /** Oracle CTEs `a` … `plan(lang, avail, quota, planned)`: the replay of
+    * [[waterfillPlan]] over `t`. */
+  private val waterfillPlanCtes: String =
+    """a AS (SELECT lang, SUM(nt) AS avail FROM t GROUP BY lang),
+      |g AS (SELECT SUM(avail) AS total, COUNT(*) AS nl FROM a),
+      |p1 AS (SELECT lang, avail, (g.total//2) // g.nl AS quota,
+      |              LEAST(avail, (g.total//2) // g.nl) AS keep1
+      |       FROM a CROSS JOIN g),
+      |d AS (SELECT g.total//2 - SUM(keep1) AS deficit, SUM(avail - keep1) AS cap
+      |      FROM p1 CROSS JOIN g GROUP BY g.total),
+      |plan AS (SELECT lang, avail, quota,
+      |                keep1 + CASE WHEN d.cap > 0
+      |                  THEN LEAST(avail - keep1, CAST(d.deficit AS HUGEINT) * (avail - keep1) // d.cap)
+      |                  ELSE 0 END AS planned
+      |         FROM p1 CROSS JOIN d)""".stripMargin
+
+  /** Oracle CTE `ranked`: `t` with each language's cumulative tokens
+    * `cum` in (r, doc_id) order. */
+  private val rankedDocsCte: String =
+    """ranked AS (SELECT t.*, SUM(nt) OVER (PARTITION BY lang ORDER BY r, doc_id
+      |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM t)""".stripMargin
+
+  /** The oracle of [[realizeDocs]] over `t` and `plan`; `extraCols` is
+    * inserted after `avail_tokens`, each line starting with a newline. */
+  private def realizeDocsSql(extraCols: String): String =
+    s"""$rankedDocsCte,
+      |kept AS (SELECT ranked.lang, COUNT(*) AS kept_docs, SUM(nt) AS kept_tokens
+      |         FROM ranked JOIN plan ON ranked.lang = plan.lang
+      |         WHERE cum <= plan.planned GROUP BY ranked.lang)
+      |SELECT p.lang, CAST(p.avail AS BIGINT) AS avail_tokens,$extraCols
+      |       CAST(p.quota AS BIGINT) AS quota_tokens,
+      |       CAST(p.planned AS BIGINT) AS planned_tokens,
+      |       CAST(COALESCE(k.kept_docs, 0) AS BIGINT) AS kept_docs,
+      |       CAST(COALESCE(k.kept_tokens, 0) AS BIGINT) AS kept_tokens,
+      |       CAST(CASE WHEN p.planned > 0
+      |                 THEN 1000*COALESCE(k.kept_tokens,0)//p.planned
+      |                 ELSE 0 END AS BIGINT) AS fill_milli
+      |FROM plan p LEFT JOIN kept k ON p.lang = k.lang
+      |ORDER BY p.lang""".stripMargin
+
+  /** (doc_id, lang, nt, r): each document's token count and md5 rank,
+    * materialized because it feeds both the per-language aggregate and the
+    * realization window, so the text scan and tokenize run once. */
+  private def docTokens(s: SparkSession, d: String): DataFrame =
+    Tables.materialize(Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"),
+        size(split(col("text"), " ")).cast("long").as("nt"),
+        md5(col("doc_id").cast("string")).as("r")))
+
+  /** Document-atomic realization of a per-language plan over `t`: within
+    * each language the longest (r, doc_id)-ordered prefix whose cumulative
+    * tokens fit `planned`, reported against the plan with its fill.
+    * `extraCols` ride into the report after `avail_tokens`. */
+  private def realizeDocs(t: DataFrame, plan: DataFrame,
+      extraCols: Column*): DataFrame = {
+    val w = Window.partitionBy(col("lang")).orderBy(col("r"), col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val kept = t.withColumn("cum", sum(col("nt")).over(w))
+      .join(broadcast(plan.select(col("lang"), col("planned"))), Seq("lang"))
+      .filter(col("cum") <= col("planned"))
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("kept_docs"), sum(col("nt")).as("kept_tokens"))
+    plan.join(kept, Seq("lang"), "left")
+      .select(Seq(col("lang"), col("avail").cast("long").as("avail_tokens")) ++
+        extraCols ++ Seq(
+        col("quota").cast("long").as("quota_tokens"),
+        col("planned").cast("long").as("planned_tokens"),
+        coalesce(col("kept_docs"), lit(0L)).cast("long").as("kept_docs"),
+        coalesce(col("kept_tokens"), lit(0L)).cast("long").as("kept_tokens"),
+        when(col("planned") > 0,
+          expr("1000 * coalesce(kept_tokens, 0L) div planned")).otherwise(0L)
+          .cast("long").as("fill_milli")): _*)
+      .orderBy("lang")
+  }
+
   /** Domain/language MIXTURE planning + deterministic realization — the
     * "data mixture" step every multilingual/multi-domain pre-training run
     * performs (rebalance a skewed corpus toward target proportions under a
@@ -790,8 +884,9 @@ object TrainingData {
     *
     * Scale shape: the plan is computed on a bounded aggregate (|langs|
     * rows, broadcast back); realization is one window pass keyed by lang —
-    * no driver loop, no global sort, skew bounded by the largest language
-    * (the same partition a per-lang groupBy already makes).
+    * no per-iteration job loop, no global sort, skew bounded by the
+    * largest language (the same partition a per-lang groupBy already
+    * makes).
     *
     * Granularity caveat (MixtureSpec pins it): realization is DOCUMENT-
     * atomic — a document larger than the remaining plan strands, so a
@@ -801,66 +896,17 @@ object TrainingData {
     * here would hide the underfill the report exists to surface. */
   val mixturePlan: QueryDef = QueryDef.sql(
     "sample_mixture_plan",
-    """WITH t AS (SELECT doc_id, lang, len(string_split(text,' ')) AS nt,
-      |                 md5(CAST(doc_id AS VARCHAR)) AS r FROM documents),
-      |a AS (SELECT lang, SUM(nt) AS avail FROM t GROUP BY lang),
-      |g AS (SELECT SUM(avail) AS total, COUNT(*) AS nl FROM a),
-      |p1 AS (SELECT lang, avail, (g.total//2) // g.nl AS quota,
-      |              LEAST(avail, (g.total//2) // g.nl) AS keep1
-      |       FROM a CROSS JOIN g),
-      |d AS (SELECT g.total//2 - SUM(keep1) AS deficit, SUM(avail - keep1) AS cap
-      |      FROM p1 CROSS JOIN g GROUP BY g.total),
-      |plan AS (SELECT lang, avail, quota,
-      |                keep1 + CASE WHEN d.cap > 0
-      |                  THEN LEAST(avail - keep1, CAST(d.deficit AS HUGEINT) * (avail - keep1) // d.cap)
-      |                  ELSE 0 END AS planned
-      |         FROM p1 CROSS JOIN d),
-      |ranked AS (SELECT t.*, SUM(nt) OVER (PARTITION BY lang ORDER BY r, doc_id
-      |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM t),
-      |kept AS (SELECT ranked.lang, COUNT(*) AS kept_docs, SUM(nt) AS kept_tokens
-      |         FROM ranked JOIN plan ON ranked.lang = plan.lang
-      |         WHERE cum <= plan.planned GROUP BY ranked.lang)
-      |SELECT p.lang, CAST(p.avail AS BIGINT) AS avail_tokens,
-      |       CAST(p.quota AS BIGINT) AS quota_tokens,
-      |       CAST(p.planned AS BIGINT) AS planned_tokens,
-      |       CAST(COALESCE(k.kept_docs, 0) AS BIGINT) AS kept_docs,
-      |       CAST(COALESCE(k.kept_tokens, 0) AS BIGINT) AS kept_tokens,
-      |       CAST(CASE WHEN p.planned > 0
-      |                 THEN 1000*COALESCE(k.kept_tokens,0)//p.planned
-      |                 ELSE 0 END AS BIGINT) AS fill_milli
-      |FROM plan p LEFT JOIN kept k ON p.lang = k.lang
-      |ORDER BY p.lang""".stripMargin) { (s, d) =>
-    // t feeds both the per-lang aggregate and the ranked realization pass;
-    // materialize so the text scan + tokenize runs once, not per consumer
-    val t = Tables.materialize(Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"),
-        size(split(col("text"), " ")).cast("long").as("nt"),
-        md5(col("doc_id").cast("string")).as("r")))
+    s"""WITH $docTokensCte,
+      |$waterfillPlanCtes,
+      |${realizeDocsSql("")}""".stripMargin) { (s, d) =>
+    val t = docTokens(s, d)
     // r22 (guide §2.4): the |langs|-row plan feeds TWO consumers (the
     // broadcast into the realization window and the final left join) —
     // unmaterialized, Catalyst replans and re-runs the whole
     // aggregate-chain (a → g → p1 → d → plan, ~5 AQE stage jobs of pure
     // scheduling latency on a table this small) once per consumer. One
     // tiny cache write serves both.
-    val plan = Tables.materialize(waterfillPlan(t))
-    val w = Window.partitionBy(col("lang")).orderBy(col("r"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val kept = t.withColumn("cum", sum(col("nt")).over(w))
-      .join(broadcast(plan.select(col("lang"), col("planned"))), Seq("lang"))
-      .filter(col("cum") <= col("planned"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("kept_docs"), sum(col("nt")).as("kept_tokens"))
-    plan.join(kept, Seq("lang"), "left")
-      .select(col("lang"),
-        col("avail").cast("long").as("avail_tokens"),
-        col("quota").cast("long").as("quota_tokens"),
-        col("planned").cast("long").as("planned_tokens"),
-        coalesce(col("kept_docs"), lit(0L)).cast("long").as("kept_docs"),
-        coalesce(col("kept_tokens"), lit(0L)).cast("long").as("kept_tokens"),
-        when(col("planned") > 0,
-          expr("1000 * coalesce(kept_tokens, 0L) div planned")).otherwise(0L)
-          .cast("long").as("fill_milli"))
-      .orderBy("lang")
+    realizeDocs(t, Tables.materialize(waterfillPlan(t)))
   }
 
   /** Stratified percentile filtering — "drop the bottom quartile per
@@ -953,8 +999,7 @@ object TrainingData {
     * write time, which is unavoidable output volume, not shuffle). */
   val mixtureEpochs: QueryDef = QueryDef.sql(
     "sample_mixture_epochs",
-    s"""WITH t AS (SELECT doc_id, lang, len(string_split(text,' ')) AS nt,
-      |                 md5(CAST(doc_id AS VARCHAR)) AS r FROM documents),
+    s"""WITH $docTokensCte,
       |a AS (SELECT lang, SUM(nt) AS avail FROM t GROUP BY lang),
       |g AS (SELECT SUM(avail) AS total, COUNT(*) AS nl FROM a),
       |p1 AS (SELECT lang, avail, g.total // g.nl AS target,
@@ -972,8 +1017,7 @@ object TrainingData {
       |              planned // avail AS full_epochs,
       |              planned % avail AS tail_planned
       |       FROM plan),
-      |ranked AS (SELECT t.*, SUM(nt) OVER (PARTITION BY lang ORDER BY r, doc_id
-      |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM t),
+      |$rankedDocsCte,
       |tail AS (SELECT ranked.lang, SUM(nt) AS tail_kept
       |         FROM ranked JOIN px ON ranked.lang = px.lang
       |         WHERE cum <= px.tail_planned GROUP BY ranked.lang)
@@ -988,10 +1032,7 @@ object TrainingData {
       |                 ELSE 0 END AS BIGINT) AS fill_milli
       |FROM px LEFT JOIN tail ON px.lang = tail.lang
       |ORDER BY px.lang""".stripMargin) { (s, d) =>
-    val t = Tables.materialize(Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"),
-        size(split(col("text"), " ")).cast("long").as("nt"),
-        md5(col("doc_id").cast("string")).as("r")))
+    val t = docTokens(s, d)
     val a = t.groupBy(col("lang")).agg(sum(col("nt")).as("avail"))
     val g = a.agg(sum(col("avail")).as("total"), count(lit(1)).as("nl"))
     val p1 = a.crossJoin(broadcast(g))
@@ -1125,6 +1166,28 @@ object TrainingData {
       .orderBy("doc_id")
   }
 
+  /** The oracle of [[psiReport]] over an `m(term, ch, cb)` CTE. */
+  private[operators] val psiReportSql: String = {
+    import QualityClassifier.ml2
+    val lr = s"(${ml2("(ch + 1)", duck = true)} - ${ml2("(th + v)", duck = true)})" +
+      s" - (${ml2("(cb + 1)", duck = true)} - (${ml2("(tb + v)", duck = true)}))"
+    s"""g AS (SELECT SUM(ch) AS th, SUM(cb) AS tb, COUNT(*) AS v FROM m),
+       |x AS (SELECT term, ch, cb,
+       |             1000*(ch+1) // (th+v) AS p_milli,
+       |             1000*(cb+1) // (tb+v) AS q_milli,
+       |             $lr AS lrm
+       |      FROM m CROSS JOIN g),
+       |y AS (SELECT term, ch, cb, p_milli, q_milli,
+       |             (p_milli - q_milli) * lrm AS contrib_micro FROM x),
+       |tot AS (SELECT SUM(contrib_micro) AS total_psi_micro FROM y)
+       |SELECT term, CAST(ch AS BIGINT) AS cnt_hist, CAST(cb AS BIGINT) AS cnt_batch,
+       |       CAST(p_milli AS BIGINT) AS p_milli, CAST(q_milli AS BIGINT) AS q_milli,
+       |       CAST(contrib_micro AS BIGINT) AS contrib_micro,
+       |       CAST(total_psi_micro AS BIGINT) AS total_psi_micro
+       |FROM y CROSS JOIN tot
+       |ORDER BY contrib_micro DESC, term LIMIT 30""".stripMargin
+  }
+
   /** Corpus DRIFT monitor — the Population Stability Index between the
     * history slice and the incoming batch's token distributions, the
     * standard production alarm for "today's data no longer looks like
@@ -1141,48 +1204,28 @@ object TrainingData {
     * the [[QualityClassifier.nbIncremental]] shape), one full-outer
     * vocabulary merge, a 1-row total broadcast back, and a TakeOrdered
     * tail — nothing is ever keyed coarser than the term. */
-  val driftPsi: QueryDef = {
-    import QualityClassifier.ml2
-    def lr(duck: Boolean): String =
-      s"(${ml2("(ch + 1)", duck)} - ${ml2("(th + v)", duck)})" +
-        s" - (${ml2("(cb + 1)", duck)} - (${ml2("(tb + v)", duck)}))"
-    QueryDef.sql(
-      "drift_token_psi",
-      s"""WITH s AS (SELECT doc_id, unnest(string_split(text,' ')) AS t FROM documents),
-         |h AS (SELECT t, COUNT(*)::BIGINT AS ch FROM s WHERE doc_id % 10 < 8 GROUP BY t),
-         |b AS (SELECT t, COUNT(*)::BIGINT AS cb FROM s WHERE doc_id % 10 >= 8 GROUP BY t),
-         |m AS (SELECT COALESCE(h.t, b.t) AS term,
-         |             COALESCE(ch, 0) AS ch, COALESCE(cb, 0) AS cb
-         |      FROM h FULL OUTER JOIN b ON h.t = b.t),
-         |g AS (SELECT SUM(ch) AS th, SUM(cb) AS tb, COUNT(*) AS v FROM m),
-         |x AS (SELECT term, ch, cb,
-         |             1000*(ch+1) // (th+v) AS p_milli,
-         |             1000*(cb+1) // (tb+v) AS q_milli,
-         |             ${lr(duck = true)} AS lrm
-         |      FROM m CROSS JOIN g),
-         |y AS (SELECT term, ch, cb, p_milli, q_milli,
-         |             (p_milli - q_milli) * lrm AS contrib_micro FROM x),
-         |tot AS (SELECT SUM(contrib_micro) AS total_psi_micro FROM y)
-         |SELECT term, CAST(ch AS BIGINT) AS cnt_hist, CAST(cb AS BIGINT) AS cnt_batch,
-         |       CAST(p_milli AS BIGINT) AS p_milli, CAST(q_milli AS BIGINT) AS q_milli,
-         |       CAST(contrib_micro AS BIGINT) AS contrib_micro,
-         |       CAST(total_psi_micro AS BIGINT) AS total_psi_micro
-         |FROM y CROSS JOIN tot
-         |ORDER BY contrib_micro DESC, term LIMIT 30""".stripMargin) { (s, d) =>
-      val tok = Tables.fanOut(Tables.documents(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("w")))
-        .select(col("doc_id"), explode(col("w")).as("t"))
-      // ONE corpus pass (r19): the per-slice counts are conditional sums
-      // over the same token stream — the previous two-slice plan scanned
-      // and exploded the corpus twice and full-outer-joined the halves;
-      // this grouped form is the identical merged vocabulary (a term in
-      // either slice groups here; the absent slice's sum is 0, exactly
-      // the join's coalesce) from a single explode + exchange
-      val m = tok.groupBy(col("t").as("term"))
-        .agg(sum(when(col("doc_id") % 10 < 8, 1L).otherwise(0L)).as("ch"),
-          sum(when(col("doc_id") % 10 >= 8, 1L).otherwise(0L)).as("cb"))
-      psiReport(Tables.materialize(m))
-    }
+  val driftPsi: QueryDef = QueryDef.sql(
+    "drift_token_psi",
+    s"""WITH s AS (SELECT doc_id, unnest(string_split(text,' ')) AS t FROM documents),
+       |h AS (SELECT t, COUNT(*)::BIGINT AS ch FROM s WHERE doc_id % 10 < 8 GROUP BY t),
+       |b AS (SELECT t, COUNT(*)::BIGINT AS cb FROM s WHERE doc_id % 10 >= 8 GROUP BY t),
+       |m AS (SELECT COALESCE(h.t, b.t) AS term,
+       |             COALESCE(ch, 0) AS ch, COALESCE(cb, 0) AS cb
+       |      FROM h FULL OUTER JOIN b ON h.t = b.t),
+       |$psiReportSql""".stripMargin) { (s, d) =>
+    val tok = Tables.fanOut(Tables.documents(s, d)
+      .select(col("doc_id"), split(col("text"), " ").as("w")))
+      .select(col("doc_id"), explode(col("w")).as("t"))
+    // ONE corpus pass (r19): the per-slice counts are conditional sums
+    // over the same token stream — the previous two-slice plan scanned
+    // and exploded the corpus twice and full-outer-joined the halves;
+    // this grouped form is the identical merged vocabulary (a term in
+    // either slice groups here; the absent slice's sum is 0, exactly
+    // the join's coalesce) from a single explode + exchange
+    val m = tok.groupBy(col("t").as("term"))
+      .agg(sum(when(col("doc_id") % 10 < 8, 1L).otherwise(0L)).as("ch"),
+        sum(when(col("doc_id") % 10 >= 8, 1L).otherwise(0L)).as("cb"))
+    psiReport(Tables.materialize(m))
   }
 
   /** The PSI arithmetic over a merged (term, ch, cb) vocabulary table —
@@ -1240,16 +1283,7 @@ object TrainingData {
     * counts. */
   val contaminationStrip: QueryDef = QueryDef.sql(
     "contamination_strip",
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-      |           generate_series(1, len(w)-4),
-      |           i -> array_to_string(w[i:i+4], ' ')))) AS g
-      |       FROM t WHERE len(w) >= 5),
-      |ev AS (SELECT DISTINCT g FROM sh WHERE doc_id % 97 = 0),
-      |corpus AS (SELECT doc_id, g FROM sh WHERE doc_id % 97 <> 0),
-      |tot AS (SELECT doc_id, COUNT(*) AS n_sh FROM corpus GROUP BY doc_id),
-      |hit AS (SELECT c.doc_id, COUNT(*) AS n_hit
-      |        FROM corpus c JOIN ev ON c.g = ev.g GROUP BY c.doc_id)
+    s"""WITH $contaminationCtes
       |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
       |       CAST(COALESCE(tot.n_sh, 0) AS BIGINT) AS n_shingles,
       |       CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_contaminated
@@ -1259,21 +1293,7 @@ object TrainingData {
       |  AND 10 * COALESCE(h.n_hit, 0) < COALESCE(tot.n_sh, 0) + CASE WHEN tot.n_sh IS NULL THEN 1 ELSE 0 END
       |ORDER BY t.doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("doc_id"), split(col("text"), " ").as("w"))
-    val sh = Tables.materialize(
-      Tables.fanOut(docs)
-        .filter(size(col("w")) >= 5)
-        .select(col("doc_id"), explode(array_distinct(transform(
-          sequence(lit(1), size(col("w")) - 4),
-          i => concat_ws(" ", slice(col("w"), i, lit(5)))))).as("g")))
-    // materialized: the distinct eval-gram set feeds the counted gate's
-    // probe AND the membership join — cached, the distinct aggregate runs
-    // once and the gate's count pre-populates it
-    val ev = Tables.materialize(
-      sh.filter(col("doc_id") % 97 === 0).select(col("g")).distinct())
-    val corpus = sh.filter(col("doc_id") % 97 =!= 0)
-    val tot = corpus.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val hit = corpus.join(evalGramSide(ev), Seq("g"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
+    val (tot, hit) = contaminationCounts(docs)
     // tot/hit are generator-descended aggregates with suppressed estimates
     // — shuffle_hash, never estimator-broadcast (r19 cliff discipline)
     docs.filter(col("doc_id") % 97 =!= 0)
@@ -1416,8 +1436,7 @@ object TrainingData {
     * report. */
   val mixtureTemperature: QueryDef = QueryDef.sql(
     "sample_mixture_temperature",
-    """WITH t AS (SELECT doc_id, lang, len(string_split(text,' ')) AS nt,
-      |                 md5(CAST(doc_id AS VARCHAR)) AS r FROM documents),
+    s"""WITH $docTokensCte,
       |a AS (SELECT lang, SUM(nt) AS avail FROM t GROUP BY lang),
       |cand AS (SELECT lang, avail,
       |              GREATEST(1, CAST(floor(pow(CAST(avail AS DOUBLE), 0.3)) AS BIGINT)) + o.o AS w
@@ -1438,47 +1457,11 @@ object TrainingData {
       |                  THEN LEAST(avail - keep1, CAST(d.deficit AS HUGEINT) * (avail - keep1) // d.cap)
       |                  ELSE 0 END AS planned
       |         FROM p1 CROSS JOIN d),
-      |ranked AS (SELECT t.*, SUM(nt) OVER (PARTITION BY lang ORDER BY r, doc_id
-      |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM t),
-      |kept AS (SELECT ranked.lang, COUNT(*) AS kept_docs, SUM(nt) AS kept_tokens
-      |         FROM ranked JOIN plan ON ranked.lang = plan.lang
-      |         WHERE cum <= plan.planned GROUP BY ranked.lang)
-      |SELECT p.lang, CAST(p.avail AS BIGINT) AS avail_tokens,
-      |       CAST(p.wt AS BIGINT) AS weight,
-      |       CAST(p.quota AS BIGINT) AS quota_tokens,
-      |       CAST(p.planned AS BIGINT) AS planned_tokens,
-      |       CAST(COALESCE(k.kept_docs, 0) AS BIGINT) AS kept_docs,
-      |       CAST(COALESCE(k.kept_tokens, 0) AS BIGINT) AS kept_tokens,
-      |       CAST(CASE WHEN p.planned > 0
-      |                 THEN 1000*COALESCE(k.kept_tokens,0)//p.planned
-      |                 ELSE 0 END AS BIGINT) AS fill_milli
-      |FROM plan p LEFT JOIN kept k ON p.lang = k.lang
-      |ORDER BY p.lang""".stripMargin) { (s, d) =>
-    val t = Tables.materialize(Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"),
-        size(split(col("text"), " ")).cast("long").as("nt"),
-        md5(col("doc_id").cast("string")).as("r")))
+      |${realizeDocsSql("\n       CAST(p.wt AS BIGINT) AS weight,")}""".stripMargin) { (s, d) =>
+    val t = docTokens(s, d)
     // materialized: two consumers, same reuse as the waterfill plans (r22)
-    val plan = Tables.materialize(temperaturePlan(t, 3, 10))
-    val w = Window.partitionBy(col("lang")).orderBy(col("r"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val kept = t.withColumn("cum", sum(col("nt")).over(w))
-      .join(broadcast(plan.select(col("lang"), col("planned"))), Seq("lang"))
-      .filter(col("cum") <= col("planned"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("kept_docs"), sum(col("nt")).as("kept_tokens"))
-    plan.join(kept, Seq("lang"), "left")
-      .select(col("lang"),
-        col("avail").cast("long").as("avail_tokens"),
-        col("wt").cast("long").as("weight"),
-        col("quota").cast("long").as("quota_tokens"),
-        col("planned").cast("long").as("planned_tokens"),
-        coalesce(col("kept_docs"), lit(0L)).cast("long").as("kept_docs"),
-        coalesce(col("kept_tokens"), lit(0L)).cast("long").as("kept_tokens"),
-        when(col("planned") > 0,
-          expr("1000 * coalesce(kept_tokens, 0L) div planned")).otherwise(0L)
-          .cast("long").as("fill_milli"))
-      .orderBy("lang")
+    realizeDocs(t, Tables.materialize(temperaturePlan(t, 3, 10)),
+      col("wt").cast("long").as("weight"))
   }
 
   /** Chunk size for the packed mixture realization — small relative to
@@ -1500,18 +1483,7 @@ object TrainingData {
   val mixturePacked: QueryDef = QueryDef.sql(
     "sample_mixture_packed",
     s"""WITH t AS (SELECT doc_id, lang, len(string_split(text,' ')) AS nt FROM documents),
-      |a AS (SELECT lang, SUM(nt) AS avail FROM t GROUP BY lang),
-      |g AS (SELECT SUM(avail) AS total, COUNT(*) AS nl FROM a),
-      |p1 AS (SELECT lang, avail, (g.total//2) // g.nl AS quota,
-      |              LEAST(avail, (g.total//2) // g.nl) AS keep1
-      |       FROM a CROSS JOIN g),
-      |d AS (SELECT g.total//2 - SUM(keep1) AS deficit, SUM(avail - keep1) AS cap
-      |      FROM p1 CROSS JOIN g GROUP BY g.total),
-      |plan AS (SELECT lang, avail, quota,
-      |                keep1 + CASE WHEN d.cap > 0
-      |                  THEN LEAST(avail - keep1, CAST(d.deficit AS HUGEINT) * (avail - keep1) // d.cap)
-      |                  ELSE 0 END AS planned
-      |         FROM p1 CROSS JOIN d),
+      |$waterfillPlanCtes,
       |ch AS (SELECT doc_id, lang, k, LEAST($ChunkTokens, nt - $ChunkTokens*(k-1)) AS ct,
       |              md5(CAST(doc_id AS VARCHAR) || ':' || CAST(k AS VARCHAR)) AS r
       |       FROM t, unnest(generate_series(1, (nt + ${ChunkTokens - 1})//$ChunkTokens)) AS u(k)

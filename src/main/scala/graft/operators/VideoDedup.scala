@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
 
 /** PERCEPTUAL video dedup — the clip leg completing the modality triangle
   * (text → `dedup_*`, image → `dedup_image_dhash`, audio →
@@ -130,17 +129,9 @@ object VideoDedup {
 
   /** Batched container-walk → per-frame dHash → majority pool. */
   def fingerprints(spark: SparkSession, payloads: Dataset[MediaRecord],
-      strideOf: Long => Int): Dataset[DHashBands] = {
-    import spark.implicits._
-    payloads.mapPartitions { it =>
-      it.grouped(Multimodal.BatchSize).flatMap { batch =>
-        batch.map { rec =>
-          val b = clipBands(rec.payload, strideOf(rec.doc_id))
-          DHashBands(rec.doc_id, b(0), b(1), b(2), b(3))
-        }
-      }
-    }
-  }
+      strideOf: Long => Int): Dataset[DHashBands] =
+    ImageDedup.batchedBands(spark, payloads)(rec =>
+      clipBands(rec.payload, strideOf(rec.doc_id)))
 
   /** Oracle: the MJPEG mosaic fixture (block value = char (f·11 + i),
     * w = 8·bw, h = 8·bh, nf = 2 + id mod 3, stride s = 1 + id mod 3 —
@@ -188,37 +179,15 @@ object VideoDedup {
       |       FROM vf GROUP BY doc_id)""".stripMargin
   }
 
-  private def oracleSql: String =
-    s"""WITH $fpCte,
-      |${ImageDedup.reportTailSql("vhash")}""".stripMargin
+  /** The pooled clip-fingerprint modality: its fingerprint table is a
+    * train-once artifact like [[ImageDedup.media]]'s, so the container
+    * walk + frame decode + majority pooling runs once per corpus content
+    * while the oracle keeps replaying the whole derivation in SQL. The
+    * fixture samples every (1 + id mod 3)-th frame. */
+  private[graft] val media = MediaFixture("vid", renderClipFixture,
+    (s, p) => fingerprints(s, p, id => (1 + id % 3).toInt), fpCte)
 
-  /** The pooled clip-fingerprint table as a train-once ModelStore
-    * artifact — same ingest-time indexing posture as
-    * [[ImageDedup.fpArtifact]]: the container walk + frame decode +
-    * majority pooling runs once per corpus content, the report serves
-    * from the persisted table, and the oracle keeps replaying the whole
-    * derivation in SQL. */
-  private[graft] def fpArtifact(s: SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    graft.sources.ModelStore.getOrBuild(s, d, "documents.parquet", "vidfp") {
-      fixtureFingerprints(s, Tables.documents(s, d)
-        .select(col("doc_id"), col("text")))
-    }
-
-  val query: QueryDef = QueryDef.sql("dedup_video_fingerprint", oracleSql) { (s, d) =>
-    ImageDedup.report(fpArtifact(s, d), hashCol = "vhash")
-  }
-
-  /** Engine-side fingerprints over the registered fixture — shared by
-    * the one-shot query, the incremental query, and the streaming twin
-    * (`private[graft]` so the ingest loop applies the identical chain). */
-  private[graft] def fixtureFingerprints(s: SparkSession,
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val payloads = Tables.fanOut(docs).as[(Long, String)]
-      .map { case (id, text) => MediaRecord(id, renderClipFixture(id, text)) }
-    fingerprints(s, payloads, id => (1 + id % 3).toInt).toDF()
-  }
+  val query: QueryDef = media.report("dedup_video_fingerprint", "vhash")
 
   /** INCREMENTAL perceptual video dedup — the EIGHTH member of the
     * cross-snapshot family, the clip analogue of `dedup_incremental_image`
@@ -235,37 +204,7 @@ object VideoDedup {
     * oracle replays the pooled-fingerprint derivation from the raw corpus
     * (sound because the store build is a deterministic function of the
     * 80/20 split) through the SAME incremental SQL tail as the image twin. */
-  val incremental: QueryDef = QueryDef.sql(
-    "dedup_incremental_video",
-    s"""WITH $fpCte,
-      |${ImageDedup.incrementalTailSql}""".stripMargin) { (s, d) =>
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val fpT = s"graft_vid_fp_store_${Dedup.dirKey(d)}"
-    val bandT = s"graft_vid_band_store_${Dedup.dirKey(d)}"
-    val fpStore = graft.sources.ParquetSink.tableOrBuild(s, fpT) {
-      val hf = fixtureFingerprints(s, docs.filter(col("doc_id") % 10 < 8))
-        .filter(col("b0") >= 0)
-        .groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-      graft.sources.ParquetSink.writeBucketed(
-        ImageDedup.bandRowsOf(hf), bandT, "bh", Dedup.storeBuckets(s))
-      graft.sources.ParquetSink.writeBucketed(
-        hf, fpT, "doc_id", Dedup.storeBuckets(s))
-    }
-    val newDocs = docs.filter(col("doc_id") % 10 >= 8)
-    // no cache: the fused probe body consumes the decode exactly once
-    val bfp = fixtureFingerprints(s, newDocs).filter(col("b0") >= 0)
-    // counted bound on the RAW batch doc count (cheap scan, no decode) —
-    // see ImageDedup.MaxBroadcastProbeDocs
-    val bounded = newDocs.limit((ImageDedup.MaxBroadcastProbeDocs + 1).toInt)
-      .count() <= ImageDedup.MaxBroadcastProbeDocs
-    val dropped = ImageDedup.incrementalDropped(bfp, fpStore, s.table(bandT), bounded)
-    newDocs.select(col("doc_id"))
-      .join(if (bounded) broadcast(dropped) else dropped.hint("shuffle_hash"),
-        Seq("doc_id"), "left_anti")
-      .orderBy("doc_id")
-  }
+  val incremental: QueryDef = media.incremental("dedup_incremental_video")
 
   val all: Seq[QueryDef] = Seq(query, incremental)
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Batch write path: partitioned (and optionally bucketed) parquet layout —
@@ -16,95 +16,6 @@ import org.apache.spark.sql.functions.{col, lit}
   *    kept behind a separate method — the bench tables are path-based).
   */
 object ParquetSink {
-
-  /** Write `df` partitioned by `cols`; returns the reloaded DataFrame. */
-  def writePartitioned(df: DataFrame, path: String, cols: String*): DataFrame = {
-    df.write.mode("overwrite").partitionBy(cols: _*).parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
-
-  /** Layout-controlled parquet write: `repartitionByRange(numFiles,
-    * orderKey)` (each output file covers one contiguous key range — the
-    * file-count dial) + `sortWithinPartitions(orderKey)` (row groups
-    * inside each file get TIGHT footer min-max stats on every column
-    * correlated with the key). The key column is dropped before the write
-    * when synthetic — projection after the sort preserves ordering. This
-    * is the generic engine under [[writeClustered]] and its lexico
-    * comparison twin in ParquetSinkSpec. */
-  def writeLayout(df: DataFrame, path: String, numFiles: Int,
-      orderKeys: Column*): DataFrame = {
-    val keyed = df.withColumns(
-      orderKeys.zipWithIndex.map { case (k, i) => s"__graft_k$i" -> k }.toMap)
-    val keyCols = orderKeys.indices.map(i => col(s"__graft_k$i"))
-    keyed.repartitionByRange(numFiles, keyCols: _*)
-      .sortWithinPartitions(keyCols: _*)
-      .drop(orderKeys.indices.map(i => s"__graft_k$i"): _*)
-      .write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
-
-  /** Z-order-clustered write (round-8 verdict item 4: `layout_zorder`
-    * proved the pruning win on bucket stand-ins; this is the real write
-    * path): cluster by the Morton interleave of two dimension columns so
-    * every file/row-group has tight min-max footer stats on BOTH —
-    * a 2-D predicate then prunes row groups by stats alone, where a
-    * lexicographic sort keeps only the major column tight. Cost at scale:
-    * exactly the range exchange any file-count-controlled write already
-    * pays — the z-value is a pure codegen column expression
-    * ([[graft.operators.Layout.zValue]]). [[rowGroupsHit]] audits the
-    * result from the REAL parquet footers. */
-  def writeClustered(df: DataFrame, path: String, xCol: String, yCol: String,
-      numFiles: Int, bits: Int = graft.operators.Layout.Bits): DataFrame =
-    writeLayout(df, path, numFiles,
-      graft.operators.Layout.zValue(col(xCol), col(yCol), bits))
-
-  /** [[writeClustered]] with the Hilbert index as the layout key — the
-    * `layout_hilbert` audit's production form. The range exchange cuts
-    * the 1-D key space by ROW COUNT, not by bit-aligned prefixes, which
-    * is precisely the regime where the Hilbert walk's grid-adjacency
-    * tightens file bounding boxes over the Morton interleave's diagonal
-    * seams (aligned power-of-4 ranges tie; unaligned runs do not —
-    * measured on real footers in `ParquetSinkSpec`). */
-  def writeClusteredHilbert(df: DataFrame, path: String, xCol: String,
-      yCol: String, numFiles: Int,
-      bits: Int = graft.operators.Layout.GridBits): DataFrame =
-    writeLayout(df, path, numFiles,
-      graft.functions.LayoutFunctions.hilbertD(col(xCol), col(yCol), bits))
-
-  /** Footer-stats pruning audit over a parquet directory: of all row
-    * groups, how many have a min-max bounding box on (`xCol`, `yCol`)
-    * intersecting the query rectangle — i.e. how many a stats-pruning
-    * scan must OPEN for that 2-D predicate. Reads only footers (driver-
-    * side metadata IO, no data pages) via parquet-hadoop — the same
-    * statistics a production lakehouse scan planner consults. Returns
-    * (rowGroupsHit, rowGroupsTotal). */
-  def rowGroupsHit(spark: SparkSession, path: String, xCol: String, yCol: String,
-      x0: Long, x1: Long, y0: Long, y1: Long): (Int, Int) = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(conf)
-    var hit = 0
-    var total = 0
-    fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet")).foreach { f =>
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-      try rd.getFooter.getBlocks.asScala.foreach { b =>
-        total += 1
-        def minMax(name: String): (Long, Long) = {
-          val cc = b.getColumns.asScala.find(_.getPath.toDotString == name)
-            .getOrElse(sys.error(s"no column chunk '$name' in ${f.getPath}"))
-          val st = cc.getStatistics
-          (st.genericGetMin.asInstanceOf[Number].longValue,
-            st.genericGetMax.asInstanceOf[Number].longValue)
-        }
-        val (xmin, xmax) = minMax(xCol)
-        val (ymin, ymax) = minMax(yCol)
-        if (xmin <= x1 && xmax >= x0 && ymin <= y1 && ymax >= y0) hit += 1
-      } finally rd.close()
-    }
-    (hit, total)
-  }
 
   /** Write `df` bucketed+sorted by `key` into `numBuckets` as a managed
     * table; joins between two tables bucketed the same way plan with zero

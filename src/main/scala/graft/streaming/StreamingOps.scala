@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.{DHashBands, MediaRecord}
 
@@ -335,16 +335,9 @@ object StreamingOps {
     org.apache.spark.sql.types.StructField("bh",
       org.apache.spark.sql.types.LongType)))
 
-  private def memSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("e",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType)),
-    org.apache.spark.sql.types.StructField("nrm",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("cid",
-      org.apache.spark.sql.types.LongType)))
+  private def memSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("e", ArrayType(DoubleType)),
+    StructField("nrm", DoubleType), StructField("cid", LongType)))
 
   /** One micro-batch of the SEMANTIC ingest loop — the streaming twin of
     * [[graft.operators.Similarity.incrementalSemantic]]: assign the
@@ -440,10 +433,8 @@ object StreamingOps {
     } finally bsigs.unpersist()
   }
 
-  private def imgFpSchema = org.apache.spark.sql.types.StructType(
-    ("doc_id" +: (0 until 4).map(i => s"b$i")).map(n =>
-      org.apache.spark.sql.types.StructField(n,
-        org.apache.spark.sql.types.LongType)))
+  /** The perceptual loop's fingerprint store: [[DHashBands]] rows. */
+  private def imgFpSchema = Encoders.product[DHashBands].schema
 
   /** One micro-batch of the PERCEPTUAL ingest loop — the streaming twin of
     * `dedup_incremental_image`, `_video` and `_audio`, one body for all
@@ -494,7 +485,7 @@ object StreamingOps {
         val sfp = survivors.filter(col("b0") >= 0)
           .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
         sfp.write.mode("append").parquet(fpPath)
-        graft.operators.ImageDedup.bandRowsOf(sfp)
+        graft.operators.ImageDedup.bandRows(sfp)
           .write.mode("append").parquet(bandPath)
       } finally survivors.unpersist()
     } finally bfp.unpersist()
@@ -538,20 +529,10 @@ object StreamingOps {
     } finally fresh.unpersist()
   }
 
-  private def chunkMemSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("chunk_hash",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("e",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType)),
-    org.apache.spark.sql.types.StructField("nrm",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("cid",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("batch",
-      org.apache.spark.sql.types.LongType)))
+  /** The chunk loop's semantic store: a [[memSchema]] row keyed by its
+    * chunk and tagged with the batch that wrote it. */
+  private def chunkMemSchema = StructType(StructField("chunk_hash", StringType) +:
+    memSchema.fields :+ StructField("batch", LongType))
 
   /** [[ingestBatchChunks]] upgraded to `dedup_chunk_semantic`'s keep rule —
     * the RAG-index maintenance loop that drops NEAR-duplicate (not just

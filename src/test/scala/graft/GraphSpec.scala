@@ -64,17 +64,6 @@ class GraphSpec extends AnyFunSuite {
     for (v <- want.indices) assert(got(v.toLong) === want(v), s"node $v @20 iters")
   }
 
-  test("early-stop variant converges and equals the fixed-depth run at its stop point") {
-    val docs = Tables.documents(spark, dir)
-    val (ranks, done, delta) = Graph.pagerankUntil(docs, maxIterations = 40, tolFp = 10000L)
-    assert(done < 40, s"should converge before the cap (ran $done)")
-    assert(delta <= 10000L)
-    assert(done % Graph.CheckpointEvery === 0, "checks ride checkpoint boundaries")
-    val got = ranks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = localRanks(got.size, iters = done)
-    for (v <- want.indices) assert(got(v.toLong) === want(v), s"node $v @$done iters")
-  }
-
   test("per-node triangle counts match a brute-force local enumeration") {
     val got = SparkEntry.queries("graph_triangles")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -110,13 +110,13 @@ class ImageDedupSpec extends AnyFunSuite {
     val freshImg = ImageDedup.fingerprints(spark, Tables.fanOut(docs)
       .as[(Long, String)]
       .map { case (id, t) => MediaRecord(id, Multimodal.renderFixture(id, t)) }).toDF()
-    assert(rows(ImageDedup.fpArtifact(spark, d)) === rows(freshImg),
+    assert(rows(ImageDedup.media.fpArtifact(spark, d)) === rows(freshImg),
       "image artifact must equal a fresh decode")
-    assert(rows(graft.operators.VideoDedup.fpArtifact(spark, d)) ===
-      rows(graft.operators.VideoDedup.fixtureFingerprints(spark, docs)),
+    assert(rows(graft.operators.VideoDedup.media.fpArtifact(spark, d)) ===
+      rows(graft.operators.VideoDedup.media.fixtureFingerprints(spark, docs)),
       "video artifact must equal a fresh container walk + decode + pooling")
-    assert(rows(graft.operators.AudioDedup.fpArtifact(spark, d)) ===
-      rows(graft.operators.AudioDedup.fixtureFingerprints(spark, docs)),
+    assert(rows(graft.operators.AudioDedup.media.fpArtifact(spark, d)) ===
+      rows(graft.operators.AudioDedup.media.fixtureFingerprints(spark, docs)),
       "audio artifact must equal a fresh PCM decode + envelope hash")
   }
 

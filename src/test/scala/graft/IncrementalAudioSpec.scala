@@ -36,7 +36,7 @@ class IncrementalAudioSpec extends AnyFunSuite {
       Seq(MediaRecord(1L, MediaCodec.encodeWav(8000, base))).toDS()).toDF()
     val fpStore = ParquetSink.writeBucketed(histFp, "aud_inc_fp_rule", "doc_id", 4)
     val bandStore = ParquetSink.writeBucketed(
-      ImageDedup.bandRowsOf(histFp), "aud_inc_band_rule", "bh", 4)
+      ImageDedup.bandRows(histFp), "aud_inc_band_rule", "bh", 4)
 
     val batchFp = AudioDedup.fingerprints(spark, Seq(
       MediaRecord(10L, MediaCodec.encodeWav(8000, nearCopy)),   // near history

@@ -7,11 +7,12 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lint: every public definition in the main sources earns its place. A
-  * public top-level `object`, or a public `def`/`val`/`object` member of
-  * one, is an ORPHAN when nothing else in the comment-stripped main
-  * sources names it: no other occurrence in its own file, and no
-  * `Owner.name` (or imported `name`) in another file; for a top-level
-  * object, no occurrence of its name in any other file. Orphans must be
+  * public top-level `object`, or a public or `private[pkg]`
+  * `def`/`val`/`object` member of one, is an ORPHAN when nothing else in
+  * the comment-stripped main sources names it: no other occurrence in its
+  * own file, and no `Owner.name` (or imported `name`) in another file; for
+  * a top-level object, no occurrence of its name in any other file.
+  * Orphans must be
   * exactly [[OrphanDefinitionSpec.Allowed]], each with its reason, so a new
   * orphan fails here and so does an entry whose definition gained a caller
   * or went away.
@@ -38,6 +39,13 @@ class OrphanDefinitionSpec extends AnyFunSuite {
     assert(stale.isEmpty,
       s"allowlisted definitions that are no longer orphans (or no longer " +
         s"exist): ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("the lint covers package-qualified private members, not plain private ones") {
+    val src = "object A {\n  private[graft] def spare = 1\n  private def hidden = 2\n" +
+      "  private[this] val mine = 3\n  def used = 4\n}\n"
+    assert(orphans(Map("A.scala" -> src, "B.scala" -> "object B { A.used }")) ===
+      Set("A.spare", "B"))
   }
 
   test("the comment stripper keeps code and string literals, drops comments") {
@@ -98,10 +106,6 @@ object OrphanDefinitionSpec {
     "Actions.foldAll" -> TestOracle,
     "Dedup.connectedComponents" -> TestOracle,
     "Graph.Scale" -> TestOracle,
-    "ParquetSink.rowGroupsHit" -> TestOracle,
-    "ParquetSink.writeClustered" -> TestOracle,
-    "ParquetSink.writeClusteredHilbert" -> TestOracle,
-    "ParquetSink.writePartitioned" -> TestOracle,
     "Similarity.cosinePairsExactCollapsed" -> TestOracle,
     "Similarity.knnIvfPq" -> TestOracle)
 
@@ -150,8 +154,9 @@ object OrphanDefinitionSpec {
   }
 
   /** (owner, name) of each public top-level object (owner None) and each
-    * public, non-override member declared at the top indentation of a
-    * top-level object. */
+    * public or package-qualified (`private[pkg]`), non-override member
+    * declared at the top indentation of a top-level object. Plain
+    * `private` and `private[this]` members are out of scope. */
   private def definitions(text: String): Seq[(Option[String], String)] = {
     var owner: Option[(String, String)] = None
     text.split("\n").toSeq.flatMap {
@@ -159,7 +164,8 @@ object OrphanDefinitionSpec {
         owner = Some(kind -> name)
         if (kind == "object" && !mods.contains("private")) Some(None -> name) else None
       case Member(mods, _, name) if owner.exists(_._1 == "object") &&
-          !Seq("private", "protected", "override", "implicit").exists(mods.contains) =>
+          !mods.split(" ").exists(m => m == "private" || m == "private[this]" ||
+            m.startsWith("protected") || m == "override" || m == "implicit") =>
         Some(owner.map(_._2) -> name)
       case _ => None
     }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -13,6 +14,7 @@ import graft.sources.ParquetSink
   * partition-key predicate prunes at the directory level (no data files of
   * other partitions are even listed into the scan). */
 class ParquetSinkSpec extends AnyFunSuite {
+  import ParquetSinkSpec._
   private lazy val spark = SharedSpark.spark
 
   private def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec = {
@@ -26,7 +28,7 @@ class ParquetSinkSpec extends AnyFunSuite {
   test("partitioned write round-trips and prunes partitions on read") {
     val dir = Files.createTempDirectory("graft-sink").toFile.getAbsolutePath
     val src = Tables.orders(spark, "/root/testdata/sf0.001")
-    val reloaded = ParquetSink.writePartitioned(src, s"$dir/orders_p", "o_orderstatus")
+    val reloaded = writePartitioned(src, s"$dir/orders_p", "o_orderstatus")
     // lossless round-trip (column order differs: partition cols move last)
     assert(reloaded.count() === src.count())
     val a = src.select("o_orderkey", "o_orderstatus").collect().map(_.toSeq).toSet
@@ -372,22 +374,22 @@ class ParquetSinkSpec extends AnyFunSuite {
     // 64 files) quadrant-boundary slop can erase the z margin on this
     // rectangle — granularity is part of the layout design, not a tunable
     val nFiles = 256
-    val z = ParquetSink.writeClustered(src, s"$dir/z", "x", "y", nFiles, bits = 8)
-    val lex = ParquetSink.writeLayout(src, s"$dir/lex", nFiles, col("x"), col("y"))
+    val z = writeClustered(src, s"$dir/z", "x", "y", nFiles, bits = 8)
+    val lex = writeLayout(src, s"$dir/lex", nFiles, col("x"), col("y"))
     // both layouts round-trip the data
     assert(z.count() === src.count())
     assert(lex.count() === src.count())
     // the audited rectangle: both dimensions selective (Layout's Xq/Yq)
-    val (zHit, zTotal) = ParquetSink.rowGroupsHit(spark, s"$dir/z", "x", "y", 50, 80, 100, 150)
-    val (lexHit, lexTotal) = ParquetSink.rowGroupsHit(spark, s"$dir/lex", "x", "y", 50, 80, 100, 150)
+    val (zHit, zTotal) = rowGroupsHit(spark, s"$dir/z", "x", "y", 50, 80, 100, 150)
+    val (lexHit, lexTotal) = rowGroupsHit(spark, s"$dir/lex", "x", "y", 50, 80, 100, 150)
     assert(zTotal === lexTotal, "same file-count dial must yield the same row-group count")
     assert(zHit < lexHit,
       s"z-order must open strictly fewer row groups ($zHit vs lexico $lexHit of $zTotal)")
     // and on a minor-dimension-only predicate the lexico layout collapses
     // to a full scan (every x-major file spans the full y range) while the
     // z layout still prunes — the whole reason to interleave
-    val (zY, _) = ParquetSink.rowGroupsHit(spark, s"$dir/z", "x", "y", 0, mask, 100, 150)
-    val (lexY, _) = ParquetSink.rowGroupsHit(spark, s"$dir/lex", "x", "y", 0, mask, 100, 150)
+    val (zY, _) = rowGroupsHit(spark, s"$dir/z", "x", "y", 0, mask, 100, 150)
+    val (lexY, _) = rowGroupsHit(spark, s"$dir/lex", "x", "y", 0, mask, 100, 150)
     assert(zY < lexY,
       s"y-only predicate: z must beat lexico ($zY vs $lexY of $zTotal)")
   }
@@ -407,11 +409,11 @@ class ParquetSinkSpec extends AnyFunSuite {
       datediff(col("o_orderdate"), lit("1992-01-01").cast("date"))
         .cast("long").bitwiseAND(lit(mask)).as("y"))
     val nFiles = 256
-    val h = ParquetSink.writeClusteredHilbert(src, s"$dir/h", "x", "y", nFiles, bits = 8)
-    ParquetSink.writeClustered(src, s"$dir/z", "x", "y", nFiles, bits = 8)
+    val h = writeClusteredHilbert(src, s"$dir/h", "x", "y", nFiles, bits = 8)
+    writeClustered(src, s"$dir/z", "x", "y", nFiles, bits = 8)
     assert(h.count() === src.count())
-    val (hHit, hTotal) = ParquetSink.rowGroupsHit(spark, s"$dir/h", "x", "y", 50, 80, 100, 150)
-    val (zHit, zTotal) = ParquetSink.rowGroupsHit(spark, s"$dir/z", "x", "y", 50, 80, 100, 150)
+    val (hHit, hTotal) = rowGroupsHit(spark, s"$dir/h", "x", "y", 50, 80, 100, 150)
+    val (zHit, zTotal) = rowGroupsHit(spark, s"$dir/z", "x", "y", 50, 80, 100, 150)
     assert(hHit < zHit,
       s"hilbert must open fewer row groups ($hHit/$hTotal vs z $zHit/$zTotal)")
   }
@@ -484,9 +486,104 @@ class ParquetSinkSpec extends AnyFunSuite {
       col("o_custkey").bitwiseAND(lit(15L)).cast("int").as("x"),
       datediff(col("o_orderdate"), lit("1992-01-01").cast("date"))
         .bitwiseAND(lit(15)).cast("int").as("y"))
-    val h = ParquetSink.writeClusteredHilbert(src, s"$dir/h", "x", "y", 4, bits = 4)
+    val h = writeClusteredHilbert(src, s"$dir/h", "x", "y", 4, bits = 4)
     assert(h.count() === src.count())
-    ParquetSink.writeClustered(src, s"$dir/z", "x", "y", 4, bits = 4)
+    writeClustered(src, s"$dir/z", "x", "y", 4, bits = 4)
     assert(spark.read.parquet(s"$dir/z").count() === src.count())
+  }
+}
+
+/** The layout writers and the footer audit the layout tests compare:
+  * plain partitioned, range-clustered (lexicographic, Z-order, Hilbert)
+  * writes, and the row-group pruning count read from real footers. */
+object ParquetSinkSpec {
+
+  /** Write `df` partitioned by `cols`; returns the reloaded DataFrame. */
+  def writePartitioned(df: DataFrame, path: String, cols: String*): DataFrame = {
+    df.write.mode("overwrite").partitionBy(cols: _*).parquet(path)
+    df.sparkSession.read.parquet(path)
+  }
+
+  /** Layout-controlled parquet write: `repartitionByRange(numFiles,
+    * orderKey)` (each output file covers one contiguous key range — the
+    * file-count dial) + `sortWithinPartitions(orderKey)` (row groups
+    * inside each file get TIGHT footer min-max stats on every column
+    * correlated with the key). The key column is dropped before the write
+    * when synthetic — projection after the sort preserves ordering. This
+    * is the generic engine under [[writeClustered]] and its lexico
+    * comparison twin in ParquetSinkSpec. */
+  def writeLayout(df: DataFrame, path: String, numFiles: Int,
+      orderKeys: Column*): DataFrame = {
+    val keyed = df.withColumns(
+      orderKeys.zipWithIndex.map { case (k, i) => s"__graft_k$i" -> k }.toMap)
+    val keyCols = orderKeys.indices.map(i => col(s"__graft_k$i"))
+    keyed.repartitionByRange(numFiles, keyCols: _*)
+      .sortWithinPartitions(keyCols: _*)
+      .drop(orderKeys.indices.map(i => s"__graft_k$i"): _*)
+      .write.mode("overwrite").parquet(path)
+    df.sparkSession.read.parquet(path)
+  }
+
+  /** Z-order-clustered write (round-8 verdict item 4: `layout_zorder`
+    * proved the pruning win on bucket stand-ins; this is the real write
+    * path): cluster by the Morton interleave of two dimension columns so
+    * every file/row-group has tight min-max footer stats on BOTH —
+    * a 2-D predicate then prunes row groups by stats alone, where a
+    * lexicographic sort keeps only the major column tight. Cost at scale:
+    * exactly the range exchange any file-count-controlled write already
+    * pays — the z-value is a pure codegen column expression
+    * ([[graft.operators.Layout.zValue]]). [[rowGroupsHit]] audits the
+    * result from the REAL parquet footers. */
+  def writeClustered(df: DataFrame, path: String, xCol: String, yCol: String,
+      numFiles: Int, bits: Int = graft.operators.Layout.Bits): DataFrame =
+    writeLayout(df, path, numFiles,
+      graft.operators.Layout.zValue(col(xCol), col(yCol), bits))
+
+  /** [[writeClustered]] with the Hilbert index as the layout key — the
+    * `layout_hilbert` audit's production form. The range exchange cuts
+    * the 1-D key space by ROW COUNT, not by bit-aligned prefixes, which
+    * is precisely the regime where the Hilbert walk's grid-adjacency
+    * tightens file bounding boxes over the Morton interleave's diagonal
+    * seams (aligned power-of-4 ranges tie; unaligned runs do not —
+    * measured on real footers in `ParquetSinkSpec`). */
+  def writeClusteredHilbert(df: DataFrame, path: String, xCol: String,
+      yCol: String, numFiles: Int,
+      bits: Int = graft.operators.Layout.GridBits): DataFrame =
+    writeLayout(df, path, numFiles,
+      graft.functions.LayoutFunctions.hilbertD(col(xCol), col(yCol), bits))
+
+  /** Footer-stats pruning audit over a parquet directory: of all row
+    * groups, how many have a min-max bounding box on (`xCol`, `yCol`)
+    * intersecting the query rectangle — i.e. how many a stats-pruning
+    * scan must OPEN for that 2-D predicate. Reads only footers (metadata
+    * IO on the calling JVM, no data pages) via parquet-hadoop — the same
+    * statistics a production lakehouse scan planner consults. Returns
+    * (rowGroupsHit, rowGroupsTotal). */
+  def rowGroupsHit(spark: SparkSession, path: String, xCol: String, yCol: String,
+      x0: Long, x1: Long, y0: Long, y1: Long): (Int, Int) = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(conf)
+    var hit = 0
+    var total = 0
+    fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet")).foreach { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
+      try rd.getFooter.getBlocks.asScala.foreach { b =>
+        total += 1
+        def minMax(name: String): (Long, Long) = {
+          val cc = b.getColumns.asScala.find(_.getPath.toDotString == name)
+            .getOrElse(sys.error(s"no column chunk '$name' in ${f.getPath}"))
+          val st = cc.getStatistics
+          (st.genericGetMin.asInstanceOf[Number].longValue,
+            st.genericGetMax.asInstanceOf[Number].longValue)
+        }
+        val (xmin, xmax) = minMax(xCol)
+        val (ymin, ymax) = minMax(yCol)
+        if (xmin <= x1 && xmax >= x0 && ymin <= y1 && ymax >= y0) hit += 1
+      } finally rd.close()
+    }
+    (hit, total)
   }
 }

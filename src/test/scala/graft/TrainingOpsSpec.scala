@@ -138,7 +138,8 @@ class TrainingOpsSpec extends AnyFunSuite {
   }
 
   test("IVF list-building is shuffle-free (projection-side centroid argmax)") {
-    val lists = Similarity.ivfLists(Tables.embeddings(spark, dir))
+    val n = Similarity.withNorm(Tables.embeddings(spark, dir))
+    val lists = Similarity.ivfListsFrom(n, Similarity.centroidArray(n, 16))
     lists.collect() // let AQE finalize the plan before inspecting it
     val plan = lists.queryExecution.executedPlan.toString
     // the only allowed exchanges: fanOut's round-robin input rebalance and
