@@ -1,27 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions.{BpeTokenCount, CharEntropyMilli, DotProduct}
 
-/** Session extension registering graft's custom expressions as SQL
-  * functions, so `spark.sql("SELECT graft_dot(a, b)")` works next to the
-  * Column API. Enable with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` or call
-  * [[GraftExtensions.register]] on an existing session. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (name, cls, builder) =>
-      e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name), builder))
-    }
-    e.injectOptimizerRule(_ => graft.plans.DotProductFusion)
-    e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-  }
-}
-
+/** graft's session additions: its custom expressions as SQL functions, so
+  * `spark.sql("SELECT graft_dot(a, b)")` works next to the Column API, the
+  * [[graft.plans.DotProductFusion]] optimizer rule and the
+  * [[graft.plans.TopKPerGroupStrategy]] planner strategy. [[register]] is
+  * the one way they reach a session: [[Graft.session]] calls it on every
+  * session it builds or adopts. */
 object GraftExtensions {
   import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, Multiply, Sqrt}
 
@@ -57,23 +46,22 @@ object GraftExtensions {
       CharEntropyMilli(exprs(0))
     }
 
-  /** The SQL functions, read by both the `spark.sql.extensions` injection
-    * ([[GraftExtensions#apply]]) and [[register]]: (name, implementing
-    * expression class, builder). */
-  private[graft] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("graft_dot", classOf[DotProduct], dotBuilder),
-    ("graft_cosine", classOf[DotProduct], cosineBuilder),
-    ("graft_bpe_count", classOf[BpeTokenCount], bpeBuilder),
-    ("graft_char_entropy", classOf[CharEntropyMilli], charEntropyBuilder))
+  /** The SQL functions [[register]] installs: (name, builder). */
+  private[graft] val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_dot" -> dotBuilder,
+    "graft_cosine" -> cosineBuilder,
+    "graft_bpe_count" -> bpeBuilder,
+    "graft_char_entropy" -> charEntropyBuilder)
 
-  /** Imperative registration for sessions built without the extension. */
+  /** Install graft's SQL functions, optimizer rule and planner strategy on
+    * `spark`, skipping each one the session already has — so callers such
+    * as [[graft.plans.TopKPerGroup.apply]] may call it on every use. */
   def register(spark: SparkSession): Unit = {
-    functions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
-    // imperative twins of injectOptimizerRule / injectPlannerStrategy for
-    // adopted sessions
     if (!spark.experimental.extraOptimizations.contains(graft.plans.DotProductFusion))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.DotProductFusion

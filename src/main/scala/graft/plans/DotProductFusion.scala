@@ -41,8 +41,7 @@ import graft.functions.DotProduct
   *    are semantically the same expression, where sizes cannot differ and
   *    the guard is dropped.
   *
-  * Injected via `GraftExtensions` (`injectOptimizerRule`) and imperatively
-  * through `spark.experimental.extraOptimizations` in
+  * Installed through `spark.experimental.extraOptimizations` by
   * `GraftExtensions.register`. Idempotent: the rewritten tree no longer
   * matches the pattern.
   */

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{DHashBands, MediaRecord}
 
@@ -230,7 +230,8 @@ object StreamingOps {
   /** The continuous ingest loop: the one `foreachBatch` shell every
     * store-folding stream in this module runs through. Each micro-batch
     * calls `body(batch, batchId)`; the body — one `ingestBatch*` method per
-    * keep rule — owns the store, the output and the durability posture,
+    * keep rule — owns its stores and outputs and commits them through
+    * [[storeBefore]] and [[overwriteBatch]],
     * e.g. `ingestLoop(docs, ckpt)(ingestBatchSpans(_, store, out, _))`.
     *
     * This is the reference's accumulate-across-rounds state model
@@ -239,10 +240,10 @@ object StreamingOps {
     * accumulator, each micro-batch folds into it, and unlike the
     * watermark-bounded dedup state inside [[curationStream]] it never
     * evicts. foreachBatch rather than a stateful operator because the state
-    * must (a) outlive the query and be shared with the BATCH pipeline
-    * ([[graft.operators.Dedup.incremental]] reads the same store) and (b)
-    * scale past executor state stores — it lives in the lake, joined per
-    * batch, not held per key in RocksDB.
+    * must (a) outlive the query — each body runs the keep rule of its batch
+    * twin (e.g. [[graft.operators.Dedup.dedupIncrementalOn]]) over a store
+    * of its own — and (b) scale past executor state stores — it lives in
+    * the lake, joined per batch, not held per key in RocksDB.
     *
     * `trigger` defaults to Spark's own (next batch as soon as the last one
     * finishes). `Trigger.AvailableNow()` is CATCH-UP mode: drain every
@@ -264,42 +265,90 @@ object StreamingOps {
       .foreachBatch(body)
       .start()
 
-  /** Read the store at `path` with its declared `schema`, or an empty frame
-    * if no batch has written it yet. Never schema inference: a zero-row
-    * `partitionBy` write leaves a directory with no parquet file in it, and
-    * inferring from that fails every later batch. Each `*Schema` below is
-    * exactly what its body writes. */
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    if (fsOf(spark, path).exists(new Path(path))) spark.read.schema(schema).parquet(path)
-    else empty(spark, schema)
+  private val BatchCol = "batch"
+  private val BatchDir = """batch=(\d+)""".r
 
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The commit protocol of every `ingestBatch*` body, in two helpers.
+    * Each output and store write of batch `batchId` goes through
+    * [[overwriteBatch]], which lands the rows as the `batch=<batchId>`
+    * partition of its path and replaces only that partition; each store
+    * read goes through [[storeBefore]], which sees only earlier batches'
+    * partitions. So a batch replayed after a crash at any write boundary
+    * — before its first write, between two, or after its last but before
+    * the checkpoint commits — reads the store its first attempt read and,
+    * being deterministic, rewrites the same rows over whatever subset of
+    * its partitions that attempt left (the D-Streams recomputation
+    * argument): every output and store ends as an uninterrupted run leaves
+    * it, with no row emitted twice and no row dropped against its own
+    * batch's store rows. `IngestReplaySpec` checks this per body.
+    *
+    * The store at `path` as of the batches before `batchId`, in its
+    * declared row format `schema` (the `batch` column dropped), or an
+    * empty frame if nothing has written it yet. Never schema inference: a
+    * zero-row partitioned write leaves a directory with no parquet file in
+    * it, and inferring from that fails every later batch. A store holding
+    * a partition newer than `batchId` was written under another checkpoint
+    * — folding into it would overwrite its batches without a word — so it
+    * is refused; the check lists partition directories and runs no job. */
+  private def storeBefore(spark: SparkSession, path: String, schema: StructType,
+      batchId: Long): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else {
+      val newer = fs.listStatus(p).map(_.getPath.getName).collect {
+        case BatchDir(id) if id.toLong > batchId => id.toLong
+      }
+      if (newer.nonEmpty)
+        throw new IllegalStateException(s"store $path holds batch " +
+          s"${newer.max}, newer than batch $batchId: it was written under " +
+          "another checkpoint")
+      spark.read.schema(schema.add(BatchCol, LongType)).parquet(path)
+        .where(col(BatchCol) < batchId)
+        .drop(BatchCol)
+    }
+  }
 
-  private def empty(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  /** Write `df` as the `batch=<batchId>` partition of `path`, replacing
+    * only that partition (dynamic overwrite) — the one write of this
+    * module's ingest bodies (see [[storeBefore]]). */
+  private def overwriteBatch(df: DataFrame, batchId: Long, path: String): Unit =
+    df.withColumn(BatchCol, lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(BatchCol)
+      .parquet(path)
 
-  private def fpStoreSchema = StructType(Seq(StructField("fp", StringType)))
+  /** The ingest bodies' store row formats: exactly what each body writes,
+    * before [[overwriteBatch]] adds the `batch` column. */
+  private def fpStoreSchema = StructType.fromDDL("fp STRING")
+  private def md5SigSchema = StructType.fromDDL("doc_id BIGINT, sig ARRAY<STRING>")
+  private def md5BandSchema = StructType.fromDDL("doc_id BIGINT, band INT, bh STRING")
+  private def imgFpSchema = Encoders.product[DHashBands].schema
+  private def bandSchema = StructType.fromDDL("doc_id BIGINT, band INT, bh BIGINT")
+  private def memSchema = StructType.fromDDL(
+    "vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE, cid BIGINT")
+  private def chunkMemSchema = StructType(StructField("chunk_hash", StringType) +:
+    memSchema.fields)
+  private def urlStoreSchema = StructType.fromDDL("canonical STRING")
+  private def chunkStoreSchema = StructType.fromDDL("chunk_hash STRING")
+  private def spanStoreSchema = StructType.fromDDL("h STRING")
+  private def driftStoreSchema = StructType.fromDDL("t STRING, c BIGINT")
 
   /** One micro-batch of the exact-dedup ingest loop: dedup `batch` against
-    * the store's CURRENT contents, emit the survivors, and only then append
-    * their fingerprints — so batch N+1 sees every doc batch N kept. Ordering
-    * is the crash-safety argument: appending fps BEFORE the survivors are
-    * durably emitted would, on a retry of a half-done batch, let the
-    * replayed batch anti-join against its own fingerprints and silently
-    * drop its output. This order instead makes a replay re-emit (standard
-    * foreachBatch at-least-once) and re-append fps (harmless — the store is
-    * semantically a set, and [[graft.operators.Dedup.dedupIncrementalOn]]
-    * collapses it through the anti-join).
+    * the stored fingerprints of earlier batches on the
+    * [[graft.operators.Dedup.dedupIncrementalOn]] keep rule, emit the
+    * survivors and store their fingerprints, so batch N+1 sees every doc
+    * batch N kept.
     *
     * The store (single `fp` column) is a plain parquet PATH, not the
-    * bucketed table: micro-batches append small fp files all day, and the
-    * nightly compaction rewrites the accumulated set through
+    * bucketed table: micro-batches add small fp partitions all day, and
+    * the nightly compaction rewrites the accumulated set through
     * [[graft.sources.ParquetSink.writeBucketed]] — bucketing is a
-    * compaction-time property, not something tiny streaming appends can
+    * compaction-time property, not something tiny streaming writes can
     * maintain. */
-  def ingestBatch(batch: DataFrame, storePath: String, outPath: String): Unit = {
+  def ingestBatch(batch: DataFrame, storePath: String, outPath: String,
+      batchId: Long): Unit = {
     val spark = batch.sparkSession
     // dedupIncrementalOn returns the (doc_id, fp) survivor keys; re-join the
     // batch so the emitted rows carry the full document payload — the same
@@ -309,35 +358,14 @@ object StreamingOps {
     // can replay the same row twice within one trigger, and a plain join
     // would re-expand the collapsed survivor back into duplicates.
     val survivors = graft.operators.Dedup
-      .dedupIncrementalOn(batch, readOrEmpty(spark, storePath, fpStoreSchema))
+      .dedupIncrementalOn(batch, storeBefore(spark, storePath, fpStoreSchema, batchId))
       .join(batch.dropDuplicates("doc_id"), Seq("doc_id"))
       .persist()
     try {
-      survivors.write.mode("append").parquet(outPath)
-      survivors.select(col("fp")).write.mode("append").parquet(storePath)
+      overwriteBatch(survivors, batchId, outPath)
+      overwriteBatch(survivors.select(col("fp")), batchId, storePath)
     } finally survivors.unpersist()
   }
-
-  /** The near-dup loop's stores: [[graft.operators.MinHashLSH.md5Signatures]]
-    * and [[graft.operators.MinHashLSH.md5Bands]] rows. */
-  private def md5SigSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("sig", ArrayType(StringType))))
-
-  private def md5BandSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("band", IntegerType),
-    StructField("bh", StringType)))
-
-  private def bandSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("bh",
-      org.apache.spark.sql.types.LongType)))
-
-  private def memSchema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("e", ArrayType(DoubleType)),
-    StructField("nrm", DoubleType), StructField("cid", LongType)))
 
   /** One micro-batch of the SEMANTIC ingest loop — the streaming twin of
     * [[graft.operators.Similarity.incrementalSemantic]]: assign the
@@ -345,26 +373,25 @@ object StreamingOps {
     * argmax, the same [[graft.operators.Similarity.ivfListsFrom]] the
     * batch pipeline runs), drop any vector with a stored same-cluster
     * member — or an earlier-id same-batch arrival — at cosine ≥ 0.99,
-    * emit survivors, then append the survivors' (vec_id, e, nrm, cid)
-    * member rows so the next batch sees them. Same emit-before-append
-    * crash-safety ordering as [[ingestBatch]]. The centroids are
-    * deliberately NOT retrained per batch: they are the causal history
-    * artifact (drift is a compaction-time concern — retrain nightly and
-    * re-assign the store, exactly when the fp loop re-buckets). */
+    * emit survivors and store their (vec_id, e, nrm, cid) member rows so
+    * the next batch sees them. The centroids are deliberately NOT
+    * retrained per batch: they are the causal history artifact (drift is
+    * a compaction-time concern — retrain nightly and re-assign the store,
+    * exactly when the fp loop re-buckets). */
   def ingestBatchSemantic(batch: DataFrame, centroids: DataFrame,
-      memPath: String, outPath: String): Unit = {
+      memPath: String, outPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     // at-least-once sources can replay a row within one trigger: collapse
     // per vec_id before assignment (see [[ingestBatch]])
     val bmem = graft.operators.Similarity.ivfListsFrom(normed(batch), centroids).persist()
     try {
       val survivors = bmem
-        .join(cosineDrops(readOrEmpty(spark, memPath, memSchema), bmem),
+        .join(cosineDrops(storeBefore(spark, memPath, memSchema, batchId), bmem),
           Seq("vec_id"), "left_anti")
         .persist()
       try {
-        survivors.select(col("vec_id"), col("cid")).write.mode("append").parquet(outPath)
-        survivors.write.mode("append").parquet(memPath)
+        overwriteBatch(survivors.select(col("vec_id"), col("cid")), batchId, outPath)
+        overwriteBatch(survivors, batchId, memPath)
       } finally survivors.unpersist()
     } finally bmem.unpersist()
   }
@@ -404,15 +431,14 @@ object StreamingOps {
     * `dedup_incremental_minhash_md5`, on the same keep rule
     * ([[graft.operators.MinHashLSH.dedupIncrementalMinHashOn]]): drop any
     * doc whose 8-lane md5 MinHash estimate says it near-duplicates a
-    * stored doc or an earlier-id batch doc, emit survivors, then append
-    * the survivors' signatures and band rows so the next batch sees them.
-    * Same emit-before-append crash-safety ordering as [[ingestBatch]];
-    * constant bytes per stored doc — the loop a crawl frontier runs when
-    * history is too large for a postings store. The batch signatures are
-    * built once: the keep rule probes with them and the store append
-    * writes the survivors' rows of them. */
+    * stored doc or an earlier-id batch doc, emit survivors and store their
+    * signatures and band rows so the next batch sees them — constant
+    * bytes per stored doc, the loop a crawl frontier runs when history is
+    * too large for a postings store. The batch signatures are built once:
+    * the keep rule probes with them and the store write takes the
+    * survivors' rows of them. */
   def ingestBatchNearDup(batch: DataFrame, sigPath: String, bandPath: String,
-      outPath: String): Unit = {
+      outPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val lsh = graft.operators.MinHashLSH
     val docs = batch.dropDuplicates("doc_id") // see [[ingestBatch]]
@@ -420,21 +446,18 @@ object StreamingOps {
     try {
       val survivors = lsh.dedupIncrementalMinHashSigs(
           docs, bsigs,
-          readOrEmpty(spark, sigPath, md5SigSchema),
-          readOrEmpty(spark, bandPath, md5BandSchema))
+          storeBefore(spark, sigPath, md5SigSchema, batchId),
+          storeBefore(spark, bandPath, md5BandSchema, batchId))
         .join(docs, Seq("doc_id"))
         .persist()
       try {
-        survivors.write.mode("append").parquet(outPath)
+        overwriteBatch(survivors, batchId, outPath)
         val sigs = bsigs.join(survivors.select(col("doc_id")), Seq("doc_id"))
-        sigs.write.mode("append").parquet(sigPath)
-        lsh.md5Bands(sigs).write.mode("append").parquet(bandPath)
+        overwriteBatch(sigs, batchId, sigPath)
+        overwriteBatch(lsh.md5Bands(sigs), batchId, bandPath)
       } finally survivors.unpersist()
     } finally bsigs.unpersist()
   }
-
-  /** The perceptual loop's fingerprint store: [[DHashBands]] rows. */
-  private def imgFpSchema = Encoders.product[DHashBands].schema
 
   /** One micro-batch of the PERCEPTUAL ingest loop — the streaming twin of
     * `dedup_incremental_image`, `_video` and `_audio`, one body for all
@@ -446,15 +469,14 @@ object StreamingOps {
     * hash), and every modality shares the store layout and the
     * [[graft.operators.ImageDedup.incrementalDropped]] keep rule verbatim:
     * drop anything within Hamming ≤ MaxDist of a stored fingerprint or an
-    * earlier-id batch fingerprint, emit survivors, then append the
-    * survivors' fingerprint and band rows so the next batch sees them.
-    * Same emit-before-append crash-safety ordering as [[ingestBatch]];
-    * undecodable payloads carry the −1 sentinel, match nothing, and are
-    * kept (a decode failure is a quality signal, not a duplicate). `batch`
-    * needs (doc_id, payload). */
+    * earlier-id batch fingerprint, emit survivors and store their
+    * fingerprint and band rows so the next batch sees them. Undecodable
+    * payloads carry the −1 sentinel, match nothing, and are kept (a decode
+    * failure is a quality signal, not a duplicate). `batch` needs
+    * (doc_id, payload). */
   def ingestBatchMedia(batch: DataFrame,
       fingerprints: (SparkSession, Dataset[MediaRecord]) => Dataset[DHashBands],
-      fpPath: String, bandPath: String, outPath: String): Unit = {
+      fpPath: String, bandPath: String, outPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     val collapsed = batch.dropDuplicates("doc_id") // see [[ingestBatch]]
@@ -474,30 +496,21 @@ object StreamingOps {
         .count() <= graft.operators.ImageDedup.MaxBroadcastProbeDocs
       val dropped = graft.operators.ImageDedup.incrementalDropped(
         bfp.filter(col("b0") >= 0),
-        readOrEmpty(spark, fpPath, imgFpSchema),
-        readOrEmpty(spark, bandPath, bandSchema), bounded)
+        storeBefore(spark, fpPath, imgFpSchema, batchId),
+        storeBefore(spark, bandPath, bandSchema, batchId), bounded)
       val survivors = bfp
         .join(dropped, Seq("doc_id"), "left_anti")
         .join(collapsed, Seq("doc_id"))
         .persist()
       try {
-        survivors.select(col("doc_id")).write.mode("append").parquet(outPath)
+        overwriteBatch(survivors.select(col("doc_id")), batchId, outPath)
         val sfp = survivors.filter(col("b0") >= 0)
           .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-        sfp.write.mode("append").parquet(fpPath)
-        graft.operators.ImageDedup.bandRows(sfp)
-          .write.mode("append").parquet(bandPath)
+        overwriteBatch(sfp, batchId, fpPath)
+        overwriteBatch(graft.operators.ImageDedup.bandRows(sfp), batchId, bandPath)
       } finally survivors.unpersist()
     } finally bfp.unpersist()
   }
-
-  private def urlStoreSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("canonical",
-      org.apache.spark.sql.types.StringType)))
-
-  private def chunkStoreSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("chunk_hash",
-      org.apache.spark.sql.types.StringType)))
 
   /** One micro-batch of the RAG-INDEX chunk ingest loop — the streaming
     * twin of `text_chunk_windows`'s duplicate signal, and the maintenance
@@ -507,32 +520,26 @@ object StreamingOps {
     * store, not claimed by an earlier (doc_id, chunk_id) in the same
     * batch), emit them (these are the rows a downstream embedder would
     * encode — a boilerplate paragraph arriving a thousand times costs one
-    * embedding), then append their hashes. Same emit-before-append
-    * crash-safety ordering as [[ingestBatch]]. `batch` needs
-    * (doc_id, text). */
-  def ingestBatchChunks(batch: DataFrame, storePath: String, outPath: String): Unit = {
+    * embedding) and store their hashes. `batch` needs (doc_id, text). */
+  def ingestBatchChunks(batch: DataFrame, storePath: String, outPath: String,
+      batchId: Long): Unit = {
     val spark = batch.sparkSession
     val ch = graft.operators.TrainingData.chunkTable(batch.dropDuplicates("doc_id"))
     val fresh = ch
       .groupBy(col("chunk_hash"))
       .agg(min(struct(col("doc_id"), col("chunk_id"), col("start_token"),
         col("n_tokens"))).as("m"))
-      .join(readOrEmpty(spark, storePath, chunkStoreSchema),
+      .join(storeBefore(spark, storePath, chunkStoreSchema, batchId),
         Seq("chunk_hash"), "left_anti")
       .select(col("m.doc_id").as("doc_id"), col("m.chunk_id").as("chunk_id"),
         col("m.start_token").as("start_token"), col("m.n_tokens").as("n_tokens"),
         col("chunk_hash"))
       .persist()
     try {
-      fresh.write.mode("append").parquet(outPath)
-      fresh.select(col("chunk_hash")).write.mode("append").parquet(storePath)
+      overwriteBatch(fresh, batchId, outPath)
+      overwriteBatch(fresh.select(col("chunk_hash")), batchId, storePath)
     } finally fresh.unpersist()
   }
-
-  /** The chunk loop's semantic store: a [[memSchema]] row keyed by its
-    * chunk and tagged with the batch that wrote it. */
-  private def chunkMemSchema = StructType(StructField("chunk_hash", StringType) +:
-    memSchema.fields :+ StructField("batch", LongType))
 
   /** [[ingestBatchChunks]] upgraded to `dedup_chunk_semantic`'s keep rule —
     * the RAG-index maintenance loop that drops NEAR-duplicate (not just
@@ -544,18 +551,10 @@ object StreamingOps {
     * broadcast centroid table, and drop any chunk with a stored
     * same-cluster member — or a smaller-vec_id same-batch arrival — at
     * cosine ≥ 0.99. Survivors are emitted (these rows ARE the embedder's
-    * input), then their member rows land so the next batch sees them.
-    * Same frozen-centroid discipline as [[ingestBatchSemantic]] (retrain
-    * at compaction time, not per batch). `batch` needs (doc_id, text).
-    *
-    * Replay-exact per batchId (round 14, advisor round 13 — the
-    * [[ingestBatchSpans]]/[[psiMonitorBatch]] discipline): BOTH writes
-    * land under the batch's own `batch(_id)=<id>` dynamic-overwrite
-    * partition, and the member-store read EXCLUDES that partition — so a
-    * batch replayed after ANY crash point (between the two writes, or
-    * after both but before checkpoint commit) dedups against exactly the
-    * pre-append store it first saw and OVERWRITES its own emit rows
-    * instead of duplicating embedder input. */
+    * input) and their member rows (a [[memSchema]] row keyed by its chunk)
+    * stored so the next batch sees them. Same frozen-centroid discipline
+    * as [[ingestBatchSemantic]] (retrain at compaction time, not per
+    * batch). `batch` needs (doc_id, text). */
   def ingestBatchChunkSemantic(batch: DataFrame, centroids: DataFrame,
       memPath: String, outPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
@@ -564,8 +563,7 @@ object StreamingOps {
       .agg(min(col("chunk_text")).as("chunk_text"),
         min(struct(col("doc_id"), col("chunk_id"), col("start_token"),
           col("n_tokens"))).as("m"))
-    val store = readOrEmpty(spark, memPath, chunkMemSchema)
-      .where(col("batch") =!= lit(batchId))
+    val store = storeBefore(spark, memPath, chunkMemSchema, batchId)
     // exact copies of stored content never reach the embedding stage
     val cand = sig.join(store.select(col("chunk_hash")), Seq("chunk_hash"), "left_anti")
     val emb = graft.operators.Similarity.chunkEmbed(cand)
@@ -586,47 +584,34 @@ object StreamingOps {
           .select(col("m.doc_id").as("doc_id"), col("m.chunk_id").as("chunk_id"),
             col("m.start_token").as("start_token"),
             col("m.n_tokens").as("n_tokens"), col("chunk_hash")),
-          "batch_id", batchId, outPath)
+          batchId, outPath)
         overwriteBatch(survivors
           .select(col("chunk_hash"), col("vec_id"), col("e"), col("nrm"), col("cid")),
-          "batch", batchId, memPath)
+          batchId, memPath)
       } finally survivors.unpersist()
     } finally assigned.unpersist()
   }
-
-  /** Write `df` as the `<partCol>=<batchId>` partition of `path`, replacing
-    * only that partition (dynamic overwrite): the replay-exact write of
-    * every batch-keyed store and output in this module — a replayed batch
-    * rewrites its own partition instead of appending a second copy. */
-  private def overwriteBatch(df: DataFrame, partCol: String, batchId: Long,
-      path: String): Unit =
-    df.withColumn(partCol, lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol)
-      .parquet(path)
 
   /** One micro-batch of the URL ingest loop — the streaming twin of
     * `dedup_incremental_url`, sharing [[graft.operators.Dedup.canonicalUrl]]
     * and the [[graft.operators.Dedup.urlSurvivorsOn]] keep rule verbatim:
     * canonicalize the batch's REAL urls, drop anything whose canonical
     * form is already stored or already claimed by an earlier-id batch row,
-    * emit survivors, then append the survivors' canonical keys so the next
-    * batch sees them. This is the ingest-time form URL dedup actually runs
-    * in production — the crawl frontier dropping re-crawls before content
-    * is ever fetched into the pipeline. Same emit-before-append
-    * crash-safety ordering as [[ingestBatch]]. `batch` needs
-    * (doc_id, url). */
-  def ingestBatchUrl(batch: DataFrame, storePath: String, outPath: String): Unit = {
+    * emit survivors and store their canonical keys so the next batch sees
+    * them. This is the ingest-time form URL dedup actually runs in
+    * production — the crawl frontier dropping re-crawls before content is
+    * ever fetched into the pipeline. `batch` needs (doc_id, url). */
+  def ingestBatchUrl(batch: DataFrame, storePath: String, outPath: String,
+      batchId: Long): Unit = {
     val spark = batch.sparkSession
     val k = batch.dropDuplicates("doc_id") // see [[ingestBatch]]
       .select(col("doc_id"), col("url"),
         graft.operators.Dedup.canonicalUrl(col("url")).as("canonical"))
     val survivors = graft.operators.Dedup.urlSurvivorsOn(
-      k, readOrEmpty(spark, storePath, urlStoreSchema)).persist()
+      k, storeBefore(spark, storePath, urlStoreSchema, batchId)).persist()
     try {
-      survivors.write.mode("append").parquet(outPath)
-      survivors.select(col("canonical")).write.mode("append").parquet(storePath)
+      overwriteBatch(survivors, batchId, outPath)
+      overwriteBatch(survivors.select(col("canonical")), batchId, storePath)
     } finally survivors.unpersist()
   }
 
@@ -683,88 +668,52 @@ object StreamingOps {
     * twin of `knn_ivf_pq_incremental` (faiss `add` as a stream): encode the
     * batch's vectors under the FROZEN artifacts — the coarse centroid table
     * and residual codebook passed in, trained at compaction time, never per
-    * batch — and land the (vec_id, codes, cid, nrm) rows under the batch's
-    * own `batch=<id>` dynamic-overwrite partition of the code store. The
-    * loop drops nothing: its product IS the incrementally growing serving
-    * index (a reader does `read.parquet(store)` and serves through the
-    * shared ADC tail). Replay-exact per batchId (the
-    * [[psiMonitorBatch]]/[[ingestBatchSpans]] discipline): a replayed batch
-    * overwrites its own partition — since encoding under frozen codebooks
-    * is per-vector deterministic, the rewrite is bit-identical, so the
-    * accumulated index equals a full re-encode after any crash pattern.
-    * Per-batch cost: one row-local broadcast assign + residual + subspace
-    * argmin over the batch only — history codes are never touched.
-    * `batch` needs (vec_id, embedding); `dim` is the embedding width. */
+    * batch — and store the (vec_id, codes, cid, nrm) rows in the code
+    * store. The loop drops nothing: its product IS the incrementally
+    * growing serving index (a reader does `read.parquet(store)` and serves
+    * through the shared ADC tail); encoding under frozen codebooks is
+    * per-vector deterministic, so the accumulated index equals a full
+    * re-encode. Per-batch cost: one row-local broadcast assign + residual +
+    * subspace argmin over the batch only — history codes are never
+    * touched. `batch` needs (vec_id, embedding); `dim` is the embedding
+    * width. */
   def ingestBatchIvfPq(batch: DataFrame, centroids: DataFrame, cb: DataFrame,
       dim: Int, storePath: String, batchId: Long): Unit = {
     val n = graft.operators.Similarity.withNorm(batch.dropDuplicates("vec_id"))
     overwriteBatch(graft.operators.Similarity
       .ivfPqIndex(n, dim, centroids, cb, materializeResid = false),
-      "batch", batchId, storePath)
+      batchId, storePath)
   }
-
-  private def spanStoreSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("h",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("batch",
-      org.apache.spark.sql.types.LongType)))
 
   /** One micro-batch of the SPAN-audit ingest loop (the streaming twin of
     * `dedup_span_incremental`, sharing its exact audit body): audit the
-    * batch's documents against the accumulated span-hash store, append the
-    * per-doc audit rows to `outPath`, then write the batch's NOVEL
-    * distinct hashes into the store under its own `batch=<id>` partition.
-    * The store write is IDEMPOTENT per batchId: a replay dynamic-overwrites
-    * the same partition, and the audit reads the store with the batch's own
-    * partition excluded — so even a crash AFTER the store write but before
-    * checkpoint commit replays against exactly the pre-append store state
-    * it first saw. Unlike the dedup loops this one DROPS NOTHING: span
-    * duplication is a per-doc quality signal (a doc sharing a paragraph is
-    * not a duplicate doc), so the loop's product is the audit trail + the
-    * store. Store growth is the corpus's distinct-span count (~16 B + hash
-    * per NEW span; verbatim re-ingests add zero rows). */
+    * batch's documents against the accumulated span-hash store, emit the
+    * per-doc audit rows, then store the batch's NOVEL distinct hashes.
+    * Unlike the dedup loops this one DROPS NOTHING: span duplication is a
+    * per-doc quality signal (a doc sharing a paragraph is not a duplicate
+    * doc), so the loop's product is the audit trail + the store. Store
+    * growth is the corpus's distinct-span count (~16 B + hash per NEW
+    * span; verbatim re-ingests add zero rows). */
   def ingestBatchSpans(batch: DataFrame, spanPath: String, outPath: String,
       batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    // Exclude this batch's own partition: present only on replay-after-crash,
-    // where including it would inflate n_hist_dup for the replayed rows.
-    val store = readOrEmpty(spark, spanPath, spanStoreSchema)
-      .where(col("batch") =!= lit(batchId))
-      .select(col("h"))
+    val store = storeBefore(batch.sparkSession, spanPath, spanStoreSchema, batchId)
     val g1 = graft.operators.Dedup.spanGroups(batch).persist()
     try {
-      graft.operators.Dedup.spanAuditOn(batch, store, g1)
-        .write.mode("append").parquet(outPath)
+      overwriteBatch(graft.operators.Dedup.spanAuditOn(batch, store, g1), batchId, outPath)
       overwriteBatch(g1.select(col("h")).distinct()
-        .join(store, Seq("h"), "left_anti"), "batch", batchId, spanPath)
+        .join(store, Seq("h"), "left_anti"), batchId, spanPath)
     } finally g1.unpersist()
   }
-
-  private def driftStoreSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("t",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("c",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("batch",
-      org.apache.spark.sql.types.LongType)))
 
   /** One micro-batch of the DRIFT monitor loop — the streaming twin of
     * `drift_token_psi`, sharing [[graft.operators.TrainingData.psiReport]]
     * verbatim: score the batch's token distribution against the
     * ACCUMULATED history counts (PSI in exact micro·log2, top-30 drifted
-    * terms + total), emit the report tagged with the batch id, then fold
-    * the batch's counts into the store. The store is the additive
-    * per-term count table (the `quality_nb_incremental` insight: counts
-    * are sufficient statistics, so history is never re-tokenized — each
-    * batch costs its own tokens plus a vocabulary-sized merge).
-    *
-    * Replay safety (the `ingestBatchSpans` discipline): counts land under
-    * the batch's own `batch=<id>` dynamic-overwrite partition — a crashed
-    * batch's partial write is overwritten, never double-counted — and the
-    * history read excludes that partition, so a replayed batch scores
-    * against exactly the pre-append store. The bootstrap batch (empty
-    * history) seeds the store and emits nothing: PSI against a zero
-    * distribution is all-new-vocabulary noise, not signal. */
+    * terms + total), emit the report, then fold the batch's counts into
+    * the store. The store is the additive per-term count table (the
+    * `quality_nb_incremental` insight: counts are sufficient statistics,
+    * so history is never re-tokenized — each batch costs its own tokens
+    * plus a vocabulary-sized merge). */
   def ingestBatchDrift(batch: DataFrame, storePath: String, outPath: String,
       batchId: Long): Unit =
     psiMonitorBatch(
@@ -777,26 +726,20 @@ object StreamingOps {
     * ([[ingestBatchDrift]] token counts, [[ingestBatchEmbeddingDrift]]
     * centroid-bin counts): score `bcnt` — this batch's (t, c) count
     * table — against the accumulated history counts, write the report,
-    * fold the counts in. One body so the replay/caching discipline can
-    * never drift between the twins:
+    * fold the counts in. One body so the caching discipline can never
+    * drift between the twins:
     *
-    *  - counts land under the batch's own `batch=<id>` dynamic-overwrite
-    *    partition and the history read EXCLUDES that partition, so a
-    *    crashed-and-replayed batch scores against exactly the pre-append
-    *    store (never double-counted);
     *  - psiReport re-reads its input four times, so the merge is persisted
     *    — and UNPERSISTED once the report is written, because this runs
     *    once per micro-batch and a leaked cache entry per batch would
-    *    accumulate for the life of the stream (advisor round 12);
+    *    accumulate for the life of the stream;
     *  - the bootstrap batch (empty history) seeds the store and emits
     *    nothing — PSI against a zero distribution is all-new-vocabulary
     *    noise, not signal. */
   private def psiMonitorBatch(bcntIn: DataFrame, storePath: String,
       outPath: String, batchId: Long): Unit = {
-    val spark = bcntIn.sparkSession
-    val store = readOrEmpty(spark, storePath, driftStoreSchema)
-      .where(col("batch") =!= lit(batchId))
-    val hist = store.groupBy(col("t")).agg(sum(col("c")).as("ch"))
+    val hist = storeBefore(bcntIn.sparkSession, storePath, driftStoreSchema, batchId)
+      .groupBy(col("t")).agg(sum(col("c")).as("ch"))
     val bcnt = bcntIn.persist()
     try {
       if (!hist.isEmpty) {
@@ -807,11 +750,10 @@ object StreamingOps {
             coalesce(col("c"), lit(0L)).as("cb"))
           .persist()
         try {
-          overwriteBatch(graft.operators.TrainingData.psiReport(m),
-            "batch_id", batchId, outPath)
+          overwriteBatch(graft.operators.TrainingData.psiReport(m), batchId, outPath)
         } finally m.unpersist()
       }
-      overwriteBatch(bcnt, "batch", batchId, storePath)
+      overwriteBatch(bcnt, batchId, storePath)
     } finally bcnt.unpersist()
   }
 
@@ -821,7 +763,7 @@ object StreamingOps {
     * persisted one-row table the IVF index serves from — broadcast
     * row-local argmax, zero shuffle), count per centroid bin, and hand
     * the (bin, count) table to the SHARED [[psiMonitorBatch]] tail —
-    * identical replay/caching/bootstrap discipline as the token monitor
+    * identical caching and bootstrap discipline as the token monitor
     * by construction. A fired alarm on this monitor is the re-train
     * trigger for the codebook itself — the batch `drift_embedding_psi`
     * measures the same thing offline. Counts are sufficient statistics —

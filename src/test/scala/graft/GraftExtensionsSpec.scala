@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
@@ -44,5 +45,22 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(r.getLong(1) === 0L)
     assert(r.getLong(2) === 0L, "empty string is the audit form's 0 sentinel")
     assert(r.isNullAt(3), "the raw SQL expression null-propagates")
+  }
+
+  test("register skips what the session already has: a second call leaves " +
+      "every registry entry, rule and strategy as it was") {
+    GraftExtensions.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    def entries() = GraftExtensions.functions.map { case (name, _) =>
+      registry.lookupFunction(FunctionIdentifier(name)).get }
+    val before = entries()
+    val (rules, strategies) =
+      (spark.experimental.extraOptimizations, spark.experimental.extraStrategies)
+    GraftExtensions.register(spark)
+    entries().zip(before).foreach { case (after, first) =>
+      assert(after eq first, s"${first.getName} was registered again")
+    }
+    assert(spark.experimental.extraOptimizations === rules)
+    assert(spark.experimental.extraStrategies === strategies)
   }
 }

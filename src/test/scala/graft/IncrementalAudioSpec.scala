@@ -69,9 +69,9 @@ class IncrementalAudioSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-audloop").toString
     val input = MemoryStream[(Long, Array[Byte])]
     val q = graft.streaming.StreamingOps.ingestLoop(
-      input.toDF().toDF("doc_id", "payload"), s"$tmp/ckpt")((b, _) =>
+      input.toDF().toDF("doc_id", "payload"), s"$tmp/ckpt")(
       graft.streaming.StreamingOps.ingestBatchMedia(
-        b, AudioDedup.fingerprints, s"$tmp/fp", s"$tmp/band", s"$tmp/out"))
+        _, AudioDedup.fingerprints, s"$tmp/fp", s"$tmp/band", s"$tmp/out", _))
     try {
       input.addData((1L, MediaCodec.encodeWav(8000, base)))
       q.processAllAvailable()

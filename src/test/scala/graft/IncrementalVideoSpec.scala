@@ -57,10 +57,10 @@ class IncrementalVideoSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft-vidloop").toString
     val input = MemoryStream[(Long, Array[Byte])]
     val q = graft.streaming.StreamingOps.ingestLoop(
-      input.toDF().toDF("doc_id", "payload"), s"$base/ckpt")((b, _) =>
-      graft.streaming.StreamingOps.ingestBatchMedia(b,
+      input.toDF().toDF("doc_id", "payload"), s"$base/ckpt")(
+      graft.streaming.StreamingOps.ingestBatchMedia(_,
         (s, ds) => graft.operators.VideoDedup.fingerprints(s, ds, _ => 1),
-        s"$base/fp", s"$base/band", s"$base/out"))
+        s"$base/fp", s"$base/band", s"$base/out", _))
     try {
       input.addData((1L, orig))
       q.processAllAvailable()

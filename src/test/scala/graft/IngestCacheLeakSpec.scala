@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{ImageDedup, MediaCodec, Similarity}
 import graft.streaming.StreamingOps
 
 /** An ingest body runs once per micro-batch for the life of a stream, so a
@@ -29,8 +26,8 @@ class IngestCacheLeakSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft-neardup-leak").toString
     val input = MemoryStream[UrlDoc] // (doc_id, url) stands in for (doc_id, text)
     val q = StreamingOps.ingestLoop(input.toDF().withColumnRenamed("url", "text"),
-      s"$base/ckpt")((b, _) => StreamingOps.ingestBatchNearDup(
-        b, s"$base/sig", s"$base/band", s"$base/out"))
+      s"$base/ckpt")(StreamingOps.ingestBatchNearDup(
+        _, s"$base/sig", s"$base/band", s"$base/out", _))
     val before = cached()
     val after = try (0 until 4).map { i =>
       input.addData(UrlDoc(2L * i, words("w")), UrlDoc(2L * i + 1, words(s"v$i")))
@@ -43,64 +40,15 @@ class IngestCacheLeakSpec extends AnyFunSuite {
   }
 
   test("no ingestBatch* body leaves a persisted RDD behind over 3 batches") {
-    import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-ingest-leak").toString
-    def texts(i: Int): DataFrame = Seq(
-      (10L * i, words("w")), (10L * i + 1, words(s"v$i")),
-      (10L * i + 2, words(s"v$i").split(" ").reverse.mkString(" ")))
-      .toDF("doc_id", "text")
-    def urls(i: Int): DataFrame = Seq((10L * i, "https://example.org/a"),
-      (10L * i + 1, s"http://www.example.org/p$i/")).toDF("doc_id", "url")
-    val rnd = new scala.util.Random(11)
-    def vecs(i: Int): DataFrame = (0 until 4).map(j =>
-      (10L * i + j, Array.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
-      .toDF("vec_id", "embedding")
-    def bmp(shade: Int): Array[Byte] = {
-      val rgb = Array.tabulate(3 * 16 * 16)(k => ((k / 3 % 16) * shade % 256).toByte)
-      MediaCodec.encodeBmp(16, 16, rgb)
-    }
-    def images(i: Int): DataFrame =
-      Seq((10L * i, bmp(16)), (10L * i + 1, bmp(3 + i))).toDF("doc_id", "payload")
-
-    // the frozen artifacts the bodies serve against, built (and cached)
+    // the frozen artifacts the bodies serve against are built (and cached)
     // before anything is counted
-    val hist = Similarity.withNorm((100L until 116L).map(j =>
-      (j, Array.fill(8)((rnd.nextDouble() * 2 - 1).toFloat))).toDF("vec_id", "embedding"))
-    val cents = Similarity.kmeansCentroidArray(hist, 2, 1).cache()
-    val cb = Similarity.ivfPqCodebook(hist, 8, cents, 1).cache()
-    val chunkCents = Similarity.centroidArray(Similarity.chunkEmbed(
-      graft.operators.TrainingData.chunkTexts(texts(9))
-        .groupBy(md5(col("chunk_text")).as("chunk_hash"))
-        .agg(min(col("chunk_text")).as("chunk_text"))), 4).cache()
-    Seq(cents, cb, chunkCents).foreach(_.count())
-
-    def at(name: String) = s"$base/$name"
-    val bodies: Seq[(String, Int => Unit)] = Seq(
-      "ingestBatch" -> (i => StreamingOps.ingestBatch(texts(i), at("fp"), at("fp_out"))),
-      "ingestBatchSemantic" -> (i => StreamingOps.ingestBatchSemantic(
-        vecs(i), cents, at("sem"), at("sem_out"))),
-      "ingestBatchNearDup" -> (i => StreamingOps.ingestBatchNearDup(
-        texts(i), at("nd_sig"), at("nd_band"), at("nd_out"))),
-      "ingestBatchMedia" -> (i => StreamingOps.ingestBatchMedia(
-        images(i), ImageDedup.fingerprints, at("img_fp"), at("img_band"), at("img_out"))),
-      "ingestBatchChunks" -> (i => StreamingOps.ingestBatchChunks(
-        texts(i), at("chunks"), at("chunks_out"))),
-      "ingestBatchChunkSemantic" -> (i => StreamingOps.ingestBatchChunkSemantic(
-        texts(i), chunkCents, at("chunk_mem"), at("chunk_sem_out"), i.toLong)),
-      "ingestBatchUrl" -> (i => StreamingOps.ingestBatchUrl(urls(i), at("url"), at("url_out"))),
-      "ingestBatchIvfPq" -> (i => StreamingOps.ingestBatchIvfPq(
-        vecs(i), cents, cb, 8, at("codes"), i.toLong)),
-      "ingestBatchSpans" -> (i => StreamingOps.ingestBatchSpans(
-        texts(i), at("spans"), at("spans_out"), i.toLong)),
-      "ingestBatchDrift" -> (i => StreamingOps.ingestBatchDrift(
-        texts(i), at("drift"), at("drift_out"), i.toLong)),
-      "ingestBatchEmbeddingDrift" -> (i => StreamingOps.ingestBatchEmbeddingDrift(
-        vecs(i), cents, at("edrift"), at("edrift_out"), i.toLong)))
-    val leaks = bodies.flatMap { case (name, body) =>
+    val bodies = IngestBodies(spark)
+    val leaks = bodies.flatMap { body =>
       val before = cached()
-      (0 until 3).foreach(body)
+      (0 until 3).foreach(body.run(base, _))
       val left = cached() -- before
-      if (left.isEmpty) None else Some(s"$name: ${left.size}")
+      if (left.isEmpty) None else Some(s"${body.name}: ${left.size}")
     }
     assert(leaks.isEmpty, s"bodies that leave cached RDDs behind: ${leaks.mkString("; ")}")
   }

@@ -41,9 +41,9 @@ class IngestImageSpec extends AnyFunSuite {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft-imgloop").toString
     val input = MemoryStream[StreamImg]
-    val q = StreamingOps.ingestLoop(input.toDF(), s"$base/ckpt")((b, _) =>
-      StreamingOps.ingestBatchMedia(b, ImageDedup.fingerprints,
-        s"$base/fp", s"$base/band", s"$base/out"))
+    val q = StreamingOps.ingestLoop(input.toDF(), s"$base/ckpt")(
+      StreamingOps.ingestBatchMedia(_, ImageDedup.fingerprints,
+        s"$base/fp", s"$base/band", s"$base/out", _))
     val a = hillBmp(32, 32, 12, 10)
     try {
       input.addData(StreamImg(1, a), StreamImg(2, rampBmp(32, 32, vertical = true)))

@@ -404,7 +404,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val (storePath, outPath, ckpt) = (s"$base/store", s"$base/out", s"$base/ckpt")
     val input = MemoryStream[StreamDoc]
     val q = StreamingOps.ingestLoop(input.toDF().select("doc_id", "text"), ckpt)(
-      (b, _) => StreamingOps.ingestBatch(b, storePath, outPath))
+      StreamingOps.ingestBatch(_, storePath, outPath, _))
     val a = "alpha beta gamma"
     val b = "delta epsilon zeta"
     val c = "eta theta iota"
@@ -449,7 +449,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     input.addData(StreamDoc(1, "s0", a, t(0)), StreamDoc(2, "s0", b, t(0)))
     val q1 = StreamingOps.ingestLoop(
       input.toDF().select("doc_id", "text"), ckpt, Trigger.AvailableNow())(
-      (b, _) => StreamingOps.ingestBatch(b, storePath, outPath))
+      StreamingOps.ingestBatch(_, storePath, outPath, _))
     assert(q1.awaitTermination(60000), "AvailableNow must terminate on its own")
     assert(spark.read.parquet(outPath).select("doc_id").collect()
       .map(_.getLong(0)).toSet === Set(1L, 2L))
@@ -460,7 +460,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       StreamDoc(4, "s1", c, t(1)))
     val q2 = StreamingOps.ingestLoop(
       input.toDF().select("doc_id", "text"), ckpt, Trigger.AvailableNow())(
-      (b, _) => StreamingOps.ingestBatch(b, storePath, outPath))
+      StreamingOps.ingestBatch(_, storePath, outPath, _))
     assert(q2.awaitTermination(60000), "second catch-up must terminate on its own")
     val kept = spark.read.parquet(outPath).select("doc_id").collect()
       .map(_.getLong(0)).toSet
@@ -474,7 +474,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft-neardup").toString
     val input = MemoryStream[StreamDoc]
     val q = StreamingOps.ingestLoop(input.toDF().select("doc_id", "text"), s"$base/ckpt")(
-      (b, _) => StreamingOps.ingestBatchNearDup(b, s"$base/sig", s"$base/band", s"$base/out"))
+      StreamingOps.ingestBatchNearDup(_, s"$base/sig", s"$base/band", s"$base/out", _))
     val long = (1 to 20).map(i => s"w$i").mkString(" ")
     val novel = (1 to 20).map(i => s"v$i").mkString(" ")
     try {
@@ -561,7 +561,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       input.addData(StreamDoc(2, "s0", steady, t(1)))
       q.processAllAvailable()
       val r1 = spark.read.parquet(s"$base/out")
-        .filter(col("batch_id") === 1L).collect()
+        .filter(col("batch") === 1L).collect()
       assert(r1.nonEmpty, "steady batch must emit a report")
       val quietTotal = r1.head.getAs[Long]("total_psi_micro")
 
@@ -569,7 +569,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       input.addData(StreamDoc(3, "s0", "omega omega omega beta gamma", t(2)))
       q.processAllAvailable()
       val r2 = spark.read.parquet(s"$base/out")
-        .filter(col("batch_id") === 2L)
+        .filter(col("batch") === 2L)
         .orderBy(col("contrib_micro").desc, col("term")).collect()
       val drifted = r2.head.getAs[String]("term")
       assert(drifted === "omega" || drifted === "alpha",
@@ -594,7 +594,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val rep2 = spark.read.parquet(s"$base/out9")
       .select("term", "contrib_micro").collect().map(r => (r.getString(0), r.getLong(1)))
     assert(rep2.length === rep1.length && rep2.toSet === rep1.toSet,
-      "replayed report must overwrite its own batch_id partition, not append")
+      "replayed report must overwrite its own batch partition, not append")
   }
 
   test("ingestLoopUrl drops a re-crawled URL variant stored one batch earlier") {
@@ -603,7 +603,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft-urlloop").toString
     val input = MemoryStream[UrlDoc]
     val q = StreamingOps.ingestLoop(input.toDF(), s"$base/ckpt")(
-      (b, _) => StreamingOps.ingestBatchUrl(b, s"$base/store", s"$base/out"))
+      StreamingOps.ingestBatchUrl(_, s"$base/store", s"$base/out", _))
     try {
       input.addData(
         UrlDoc(1L, "https://example.org/a"),
@@ -807,7 +807,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val input = MemoryStream[UrlDoc] // (doc_id, url) stands in for (doc_id, text)
     val q = StreamingOps.ingestLoop(
       input.toDF().withColumnRenamed("url", "text"), s"$base/ckpt")(
-      (b, _) => StreamingOps.ingestBatchChunks(b, s"$base/store", s"$base/out"))
+      StreamingOps.ingestBatchChunks(_, s"$base/store", s"$base/out", _))
     val para = (1 to 32).map(i => s"w$i").mkString(" ")   // one full window
     val tail = (1 to 8).map(i => s"x$i").mkString(" ")
     try {
@@ -915,20 +915,17 @@ class StreamingOpsSpec extends AnyFunSuite {
     StreamingOps.ingestBatchSpans(b1, s"$base/spans", s"$base/out1", 1L)
     val firstStore = spark.read.parquet(s"$base/spans")
       .select("h").collect().map(_.getString(0)).sorted
-    val firstAudit = spark.read.parquet(s"$base/out1")
-      .select("doc_id", "n_hist_dup").collect().map(r => (r.getLong(0), r.getLong(1)))
+    def auditRows() = spark.read.parquet(s"$base/out1").collect().map(_.toString).sorted.toSeq
+    val firstAudit = auditRows()
     // simulate the crash-after-store-append replay: same batchId again
     StreamingOps.ingestBatchSpans(b1, s"$base/spans", s"$base/out1", 1L)
     val replayStore = spark.read.parquet(s"$base/spans")
       .select("h").collect().map(_.getString(0)).sorted
     assert(replayStore === firstStore, "replay must not grow the store")
-    // the replayed audit rows are byte-identical to the first attempt's —
-    // n_hist_dup did NOT inflate from the batch's own already-stored spans
-    val audits = spark.read.parquet(s"$base/out1")
-      .select("doc_id", "n_hist_dup").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(audits.length === 2 * firstAudit.length)
-    assert(audits.toSet === firstAudit.toSet,
-      s"replay audit drifted: ${audits.toSet} vs ${firstAudit.toSet}")
+    // the replay overwrites the first attempt's audit rows with the same
+    // rows — n_hist_dup did NOT inflate from the batch's own already-stored
+    // spans, and no row is emitted twice
+    assert(auditRows() === firstAudit, "replay audit drifted or duplicated")
   }
 
   test("ingestBatchSpans: a first batch with no full window leaves an empty " +
@@ -983,7 +980,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       // steady batch: same 3:1 shape → quiet report
       input.addData(nearE1(5), nearE1(6), nearE1(7), nearE2(8))
       q.processAllAvailable()
-      val r1 = spark.read.parquet(s"$base/out").filter(col("batch_id") === 1L).collect()
+      val r1 = spark.read.parquet(s"$base/out").filter(col("batch") === 1L).collect()
       assert(r1.nonEmpty, "steady batch must emit a report")
       val quietTotal = r1.head.getAs[Long]("total_psi_micro")
 
@@ -992,7 +989,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       input.addData(nearE2(9), nearE2(10), nearE2(11), nearE1(12))
       q.processAllAvailable()
       val r2 = spark.read.parquet(s"$base/out")
-        .filter(col("batch_id") === 2L)
+        .filter(col("batch") === 2L)
         .orderBy(col("contrib_micro").desc, col("term")).collect()
       assert(r2.head.getAs[Long]("total_psi_micro") > quietTotal,
         "cluster-mass shift must raise total PSI above the steady level")
@@ -1014,7 +1011,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val rep2 = spark.read.parquet(s"$base/out9")
       .select("term", "contrib_micro").collect().map(r => (r.getString(0), r.getLong(1)))
     assert(rep2.length === rep1.length && rep2.toSet === rep1.toSet,
-      "replayed report must overwrite its own batch_id partition, not append")
+      "replayed report must overwrite its own batch partition, not append")
   }
 
   test("ingestLoopSemantic drops cross-batch semantic dups via the accumulated member store") {
@@ -1034,7 +1031,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val cents = graft.operators.Similarity.centroidArray(boot, 2)
     val q = StreamingOps.ingestLoop(
       input.toDF().select("vec_id", "embedding"), s"$base/ckpt")(
-      (b, _) => StreamingOps.ingestBatchSemantic(b, cents, s"$base/mem", s"$base/out"))
+      StreamingOps.ingestBatchSemantic(_, cents, s"$base/mem", s"$base/out", _))
     try {
       // batch 1: v2 is a near-exact copy of v1 (same cluster, cos ≈ 1) —
       // dropped in-batch by the first-arrival rule; v3 lives in the other
