@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.sources.ModelStore
 
 /** Document deduplication for training-data pipelines: exact (content hash),
   * normalized fingerprint (order-insensitive token set), and n-gram-shingle
@@ -790,17 +791,6 @@ object Dedup {
   def storeBuckets(spark: SparkSession): Int =
     spark.conf.get("spark.sql.shuffle.partitions").toInt
 
-  /** Store table names are keyed by the source directory: reusing a store
-    * built from DIFFERENT data would be silently wrong, while reusing the
-    * store built from the SAME directory is exactly the incremental
-    * contract (history is built once, then amortized across every batch —
-    * the registered queries' first execution per JVM bootstraps it via the
-    * real write path; later executions measure the actual daily unit of
-    * work). */
-  private[graft] def dirKey(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-
   /** Distinct token-set fingerprints of a corpus snapshot: the rows a
     * production pipeline appends to its persisted fingerprint store after
     * each ingest (fp-only — ~32 bytes/doc, the 100 TB corpus compresses to
@@ -848,10 +838,8 @@ object Dedup {
       |  AND NOT EXISTS (SELECT 1 FROM nw a WHERE a.fp = b.fp AND a.doc_id < b.doc_id)
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val store = graft.sources.ParquetSink.tableOrBuild(s, s"graft_fp_store_${dirKey(d)}") {
-      graft.sources.ParquetSink.writeBucketed(
-        fingerprintSnapshot(docs.filter(col("doc_id") % 10 < 8)),
-        s"graft_fp_store_${dirKey(d)}", "fp", storeBuckets(s))
+    val store = ModelStore.table(s, d, "documents.parquet", "fp_store", Some("fp")) {
+      fingerprintSnapshot(docs.filter(col("doc_id") % 10 < 8))
     }
     dedupIncrementalOn(docs.filter(col("doc_id") % 10 >= 8), store)
   }
@@ -1049,14 +1037,11 @@ object Dedup {
     * other reads. */
   private def shingleStores(s: SparkSession, d: String,
       docs: DataFrame): (DataFrame, DataFrame) = {
-    val (postTbl, stopTbl) = (s"graft_sh_store_${dirKey(d)}", s"graft_sh_stop_${dirKey(d)}")
-    val postStore = graft.sources.ParquetSink.tableOrBuild(s, postTbl) {
-      val (postings, stop) = shingleStoreSnapshot(docs.filter(col("doc_id") % 10 < 8))
-      // the stoplist ships whole (broadcast side) — unbucketed staged table
-      graft.sources.ParquetSink.writeTable(stop, stopTbl)
-      graft.sources.ParquetSink.writeBucketed(postings, postTbl, "sid", storeBuckets(s))
-    }
-    (postStore, s.table(stopTbl))
+    // one snapshot feeds both builds (its shingle explode is materialized)
+    lazy val snap = shingleStoreSnapshot(docs.filter(col("doc_id") % 10 < 8))
+    // the stoplist ships whole (broadcast side) — unbucketed table
+    val stop = ModelStore.table(s, d, "documents.parquet", "sh_stop", None)(snap._2)
+    (ModelStore.table(s, d, "documents.parquet", "sh_store", Some("sid"))(snap._1), stop)
   }
 
   /** Incremental CONTAINMENT dedup — the TENTH incremental-family member,
@@ -1096,8 +1081,7 @@ object Dedup {
   }
 
   /** Registered form: probes the Jaccard twin's stores (shared
-    * `tableOrBuild` names — whichever query runs first builds, the other
-    * reads). */
+    * store names — whichever query runs first builds, the other reads). */
   val incrementalContainment: QueryDef = QueryDef.sql(
     "dedup_incremental_containment",
     s"""WITH $shinglesCte,
@@ -1254,11 +1238,8 @@ object Dedup {
       |LEFT JOIN per ON d.doc_id = per.doc_id
       |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val storeT = s"graft_span_store_${dirKey(d)}"
-    val store = graft.sources.ParquetSink.tableOrBuild(s, storeT) {
-      graft.sources.ParquetSink.writeBucketed(
-        spanHashes(docs.filter(col("doc_id") % 10 < 8)).select(col("h")).distinct(),
-        storeT, "h", storeBuckets(s))
+    val store = ModelStore.table(s, d, "documents.parquet", "span_store", Some("h")) {
+      spanHashes(docs.filter(col("doc_id") % 10 < 8)).select(col("h")).distinct()
     }
     val newDocs = docs.filter(col("doc_id") % 10 >= 8)
     spanAuditOn(newDocs, store, Tables.materialize(spanGroups(newDocs)))
@@ -1632,9 +1613,6 @@ object Dedup {
     * -pairs guard discipline). The probe is one bounded limit+count. */
   val MaxBroadcastEvalDocs = 20000L
 
-  /** One-shot latch for [[spanExtentQuery]]'s retired-prefix sweep. */
-  private val legacySpanStoreSwept = new java.util.concurrent.atomic.AtomicBoolean(false)
-
   /** Second broadcast gate, on the PAYLOAD rather than the doc count: the
     * shipped side is the exploded span stream at ~one row per token, and an
     * UnsafeRow of (doc_id long, pos int, h md5-hex string) is ≈64 bytes —
@@ -1658,34 +1636,11 @@ object Dedup {
     * `seed_ok` stamped from the causal history-occurrence cap at build —
     * and probe it with `batchPred`'s slice through
     * [[spanLongestIncrementalOn]]. */
-  private def spanExtentQuery(s: SparkSession, d: String, storePrefix: String,
+  private def spanExtentQuery(s: SparkSession, d: String, storeTag: String,
       histPred: Column => Column, batchPred: Column => Column,
       broadcastBatch: Boolean = false): DataFrame = {
     val docs = Tables.documents(s, d)
-    val storeT = s"${storePrefix}_${dirKey(d)}"
-    // drop the RETIRED pre-seed_ok store generation: the prefix was renamed
-    // graft_spanpos_store_* -> graft_spanpos2_store_* when the schema gained
-    // seed_ok, and without an explicit prune every warehouse built before the
-    // rename keeps a dead store-sized managed table per corpus dir forever —
-    // exactly the leak pruneStaleTables exists to close. `storeT` never
-    // matches the old prefix, so this is a pure legacy sweep — and a
-    // ONCE-PER-JVM one: the catalog listTables round-trip is not free, and
-    // paying it on every query construction would tax the two registered
-    // span-extent queries' timed runs for a sweep that can only ever find
-    // something on the first look.
-    // the latch is released on sweep FAILURE (r19 ADVICE): a transient
-    // metastore/FS error during the listTables round-trip must not burn the
-    // once-per-JVM shot, or the stale tables the sweep exists to prune
-    // silently leak for the rest of the JVM — reset-and-rethrow keeps the
-    // failure loud AND the retry live on the next query construction.
-    if (legacySpanStoreSwept.compareAndSet(false, true))
-      try graft.sources.ParquetSink.pruneStaleTables(s, "graft_spanpos_store_", storeT)
-      catch {
-        case e: Throwable =>
-          legacySpanStoreSwept.set(false)
-          throw e
-      }
-    val store = graft.sources.ParquetSink.tableOrBuild(s, storeT) {
+    val store = ModelStore.table(s, d, "documents.parquet", storeTag, Some("h")) {
       // the history span explode feeds the df-cap aggregate AND the join
       // side — materialize, or the dominant stage runs twice at bootstrap
       // (the spanLongestOn discipline)
@@ -1699,10 +1654,7 @@ object Dedup {
       // split the reported extent (r17 ADVICE; the one-shot's seed/extend
       // split, causal form)
       val occ = hist.groupBy(col("h")).agg(count(lit(1)).as("o"))
-      graft.sources.ParquetSink.writeBucketed(
-        hist.join(occ, Seq("h"))
-          .withColumn("seed_ok", col("o") <= MaxSpanDf).drop("o"),
-        storeT, "h", storeBuckets(s))
+      hist.join(occ, Seq("h")).withColumn("seed_ok", col("o") <= MaxSpanDf).drop("o")
     }
     val probe = docs.filter(batchPred(col("doc_id")))
     // the broadcast fast path only below BOTH caps. The doc-count gate is the
@@ -1734,7 +1686,7 @@ object Dedup {
     "dedup_incremental_span_longest",
     spanExtentOracleSql("doc_id % 10 < 8", "doc_id % 10 >= 8",
       "longest_hist_run_tokens", "best_hist_doc", "n_hist_partners")) { (s, d) =>
-    spanExtentQuery(s, d, "graft_spanpos2_store",
+    spanExtentQuery(s, d, "spanpos2_store",
       id => id % 10 < 8, id => id % 10 >= 8)
   }
 
@@ -1764,7 +1716,7 @@ object Dedup {
     "contamination_span",
     spanExtentOracleSql("doc_id % 97 <> 0", "doc_id % 97 = 0",
       "longest_train_run_tokens", "top_train_doc", "n_train_partners")) { (s, d) =>
-    spanExtentQuery(s, d, "graft_spancontam_store",
+    spanExtentQuery(s, d, "spancontam_store",
       id => id % 97 =!= 0, id => id % 97 === 0, broadcastBatch = true)
       .withColumnRenamed("longest_hist_run_tokens", "longest_train_run_tokens")
       .withColumnRenamed("best_hist_doc", "top_train_doc")
@@ -2111,11 +2063,8 @@ object Dedup {
       |  AND NOT EXISTS (SELECT 1 FROM nw x WHERE x.canonical = b.canonical AND x.doc_id < b.doc_id)
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
     val k = urlCanonicalized(Tables.documents(s, d))
-    val storeT = s"graft_url_store_${dirKey(d)}"
-    val store = graft.sources.ParquetSink.tableOrBuild(s, storeT) {
-      graft.sources.ParquetSink.writeBucketed(
-        k.filter(col("doc_id") % 10 < 8).select(col("canonical")).distinct(),
-        storeT, "canonical", storeBuckets(s))
+    val store = ModelStore.table(s, d, "documents.parquet", "url_store", Some("canonical")) {
+      k.filter(col("doc_id") % 10 < 8).select(col("canonical")).distinct()
     }
     urlSurvivorsOn(k.filter(col("doc_id") % 10 >= 8), store)
       .orderBy("doc_id")
@@ -2222,31 +2171,15 @@ object Dedup {
     val kf = urlMergeKf(s, d)
     def slice(keep: Column): DataFrame =
       kf.filter(keep).select(col("canonical"), col("doc_id"), col("url"), col("fp"))
-    // content-keyed, not just path-keyed (advisor round 13): unlike the
-    // append-only incremental stores, this store is fully derivable from
-    // the corpus, so regenerating the corpus in place must produce FRESH
-    // store/merged generations, never serve stale fingerprints
-    val ck = graft.sources.ModelStore.contentKey(s, d, "documents.parquet")
-    val storeT = s"graft_urlfp_store_${dirKey(d)}_$ck"
-    // a corpus regeneration changes ck: prune the previous generation's
-    // tables or every regeneration leaks them (the ModelStore discipline)
-    graft.sources.ParquetSink.pruneStaleTables(s, s"graft_urlfp_store_${dirKey(d)}_", storeT)
-    val store = graft.sources.ParquetSink.tableOrBuild(s, storeT) {
-      graft.sources.ParquetSink.writeBucketed(
-        slice(urlMergeHistKeep), storeT, "canonical", storeBuckets(s))
-    }
+    val store = ModelStore.table(s, d, "documents.parquet", "urlfp_store",
+      Some("canonical"))(slice(urlMergeHistKeep))
     val batch = slice(urlMergeBatchKeep)
-    // the merge target is a separate generation so the pre-merge store
-    // stays the probe baseline run over run (re-running re-merges the
-    // same batch — a fixpoint)
-    val mergedT = s"graft_urlfp_merged_${dirKey(d)}_$ck"
-    graft.sources.ParquetSink.pruneStaleTables(s, s"graft_urlfp_merged_${dirKey(d)}_", mergedT)
-    graft.sources.ParquetSink.tableOrBuild(s, mergedT) {
-      graft.sources.ParquetSink.writeBucketed(store, mergedT, "canonical",
-        graft.sources.ParquetSink.bucketCount(s, storeT)
-          .getOrElse(storeBuckets(s)))
-    }
-    val merged = graft.sources.ParquetSink.mergeBucketed(batch, mergedT, "canonical")
+    // the merge target is a separate table so the pre-merge store stays
+    // the probe baseline run over run (re-running re-merges the same
+    // batch — a fixpoint)
+    ModelStore.table(s, d, "documents.parquet", "urlfp_merged", Some("canonical"))(store)
+    val merged = graft.sources.ParquetSink.mergeBucketed(batch,
+      ModelStore.name(s, d, "documents.parquet", "urlfp_merged"), "canonical")
     urlMergeStatus(merged, store, batch)
   }
 
@@ -2270,24 +2203,13 @@ object Dedup {
     def slice(keep: Column): DataFrame =
       kf.filter(keep).select(col("canonical"), col("doc_id"), col("url"),
         col("fp")).withColumn("part", part)
-    val ck = graft.sources.ModelStore.contentKey(s, d, "documents.parquet")
-    val storeT = s"graft_urlfpp_store_${dirKey(d)}_$ck"
-    graft.sources.ParquetSink.pruneStaleTables(s, s"graft_urlfpp_store_${dirKey(d)}_", storeT)
-    val store = graft.sources.ParquetSink.tableOrBuild(s, storeT) {
-      graft.sources.ParquetSink.writePartitionedBucketed(
-        slice(urlMergeHistKeep), storeT, "part", "canonical", storeBuckets(s))
-    }
+    val store = ModelStore.table(s, d, "documents.parquet", "urlfpp_store",
+      Some("canonical"), Some("part"))(slice(urlMergeHistKeep))
     val batch = slice(urlMergeBatchKeep)
-    val mergedT = s"graft_urlfpp_merged_${dirKey(d)}_$ck"
-    graft.sources.ParquetSink.pruneStaleTables(s, s"graft_urlfpp_merged_${dirKey(d)}_", mergedT)
-    graft.sources.ParquetSink.tableOrBuild(s, mergedT) {
-      graft.sources.ParquetSink.writePartitionedBucketed(store, mergedT,
-        "part", "canonical",
-        graft.sources.ParquetSink.bucketCount(s, storeT)
-          .getOrElse(storeBuckets(s)))
-    }
-    val merged = graft.sources.ParquetSink.mergePartitionedBucketed(
-      batch, mergedT, "part", "canonical")
+    ModelStore.table(s, d, "documents.parquet", "urlfpp_merged",
+      Some("canonical"), Some("part"))(store)
+    val merged = graft.sources.ParquetSink.mergePartitionedBucketed(batch,
+      ModelStore.name(s, d, "documents.parquet", "urlfpp_merged"), "part", "canonical")
     urlMergeStatus(merged, store, batch)
   }
 

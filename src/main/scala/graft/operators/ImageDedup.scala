@@ -533,21 +533,19 @@ private[graft] final case class MediaFixture(tag: String,
         |${ImageDedup.incrementalTailSql}""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       def fps(df: DataFrame) = hash(s, batchInput(df)).filter(col("b0") >= 0)
-      val fpT = s"graft_${tag}_fp_store_${Dedup.dirKey(d)}"
-      val bandT = s"graft_${tag}_band_store_${Dedup.dirKey(d)}"
-      val fpStore = graft.sources.ParquetSink.tableOrBuild(s, fpT) {
+      def store(kind: String, key: String)(build: => DataFrame): DataFrame =
+        graft.sources.ModelStore.table(s, d, "documents.parquet",
+          s"${tag}_${kind}_store", Some(key))(build)
+      val fpStore = store("fp", "doc_id") {
         // ONE ROW PER SIGNATURE (earliest id as representative): the store
         // is probed at signature granularity, and a mega-duplicate group
         // must cost one row, not its copy count
-        val hf = fps(docs.filter(col("doc_id") % 10 < 8))
+        fps(docs.filter(col("doc_id") % 10 < 8))
           .groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
           .agg(min(col("doc_id")).as("doc_id"))
           .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-        graft.sources.ParquetSink.writeBucketed(
-          ImageDedup.bandRows(hf), bandT, "bh", Dedup.storeBuckets(s))
-        graft.sources.ParquetSink.writeBucketed(
-          hf, fpT, "doc_id", Dedup.storeBuckets(s))
       }
+      val bandStore = store("band", "bh")(ImageDedup.bandRows(fpStore))
       val newDocs = docs.filter(col("doc_id") % 10 >= 8)
       // no cache: the fused probe body consumes the decode exactly once
       val bfp = fps(newDocs)
@@ -556,7 +554,7 @@ private[graft] final case class MediaFixture(tag: String,
       // ImageDedup.MaxBroadcastProbeDocs
       val bounded = newDocs.limit((ImageDedup.MaxBroadcastProbeDocs + 1).toInt)
         .count() <= ImageDedup.MaxBroadcastProbeDocs
-      val dropped = ImageDedup.incrementalDropped(bfp, fpStore, s.table(bandT), bounded)
+      val dropped = ImageDedup.incrementalDropped(bfp, fpStore, bandStore, bounded)
       newDocs.select(col("doc_id"))
         .join(if (bounded) broadcast(dropped) else dropped.hint("shuffle_hash"),
           Seq("doc_id"), "left_anti")

@@ -300,17 +300,13 @@ object MinHashLSH {
       |  AND doc_id NOT IN (SELECT doc_id FROM batchm)
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val sigT = s"graft_sig_md5_store_${Dedup.dirKey(d)}"
-    val bandT = s"graft_band_md5_store_${Dedup.dirKey(d)}"
-    val sigStore = graft.sources.ParquetSink.tableOrBuild(s, sigT) {
-      val hs = md5Signatures(shingleArrays(docs.filter(col("doc_id") % 10 < 8)))
-      graft.sources.ParquetSink.writeBucketed(
-        md5Bands(hs), bandT, "bh", Dedup.storeBuckets(s))
-      graft.sources.ParquetSink.writeBucketed(
-        hs, sigT, "doc_id", Dedup.storeBuckets(s))
+    def store(tag: String, key: String)(build: => DataFrame): DataFrame =
+      graft.sources.ModelStore.table(s, d, "documents.parquet", tag, Some(key))(build)
+    val sigStore = store("sig_md5_store", "doc_id") {
+      md5Signatures(shingleArrays(docs.filter(col("doc_id") % 10 < 8)))
     }
-    dedupIncrementalMinHashOn(
-      docs.filter(col("doc_id") % 10 >= 8), sigStore, s.table(bandT))
+    dedupIncrementalMinHashOn(docs.filter(col("doc_id") % 10 >= 8), sigStore,
+      store("band_md5_store", "bh")(md5Bands(sigStore)))
   }
 
   /** ceil(Threshold · Md5Lanes) lanes must agree. */

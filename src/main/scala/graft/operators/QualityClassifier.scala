@@ -359,12 +359,10 @@ object QualityClassifier {
       .groupBy(col("t"))
       .agg(sum(when(col("label") === 1, 1L).otherwise(0L)).as("cg"),
         sum(when(col("label") === 0, 1L).otherwise(0L)).as("cb"))
-    val store = graft.sources.ParquetSink.tableOrBuild(
-        s, s"graft_nb_store_${Dedup.dirKey(d)}") {
-      graft.sources.ParquetSink.writeBucketed(
-        countsOf(lab.filter(col("doc_id") % 10 < 8))
-          .withColumnRenamed("cg", "cg_hist").withColumnRenamed("cb", "cb_hist"),
-        s"graft_nb_store_${Dedup.dirKey(d)}", "t", Dedup.storeBuckets(s))
+    val store = graft.sources.ModelStore.table(s, d, "documents.parquet",
+        "nb_store", Some("t")) {
+      countsOf(lab.filter(col("doc_id") % 10 < 8))
+        .withColumnRenamed("cg", "cg_hist").withColumnRenamed("cb", "cb_hist")
     }
     val batch = countsOf(lab.filter(col("doc_id") % 10 >= 8))
       .withColumnRenamed("cg", "cg_batch").withColumnRenamed("cb", "cb_batch")

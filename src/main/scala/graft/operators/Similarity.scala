@@ -731,12 +731,6 @@ object Similarity {
     * would keep serving an index whose vec_ids belong to the old corpus,
     * and these queries are no_oracle so nothing downstream would catch
     * it. */
-  /** Content fingerprint of the source embeddings table — delegates to the
-    * shared [[graft.sources.ModelStore]] (the generalized train-once store;
-    * path scheme unchanged, so existing artifacts keep serving). */
-  private def contentKey(s: SparkSession, d: String): String =
-    graft.sources.ModelStore.contentKey(s, d, "embeddings.parquet")
-
   private def trainOnce(s: SparkSession, d: String, tag: String)(
       build: => DataFrame): DataFrame =
     graft.sources.ModelStore.getOrBuild(s, d, "embeddings.parquet", tag)(build)
@@ -750,34 +744,19 @@ object Similarity {
   private def artifactFsPath(s: SparkSession, d: String, tag: String): String =
     graft.sources.ModelStore.fsPath(s, d, "embeddings.parquet", tag)
 
-  /** Embedding dimensionality, with the probe persisted as artifact
-    * metadata: the first call per corpus content runs the one-row probe job
-    * and writes the answer to `_graft_dim_<contentKey>` in the warehouse
-    * (underscore-prefixed — invisible to parquet scans); every later call,
-    * in this session (process cache) or any later one (file), reads it back
-    * driver-side. Serving queries therefore launch ZERO scalar pre-jobs
-    * once the corpus has been seen (round-7 verdict item 5: the four
-    * per-run `.head` dim probes). */
+  /** Embedding dimensionality, with the probe persisted as a one-row
+    * [[trainOnce]] artifact: the first call per corpus content runs the
+    * probe job, the first call in a later process reads the artifact back,
+    * and every later call in a process reads the process cache. Serving
+    * queries therefore launch ZERO scalar pre-jobs once the corpus has been
+    * seen in the process (round-7 verdict item 5: the four per-run `.head`
+    * dim probes). */
   private val dimCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private def embeddingDim(s: SparkSession, d: String, n: => DataFrame): Int = {
-    val key = contentKey(s, d)
+    val key = graft.sources.ModelStore.contentKey(s, d, "embeddings.parquet")
     dimCache.computeIfAbsent(key, { _ =>
-      val pth = new org.apache.hadoop.fs.Path(
-        s"${s.conf.get("spark.sql.warehouse.dir")}/_graft_dim_$key")
-      val fs = pth.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(pth)) {
-        val in = fs.open(pth)
-        try Integer.valueOf(new String(in.readAllBytes(), "UTF-8").trim.toInt)
-        finally in.close()
-      } else {
-        val dim = n.select(size(col("e"))).head.getInt(0)
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"${pth.toString}.tmp_${java.util.UUID.randomUUID}")
-        val out = fs.create(tmp, true)
-        try out.write(dim.toString.getBytes("UTF-8")) finally out.close()
-        if (!fs.rename(tmp, pth)) fs.delete(tmp, false)
-        Integer.valueOf(dim)
-      }
+      val probe = trainOnce(s, d, "emb_dim")(n.select(size(col("e")).as("dim")).limit(1))
+      Integer.valueOf(probe.head.getInt(0))
     }).intValue()
   }
 
@@ -1442,22 +1421,9 @@ object Similarity {
     val n = Tables.materialize(withNorm(Tables.embeddings(s, d)))
     val dim = embeddingDim(s, d, n)
     val (cents, cb) = ivfPqQuantizers(s, d, n, dim)
-    // content-keyed, not just path-keyed (advisor round 14, matching the
-    // dedup_url_merge discipline): the code store is fully derivable from
-    // the corpus, so an in-place corpus regeneration must produce a fresh
-    // store — a path-keyed name would serve stale codes for the old
-    // vector set and surface as an oracle hash failure
-    val ck = graft.sources.ModelStore.contentKey(s, d, "embeddings.parquet")
-    val storeT = s"graft_ivfpq_code_store_${Dedup.dirKey(d)}_$ck"
-    // prefix WITHOUT the ck separator: also sweeps the legacy
-    // path-keyed table name (dirKey is fixed-width, so no other dir's
-    // family can share this prefix)
-    graft.sources.ParquetSink.pruneStaleTables(
-      s, s"graft_ivfpq_code_store_${Dedup.dirKey(d)}", storeT)
-    val store = graft.sources.ParquetSink.tableOrBuild(s, storeT) {
-      graft.sources.ParquetSink.writeBucketed(
-        ivfPqIndex(n.filter(col("vec_id") % 10 < 8), dim, cents, cb),
-        storeT, "cid", Dedup.storeBuckets(s))
+    val store = graft.sources.ModelStore.table(s, d, "embeddings.parquet",
+        "ivfpq_code_store", Some("cid")) {
+      ivfPqIndex(n.filter(col("vec_id") % 10 < 8), dim, cents, cb)
     }
     val batchCodes = ivfPqIndex(n.filter(col("vec_id") % 10 >= 8), dim, cents, cb,
       materializeResid = false)
@@ -1628,16 +1594,14 @@ object Similarity {
       |SELECT vec_id, cid FROM bmem
       |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
       |ORDER BY vec_id""".stripMargin) { (s, d) =>
-    import graft.sources.ParquetSink
-    val key = Dedup.dirKey(d)
+    import graft.sources.ModelStore
     val n = withNorm(Tables.embeddings(s, d))
     val hist = n.filter(col("vec_id") % 10 < 8)
-    val cents = ParquetSink.tableOrBuild(s, s"graft_sem_cents_$key") {
-      ParquetSink.writeTable(centroidArray(hist, 16), s"graft_sem_cents_$key")
+    val cents = ModelStore.table(s, d, "embeddings.parquet", "sem_cents", None) {
+      centroidArray(hist, 16)
     }
-    val store = ParquetSink.tableOrBuild(s, s"graft_sem_store_$key") {
-      ParquetSink.writeBucketed(ivfListsFrom(hist, cents),
-        s"graft_sem_store_$key", "cid", Dedup.storeBuckets(s))
+    val store = ModelStore.table(s, d, "embeddings.parquet", "sem_store", Some("cid")) {
+      ivfListsFrom(hist, cents)
     }
     // the assigned batch feeds the history join AND the within-batch rule:
     // materialize once (production would stage the day's assignments)
@@ -1905,17 +1869,9 @@ object Similarity {
   } { (s, d) =>
     val n = withNorm(Tables.embeddings(s, d))
     val cents = ivfKmeansCents(s, d, n)
-    // content-keyed like the IVF-PQ code store (advisor round 14): the
-    // list store derives from the corpus, so an in-place regeneration
-    // must rebuild it rather than serve vectors of the old corpus
-    val ck = graft.sources.ModelStore.contentKey(s, d, "embeddings.parquet")
-    val storeT = s"graft_ivf_list_store_${Dedup.dirKey(d)}_$ck"
-    graft.sources.ParquetSink.pruneStaleTables(
-      s, s"graft_ivf_list_store_${Dedup.dirKey(d)}", storeT)
-    val store = graft.sources.ParquetSink.tableOrBuild(s, storeT) {
-      graft.sources.ParquetSink.writeBucketed(
-        ivfListsFrom(n.filter(col("vec_id") % 10 < 8), cents),
-        storeT, "cid", Dedup.storeBuckets(s))
+    val store = graft.sources.ModelStore.table(s, d, "embeddings.parquet",
+        "ivf_list_store", Some("cid")) {
+      ivfListsFrom(n.filter(col("vec_id") % 10 < 8), cents)
     }
     val batchLists = ivfListsFrom(n.filter(col("vec_id") % 10 >= 8), cents)
     val lists = store.select(col("vec_id"), col("e"), col("nrm"), col("cid"))

@@ -953,12 +953,9 @@ object TextAnalysis {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .distinct()
       .groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val store = graft.sources.ParquetSink.tableOrBuild(
-        s, s"graft_df_store_${Dedup.dirKey(d)}") {
-      graft.sources.ParquetSink.writeBucketed(
-        dfOf(docs.filter(col("doc_id") % 10 < 8))
-          .withColumnRenamed("df", "df_hist"),
-        s"graft_df_store_${Dedup.dirKey(d)}", "w", Dedup.storeBuckets(s))
+    val store = graft.sources.ModelStore.table(s, d, "documents.parquet",
+        "df_store", Some("w")) {
+      dfOf(docs.filter(col("doc_id") % 10 < 8)).withColumnRenamed("df", "df_hist")
     }
     val batch = dfOf(docs.filter(col("doc_id") % 10 >= 8))
       .withColumnRenamed("df", "df_batch")

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 /** Batch write path: partitioned (and optionally bucketed) parquet layout —
   * the storage posture every 100 TB table here assumes (SURVEY.md §2.1
@@ -204,10 +204,9 @@ object ParquetSink {
     } finally b.unpersist()
   }
 
-  /** Dynamic-partition-overwrite insert shared by the partitioned-store
-    * writers ([[mergePartitionedBucketed]], [[optimizePartition]]): only
-    * partitions present in `out` are replaced, every other directory is
-    * never opened. The dynamic mode must be the SESSION conf for
+  /** Dynamic-partition-overwrite insert of [[mergePartitionedBucketed]]:
+    * only partitions present in `out` are replaced, every other directory
+    * is never opened. The dynamic mode must be the SESSION conf for
     * catalog-table inserts (the writer-level option is honored only for
     * path-based writes — measured: a full overwrite deleted every
     * untouched partition), restored afterwards. The flip is session-global
@@ -229,205 +228,6 @@ object ParquetSink {
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
     }
     spark.catalog.refreshTable(table)
-  }
-
-  /** Per-partition OPTIMIZE for a [[writePartitionedBucketed]] store — the
-    * partition-scoped compaction [[compact]] cannot provide: `compact`
-    * rewrites a whole path as plain parquet, which on a bucketed catalog
-    * table would both move every byte of every partition and DESTROY the
-    * bucket layout (bucket identity lives in the file names the bucketed
-    * write path emits). This rewrites exactly ONE partition back to the
-    * ideal layout — `numBuckets` files, bucketed and sorted per the
-    * table's own spec — and leaves every other partition's files untouched
-    * on disk.
-    *
-    * When it's needed: [[mergePartitionedBucketed]] itself MAINTAINS the
-    * numBuckets-files-per-touched-partition invariant (each merge's
-    * dynamic overwrite replaces the partition with one file per bucket —
-    * ParquetSinkSpec pins this across consecutive merges), so the merge
-    * cadence never degrades. The degradation path is APPEND-cadence
-    * writers — `df.write.insertInto(table)` without overwrite, the shape
-    * of a streaming sink or a multi-writer ingest — each of which adds up
-    * to `numBuckets` more files (possibly several per bucket) to every
-    * partition it touches, unbounded over time. At daily cadence that is
-    * the classic small-files spiral; this is the periodic repair.
-    *
-    * Mechanism: one partition-pruned scan of the slice (the planner reads
-    * only `partCol = partValue` directories), eagerly snapshotted
-    * (`localCheckpoint` — the output overwrites the very files the plan
-    * reads; the snapshot is one-partition-sized, never store-scale),
-    * repartitioned onto the table's own bucket hash so each task holds
-    * exactly one bucket, then dynamic-overwrite-inserted — only this
-    * partition is replaced, and Spark's bucketed write path re-emits the
-    * canonical file-per-bucket layout with the table's sort order, so
-    * bucket joins stay exchange-free afterwards. Crash safety = the
-    * insert's own job commit (the partition flips old→new atomically at
-    * commit; a crash mid-job leaves the old files live). Scale shape: IO
-    * is O(one partition), moved exactly once, regardless of store size.
-    * Returns (files before, files after) for the partition's directory —
-    * the receipt a maintenance loop logs. */
-  def optimizePartition(spark: SparkSession, table: String, partCol: String,
-      partValue: Any): (Int, Int) = {
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val bucketSpec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"optimizePartition: `$table` is not a bucketed table — targets must " +
-        "be writePartitionedBucketed stores (for a plain directory use compact)"))
-    val key = bucketSpec.bucketColumnNames.head
-    // fail LOUD on a mistyped target, like the non-bucketed check above —
-    // a silent (0,0) from a partCol typo or a multi-level partition spec
-    // reads as "nothing to optimize" and the small-files spiral this
-    // exists to repair goes unrepaired forever
-    require(meta.partitionColumnNames == Seq(partCol),
-      s"optimizePartition: `$table` is partitioned by " +
-        s"(${meta.partitionColumnNames.mkString(", ")}) — got partCol=" +
-        s"`$partCol`; single-level partitioning only (one dir per value)")
-    // the null partition lives in __HIVE_DEFAULT_PARTITION__ and the slice
-    // filter below would need isNull semantics — String.valueOf(null) would
-    // silently target a non-existent "part=null" directory instead; reject
-    // loud until someone actually needs to optimize the null partition
-    // empty string is Spark's OTHER alias for the default partition:
-    // getPartitionPathString maps "" to __HIVE_DEFAULT_PARTITION__ and the
-    // scan reads it back as NULL, so countFiles would count the null slice
-    // while the `col(partCol) === ""` snapshot filter selects zero rows —
-    // a misleading (N, N) "nothing repacked" receipt (r17 ADVICE)
-    require(partValue != null && String.valueOf(partValue).nonEmpty,
-      s"optimizePartition: null/empty partition value for `$table`.$partCol " +
-        "is not supported (both resolve to __HIVE_DEFAULT_PARTITION__ and " +
-        "need isNull slice semantics)")
-    // directory name via Spark's own partition-path escaping: a raw
-    // s"$partCol=$partValue" diverges from the on-disk layout for any value
-    // Spark URL-escapes (space, ':', '/', '%', …) — countFiles() would then
-    // inspect a non-existent path and silently no-op (0,0), the exact
-    // silent-skip failure mode the guards above exist to prevent
-    val partDir = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(meta.location),
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .getPartitionPathString(partCol, String.valueOf(partValue)))
-    val fs = partDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def countFiles(): Int =
-      if (!fs.exists(partDir)) 0
-      else fs.listStatus(partDir).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val before = countFiles()
-    if (before == 0) return (0, 0) // nothing to optimize, nothing to replace
-    val cols = spark.table(table).columns.toIndexedSeq
-    val snap = spark.table(table).filter(col(partCol) === lit(partValue))
-      .select(cols.map(col): _*)
-      .localCheckpoint(true)
-      .repartition(bucketSpec.numBuckets, col(key))
-    insertDynamicOverwrite(snap, table)
-    (before, countFiles())
-  }
-
-  /** Small-file compaction — the lakehouse OPTIMIZE primitive. Streaming
-    * ingest and over-parallel writes leave directories of KB-scale files;
-    * at 100 TB that means listing millions of entries and paying the
-    * per-file open cost on every scan, so periodic bin-packing into
-    * ~`targetBytes` files is part of the write path's contract.
-    *
-    * Mechanism: Spark's own file-source packing IS a bin-packer — with
-    * `maxPartitionBytes = targetBytes` and `openCostInBytes = 0`, the scan
-    * greedily packs small files into ~target-sized `FilePartition`s — so
-    * reading and writing back with NO shuffle re-emits one ~target file
-    * per bin. Each task reads only its own file group: compaction is
-    * embarrassingly parallel and moves every byte exactly once. (A
-    * `repartition` form would shuffle 100 % of the data to achieve the
-    * same file count.)
-    *
-    * The compacted copy is STAGED first and swapped in only after its
-    * write committed — the [[writeStaged]] survival rule; a partitioned
-    * table compacts by mapping this over its leaf directories. Returns
-    * (files before, files after).
-    *
-    * Swap discipline (round-9 verdict item 5): the swap is rename-aside +
-    * rename-in — never delete-then-rename. Directory rename is a single
-    * metadata operation on HDFS-like stores, so the only window where the
-    * table path is absent is between the two renames (two metadata calls),
-    * not for the duration of a recursive delete of N files; a crash in
-    * that window leaves `<path>__precompact` intact and [[compact]] itself
-    * (or [[recoverCompact]]) restores it on the next call before doing
-    * anything else. The old data is deleted only after the replacement is
-    * live. (On S3-like stores where rename is copy, a real table format's
-    * manifest swap replaces this — the staging/aside discipline is the
-    * same.) */
-  def compact(spark: SparkSession, path: String, targetBytes: Long): (Int, Int) = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCompact(spark, path) // heal a previous crashed swap first
-    def countFiles(p: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val before = countFiles(dir)
-    val staging = new org.apache.hadoop.fs.Path(path + "__compact")
-    // minPartitionNum defaults to the session parallelism, which SPLITS the
-    // scan toward one partition per core (bytesPerCore caps the split size)
-    // — right for compute, wrong for a compactor, which must let bins reach
-    // the full target. Pin it to 1 for the duration.
-    val prevMax = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes")
-    val prevMin = spark.conf.getOption("spark.sql.files.minPartitionNum")
-    try {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", targetBytes.toString)
-      spark.conf.set("spark.sql.files.openCostInBytes", "0")
-      spark.conf.set("spark.sql.files.minPartitionNum", "1")
-      spark.read.parquet(path).write.mode("overwrite").parquet(staging.toString)
-    } finally {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", prevMax)
-      spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
-      prevMin match {
-        case Some(v) => spark.conf.set("spark.sql.files.minPartitionNum", v)
-        case None => spark.conf.unset("spark.sql.files.minPartitionNum")
-      }
-    }
-    val aside = new org.apache.hadoop.fs.Path(path + "__precompact")
-    if (fs.exists(aside)) fs.delete(aside, true) // stale from a healed crash
-    if (!fs.rename(dir, aside))
-      throw new java.io.IOException(s"compaction swap failed: $dir -> $aside")
-    if (!fs.rename(staging, dir)) {
-      fs.rename(aside, dir) // roll back: old table returns, staging remains
-      throw new java.io.IOException(s"compaction swap failed: $staging -> $dir")
-    }
-    fs.delete(aside, true) // replacement live: old copy is now garbage
-    (before, countFiles(dir))
-  }
-
-  /** Heal a [[compact]] swap interrupted between its two renames: if the
-    * table path is absent but `<path>__precompact` exists, the original
-    * data was renamed aside and never replaced — rename it back. Returns
-    * true when a recovery was performed. Idempotent; called automatically
-    * at the start of every [[compact]]. */
-  def recoverCompact(spark: SparkSession, path: String): Boolean = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val aside = new org.apache.hadoop.fs.Path(path + "__precompact")
-    if (!fs.exists(dir) && fs.exists(aside)) { fs.rename(aside, dir); true }
-    else false
-  }
-
-  /** Reuse `table` if the session's catalog already has it, else run
-    * `build` (which is expected to create it). For store-backed queries the
-    * build is the once-per-corpus bootstrap; the per-run unit of work is
-    * everything downstream of the reload, and rebuilding history on every
-    * execution would bench the bootstrap, not the operator. Callers MUST
-    * key the table name by the source data (see `Dedup.dirKey`) — a bare
-    * name would silently reuse a store built from a different directory. */
-  def tableOrBuild(spark: SparkSession, table: String)(build: => DataFrame): DataFrame =
-    if (spark.catalog.tableExists(table)) spark.table(table) else build
-
-  /** Drop stale GENERATIONS of a content-keyed managed table: every
-    * catalog table whose name starts with `prefix` other than `keep` —
-    * the [[tableOrBuild]] complement of ModelStore's stale-artifact prune
-    * (same rationale: a corpus regeneration changes the content key, and
-    * without this every regeneration leaks a dead store-sized managed
-    * table forever). Dropping a MANAGED table deletes its data. */
-  def pruneStaleTables(spark: SparkSession, prefix: String, keep: String): Unit = {
-    // list and drop in the SAME namespace: unqualified DROP resolves
-    // against the session's current database, so listing a hard-coded
-    // "default" would miss (or mis-target) when the current db differs
-    val db = spark.catalog.currentDatabase
-    spark.sessionState.catalog.listTables(db)
-      .map(_.table)
-      .filter(t => t.startsWith(prefix) && t != keep)
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$db`.`$t`"))
   }
 
   /** Recover the bucket count a table was written with — the read side of

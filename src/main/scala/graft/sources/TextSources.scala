@@ -12,7 +12,7 @@ import graft.{QueryDef, Tables}
   * data and silently drifts when a batch happens to miss a field).
   *
   * The registered queries are write → read-back round trips: the documents
-  * table is exported once per (JVM, source dir) to JSON-lines / CSV under
+  * table is exported once per corpus content to JSON-lines / CSV under
   * the session's warehouse, then read back through the real
   * `spark.read.schema(...).json/csv` path and compared — field order,
   * quoting, escaping, and type round-tripping all on the line. The oracle
@@ -29,32 +29,11 @@ object TextSources {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  private def exportDir(spark: SparkSession, dir: String, format: String): String = {
-    val key = graft.operators.Dedup.dirKey(dir)
-    val base = spark.conf.get("spark.sql.warehouse.dir")
-    s"$base/graft_export_${format}_$key"
-  }
-
-  /** An export directory counts as complete only if the committer's
-    * `_SUCCESS` marker landed — a crashed mid-job write leaves a partial
-    * directory that a bare `exists` check would treat as reusable forever
-    * (every later read silently truncated). A marker-less directory is
-    * deleted and rebuilt: the state self-heals instead of wedging. */
-  private[graft] def ensureComplete(
-      spark: SparkSession, out: String)(write: => Unit): String = {
-    val p = new org.apache.hadoop.fs.Path(out)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-    if (fs.exists(p) && !fs.exists(marker)) fs.delete(p, true)
-    if (!fs.exists(p)) write
-    out
-  }
-
-  /** Write-once-then-reuse export (same once-per-JVM bootstrap contract as
-    * the dedup stores: the unit of work under measurement is the READ). */
-  private def ensureExport(spark: SparkSession, dir: String, format: String): String =
-    ensureComplete(spark, exportDir(spark, dir, format)) {
-      val out = exportDir(spark, dir, format)
+  /** The documents table exported once per corpus content as `format`
+    * under the warehouse ([[ModelStore.dir]]: same build-once contract as
+    * the dedup stores — the unit of work under measurement is the READ). */
+  private def export(spark: SparkSession, dir: String, format: String): String =
+    ModelStore.dir(spark, dir, "documents.parquet", s"export_$format") { out =>
       val w = Tables.documents(spark, dir).select(
         col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       format match {
@@ -69,7 +48,7 @@ object TextSources {
     "source_json_roundtrip",
     """SELECT doc_id, text, lang, source, CAST(n_chars AS BIGINT) AS n_chars
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
-    s.read.schema(DocSchema).json(ensureExport(s, d, "json"))
+    s.read.schema(DocSchema).json(export(s, d, "json"))
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       .orderBy("doc_id")
   }
@@ -81,13 +60,13 @@ object TextSources {
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     s.read.schema(DocSchema)
       .option("header", "true").option("escape", "\"")
-      .csv(ensureExport(s, d, "csv"))
+      .csv(export(s, d, "csv"))
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       .orderBy("doc_id")
   }
 
   /** Partition-pruned round trip: documents written `partitionBy(lang)`
-    * (once per JVM+dir), read back with a partition-key predicate. The
+    * (once per corpus content), read back with a partition-key predicate. The
     * predicate lands in the scan's partitionFilters — the read lists ONE
     * `lang=en/` directory and never opens the others, which at 100 TB is
     * the difference between scanning the corpus and scanning the slice
@@ -97,10 +76,10 @@ object TextSources {
     "source_partitioned_pruning",
     """SELECT doc_id, text, source, CAST(n_chars AS BIGINT) AS n_chars
       |FROM documents WHERE lang = 'en' ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val out = ensureComplete(s, exportDir(s, d, "bylang")) {
+    val out = ModelStore.dir(s, d, "documents.parquet", "export_bylang") { out =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("text"), col("source"), col("n_chars"), col("lang"))
-        .write.partitionBy("lang").parquet(exportDir(s, d, "bylang"))
+        .write.partitionBy("lang").parquet(out)
     }
     s.read.parquet(out)
       .filter(col("lang") === "en")
@@ -118,7 +97,7 @@ object TextSources {
     "source_orc_roundtrip",
     """SELECT doc_id, text, lang, source, CAST(n_chars AS BIGINT) AS n_chars
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
-    s.read.schema(DocSchema).orc(ensureExport(s, d, "orc"))
+    s.read.schema(DocSchema).orc(export(s, d, "orc"))
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       .orderBy("doc_id")
   }
@@ -147,8 +126,7 @@ object TextSources {
       |       CAST(n_chars AS BIGINT) AS n_chars, 2 AS v
       |FROM documents WHERE doc_id % 2 = 1
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val out = ensureComplete(s, exportDir(s, d, "evo")) {
-      val base = exportDir(s, d, "evo")
+    val out = ModelStore.dir(s, d, "documents.parquet", "export_evo") { base =>
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"), lit(1).as("v"))
@@ -156,12 +134,6 @@ object TextSources {
       docs.filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("lang"), col("n_chars"), lit(2).as("v"))
         .write.parquet(s"$base/v2")
-      // both writes committed: mark the composite export complete (each
-      // subdirectory carries its own committer marker; the top-level one
-      // is what ensureComplete's self-heal checks)
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.create(new org.apache.hadoop.fs.Path(s"$base/_SUCCESS")).close()
     }
     s.read.option("mergeSchema", "true")
       .option("recursiveFileLookup", "true").parquet(out)

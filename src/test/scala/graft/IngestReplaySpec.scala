@@ -101,7 +101,8 @@ class IngestReplaySpec extends AnyFunSuite {
         catch {
           case _: StreamingQueryException =>
             q.stop()
-            // later suites' awaitAnyTermination must not see this crash
+            // the stream manager keeps this crash as its last termination;
+            // clear it so no later wait on any query in this JVM rethrows it
             spark.streams.resetTerminated()
             q = start() // a new query on the same checkpoint replays the batch
             q.processAllAvailable()

@@ -18,8 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * or went away.
   *
   * A heuristic by name, not a compiler pass: an unrelated definition of
-  * the same name in the owner's own file, or a name inside a string
-  * literal, counts as a reference. */
+  * the same name in the owner's own file counts as a reference. A name
+  * inside a string literal (an error message naming its own method) does
+  * not; an interpolated splice does. */
 class OrphanDefinitionSpec extends AnyFunSuite {
   import OrphanDefinitionSpec._
 
@@ -52,7 +53,13 @@ class OrphanDefinitionSpec extends AnyFunSuite {
     val src = "val a = \"x // y\" // gone\n/* gone /* nested */ gone */ val b = '\"'\n" +
       "val c = \"\"\"q /* r */\"\"\""
     assert(stripComments(src) ===
-      "val a = \"x // y\" \n val b = '\"'\nval c = \"\"\"q /* r */\"\"\"")
+      "val a = \"\" \n val b = '\"'\nval c = \"\"\"\"\"\"")
+    // a literal's text is blanked: a name in an error message is no reference
+    assert(stripComments("def compact = sys.error(\"compact: \\\"x\\\" failed\")") ===
+      "def compact = sys.error(\"\")")
+    // an interpolated literal keeps its splices, and a multi-line one its lines
+    assert(stripComments("s\"a ${B.c(d)} $$e $f.g\" + s\"\"\"h\n|${I.j}\"\"\"") ===
+      "s\"${B.c(d)}$f\" + s\"\"\"\n${I.j}\"\"\"")
   }
 }
 
@@ -171,25 +178,58 @@ object OrphanDefinitionSpec {
     }
   }
 
-  /** `src` without `//` and (nested) `/* */` comments; string and char
-    * literals are kept whole, and a block comment keeps its newlines. */
+  /** `src` without `//` and (nested) `/* */` comments, and with the text of
+    * every string literal blanked. An interpolated literal keeps its
+    * `${…}` and `$name` splices, which are code. Quotes, char literals and
+    * the newlines of block comments and multi-line literals are kept. */
   def stripComments(src: String): String = {
     val out = new StringBuilder
     var i = 0
     val n = src.length
     def at(s: String): Boolean = src.startsWith(s, i)
+    def ident(c: Char): Boolean = c.isLetterOrDigit || c == '_'
+    // the literal body src[from, to) reduced to its splices and newlines;
+    // `open` is where its quotes start (an interpolator precedes them)
+    def body(open: Int, from: Int, to: Int): String = {
+      val interpolated = open > 0 && ident(src(open - 1))
+      val b = new StringBuilder
+      var k = from
+      while (k < to) {
+        val start = k
+        if (interpolated && src(k) == '$' && k + 1 < to && src(k + 1) == '{') {
+          var depth = 0
+          k += 1
+          do {
+            if (src(k) == '{') depth += 1 else if (src(k) == '}') depth -= 1
+            k += 1
+          } while (k < to && depth > 0)
+          b.append(src.substring(start, k))
+        } else if (interpolated && src(k) == '$' && k + 1 < to && src(k + 1) == '$') k += 2
+        else if (interpolated && src(k) == '$' && k + 1 < to && ident(src(k + 1))) {
+          k += 1
+          while (k < to && ident(src(k))) k += 1
+          b.append(src.substring(start, k))
+        } else {
+          if (src(k) == '\n') b.append('\n')
+          k += 1
+        }
+      }
+      b.toString
+    }
     while (i < n) {
       if (at("\"\"\"")) {
-        var j = src.indexOf("\"\"\"", i + 3)
-        j = if (j < 0) n else j + 3
+        val close = src.indexOf("\"\"\"", i + 3)
+        var j = if (close < 0) n else close + 3
         while (j < n && src(j) == '"') j += 1
-        out.append(src.substring(i, j)); i = j
+        out.append("\"\"\"").append(body(i, i + 3, if (close < 0) n else j - 3)).append("\"\"\"")
+        i = j
       } else if (src(i) == '"') {
         var j = i + 1
         while (j < n && src(j) != '"' && src(j) != '\n')
           j += (if (src(j) == '\\') 2 else 1)
-        j = math.min(j + 1, n)
-        out.append(src.substring(i, j)); i = j
+        j = math.min(j, n)
+        out.append('"').append(body(i, i + 1, j)).append('"')
+        i = if (j < n && src(j) == '"') j + 1 else j
       } else if (src(i) == '\'' && i + 2 < n && src(i + 2) == '\'') {
         out.append(src.substring(i, i + 3)); i += 3
       } else if (src(i) == '\'' && i + 3 < n && src(i + 1) == '\\' && src(i + 3) == '\'') {

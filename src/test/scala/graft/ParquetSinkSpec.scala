@@ -194,136 +194,19 @@ class ParquetSinkSpec extends AnyFunSuite {
     // THE claim: untouched partitions were never rewritten
     assert(snapshot("part=0") === before0, "part=0 files byte-identical")
     assert(snapshot("part=2") === before2, "part=2 files byte-identical")
+    // the MERGE cadence never degrades the layout: each dynamic overwrite
+    // replaces the touched partition with one file per bucket
+    assert(snapshot("part=1").size === 2, "merge keeps numBuckets files")
     // re-merging the same keyed batch is a fixpoint (crash-replay posture)
     val again = ParquetSink.mergePartitionedBucketed(batch, "pmerge_t", "part", "k")
     assert(again.select("k", "v").as[(Long, String)].collect().toMap === got)
+    assert(snapshot("part=1").size === 2, "a second merge keeps numBuckets files")
     // and the keyed-batch precondition holds here too
     val unkeyed = Seq((1L, "x", 1L), (1L, "y", 1L)).toDF("k", "v", "part")
     val e = intercept[IllegalArgumentException] {
       ParquetSink.mergePartitionedBucketed(unkeyed, "pmerge_t", "part", "k")
     }
     assert(e.getMessage.contains("mergePartitionedBucketed"))
-  }
-
-  test("optimizePartition: merges maintain the numBuckets layout, append " +
-      "cadence degrades it, optimize restores exactly ONE partition to " +
-      "numBuckets bucketed files with untouched partitions byte-identical " +
-      "and bucket joins still exchange-free") {
-    import spark.implicits._
-    val nb = 2
-    val store = (0L until 30L).map(k => (k, s"old-$k", k % 3)).toDF("k", "v", "part")
-    ParquetSink.writePartitionedBucketed(store, "popt_t", "part", "k", nb)
-    val loc = new java.io.File(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier("popt_t")))
-    def files(part: String): Seq[java.io.File] = {
-      val dir = new java.io.File(loc, part)
-      if (!dir.exists()) Seq.empty
-      else dir.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
-    }
-    def snapshot(part: String): Map[String, (Long, String)] =
-      files(part).map { f =>
-        val sum = java.security.MessageDigest.getInstance("MD5")
-          .digest(java.nio.file.Files.readAllBytes(f.toPath))
-          .map("%02x".format(_)).mkString
-        f.getName -> ((f.length(), sum))
-      }.toMap
-    // the MERGE cadence never degrades the layout: consecutive merges keep
-    // the touched partition at exactly numBuckets files (each dynamic
-    // overwrite replaces it with one file per bucket)
-    for (i <- 1 to 2) {
-      val batch = Seq((1L, s"m$i", 1L)).toDF("k", "v", "part")
-      ParquetSink.mergePartitionedBucketed(batch, "popt_t", "part", "k")
-      assert(files("part=1").size === nb,
-        s"merge $i keeps the numBuckets invariant")
-    }
-    // the APPEND cadence does: each append adds files to the partitions it
-    // touches (the streaming-sink / multi-writer ingest shape)
-    for (i <- 1 to 3)
-      Seq((100L + 3 * i, s"app$i", 1L)).toDF("k", "v", "part")
-        .write.insertInto("popt_t")
-    assert(files("part=1").size > nb,
-      s"append cadence accumulated files: ${files("part=1").size}")
-    val contentBefore = spark.table("popt_t").select("k", "v")
-      .as[(Long, String)].collect().toMap
-    val before0 = snapshot("part=0")
-    val before2 = snapshot("part=2")
-    val (fBefore, fAfter) = ParquetSink.optimizePartition(spark, "popt_t", "part", 1L)
-    assert(fBefore > nb && fAfter === nb,
-      s"partition bin-packed back to the bucket layout: $fBefore -> $fAfter")
-    assert(files("part=1").size === nb)
-    // content identical, untouched partitions never rewritten
-    assert(spark.table("popt_t").select("k", "v").as[(Long, String)]
-      .collect().toMap === contentBefore, "optimize moves bytes, not rows")
-    assert(snapshot("part=0") === before0, "part=0 files byte-identical")
-    assert(snapshot("part=2") === before2, "part=2 files byte-identical")
-    // the rewritten partition still carries the BUCKETED layout: a keyed
-    // join probes the store scan in place (no store-side exchange)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val probe = Seq((1L, "p"), (103L, "p")).toDF("k", "p")
-      val j = spark.table("popt_t").filter(col("part") === 1L)
-        .join(probe.select(col("k")), Seq("k"), "left_semi")
-      j.collect()
-      val root = j.queryExecution.executedPlan
-      val plan = root.collectFirst {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-      }.getOrElse(root).toString
-      assert(plan.linesIterator.count(_.contains("Exchange hashpartitioning")) === 1,
-        s"store side must not shuffle after optimize:\n$plan")
-      assert(plan.contains("Bucketed: true"), s"store scan must stay bucketed:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    // and the merge path keeps working on the optimized partition
-    val merged = ParquetSink.mergePartitionedBucketed(
-      Seq((103L, "post-opt", 1L)).toDF("k", "v", "part"), "popt_t", "part", "k")
-    val got = merged.select("k", "v").as[(Long, String)].collect().toMap
-    assert(got(103L) === "post-opt" && got.size === contentBefore.size,
-      "merge after optimize: replace lands, nothing lost")
-    // a partition with no files is a no-op receipt, not an error
-    assert(ParquetSink.optimizePartition(spark, "popt_t", "part", 99L) === ((0, 0)))
-    // but a mistyped partition COLUMN fails loud — a silent (0,0) would
-    // read as "nothing to optimize" and the spiral goes unrepaired
-    val typo = intercept[IllegalArgumentException] {
-      ParquetSink.optimizePartition(spark, "popt_t", "prt", 1L)
-    }
-    assert(typo.getMessage.contains("partitioned by"))
-    // the EMPTY STRING is Spark's other alias for the default partition
-    // (getPartitionPathString maps "" to __HIVE_DEFAULT_PARTITION__, read
-    // back as NULL): countFiles would count the null slice while the
-    // equality filter selects zero rows — a misleading (N, N) "nothing
-    // repacked" receipt, so it rejects like null does (r17 ADVICE)
-    val empty = intercept[IllegalArgumentException] {
-      ParquetSink.optimizePartition(spark, "popt_t", "part", "")
-    }
-    assert(empty.getMessage.contains("null/empty"))
-  }
-
-  test("optimizePartition: a partition VALUE Spark escapes in directory " +
-      "names (space, colon) resolves to the real on-disk directory — the " +
-      "repair runs instead of silently no-opping (0,0) on a path that " +
-      "does not exist (r16 ADVICE)") {
-    import spark.implicits._
-    val nb = 2
-    val hot = "2024-01-01 10:00" // space + ':' both URL-escape in the dir name
-    val store = (0L until 20L).map(k => (k, s"v$k", hot)).toDF("k", "v", "part")
-    ParquetSink.writePartitionedBucketed(store, "popt_esc_t", "part", "k", nb)
-    // the on-disk directory is the ESCAPED form — the raw s"part=$hot"
-    // path genuinely does not exist
-    val loc = new java.io.File(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier("popt_esc_t")))
-    assert(!new java.io.File(loc, s"part=$hot").exists(),
-      "precondition: the unescaped directory must not exist")
-    // degrade with append cadence, then repair
-    for (i <- 1 to 3)
-      Seq((100L + i, s"app$i", hot)).toDF("k", "v", "part")
-        .write.insertInto("popt_esc_t")
-    val (before, after) = ParquetSink.optimizePartition(
-      spark, "popt_esc_t", "part", hot)
-    assert(before > nb && after === nb,
-      s"escaped-value partition found and bin-packed: $before -> $after")
-    assert(spark.table("popt_esc_t").count() === 23L, "no rows lost")
   }
 
   test("mergeBucketed: refuses an UNKEYED batch with a named error (the " +
@@ -416,63 +299,6 @@ class ParquetSinkSpec extends AnyFunSuite {
     val (zHit, zTotal) = rowGroupsHit(spark, s"$dir/z", "x", "y", 50, 80, 100, 150)
     assert(hHit < zHit,
       s"hilbert must open fewer row groups ($hHit/$hTotal vs z $zHit/$zTotal)")
-  }
-
-  test("compaction bin-packs small files losslessly and stages the swap") {
-    val dir = Files.createTempDirectory("graft-compact").toFile.getAbsolutePath
-    val path = s"$dir/events_small"
-    val src = Tables.orders(spark, "/root/testdata/sf0.01")
-    src.repartition(40).write.parquet(path) // the streaming-ingest litter shape
-    val checksum = src.agg(sum(crc32(concat_ws("|",
-      col("o_orderkey"), col("o_custkey"), col("o_totalprice")))))
-      .collect()(0).getLong(0)
-    val (before, after) = ParquetSink.compact(spark, path, 32L << 20)
-    assert(before === 40)
-    assert(after < before, s"compaction must reduce files ($before -> $after)")
-    // at a 32 MiB target this sf0.01 table fits in very few bins
-    assert(after <= 4, s"expected near-total consolidation, got $after files")
-    // lossless: same rows, same values
-    val re = spark.read.parquet(path)
-    assert(re.count() === src.count())
-    assert(re.agg(sum(crc32(concat_ws("|",
-      col("o_orderkey"), col("o_custkey"), col("o_totalprice")))))
-      .collect()(0).getLong(0) === checksum)
-    // no staging residue after the swap
-    assert(!new java.io.File(path + "__compact").exists())
-    // idempotent: an already-compacted directory stays put
-    val (b2, a2) = ParquetSink.compact(spark, path, 32L << 20)
-    assert(b2 === after && a2 <= b2)
-  }
-
-  test("compaction swap is crash-safe: interrupted swap recovers, old data never deleted first") {
-    val dir = Files.createTempDirectory("graft-compact-crash").toFile.getAbsolutePath
-    val path = s"$dir/t"
-    val src = Tables.orders(spark, "/root/testdata/sf0.001")
-    src.repartition(8).write.parquet(path)
-    val rows = src.count()
-    // simulate the crash window: compact renamed the live dir aside and
-    // died before renaming the staging copy in — the worst reachable state
-    // under the rename-aside + rename-in discipline (the pre-fix
-    // delete-then-rename could lose the table entirely)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + "__precompact")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path)))
-    // explicit recovery restores the table readable and complete
-    assert(ParquetSink.recoverCompact(spark, path))
-    assert(spark.read.parquet(path).count() === rows)
-    assert(!ParquetSink.recoverCompact(spark, path), "recovery is idempotent")
-    // and compact() self-heals the same state before doing its work
-    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + "__precompact")))
-    val (before, after) = ParquetSink.compact(spark, path, 32L << 20)
-    assert(before === 8 && after < before)
-    assert(spark.read.parquet(path).count() === rows)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__precompact")),
-      "no aside residue after a successful swap")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__compact")),
-      "no staging residue after a successful swap")
   }
 
   /** ADVICE r11 (low): the Hilbert clustered writer must accept the same

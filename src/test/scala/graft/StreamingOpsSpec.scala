@@ -129,8 +129,9 @@ class StreamingOpsSpec extends AnyFunSuite {
         graft.model.OrderedUpdateEvent("a", 1, "INC", 5),
         graft.model.OrderedUpdateEvent("b", 2, "INC", 3))
       q.processAllAvailable()
-      // listener events are async; wait for delivery
-      spark.streams.awaitAnyTermination(1)
+      // listener events are async; wait for delivery (on this query only:
+      // waiting on any query would rethrow another suite's crashed stream)
+      q.awaitTermination(1)
       var waited = 0
       while (observed.isEmpty && waited < 50) { Thread.sleep(100); waited += 1 }
       val metrics = observed.toArray(Array.empty[(Long, Long)])
