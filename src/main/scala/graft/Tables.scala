@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Loaders for the driver's parquet tables (TESTDATA.md). Bare
   * `spark.read.parquet` so Catalyst pushes filters/pruning into the scan —
@@ -69,40 +69,88 @@ object Tables {
   def materialize(df: DataFrame): DataFrame =
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** Counted broadcast gate — the MaxBroadcastEvalDocs discipline as a
-    * reusable combinator (r19 verdict/ADVICE): generator-descended sides
-    * carry SUPPRESSED size estimates (Generate propagates its child's
-    * stats, so a ×100 explode looks ×1 to the planner), which makes an
-    * estimator-trusted broadcast of them the exact OOM cliff the 10×
-    * duplicate-dense probe caught in round 19. This gate replaces the
-    * estimate with one bounded, early-terminating limit+count of the REAL
-    * stream: under `maxRows` the side ships broadcast (the fast plan when
-    * it is genuinely small — a benchmark corpus, a dedup-collapsed rep
-    * set), past it the join pins shuffle_hash (executor-side build, never
-    * a driver cliff). Cost note (r20 ADVICE): limit(n) plans a LocalLimit
-    * per partition, so the probe's worst case is partitions × maxRows rows
-    * scanned (each partition early-terminates at n), run as a REAL job
-    * once per query construction — prefer [[boundedBroadcast]] when a
-    * provable bound on |df| is available from a cheap parent count. */
-  def countedBroadcast(df: DataFrame, maxRows: Long): DataFrame = {
-    require(maxRows > 0 && maxRows < Int.MaxValue,
-      s"countedBroadcast cap must be in (0, Int.MaxValue): $maxRows")
-    if (df.limit((maxRows + 1).toInt).count() <= maxRows)
-      org.apache.spark.sql.functions.broadcast(df)
-    else df.hint("shuffle_hash")
+  /** The broadcast decision for a join side whose size the planner cannot
+    * be trusted with, and the only code that makes it. A side descended
+    * from a generator carries a SUPPRESSED size estimate (Generate
+    * propagates its child's stats, so a ×100 explode looks ×1 to the
+    * planner), and a batch-sized side is unbounded by construction; an
+    * estimator-trusted broadcast of either is the driver OOM cliff the
+    * round-19 10× duplicate-dense probe caught. So the side ships
+    * `broadcast` only under a counted or proven row cap, and past it the
+    * join pins `shuffle_hash` (executor-side build, never a driver cliff).
+    *
+    * A gate is built once from one of two inputs and applied to one side
+    * or to several:
+    *  - [[Gate.probe]]: an early-terminating `limit(cap + 1)` count of a
+    *    named frame, run as a real job once per query construction.
+    *    `limit(n)` plans a LocalLimit per partition, so the worst case
+    *    scans partitions × cap rows. The frame it counts may be a cheap
+    *    parent of the gated sides (a raw batch whose row count bounds every
+    *    band table derived from it) rather than the sides themselves.
+    *  - [[Gate.bounded]]: a provable bound `bound ≥ |side|`, typically a
+    *    zero-column parquet count (footer metadata) times a static fan-out
+    *    factor. A bound in [0, cap] proves the broadcast safe with no job
+    *    over the derived lineage; an inconclusive bound (over the cap,
+    *    negative or saturated) falls back to the probe, since the bound is
+    *    conservative and the side may still fit.
+    * [[Gate.Shuffle]] pins `shuffle_hash` with no probe, for a side that is
+    * never broadcastable. [[countedBroadcast]] and [[boundedBroadcast]]
+    * are the one-side uses. `rows` is what decided the gate: the probed
+    * count capped at cap + 1, the proven bound, or Long.MaxValue for
+    * [[Gate.Shuffle]]. */
+  final class Gate private (val rows: Long, val broadcasts: Boolean) {
+    def apply(df: DataFrame): DataFrame =
+      if (broadcasts) org.apache.spark.sql.functions.broadcast(df)
+      else df.hint("shuffle_hash")
   }
 
-  /** Broadcast gate on a PROVABLE row bound (r21): same r19 cliff
-    * discipline as [[countedBroadcast]] — the decision never trusts the
-    * estimator — but the count runs on a cheap un-amplified PARENT (e.g. a
-    * zero-column parquet scan whose row count comes from footer metadata)
-    * times the construction's static fan-out factor, giving `bound ≥ |df|`
-    * by construction. `bound ≤ maxRows` proves the broadcast safe without
-    * executing the derived lineage at plan-construction time; an
-    * inconclusive bound falls back to the real limit+count (the bound is
-    * conservative — the derived side may still be under the cap). */
+  object Gate {
+    val Shuffle: Gate = new Gate(Long.MaxValue, false)
+
+    private def limited(df: DataFrame, maxRows: Long): DataFrame = {
+      require(maxRows > 0 && maxRows < Int.MaxValue,
+        s"broadcast gate cap must be in (0, Int.MaxValue): $maxRows")
+      df.limit((maxRows + 1).toInt)
+    }
+
+    /** Broadcast iff `df` has at most `maxRows` rows. */
+    def probe(df: DataFrame, maxRows: Long): Gate = {
+      val n = limited(df, maxRows).count()
+      new Gate(n, n <= maxRows)
+    }
+
+    /** [[probe]] that also sums the per-row `payload` (rows shipped per
+      * counted row) over the same early-terminating scan, in one job:
+      * broadcast iff at most `maxRows` rows AND at most `maxPayload`
+      * shipped rows. Whenever the row cap holds the limit did not bind, so
+      * the sum is exact. */
+    def probe(df: DataFrame, maxRows: Long, payload: Column,
+        maxPayload: Long): Gate = {
+      import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum}
+      val g = limited(df, maxRows).select(payload.as("n"))
+        .agg(count(lit(1)), coalesce(sum(col("n")), lit(0L)))
+        .head()
+      new Gate(g.getLong(0), g.getLong(0) <= maxRows && g.getLong(1) <= maxPayload)
+    }
+
+    /** Broadcast when `bound` in [0, maxRows] proves it; otherwise
+      * [[probe]] `df`. */
+    def bounded(bound: Long, df: DataFrame, maxRows: Long): Gate =
+      if (bound >= 0 && bound <= maxRows) new Gate(bound, true)
+      else probe(df, maxRows)
+  }
+
+  /** `a × b` saturating at Long.MaxValue: row-bound arithmetic for
+    * [[Gate.bounded]] (a saturated bound is inconclusive and falls back
+    * to the probe). */
+  def satMul(a: Long, b: Long): Long =
+    if (a > 0 && b > 0 && a > Long.MaxValue / b) Long.MaxValue else a * b
+
+  /** [[Gate.probe]] of `df` applied to `df`. */
+  def countedBroadcast(df: DataFrame, maxRows: Long): DataFrame =
+    Gate.probe(df, maxRows)(df)
+
+  /** [[Gate.bounded]] of `df` applied to `df`. */
   def boundedBroadcast(df: DataFrame, bound: Long, maxRows: Long): DataFrame =
-    if (bound >= 0 && bound <= maxRows)
-      org.apache.spark.sql.functions.broadcast(df)
-    else countedBroadcast(df, maxRows)
+    Gate.bounded(bound, df, maxRows)(df)
 }

@@ -52,23 +52,4 @@ object Actions {
     case Rep => Some(delta)
     case _   => None
   }
-
-  /** Removal-aware fold of a whole event sequence: the differential model
-    * for [[graft.streaming.InventoryStream.foldGroup]] including the
-    * unknown-action path. `None` = the key is removed from the table (a
-    * null aggregate in the reference, KGroupedStream.aggregate contract);
-    * a LATER event re-initializes from the initializer's count=0 — never
-    * from the stale value. */
-  def foldAllState(events: Seq[(String, Int)], init: Option[Int] = None): Option[Int] =
-    events.foldLeft(init) { case (st, (action, delta)) =>
-      update(st.getOrElse(0), action, delta)
-    }
-
-  /** Order-sensitive foldLeft of a whole event sequence — the differential
-    * model used by tests (mirrors InventoryUpdateEventGenerator.java:74-106).
-    * Delegates to [[foldAllState]], so removal semantics (reset to 0, not
-    * keep-stale) match the streaming fold exactly; a trailing removal folds
-    * to the initializer's 0. */
-  def foldAll(events: Seq[(String, Int)], init: Int = 0): Int =
-    foldAllState(events, Some(init)).getOrElse(0)
 }

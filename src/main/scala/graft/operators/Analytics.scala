@@ -141,10 +141,9 @@ object Analytics {
     * corpus scale, so the division runs in 38-digit decimals (DuckDB:
     * HUGEINT), the temperature mixture's wide-integer discipline. The
     * ranking uses TakeOrdered on the integer lift — no global sort. */
-  /** Broadcast cap for the basket support table ([[Tables.boundedBroadcast]]):
-    * (p, n) rows ≈ 24 B — 10M ≈ 240 MB shipped, under the hard broadcast
-    * cap with headroom; past it the support joins fall back to the counted
-    * gate and then shuffle_hash. */
+  /** [[Tables.Gate]] cap for the basket support table: (p, n) rows ≈
+    * 24 B — 10M ≈ 240 MB shipped, under the hard broadcast cap with
+    * headroom. */
   val MaxBroadcastSupportRows = 10000000L
 
   val basketPairs: QueryDef = QueryDef.sql(
@@ -187,21 +186,15 @@ object Analytics {
       .groupBy(col("part_a"), col("part_b"))
       .agg(count(lit(1)).as("n_both"))
       .filter(col("n_both") >= 3)
-    // BOUNDED broadcast gate on the support table (r21, replacing the r19
-    // unconditional shuffle_hash pin): |sup| = |distinct l_partkey| ≤
-    // |part| (FK), a zero-column metadata count — under the cap the two
-    // support joins broadcast the parts-sized side and the filtered pair
-    // stream is never re-exchanged (the pin paid two extra exchanges of
-    // the pair stream plus two of sup, the r20-watched basket drift); past
-    // the cap the gate falls back to a real limit+count and then
-    // shuffle_hash — never the generator-suppressed estimate (the
-    // dedup_containment probe cliff, SCALE.md r19).
+    // support-table bound (r21, replacing the r19 unconditional
+    // shuffle_hash pin): |sup| = |distinct l_partkey| ≤ |part| (FK), a
+    // zero-column metadata count — under the cap the two support joins
+    // broadcast the parts-sized side and the filtered pair stream is never
+    // re-exchanged (the pin paid two extra exchanges of the pair stream
+    // plus two of sup, the r20-watched basket drift).
     // (fixture dirs may carry lineitem without a part table — the bound is
-    // then unavailable and the gate falls back to the counted form)
+    // then unavailable, -1, and the gate probes)
     val partBound = scala.util.Try(Tables.part(s, d).count()).getOrElse(-1L)
-    def gatedSup(df: DataFrame): DataFrame =
-      if (partBound >= 0) Tables.boundedBroadcast(df, partBound, MaxBroadcastSupportRows)
-      else Tables.countedBroadcast(df, MaxBroadcastSupportRows)
     // r22 note: a shared-alias form (ONE gated support side into both
     // joins, hoping for broadcast-build reuse via canonical equality) was
     // tried and REVERTED — deterministic counters showed no reuse
@@ -209,10 +202,10 @@ object Analytics {
     // measured it ~0.8× (1.65 → 2.10 s); the differently-projected copies
     // below stay the measured-fastest form.
     pairs
-      .join(gatedSup(sup.select(col("p").as("part_a"), col("n").as("n_a"))),
-        Seq("part_a"))
-      .join(gatedSup(sup.select(col("p").as("part_b"), col("n").as("n_b"))),
-        Seq("part_b"))
+      .join(Tables.boundedBroadcast(sup.select(col("p").as("part_a"), col("n").as("n_a")),
+        partBound, MaxBroadcastSupportRows), Seq("part_a"))
+      .join(Tables.boundedBroadcast(sup.select(col("p").as("part_b"), col("n").as("n_b")),
+        partBound, MaxBroadcastSupportRows), Seq("part_b"))
       .crossJoin(broadcast(no))
       .select(col("part_a").cast("long"), col("part_b").cast("long"),
         col("n_both").cast("long"), col("n_a").cast("long"), col("n_b").cast("long"),

@@ -238,7 +238,7 @@ object Dedup {
     * 1.95 s (9.24 → 7.28 s). 8M sits in the decade between, on the side
     * that keeps bench-scale corpora on the cheap plan; the probe that
     * decides is one aggregate over the ALREADY-cached posting table (work
-    * the query materializes anyway), the countedBroadcast discipline
+    * the query materializes anyway), the [[Tables.Gate]] discipline
     * applied to a plan-shape choice. */
   val MaxDirectPairRows = 8000000L
 
@@ -423,74 +423,10 @@ object Dedup {
     * fail loudly rather than return half-converged labels. */
   val MaxCcIterations = 64
 
-  /** Connected components by iterative min-label propagation: every vertex
-    * starts labeled with itself; each round takes the min label over its
-    * neighbors; fixpoint = per-component min vertex id. The standard
-    * MapReduce/Spark formulation (cf. Kiveris et al., "Connected Components
-    * in MapReduce and Beyond", SoCC'14 — whose large-star/small-star
-    * variant is the O(log n)-round upgrade if components with large
-    * diameters ever appear; plain propagation is O(diameter) rounds).
-    *
-    * SPEC-ONLY since round 7: O(diameter) rounds is a scale trap on
-    * high-diameter graphs (a 200-link chain needs 200 shuffle rounds and
-    * trips [[MaxCcIterations]]), so the registered `dedup_clusters` query
-    * runs [[connectedComponentsAlternating]] instead. This form is kept as
-    * the independent differential twin — DedupClustersSpec and
-    * CcAlternatingSpec pin both against union-find and each other.
-    *
-    * Iterative-DataFrame discipline: each round's labels are
-    * `localCheckpoint`ed — without it the plan doubles every round and
-    * Catalyst re-executes the whole history each action. The driver-side
-    * loop is the algorithm's control flow, not a data path: per round it
-    * runs exactly one `isEmpty` convergence probe on the changed-labels
-    * filter; labels themselves never reach the driver. Shuffles are keyed
-    * by vertex id / label only; a hot label (giant component) is an
-    * aggregation key, map-side combined, not a join hot spot.
-    *
-    * Only EDGE ENDPOINTS iterate: a vertex with no edge keeps its own label
-    * by definition, so the loop runs on the near-dup subgraph (a sliver of
-    * any real corpus — most documents are in no pair at all) and the full
-    * vertex set joins back once at the end. At 100 TB this is the
-    * difference between propagating over the corpus and propagating over
-    * its duplicate fringe; at bench scale it cuts the per-round job to a
-    * few hundred rows (measured 4.8 s → ~2 s at sf0.1). */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("a"), col("b"))
-      .union(edges.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true) // read by every round: materialize once
-    // initialize at the ONE-HOP min (self ∪ neighbors) — the first
-    // propagation round fused into initialization: star/pair components
-    // (the overwhelming near-dup shape) converge immediately and pay only
-    // the confirmation round
-    var labels = sym.groupBy(col("a"))
-      .agg(least(col("a"), min(col("b"))).as("label"))
-      .select(col("a").as("id"), col("label"))
-      .localCheckpoint(true)
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      require(rounds < MaxCcIterations,
-        s"label propagation did not converge in $MaxCcIterations rounds")
-      val nbr = sym
-        .join(labels.select(col("id").as("nid"), col("label")), col("b") === col("nid"))
-        .groupBy(col("a")).agg(min(col("label")).as("nbr_label"))
-      val next = labels
-        .join(nbr, col("id") === col("a"), "left")
-        .select(col("id"), col("label"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("next_label"))
-        .localCheckpoint(true)
-      converged = next.filter(col("next_label") < col("label")).isEmpty
-      labels = next.select(col("id"), col("next_label").as("label"))
-      rounds += 1
-    }
-    vertices.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-  }
-
   /** Connected components by ALTERNATING large-star/small-star contraction
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the O(log n)-round sibling of [[connectedComponents]]'s
-    * plain propagation: where propagation needs diameter rounds (a
+    * SoCC'14) — the O(log n)-round sibling of plain min-label
+    * propagation: where propagation needs diameter rounds (a
     * 200-link chain of pairwise near-dups needs 200), the alternating
     * contraction halves component height every two phases, so pathological
     * chain/filament components converge in ~log₂(n) rounds
@@ -618,8 +554,8 @@ object Dedup {
     * O(log n) rounds on every graph shape, including the high-diameter
     * chains that would stall plain propagation (a 200-link pairwise-dup
     * chain needs 200 propagation rounds but ≤16 star rounds,
-    * CcAlternatingSpec). [[connectedComponents]] stays as the spec-only
-    * differential twin: DedupClustersSpec proves both label identically
+    * CcAlternatingSpec). Plain propagation lives in DedupClustersSpec as
+    * the differential twin: the specs prove both label identically
     * against an independent union-find, but only the diameter-safe
     * algorithm is reachable from the registered surface.
     *
@@ -1604,31 +1540,25 @@ object Dedup {
       |LEFT JOIN stats s ON nd.doc_id = s.d LEFT JOIN best b ON nd.doc_id = b.d
       |ORDER BY nd.doc_id""".stripMargin
 
-  /** Probe slices above this document count take the shuffle plan even
-    * when the caller requested the broadcast probe: a benchmark suite is
-    * ~10⁴ docs (≈ a few hundred MB of positioned spans — comfortably
-    * broadcast-sized), but a corpus-FRACTION eval split at 100 TB is
-    * terabytes, past any broadcast cap — the guard makes the fast path an
-    * optimization, never a correctness/OOM cliff (the `Similarity` exact
-    * -pairs guard discipline). The probe is one bounded limit+count. */
+  /** [[Tables.Gate]] cap on the eval slice's document count: a benchmark
+    * suite is ~10⁴ docs (≈ a few hundred MB of positioned spans —
+    * comfortably broadcast-sized), but a corpus-FRACTION eval split at
+    * 100 TB is terabytes, past any broadcast cap. */
   val MaxBroadcastEvalDocs = 20000L
 
-  /** Second broadcast gate, on the PAYLOAD rather than the doc count: the
-    * shipped side is the exploded span stream at ~one row per token, and an
-    * UnsafeRow of (doc_id long, pos int, h md5-hex string) is ≈64 bytes —
-    * 20 M rows ≈ 1.3 GB, comfortably under Spark's 8 GB broadcast hard cap
-    * with headroom for the hash-relation overhead, while still covering any
-    * real benchmark suite (20k docs × 1k tokens = 20 M exactly). Past it the
-    * probe takes the shuffle plan — slower, never an OOM cliff. */
+  /** Second cap of the same gate, on the PAYLOAD rather than the doc
+    * count: the shipped side is the exploded span stream at ~one row per
+    * token, and an UnsafeRow of (doc_id long, pos int, h md5-hex string)
+    * is ≈64 bytes — 20 M rows ≈ 1.3 GB, comfortably under Spark's 8 GB
+    * broadcast hard cap with headroom for the hash-relation overhead,
+    * while still covering any real benchmark suite (20k docs × 1k tokens
+    * = 20 M exactly). */
   val MaxBroadcastSpanRows = 20000000L
 
-  /** Counted broadcast gate for [[spanLongestOn]]'s saturated-hash set: an
+  /** [[Tables.Gate]] cap for [[spanLongestOn]]'s saturated-hash set: an
     * md5-hex UnsafeRow is ≈56 bytes, so 10⁶ hashes ≈ 56 MB shipped — far
     * under the broadcast hard cap and covering any plausible boilerplate
-    * profile at bench scale, while a truly boilerplate-drowned corpus
-    * (saturated-hash count past the gate) takes the shuffle_hash plan
-    * instead of an OOM cliff. The probe is one early-terminating
-    * limit+count against the materialized posting table. */
+    * profile at bench scale. */
   val MaxBroadcastSatHashes = 1000000L
 
   /** The Scala half of the same parameterization: build (or reuse) the
@@ -1638,7 +1568,7 @@ object Dedup {
     * [[spanLongestIncrementalOn]]. */
   private def spanExtentQuery(s: SparkSession, d: String, storeTag: String,
       histPred: Column => Column, batchPred: Column => Column,
-      broadcastBatch: Boolean = false): DataFrame = {
+      batchGate: DataFrame => Tables.Gate = _ => Tables.Gate.Shuffle): DataFrame = {
     val docs = Tables.documents(s, d)
     val store = ModelStore.table(s, d, "documents.parquet", storeTag, Some("h")) {
       // the history span explode feeds the df-cap aggregate AND the join
@@ -1657,28 +1587,7 @@ object Dedup {
       hist.join(occ, Seq("h")).withColumn("seed_ok", col("o") <= MaxSpanDf).drop("o")
     }
     val probe = docs.filter(batchPred(col("doc_id")))
-    // the broadcast fast path only below BOTH caps. The doc-count gate is the
-    // cheap early-terminating limit+count; it alone bounds the broadcast
-    // PAYLOAD only indirectly — the shipped side is the exploded span stream
-    // (~one row per token per doc), so 20k maximally long documents could
-    // still reach multi-GB per executor and Spark's 8 GB broadcast hard
-    // limit. The second gate sums the per-doc span-row estimate (tokens −
-    // window + 1, the exact explode cardinality) over the ≤20k surviving
-    // docs — a bounded scan that runs only after the doc gate passes — and
-    // routes long-document suites to the shuffle plan too.
-    val bounded = broadcastBatch && {
-      // ONE bounded action for both gates: the limit keeps the scan
-      // early-terminating, and whenever the doc gate passes (count ≤ cap)
-      // the limit did not bind, so the span-row sum over the same rows is
-      // exact; when it binds, the count alone already routes to shuffle
-      val g = probe.limit((MaxBroadcastEvalDocs + 1).toInt)
-        .select(greatest(size(split(col("text"), " ")) - (SpanWindow - 1),
-          lit(0)).cast("long").as("n"))
-        .agg(count(lit(1)), coalesce(sum(col("n")), lit(0L)))
-        .head()
-      g.getLong(0) <= MaxBroadcastEvalDocs && g.getLong(1) <= MaxBroadcastSpanRows
-    }
-    spanLongestIncrementalOn(probe, store, bounded)
+    spanLongestIncrementalOn(probe, store, batchGate(probe))
       .orderBy("doc_id")
   }
 
@@ -1716,8 +1625,15 @@ object Dedup {
     "contamination_span",
     spanExtentOracleSql("doc_id % 97 <> 0", "doc_id % 97 = 0",
       "longest_train_run_tokens", "top_train_doc", "n_train_partners")) { (s, d) =>
+    // the eval span stream broadcasts only below BOTH caps: the doc count,
+    // and the span rows it ships (tokens − window + 1 per doc, the exact
+    // explode cardinality) — 20k maximally long documents could still reach
+    // Spark's 8 GB broadcast hard limit
     spanExtentQuery(s, d, "spancontam_store",
-      id => id % 97 =!= 0, id => id % 97 === 0, broadcastBatch = true)
+      id => id % 97 =!= 0, id => id % 97 === 0,
+      probe => Tables.Gate.probe(probe, MaxBroadcastEvalDocs,
+        greatest(size(split(col("text"), " ")) - (SpanWindow - 1), lit(0))
+          .cast("long"), MaxBroadcastSpanRows))
       .withColumnRenamed("longest_hist_run_tokens", "longest_train_run_tokens")
       .withColumnRenamed("best_hist_doc", "top_train_doc")
       .withColumnRenamed("n_hist_partners", "n_train_partners")
@@ -1728,26 +1644,19 @@ object Dedup {
     * `seed_ok` stamped from the causal history-occurrence cap at build;
     * seeding uses `seed_ok` rows only, island extension uses all rows. */
   private[graft] def spanLongestIncrementalOn(newDocs: DataFrame,
-      store: DataFrame, broadcastBatch: Boolean = false): DataFrame = {
+      store: DataFrame, batchGate: Tables.Gate = Tables.Gate.Shuffle): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // NOT materialized: the seed join consumes it once, and the over-cap
     // slice's semi-join broadcasts ovrH's (usually empty) hash set — AQE
     // replaces the join with an empty relation before this side is ever
     // scanned, so persisting would be pure overhead on the common path
     // (the rare cap-binding path recomputes the explode once, bounded)
-    val bsp0 = spanHashesPos(newDocs)
-    // `broadcastBatch`: when the probe slice is a sliver of the store (the
+    // `batchGate`: when the probe slice is a sliver of the store (the
     // decontamination split — ~1% eval vs 99% train), ship the batch spans
     // to the store's partitions instead of letting the planner shuffle or
-    // sort anything store-sized; the explode's unknown size estimate would
-    // otherwise never pick the broadcast side itself. The 80/20 incremental
-    // split PINS shuffle_hash instead: its batch is not broadcastable, and
-    // merely omitting the hint is not enough — the explode's suppressed
-    // size estimate invites the estimator to driver-broadcast the batch
-    // span stream on its own (the r19 cliff shape, caught by
-    // BroadcastGeneratorGateSpec), so the shuffle plan is pinned, not
-    // merely preferred.
-    val bsp = if (broadcastBatch) broadcast(bsp0) else bsp0.hint("shuffle_hash")
+    // sort anything store-sized. The 80/20 incremental split passes
+    // [[Tables.Gate.Shuffle]]: its batch is not broadcastable.
+    val bsp = batchGate(spanHashesPos(newDocs))
     // SEED: matched positions through under-cap (seed_ok) store rows only —
     // boilerplate never fans out occ² candidates. Feeds the island fold
     // AND the triple set.
@@ -1890,26 +1799,20 @@ object Dedup {
     // re-derives those hashes' positions by semi-joining the span stream
     // against the saturated-hash set. satH is NOT construction-bounded —
     // its cardinality is bounded only by total_spans/MaxSpanDf (~corpus/65),
-    // so a boilerplate-heavy corpus at 100 TB can push it past any broadcast
-    // cap (r19 ADVICE). The broadcast is therefore GATED on a counted bound
-    // (the MaxBroadcastEvalDocs discipline: one bounded limit+count against
-    // the already-materialized posting table); past the gate the semi join
-    // pins shuffle_hash — the right executor-side-build plan for a hash set
-    // too big to ship, and immune to the generator-stats estimator trap.
-    // The common case stays cheap: no saturated hash (measured max occ 4 at
-    // sf0.1) short-circuits the whole branch driver-side — the corpus-scale
-    // span explode is never scanned a second time. When the branch IS live,
-    // `ovr` is materialized before its two consumers (a/b sides), so the
-    // explode re-runs exactly once, not twice (r19 ADVICE).
+    // so a boilerplate-heavy corpus at 100 TB can push it past any
+    // broadcast cap (r19 ADVICE); its gate probes the already-materialized
+    // posting table. The common case stays cheap: no saturated hash
+    // (measured max occ 4 at sf0.1) short-circuits the whole branch
+    // driver-side on the gate's count — the corpus-scale span explode is
+    // never scanned a second time. When the branch IS live, `ovr` is
+    // materialized before its two consumers (a/b sides), so the explode
+    // re-runs exactly once, not twice (r19 ADVICE).
     val satH = post.filter(size(col("ps")) > MaxSpanDf).select(col("h"))
-    val nSat = satH.limit((MaxBroadcastSatHashes + 1).toInt).count()
-    val ext = if (nSat == 0L)
+    val satGate = Tables.Gate.probe(satH, MaxBroadcastSatHashes)
+    val ext = if (satGate.rows == 0L)
       cand.select(col("d1"), col("d2"), col("diag"), col("p1"))
     else {
-      val satSide =
-        if (nSat <= MaxBroadcastSatHashes) broadcast(satH)
-        else satH.hint("shuffle_hash")
-      val ovr = Tables.materialize(sp.join(satSide, Seq("h"), "left_semi"))
+      val ovr = Tables.materialize(sp.join(satGate(satH), Seq("h"), "left_semi"))
       val extra = trip
         .join(ovr.as("a"), col("a.doc_id") === col("d1"))
         .select(col("d1"), col("d2"), col("diag"), col("a.pos").as("p1"),

@@ -118,7 +118,7 @@ object Graph {
     // iterations (self-loops make the update join-free — see graphTables)
     val (edges, docs, n) = graphTables(docs0)
     var ranks = docs.select(col("doc_id").as("v")).crossJoin(broadcast(n))
-      .select(col("v"), expr("CAST(1000000000 AS BIGINT) div n").as("r"))
+      .select(col("v"), expr(s"CAST($Scale AS BIGINT) div n").as("r"))
     for (i <- 1 to iterations) {
       // `div` everywhere: Spark's `/` on longs is a DOUBLE divide, which
       // would break the bit-exactness the fixed-point form exists for
@@ -127,7 +127,7 @@ object Graph {
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
         .crossJoin(broadcast(n))
         .select(col("dst").as("v"), expr(
-          "(15 * (CAST(1000000000 AS BIGINT) div n) + 85 * s) div 100"
+          s"(15 * (CAST($Scale AS BIGINT) div n) + 85 * s) div 100"
         ).as("r"))
       if (i % CheckpointEvery == 0 && i < iterations)
         ranks = ranks.localCheckpoint(true)

@@ -55,14 +55,12 @@ object ImageDedup {
     * is GUARANTEED to share a band. */
   val MaxDist = 3
 
-  /** Counted broadcast cap for the distinct-signature grid (r19 cliff
-    * discipline — see [[Tables.countedBroadcast]]): signature rows are 5
-    * longs ≈ 48 B, banded 4× that, so 2M distinct signatures ≈ 400 MB of
-    * shipped band rows — under the hard cap with headroom. Past it the
-    * report's band self-join and per-doc join pin shuffle_hash. */
+  /** [[Tables.Gate]] cap for the distinct-signature grid: signature rows
+    * are 5 longs ≈ 48 B, banded 4× that, so 2M distinct signatures ≈
+    * 400 MB of shipped band rows — under the hard cap with headroom. */
   val MaxBroadcastSigRows = 2000000L
 
-  /** Counted broadcast cap on BATCH DOC COUNT for the incremental media
+  /** [[Tables.Gate]] cap on BATCH DOC COUNT for the incremental media
     * probes: the probe's band/threshold tables are ≤ 4 rows per batch doc,
     * but counting them directly would consume the media DECODE lineage a
     * second time (the exact double-decode [[incrementalDropped]]'s design
@@ -134,21 +132,10 @@ object ImageDedup {
     // video query at 180 s from exactly that quadratic-in-copies stage.)
     val ex = Tables.materialize(fp.groupBy(sigCols: _*)
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_exact")))
-    // ONE PROVEN bound (r19 cliff discipline, r21 bounded form) drives
-    // both broadcast decisions below: |ex| ≤ |fpIn| — and every caller
-    // passes the persisted fingerprint artifact, so |fpIn| is a
-    // zero-column scan answered from parquet footer metadata, replacing
-    // the r20 limit+count aggregation job over the signature grid at
-    // every query construction. banded rows = 4 × |ex| and near rows ≤
-    // |ex|. Under the cap the bucket self-join and the per-doc join keep
-    // the broadcast plan a collapsed signature grid deserves; past the
-    // bound, one real limit+count of the grid settles it (the bound is
-    // conservative); past the cap both pin shuffle_hash instead of
-    // trusting the generator-suppressed estimate.
-    val exSmall = fpIn.count() <= MaxBroadcastSigRows ||
-      ex.limit((MaxBroadcastSigRows + 1).toInt).count() <= MaxBroadcastSigRows
-    def gated(df: DataFrame): DataFrame =
-      if (exSmall) broadcast(df) else df.hint("shuffle_hash")
+    // one gate for both joins below: |ex| ≤ |fpIn|, and every caller
+    // passes the persisted fingerprint artifact, so |fpIn| is a footer
+    // count; banded rows = 4 × |ex| and near rows ≤ |ex|
+    val gated = Tables.Gate.bounded(fpIn.count(), ex, MaxBroadcastSigRows)
     val banded = ex.select(
       sigCols :+ col("n_exact") :+
         explode(array((0 until 4).map(i => struct(
@@ -390,16 +377,11 @@ object ImageDedup {
     * first arrival, OR some other batch signature within Hamming
     * 1–[[MaxDist]] arrived before d. */
   private[graft] def incrementalDropped(bfp: DataFrame, fpStore: DataFrame,
-      bandStore: DataFrame, batchBounded: Boolean = false): DataFrame = {
+      bandStore: DataFrame, gated: Tables.Gate = Tables.Gate.Shuffle): DataFrame = {
     val sigCols = (0 until 4).map(i => col(s"b$i"))
-    // broadcast-vs-shuffle_hash for every probe-side (generator-descended,
-    // estimate-suppressed) table: decided by the CALLER's counted bound on
-    // the raw batch doc count ([[MaxBroadcastProbeDocs]]) — counting the
-    // probe tables here would re-run the media decode (see Scaladoc); an
-    // unbounded batch pins shuffle_hash instead of trusting the estimator
-    // (r19 cliff discipline)
-    def gated(df: DataFrame): DataFrame =
-      if (batchBounded) broadcast(df) else df.hint("shuffle_hash")
+    // `gated` decides every probe-side table: the caller probes the raw
+    // batch ([[MaxBroadcastProbeDocs]]), since counting the probe tables
+    // here would re-run the media decode (see Scaladoc)
     // FUSED probe chain (round 15): the three drop paths all reduce to
     // "doc d of signature S drops iff doc_id > thresh(S)" for a
     // per-signature threshold — history match ⇒ −1 (everything drops),
@@ -440,10 +422,8 @@ object ImageDedup {
     // intermediate distinct — the final min-aggregate absorbs duplicate
     // candidate rows; verification is a 4-term bit_count, cheaper than
     // the exchange a distinct would cost)
-    // shuffle_hash pins on every generator-descended side (r19 cliff
-    // discipline): bband is the band-exploded batch grid, sigDrop its
-    // aggregate — suppressed estimates both; the store sides stay
-    // in place (bucketed scans)
+    // bband is the band-exploded batch grid and sigDrop its aggregate,
+    // both gated; the store sides stay in place (bucketed scans)
     val histHits = gated(bband)
       .join(bandStore.select(col("band"), col("bh"), col("doc_id").as("hid")),
         Seq("band", "bh"))
@@ -549,14 +529,11 @@ private[graft] final case class MediaFixture(tag: String,
       val newDocs = docs.filter(col("doc_id") % 10 >= 8)
       // no cache: the fused probe body consumes the decode exactly once
       val bfp = fps(newDocs)
-      // counted bound on the RAW batch doc count (cheap scan, no decode)
-      // drives every probe-side broadcast decision — see
-      // ImageDedup.MaxBroadcastProbeDocs
-      val bounded = newDocs.limit((ImageDedup.MaxBroadcastProbeDocs + 1).toInt)
-        .count() <= ImageDedup.MaxBroadcastProbeDocs
-      val dropped = ImageDedup.incrementalDropped(bfp, fpStore, bandStore, bounded)
+      // the RAW batch doc count (cheap scan, no decode) bounds every
+      // probe-side table — see ImageDedup.MaxBroadcastProbeDocs
+      val gated = Tables.Gate.probe(newDocs, ImageDedup.MaxBroadcastProbeDocs)
       newDocs.select(col("doc_id"))
-        .join(if (bounded) broadcast(dropped) else dropped.hint("shuffle_hash"),
+        .join(gated(ImageDedup.incrementalDropped(bfp, fpStore, bandStore, gated)),
           Seq("doc_id"), "left_anti")
         .orderBy("doc_id")
     }

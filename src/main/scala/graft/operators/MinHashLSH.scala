@@ -24,10 +24,9 @@ object MinHashLSH {
 
   val Threshold = 0.5
 
-  /** Counted broadcast cap for the exploded shingle posting stream
-    * ([[Tables.countedBroadcast]], r19 cliff discipline): ~60-byte rows
-    * (doc_id + trigram string) — 10M ≈ 600 MB shipped, under the hard cap
-    * with headroom; past it the verification joins pin shuffle_hash. */
+  /** [[Tables.Gate]] cap for the exploded shingle posting stream: ~60-byte
+    * rows (doc_id + trigram string) — 10M ≈ 600 MB shipped, under the hard
+    * cap with headroom. */
   val MaxBroadcastPostingRows = 10000000L
 
   val Md5Lanes = 8
@@ -127,26 +126,21 @@ object MinHashLSH {
     // value-identical (within-group Jaccard is exactly 1.0, rounded to
     // 1.0; the oracle's doc-level replay agrees because same text ⇒ same
     // bands and the same (i, n₁, n₂) integers).
-    // ONE zero-column metadata count bounds every gated side below:
-    // |members| = nDocs exactly, |repArrays| ≤ nDocs, |bands| ≤
-    // Md5Bands × nDocs — so those gates need no limit+count job over
-    // derived lineage at construction time (r21 bounded-gate form)
+    // ONE zero-column metadata count bounds every gated side below but
+    // the posting stream: |members| = nDocs exactly, |repArrays| ≤ nDocs,
+    // |bands| ≤ Md5Bands × nDocs
     val nDocs = Tables.documents(s, d).count()
     val (members, repDocs) = textGroups(Tables.documents(s, d))
     val repArrays = Tables.materialize(shingleArrays(repDocs))
-    // MATERIALIZED (r20): the band table feeds the counted gate's probe
-    // AND both sides of the bucket self-join — uncached, the md5 signature
-    // build (the dominant cost) ran once per consumer; cached, the gate's
-    // limit+count pre-populates what the join sides read
+    // MATERIALIZED (r20): the band table feeds both sides of the bucket
+    // self-join (and the gate's probe, should the bound be inconclusive) —
+    // uncached, the md5 signature build (the dominant cost) ran once per
+    // consumer
     val bands = Tables.materialize(md5Bands(md5Signatures(repArrays)))
-    // gated broadcasts (r19 cliff discipline): the band table and the
-    // shingle posting stream are both generator-fed, corpus-scale sides
-    // with suppressed estimates — the band side is proven under its cap
-    // by the nDocs bound (r21), the posting stream (no static bound: the
-    // per-doc shingle count is data-dependent) by one real limit+count
-    // shared by both posting joins; past a cap, shuffle_hash
+    // the posting stream has no static bound (the per-doc shingle count
+    // is data-dependent), so one probe serves both posting joins
     val cand = bands.as("a")
-      .join(Tables.boundedBroadcast(bands, Similarity.satMul(nDocs, Md5Bands),
+      .join(Tables.boundedBroadcast(bands, Tables.satMul(nDocs, Md5Bands),
         Similarity.MaxBroadcastBandRows).as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh")
           && col("a.doc_id") < col("b.doc_id"))
@@ -168,8 +162,7 @@ object MinHashLSH {
       .join(card.as("cb"), col("cb.doc_id") === col("d2"))
       .filter(jac >= Threshold)
       .select(col("d1").as("g1"), col("d2").as("g2"), round(jac, 6).as("jaccard"))
-    // membership-expansion joins: |members| = nDocs exactly, so the gated
-    // broadcast is proven safe by the same metadata count — the r20 plan
+    // membership-expansion joins, bounded by nDocs — the r20 plan
     // sort-merge-joined these (estimator saw a join output, not a bounded
     // table), paying two Sort+Exchange pairs on the rep-pair stream
     val mGated = Tables.boundedBroadcast(members, nDocs,
@@ -227,17 +220,10 @@ object MinHashLSH {
   private[graft] def dedupIncrementalMinHashSigs(newDocs: DataFrame,
       bsigs: DataFrame, sigStore: DataFrame, bandStore: DataFrame): DataFrame = {
     val bband = md5Bands(bsigs)
-    // counted bound on the RAW batch doc count (cheap scan — counting the
-    // band explode itself would re-run the md5 signature build): batch
-    // band rows are ≤ Md5Bands × batch docs, so under the cap every
-    // probe-side table keeps the broadcast plan a day's batch deserves;
-    // past it the joins pin shuffle_hash instead of trusting the
-    // generator-suppressed estimate (r19 cliff discipline)
-    val bounded = newDocs
-      .limit((graft.operators.ImageDedup.MaxBroadcastProbeDocs + 1).toInt)
-      .count() <= graft.operators.ImageDedup.MaxBroadcastProbeDocs
-    def gated(df: DataFrame): DataFrame =
-      if (bounded) broadcast(df) else df.hint("shuffle_hash")
+    // the RAW batch doc count bounds every probe-side table (band rows ≤
+    // Md5Bands × batch docs); counting the band explode itself would
+    // re-run the md5 signature build
+    val gated = Tables.Gate.probe(newDocs, ImageDedup.MaxBroadcastProbeDocs)
     val candH = gated(bband)
       .join(bandStore.select(col("band"), col("bh"), col("doc_id").as("hid")),
         Seq("band", "bh"))

@@ -112,20 +112,12 @@ object SimHash {
         shiftright(col("simhash"), b * width)
           .bitwiseAND(lit((1L << width) - 1)).as("bh"))): _*)).as("bb"))
       .select(col("doc_id"), col("simhash"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    // gated broadcast (r19 broadcast-cliff discipline, r21 bounded form):
-    // the band-exploded fingerprint table is corpus-scale with a
-    // generator-suppressed size estimate, so the broadcast is decided by
-    // a PROVEN bound when the caller supplies one (|banded| = bands ×
-    // |fps| ≤ bands × fpBound — e.g. the raw document count, a
-    // zero-column metadata scan) and by a real limit+count otherwise —
-    // under the cap the bucket join ships the ~32-byte band rows (the
-    // fast plan at bench scale, ~0.5 s under the shuffle), past it
-    // shuffle_hash instead of the estimator's OOM cliff
-    val gatedBanded =
-      if (fpBound >= 0)
-        Tables.boundedBroadcast(banded, Similarity.satMul(fpBound, bands),
-          Similarity.MaxBroadcastBandRows)
-      else Tables.countedBroadcast(banded, Similarity.MaxBroadcastBandRows)
+    // |banded| = bands × |fps| ≤ bands × fpBound when the caller supplies
+    // a bound (e.g. the raw document count, a zero-column metadata scan);
+    // without one (-1) the gate probes. Under the cap the bucket join
+    // ships the ~32-byte band rows (~0.5 s under the shuffle at bench scale)
+    val gatedBanded = Tables.boundedBroadcast(banded,
+      Tables.satMul(fpBound, bands), Similarity.MaxBroadcastBandRows)
     banded.as("a")
       .join(gatedBanded.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&

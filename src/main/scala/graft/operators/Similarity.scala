@@ -183,11 +183,9 @@ object Similarity {
     * supported operators. */
   val MaxExactAllPairsCorpus = 10000L
 
-  /** Counted broadcast caps for [[Tables.countedBroadcast]] gates (r19
-    * cliff discipline). Band rows are (rep long, band int, bh long) ≈ 48 B
-    * UnsafeRows — 8M ≈ 400 MB shipped, far under the broadcast hard cap;
-    * member rows are (rep, mid) 16-byte pairs — 20M ≈ 320 MB. Past either
-    * cap the join pins shuffle_hash instead of OOMing a driver. */
+  /** [[Tables.Gate]] caps. Band rows are (rep long, band int, bh long) ≈
+    * 48 B UnsafeRows — 8M ≈ 400 MB shipped, far under the broadcast hard
+    * cap; member rows are (rep, mid) 16-byte pairs — 20M ≈ 320 MB. */
   val MaxBroadcastBandRows = 8000000L
   val MaxBroadcastMemberRows = 20000000L
 
@@ -359,21 +357,6 @@ object Similarity {
     cosinePairsCollapsed(embeddings, threshold)(
       bandedCandidates(nBits, bandBits))
 
-  /** Exact twin of [[cosinePairsBanded]] on the SAME collapse-first plan:
-    * candidate rep pairs are the full rep×rep triangle instead of band
-    * collisions, so the answer is exact by construction (no banding miss
-    * probability) while still paying the quadratic cost only on DISTINCT
-    * vectors. Callers must guard rep cardinality ([[MaxExactAllPairsCorpus]])
-    * — this is the verifiable-regime path, not the 100 TB path. */
-  def cosinePairsExactCollapsed(embeddings: DataFrame, threshold: Double = 0.4): DataFrame =
-    cosinePairsCollapsed(embeddings, threshold)((reps, _) => exactRepCandidates(reps))
-
-  /** `a × b` saturating at Long.MaxValue — row-bound arithmetic for
-    * [[Tables.boundedBroadcast]] (a saturated bound is simply inconclusive
-    * and falls back to the counted gate). */
-  private[operators] def satMul(a: Long, b: Long): Long =
-    if (a > 0 && b > 0 && a > Long.MaxValue / b) Long.MaxValue else a * b
-
   /** Band-collision candidate generator over distinct-vector reps.
     * `nVec` is the raw vector count — a provable bound on |reps|. */
   private def bandedCandidates(nBits: Int, bandBits: Int)(
@@ -390,17 +373,12 @@ object Similarity {
           struct(lit(b).as("band"),
             shiftright(col("sig"), b * bandBits).bitwiseAND(lit(mask)).as("bh"))): _*)).as("bb"))
         .select(col("rep"), col("bb.band").as("band"), col("bb.bh").as("bh")))
-    // BOUNDED broadcast gate (r21, same r19 cliff discipline): |banded| =
-    // nBands × |reps| ≤ nBands × nVec by construction, and nVec is one
-    // zero-column metadata count of the raw vector table — the broadcast
-    // is proven safe without the limit+count job the r20 counted gate ran
-    // at every query construction. Under the cap the bucket join ships
-    // the band table (the fast plan for a collapsed rep set; measured
-    // 2.5 s cheaper than the shuffle at sf0.1), past it the counted
-    // fallback and then shuffle_hash — never the generator-suppressed
-    // estimate
+    // |banded| = nBands × |reps| ≤ nBands × nVec by construction, and nVec
+    // is one zero-column metadata count of the raw vector table. Under the
+    // cap the bucket join ships the band table (measured 2.5 s cheaper
+    // than the shuffle at sf0.1)
     banded.as("a")
-      .join(Tables.boundedBroadcast(banded, satMul(nVec, nBands),
+      .join(Tables.boundedBroadcast(banded, Tables.satMul(nVec, nBands),
         MaxBroadcastBandRows).as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh")
           && col("a.rep") < col("b.rep"))
@@ -409,7 +387,7 @@ object Similarity {
   }
 
   /** Full rep×rep triangle — exact candidates for guarded-size rep sets. */
-  private def exactRepCandidates(reps: DataFrame): DataFrame =
+  private[graft] def exactRepCandidates(reps: DataFrame): DataFrame =
     reps.select(col("rep").as("r1"))
       .crossJoin(reps.select(col("rep").as("r2")))
       .filter(col("r1") < col("r2"))
@@ -417,7 +395,7 @@ object Similarity {
   /** Shared collapse → candidates → exact-verify → expand core of the
     * all-pairs cosine operators. `candidates` maps the distinct-vector rep
     * frame (rep, e, nrm) to candidate pairs (r1, r2) with r1 < r2. */
-  private def cosinePairsCollapsed(embeddings: DataFrame, threshold: Double)(
+  private[graft] def cosinePairsCollapsed(embeddings: DataFrame, threshold: Double)(
       candidates: (DataFrame, Long) => DataFrame): DataFrame = {
     // ONE cheap count of the raw vector table (zero-column scan — parquet
     // answers it from footer metadata) bounds every gated side below:
@@ -463,12 +441,8 @@ object Similarity {
       .filter(col("cos") >= threshold)
       .select(col("rep").as("r1"), col("rep").as("r2"), col("cos"))
     // expand scores back through the duplicate groups. The membership
-    // explode is corpus-scale (one row per VECTOR, not per rep) and
-    // generator-fed — suppressed estimate — so the broadcast is decided
-    // by the PROVEN bound |m| = nVec shared by all four expansion joins
-    // (r19 cliff discipline, r21 bounded form): under the cap the 16-byte
-    // (rep, mid) pairs ship broadcast, past it the counted fallback and
-    // then shuffle_hash
+    // explode is corpus-scale (one row per VECTOR, not per rep), bounded
+    // by |m| = nVec and shared by all four expansion joins
     val m = Tables.boundedBroadcast(
       groups.select(col("rep"), explode(col("members")).as("mid")),
       nVec, MaxBroadcastMemberRows)
@@ -820,7 +794,7 @@ object Similarity {
     * vector cardinality (counted via a cheap collapse — the 10×-dup probe
     * stays under the guard): within [[MaxExactAllPairsCorpus]] distinct
     * vectors, candidates are the full rep triangle
-    * ([[cosinePairsExactCollapsed]]) — exact by construction, quadratic only
+    * ([[exactRepCandidates]]) — exact by construction, quadratic only
     * in distinct vectors; beyond it, sign-bit banding
     * ([[cosinePairsBanded]]), whose ≡-exact behavior is spec-asserted across
     * threshold×band regimes. Either way the quadratic stages never see the
@@ -1249,16 +1223,7 @@ object Similarity {
       .join(resid.select(col("vec_id"), col("cid"), col("nrm")), Seq("vec_id"))
   }
 
-  def knnIvfPq(embeddings: DataFrame, k: Int = 5, numCentroids: Int = 16,
-      nprobe: Int = 8, trainIters: Int = 2): DataFrame = {
-    val n = Tables.materialize(withNorm(embeddings))
-    val dim = n.select(size(col("e"))).head.getInt(0)
-    val cents = Tables.materialize(kmeansCentroidArray(n, numCentroids, trainIters))
-    val cb = Tables.materialize(ivfPqCodebook(n, dim, cents, trainIters))
-    knnIvfPqWith(n, dim, cents, cb, ivfPqIndex(n, dim, cents, cb), k, nprobe)
-  }
-
-  /** [[knnIvfPq]] serving path against externally supplied (typically
+  /** IVF-PQ serving path against externally supplied (typically
     * [[trainOnce]]-persisted) artifacts: coarse centroids, residual
     * codebook, and the encoded index. Probe → ADC-score → exact rerank;
     * the only corpus-sized input the serving path scans in full precision
@@ -1607,18 +1572,30 @@ object Similarity {
     // materialize once (production would stage the day's assignments)
     val bmem = Tables.materialize(
       ivfListsFrom(n.filter(col("vec_id") % 10 >= 8), cents))
-    val histDrops = store.as("h")
-      .join(broadcast(bmem.as("b")), col("h.cid") === col("b.cid"))
-      .filter(dot(col("h.e"), col("b.e")) / (col("h.nrm") * col("b.nrm")) >= 0.99)
-      .select(col("b.vec_id").as("vec_id"))
-    val batchDrops = bmem.as("a")
-      .join(bmem.as("b"),
-        col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
-      .filter(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")) >= 0.99)
-      .select(col("b.vec_id").as("vec_id"))
     bmem.select(col("vec_id"), col("cid"))
-      .join(histDrops.union(batchDrops), Seq("vec_id"), "left_anti")
+      .join(cosineDrops(store, bmem), Seq("vec_id"), "left_anti")
       .orderBy("vec_id")
+  }
+
+  /** The incremental semantic keep rule's drop set, shared by
+    * [[incrementalSemantic]] and the streaming semantic ingest loops:
+    * vec_ids of the cluster-assigned batch `b` (vec_id, e, nrm, cid) with
+    * a `store` member of the same cluster — or a smaller-vec_id member of
+    * `b` itself — at cosine ≥ 0.99. May hold a vec_id twice; a left_anti
+    * join against it does not care. */
+  private[graft] def cosineDrops(store: DataFrame, b: DataFrame): DataFrame = {
+    def cos(x: String, y: String): Column =
+      dot(col(s"$x.e"), col(s"$y.e")) / (col(s"$x.nrm") * col(s"$y.nrm"))
+    val histDrops = store.as("h")
+      .join(broadcast(b.as("b")), col("h.cid") === col("b.cid"))
+      .filter(cos("h", "b") >= 0.99)
+      .select(col("b.vec_id").as("vec_id"))
+    val batchDrops = b.as("a")
+      .join(b.as("b"),
+        col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
+      .filter(cos("a", "b") >= 0.99)
+      .select(col("b.vec_id").as("vec_id"))
+    histDrops.union(batchDrops)
   }
 
   /** Recall@5-vs-nprobe sweep for the untrained IVF path — retrieval

@@ -219,20 +219,13 @@ object TrainingData {
     * shuffle; per-doc counts then aggregate on doc_id. The shingle explode
     * is materialized once and feeds both sides (eval + corpus), exactly the
     * staged-table layout a production pipeline would persist. */
-  /** Counted broadcast gate for the contamination family's eval-gram set
-    * (the MaxBroadcastEvalDocs discipline, membership grain): a real
-    * benchmark suite is at most ~10⁶ distinct 5-grams (well under the cap,
-    * so the fast broadcast path — corpus side joins WITHOUT a shuffle —
-    * stays the measured plan), but the %97 stand-in slice is a corpus
+  /** [[Tables.Gate]] cap for the contamination family's eval-gram set: a
+    * real benchmark suite is at most ~10⁶ distinct 5-grams (well under the
+    * cap, so the fast broadcast path — corpus side joins WITHOUT a shuffle
+    * — stays the measured plan), but the %97 stand-in slice is a corpus
     * FRACTION, and a corpus-fraction eval set at 100 TB is past any
-    * broadcast cap. One early-terminating limit+count decides; past the
-    * cap the membership join pins shuffle_hash instead of hitting the
-    * broadcast OOM cliff. */
+    * broadcast cap. */
   private val MaxBroadcastEvalGrams = 1000000L
-  private def evalGramSide(ev: DataFrame): DataFrame =
-    if (ev.limit((MaxBroadcastEvalGrams + 1).toInt).count() <= MaxBroadcastEvalGrams)
-      broadcast(ev)
-    else ev.hint("shuffle_hash")
 
   /** Oracle CTEs ending in `tot(doc_id, n_sh)` and `hit(doc_id, n_hit)`:
     * the replay of [[contaminationCounts]]. */
@@ -268,7 +261,7 @@ object TrainingData {
       sh.filter(col("doc_id") % 97 === 0).select(col("g")).distinct())
     val corpus = sh.filter(col("doc_id") % 97 =!= 0)
     val tot = corpus.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val hit = corpus.join(evalGramSide(ev), Seq("g"))
+    val hit = corpus.join(Tables.countedBroadcast(ev, MaxBroadcastEvalGrams), Seq("g"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
     (tot, hit)
   }

@@ -165,9 +165,10 @@ object ParquetSink {
     * survive in an untouched partition. The rewrite is Spark's dynamic
     * partition overwrite (only partitions present in the merged output are
     * replaced), committed per job; a crash mid-write leaves some touched
-    * partitions old and some new — the generation discipline of the
-    * streaming merge loop is the stronger-isolation alternative when that
-    * window matters. Returns the merged table. */
+    * partitions old and some new — the state-store frontier of
+    * [[graft.streaming.StreamingOps.urlMergeStream]], committed with each
+    * micro-batch, is the stronger-isolation alternative when that window
+    * matters. Returns the merged table. */
   def mergePartitionedBucketed(batch: DataFrame, table: String,
       partCol: String, key: String): DataFrame = {
     val spark = batch.sparkSession

@@ -232,6 +232,14 @@ object InventoryStream {
           lit(null).cast(Schemas.productKey).as("key")),
           Map("ignoreNullFields" -> "false"))).as("value"))
 
+  /** The whole pipeline body between the two Kafka endpoints: decode,
+    * fold, the reference's `peek`
+    * (KafkaStreamsInventoryCountApplication.java:84), encode.
+    * [[kafkaPipeline]] runs it, and so can any source of the Kafka wire
+    * schema. */
+  def pipeline(wire: DataFrame): DataFrame =
+    encode(withPeek(foldStream(decode(wire))))
+
   /** Default topic names — the reference's stream bindings
     * (application.yml:3-7: process-in-0 = inventory-update-events,
     * process-out-0 = inventory-count-events). */
@@ -273,7 +281,7 @@ object InventoryStream {
       .format("kafka")
       .options(kafkaSourceOptions(bootstrapServers, inputTopic))
       .load()
-    encode(foldStream(decode(wire))).writeStream
+    pipeline(wire).writeStream
       .format("kafka")
       .options(kafkaSinkOptions(bootstrapServers, outputTopic, checkpointDir))
       .outputMode(OutputMode.Update)

@@ -386,7 +386,8 @@ object StreamingOps {
     val bmem = graft.operators.Similarity.ivfListsFrom(normed(batch), centroids).persist()
     try {
       val survivors = bmem
-        .join(cosineDrops(storeBefore(spark, memPath, memSchema, batchId), bmem),
+        .join(graft.operators.Similarity.cosineDrops(
+            storeBefore(spark, memPath, memSchema, batchId), bmem),
           Seq("vec_id"), "left_anti")
         .persist()
       try {
@@ -407,25 +408,6 @@ object StreamingOps {
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("e"))
       .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
-
-  /** The semantic keep rule's drop set: vec_ids of the cluster-assigned
-    * batch `b` (vec_id, e, nrm, cid) with a `store` member of the same
-    * cluster — or a smaller-vec_id member of `b` itself — at cosine ≥ 0.99.
-    * May hold a vec_id twice; a left_anti join against it does not care. */
-  private def cosineDrops(store: DataFrame, b: DataFrame): DataFrame = {
-    def cos(x: String, y: String): Column =
-      dot(col(s"$x.e"), col(s"$y.e")) / (col(s"$x.nrm") * col(s"$y.nrm"))
-    val histDrops = store.as("h")
-      .join(broadcast(b.as("b")), col("h.cid") === col("b.cid"))
-      .filter(cos("h", "b") >= 0.99)
-      .select(col("b.vec_id").as("vec_id"))
-    val batchDrops = b.as("a")
-      .join(b.as("b"),
-        col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
-      .filter(cos("a", "b") >= 0.99)
-      .select(col("b.vec_id").as("vec_id"))
-    histDrops.union(batchDrops)
-  }
 
   /** One micro-batch of the NEAR-dup ingest loop — the streaming twin of
     * `dedup_incremental_minhash_md5`, on the same keep rule
@@ -487,17 +469,14 @@ object StreamingOps {
       .toDF()
       .persist()
     try {
-      // counted bound on the persisted batch fingerprint table (the count
-      // populates the cache the probe reads anyway — no second decode);
-      // a trigger-sized micro-batch is far under the cap, so the probe
-      // keeps its broadcast plan, while an oversized replay falls back to
-      // shuffle_hash instead of the estimator cliff
-      val bounded = bfp.limit((graft.operators.ImageDedup.MaxBroadcastProbeDocs + 1).toInt)
-        .count() <= graft.operators.ImageDedup.MaxBroadcastProbeDocs
+      // probe the persisted batch fingerprint table: the count populates
+      // the cache the drop set reads anyway — no second decode
+      val gated = graft.Tables.Gate.probe(bfp,
+        graft.operators.ImageDedup.MaxBroadcastProbeDocs)
       val dropped = graft.operators.ImageDedup.incrementalDropped(
         bfp.filter(col("b0") >= 0),
         storeBefore(spark, fpPath, imgFpSchema, batchId),
-        storeBefore(spark, bandPath, bandSchema, batchId), bounded)
+        storeBefore(spark, bandPath, bandSchema, batchId), gated)
       val survivors = bfp
         .join(dropped, Seq("doc_id"), "left_anti")
         .join(collapsed, Seq("doc_id"))
@@ -577,7 +556,8 @@ object StreamingOps {
       // no distinct on the drop set: left_anti is unaffected by duplicate
       // right-side keys, and the dedup would cost an exchange per batch
       val survivors = assigned
-        .join(cosineDrops(store, assigned), Seq("vec_id"), "left_anti")
+        .join(graft.operators.Similarity.cosineDrops(store, assigned),
+          Seq("vec_id"), "left_anti")
         .persist()
       try {
         overwriteBatch(survivors

@@ -100,10 +100,10 @@ class BroadcastGeneratorGateSpec extends AnyFunSuite {
         "(Dedup.spanExtentQuery)")),
     "contamination_ngram" -> (1 ->
       ("eval gram set ships broadcast only under the counted " +
-        "MaxBroadcastEvalGrams limit+count gate (TrainingData.evalGramSide)")),
+        "MaxBroadcastEvalGrams probe (Tables.countedBroadcast, TrainingData.contaminationCounts)")),
     "contamination_strip" -> (1 ->
       ("eval gram set ships broadcast only under the counted " +
-        "MaxBroadcastEvalGrams limit+count gate (TrainingData.evalGramSide)")),
+        "MaxBroadcastEvalGrams probe (Tables.countedBroadcast, TrainingData.contaminationCounts)")),
     "dedup_minhash_lsh_md5" -> (3 ->
       ("band self-join + two posting verification joins broadcast only " +
         "under counted MaxBroadcastBandRows/MaxBroadcastPostingRows gates " +

@@ -49,7 +49,7 @@ class CcAlternatingSpec extends AnyFunSuite {
     val e = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
     // diameter 199 > MaxCcIterations → propagation must fail loudly...
     val err = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(v, e).collect()
+      DedupClustersSpec.connectedComponents(v, e).collect()
     }
     assert(err.getMessage.contains("did not converge"))
     // ...while the alternating contraction converges in O(log n) rounds
@@ -69,7 +69,7 @@ class CcAlternatingSpec extends AnyFunSuite {
     val a = Dedup.clusters.run(spark, dir)
       .select("doc_id", "cluster_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Dedup.connectedComponents(v, pairs)
+    val b = DedupClustersSpec.connectedComponents(v, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a === b)
     assert(a.nonEmpty)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The OVER-CAP arm of the broadcast gates (r20 verdict carry, closed in
-  * r22): [[Tables.countedBroadcast]] and [[Tables.boundedBroadcast]] are
+  * r22): [[Tables.Gate]] and its one-side uses [[Tables.countedBroadcast]]
+  * and [[Tables.boundedBroadcast]] are
   * the standing defense against the r19 estimator-trusted-broadcast OOM
   * cliff, and BroadcastGeneratorGateSpec pins their UNDER-cap decisions —
   * but nothing pinned what the gates do when the side is genuinely too
@@ -16,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * BroadcastExchange may hold the gated side. A regression that turns the
   * over-cap arm back into a broadcast (or silently drops the hint and
   * lets the planner pick SortMergeJoin with the hint discarded) fails
-  * here, not on a cluster. */
+  * here, not on a cluster. One gate may decide several sides; it must do
+  * so on one probe. */
 class CountedGateOverCapSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
@@ -75,5 +77,39 @@ class CountedGateOverCapSpec extends AnyFunSuite {
     val (shj2, bhj2, _) = joinKinds(executedNodes(probe.join(rescued, Seq("k"))))
     assert(bhj2 == 1 && shj2 == 0,
       s"inconclusive bound + under-cap count must broadcast: shj=$shj2 bhj=$bhj2")
+  }
+
+  /** Jobs launched by `body` on this thread. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"gate-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "gate probe")
+    val out = try body finally sc.clearJobGroup()
+    org.apache.spark.sql.graftbridge.GraftBridge.drainListenerBus(sc)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  test("one probe gates two sides: both shuffle_hash over the cap, both " +
+      "broadcast under it, and either way the probe runs once") {
+    // the jobs of ONE limit+count of the probed frame: the budget of a
+    // whole gate, whatever number of sides it decides
+    val (_, oneProbe) = jobsOf(bigSide.limit(101).count())
+    assert(oneProbe >= 1)
+    def twoSides(gate: Tables.Gate): DataFrame = {
+      val left = gate(bigSide.select(col("k"), col("v").as("v1")))
+      val right = gate(bigSide.select(col("k"), (col("v") + 1).as("v2")))
+      probe.join(left, Seq("k")).join(right, Seq("k"))
+    }
+    val (over, overJobs) = jobsOf(twoSides(Tables.Gate.probe(bigSide, maxRows = 100L)))
+    assert(overJobs === oneProbe, "an over-cap gate on two sides must probe once")
+    val (shj, bhj, smj) = joinKinds(executedNodes(over))
+    assert(shj == 2 && bhj == 0 && smj == 0,
+      s"over-cap gate must pin shuffle_hash on both sides: shj=$shj bhj=$bhj smj=$smj")
+    val (under, underJobs) =
+      jobsOf(twoSides(Tables.Gate.probe(bigSide, maxRows = 100000L)))
+    assert(underJobs === oneProbe, "an under-cap gate on two sides must probe once")
+    val (shj2, bhj2, _) = joinKinds(executedNodes(under))
+    assert(bhj2 == 2 && shj2 == 0,
+      s"under-cap gate must broadcast both sides: shj=$shj2 bhj=$bhj2")
   }
 }

@@ -30,12 +30,12 @@ class DedupClustersSpec extends AnyFunSuite {
     val ids = (0L to 9L)
     // chain 0-1-2-3 needs >1 propagation round; 5-6-7 star; 4/8/9 singletons
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (5L, 6L), (5L, 7L))
-    val got = Dedup.connectedComponents(
+    val got = DedupClustersSpec.connectedComponents(
       ids.toDF("id"), edges.toDF("a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === unionFind(ids, edges))
     // joining two components through a late edge also converges
-    val merged = Dedup.connectedComponents(
+    val merged = DedupClustersSpec.connectedComponents(
       ids.toDF("id"), (edges :+ (3L, 5L)).toDF("a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(merged === unionFind(ids, edges :+ (3L, 5L)))
@@ -44,7 +44,7 @@ class DedupClustersSpec extends AnyFunSuite {
 
   test("no edges: every vertex is its own cluster, one round") {
     import spark.implicits._
-    val got = Dedup.connectedComponents(
+    val got = DedupClustersSpec.connectedComponents(
       (0L to 4L).toDF("id"), Seq.empty[(Long, Long)].toDF("a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (0L to 4L).map(i => i -> i).toMap)
@@ -66,5 +66,73 @@ class DedupClustersSpec extends AnyFunSuite {
       assert(cid === model(doc), s"doc $doc cluster")
       assert(csize === sizes(model(doc)), s"doc $doc cluster size")
     }
+  }
+}
+
+object DedupClustersSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** Connected components by iterative min-label propagation: every vertex
+    * starts labeled with itself; each round takes the min label over its
+    * neighbors; fixpoint = per-component min vertex id. The standard
+    * MapReduce/Spark formulation (cf. Kiveris et al., "Connected Components
+    * in MapReduce and Beyond", SoCC'14 — whose large-star/small-star
+    * variant is the O(log n)-round upgrade if components with large
+    * diameters ever appear; plain propagation is O(diameter) rounds).
+    *
+    * A test oracle: O(diameter) rounds is a scale trap on high-diameter
+    * graphs (a 200-link chain needs 200 shuffle rounds and trips
+    * [[Dedup.MaxCcIterations]]), so the registered `dedup_clusters` query
+    * runs [[Dedup.connectedComponentsAlternating]] instead. This form is
+    * the independent differential twin — DedupClustersSpec and
+    * CcAlternatingSpec pin both against union-find and each other.
+    *
+    * Iterative-DataFrame discipline: each round's labels are
+    * `localCheckpoint`ed — without it the plan doubles every round and
+    * Catalyst re-executes the whole history each action. The driver-side
+    * loop is the algorithm's control flow, not a data path: per round it
+    * runs exactly one `isEmpty` convergence probe on the changed-labels
+    * filter; labels themselves never reach the driver. Shuffles are keyed
+    * by vertex id / label only; a hot label (giant component) is an
+    * aggregation key, map-side combined, not a join hot spot.
+    *
+    * Only EDGE ENDPOINTS iterate: a vertex with no edge keeps its own label
+    * by definition, so the loop runs on the near-dup subgraph (a sliver of
+    * any real corpus — most documents are in no pair at all) and the full
+    * vertex set joins back once at the end. At 100 TB this is the
+    * difference between propagating over the corpus and propagating over
+    * its duplicate fringe; at bench scale it cuts the per-round job to a
+    * few hundred rows (measured 4.8 s → ~2 s at sf0.1). */
+  def connectedComponents(vertices: DataFrame, edges: DataFrame): DataFrame = {
+    val sym = edges.select(col("a"), col("b"))
+      .union(edges.select(col("b").as("a"), col("a").as("b")))
+      .localCheckpoint(true) // read by every round: materialize once
+    // initialize at the ONE-HOP min (self ∪ neighbors) — the first
+    // propagation round fused into initialization: star/pair components
+    // (the overwhelming near-dup shape) converge immediately and pay only
+    // the confirmation round
+    var labels = sym.groupBy(col("a"))
+      .agg(least(col("a"), min(col("b"))).as("label"))
+      .select(col("a").as("id"), col("label"))
+      .localCheckpoint(true)
+    var converged = false
+    var rounds = 0
+    while (!converged) {
+      require(rounds < Dedup.MaxCcIterations,
+        s"label propagation did not converge in ${Dedup.MaxCcIterations} rounds")
+      val nbr = sym
+        .join(labels.select(col("id").as("nid"), col("label")), col("b") === col("nid"))
+        .groupBy(col("a")).agg(min(col("label")).as("nbr_label"))
+      val next = labels
+        .join(nbr, col("id") === col("a"), "left")
+        .select(col("id"), col("label"),
+          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("next_label"))
+        .localCheckpoint(true)
+      converged = next.filter(col("next_label") < col("label")).isEmpty
+      labels = next.select(col("id"), col("next_label").as("label"))
+      rounds += 1
+    }
+    vertices.join(labels, Seq("id"), "left")
+      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
   }
 }

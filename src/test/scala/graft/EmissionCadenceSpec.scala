@@ -85,14 +85,14 @@ class EmissionCadenceSpec extends AnyFunSuite {
         byBatch(bid).map(r => r._2.productCode -> r._2.count).toMap
       // Latest-value-only: each batch carries the model fold of the FULL
       // history at that point, never an intermediate.
-      val pAfter1 = Actions.foldAllState(history("p").toSeq.take(50))
-      val qAfter1 = Actions.foldAllState(history("q").toSeq.take(30))
+      val pAfter1 = FoldPropertySpec.foldAllState(history("p").toSeq.take(50))
+      val qAfter1 = FoldPropertySpec.foldAllState(history("q").toSeq.take(30))
       assert(counts(b1) === Map("p" -> pAfter1, "q" -> qAfter1))
       // Update-mode silence: p unchanged in round 2 → absent from batch 2.
       assert(counts(b2).keySet === Set("q"), s"untouched key re-emitted: ${counts(b2)}")
       assert(counts(b3) === Map(
-        "p" -> Actions.foldAllState(history("p").toSeq),
-        "q" -> Actions.foldAllState(history("q").toSeq)))
+        "p" -> FoldPropertySpec.foldAllState(history("p").toSeq),
+        "q" -> FoldPropertySpec.foldAllState(history("q").toSeq)))
     } finally query.stop()
   }
 }

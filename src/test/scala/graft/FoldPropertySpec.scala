@@ -29,8 +29,8 @@ class FoldPropertySpec extends AnyFunSuite {
 
   test("model law: a REP makes everything before it irrelevant") {
     check(Prop.forAll(genSeq, genSeq, Gen.choose(1, 10)) { (before, after, rep) =>
-      Actions.foldAll(before ++ ((Actions.Rep, rep) +: after)) ==
-        Actions.foldAll((Actions.Rep, rep) +: after)
+      FoldPropertySpec.foldAll(before ++ ((Actions.Rep, rep) +: after)) ==
+        FoldPropertySpec.foldAll((Actions.Rep, rep) +: after)
     }, 200)
   }
 
@@ -41,14 +41,14 @@ class FoldPropertySpec extends AnyFunSuite {
     } yield (a, d))
     check(Prop.forAll(noRep) { evs =>
       val signed = evs.map { case (a, d) => if (a == Actions.Inc) d else -d }.sum
-      Actions.foldAll(evs) == signed &&
-        Actions.foldAll(evs.reverse) == signed
+      FoldPropertySpec.foldAll(evs) == signed &&
+        FoldPropertySpec.foldAll(evs.reverse) == signed
     }, 200)
   }
 
   test("model law: fold is prefix-composable (state carries across rounds)") {
     check(Prop.forAll(genSeq, genSeq) { (r1, r2) =>
-      Actions.foldAll(r1 ++ r2) == Actions.foldAll(r2, init = Actions.foldAll(r1))
+      FoldPropertySpec.foldAll(r1 ++ r2) == FoldPropertySpec.foldAll(r2, init = FoldPropertySpec.foldAll(r1))
     }, 200)
   }
 
@@ -66,7 +66,7 @@ class FoldPropertySpec extends AnyFunSuite {
     }
     check(Prop.forAll(genStream) { events =>
       val model = events.groupBy(_.productCode).map { case (k, es) =>
-        k -> Actions.foldAll(es.sortBy(_.eventOrder).map(e => (e.action, e.delta))).toLong
+        k -> FoldPropertySpec.foldAll(es.sortBy(_.eventOrder).map(e => (e.action, e.delta))).toLong
       }
       val df = scala.util.Random.shuffle(events).toDS().toDF()
         .selectExpr("productCode as product_code", "eventOrder as event_order", "action", "delta")
@@ -75,4 +75,27 @@ class FoldPropertySpec extends AnyFunSuite {
       got == model
     }, 15)
   }
+}
+
+/** The reference fold over a whole event sequence, the model the fold
+  * specs check every batch and streaming formulation against. */
+object FoldPropertySpec {
+  /** Removal-aware fold of a whole event sequence: the differential model
+    * for [[graft.streaming.InventoryStream.foldGroup]] including the
+    * unknown-action path. `None` = the key is removed from the table (a
+    * null aggregate in the reference, KGroupedStream.aggregate contract);
+    * a LATER event re-initializes from the initializer's count=0 — never
+    * from the stale value. */
+  def foldAllState(events: Seq[(String, Int)], init: Option[Int] = None): Option[Int] =
+    events.foldLeft(init) { case (st, (action, delta)) =>
+      Actions.update(st.getOrElse(0), action, delta)
+    }
+
+  /** Order-sensitive foldLeft of a whole event sequence — the differential
+    * model used by tests (mirrors InventoryUpdateEventGenerator.java:74-106).
+    * Delegates to [[foldAllState]], so removal semantics (reset to 0, not
+    * keep-stale) match the streaming fold exactly; a trailing removal folds
+    * to the initializer's 0. */
+  def foldAll(events: Seq[(String, Int)], init: Int = 0): Int =
+    foldAllState(events, Some(init)).getOrElse(0)
 }

@@ -31,7 +31,7 @@ class InventoryFoldSpec extends AnyFunSuite {
 
   private def model(events: Seq[OrderedUpdateEvent]): Map[String, Long] =
     events.groupBy(_.productCode).map { case (k, es) =>
-      k -> Actions.foldAll(es.sortBy(_.eventOrder).map(e => (e.action, e.delta))).toLong
+      k -> FoldPropertySpec.foldAll(es.sortBy(_.eventOrder).map(e => (e.action, e.delta))).toLong
     }
 
   private def runWindowFold(events: Seq[OrderedUpdateEvent]): Map[String, Long] = {

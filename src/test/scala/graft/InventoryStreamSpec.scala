@@ -65,7 +65,7 @@ class InventoryStreamSpec extends AnyFunSuite {
 
   test("single key, cold start: 3 events converge to the model count") {
     val events = Seq((Actions.Inc, 5), (Actions.Dec, 2), (Actions.Inc, 4))
-    val expected = Actions.foldAll(events.map { case (a, d) => (a, d) })
+    val expected = FoldPropertySpec.foldAll(events.map { case (a, d) => (a, d) })
     val wire = events.zipWithIndex.map { case ((a, d), i) =>
       WireRecord(keyJson("key0"), valueJson(a, d, "key0"), i.toLong)
     }
@@ -75,8 +75,8 @@ class InventoryStreamSpec extends AnyFunSuite {
   test("state accumulates across micro-batches (two rounds)") {
     val r1 = Seq((Actions.Inc, 5), (Actions.Rep, 3), (Actions.Inc, 2))
     val r2 = Seq((Actions.Dec, 4), (Actions.Inc, 1))
-    val after1 = Actions.foldAll(r1)
-    val after2 = Actions.foldAll(r2, init = after1)
+    val after1 = FoldPropertySpec.foldAll(r1)
+    val after2 = FoldPropertySpec.foldAll(r2, init = after1)
     val mk = (es: Seq[(String, Int)], base: Int) => es.zipWithIndex.map { case ((a, d), i) =>
       WireRecord(keyJson("key0"), valueJson(a, d, "key0"), (base + i).toLong)
     }

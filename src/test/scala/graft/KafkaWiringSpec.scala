@@ -99,12 +99,14 @@ class KafkaWiringSpec extends AnyFunSuite {
   }
 
   test("the full pipeline body streams the wire schema end-to-end (broker endpoints excluded)") {
-    // kafkaPipeline is: kafka source → decode → foldStream → encode → kafka
-    // sink. The two format("kafka") endpoints need the jar; EVERYTHING
-    // between them runs here as a real streaming query over the source's
-    // exact wire schema (binary key/value + partition/offset/timestamp),
-    // and the emitted rows are asserted against the exact (key, value)
-    // string-column contract the kafka sink requires of its input.
+    // kafkaPipeline is: kafka source → InventoryStream.pipeline (decode →
+    // foldStream → withPeek → encode) → kafka sink. The two
+    // format("kafka") endpoints need the jar; EVERYTHING between them runs
+    // here as a real streaming query over the source's exact wire schema
+    // (binary key/value + partition/offset/timestamp), and the emitted rows
+    // are asserted against the exact (key, value) string-column contract
+    // the kafka sink requires of its input, and the peek's metrics against
+    // what the batch emitted.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.{col, struct, to_json, lit}
     import spark.implicits._
@@ -120,8 +122,7 @@ class KafkaWiringSpec extends AnyFunSuite {
         lit(new java.sql.Timestamp(0L)).as("timestamp"),
         lit(0).as("timestampType"))
     val out = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val q = InventoryStream.encode(
-        InventoryStream.foldStream(InventoryStream.decode(wire)))
+    val q = InventoryStream.pipeline(wire)
       .writeStream.outputMode("update")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         // the kafka sink contract: exactly (key, value), both string/binary
@@ -140,6 +141,14 @@ class KafkaWiringSpec extends AnyFunSuite {
       assert(got.head._1 === k)
       assert(got.head._2 === """{"count":5,"key":null}""",
         "value must carry the reference's embedded-null-key JSON shape")
+      // the peek's observed metrics land in the batch's progress record
+      def peeks = q.recentProgress.toSeq
+        .flatMap(p => Option(p.observedMetrics.get("inventory-peek")))
+        .map(r => (r.getAs[Long]("records_emitted"), r.getAs[Long]("distinct_products")))
+      var waited = 0
+      while (peeks.isEmpty && waited < 50) { Thread.sleep(100); waited += 1 }
+      assert(peeks === Seq((1L, 1L)),
+        "inventory-peek must report the one emitted record of one product")
     } finally q.stop()
   }
 }

@@ -142,7 +142,7 @@ class QuantizationSpec extends AnyFunSuite {
     val exact = topSets(Similarity.knnBruteForce.run(spark, dir))
     val emb = Tables.embeddings(spark, dir)
     val recalls = Seq(1, 4, 8, 16).map { nprobe =>
-      val got = topSets(Similarity.knnIvfPq(emb, k = 5, numCentroids = 16,
+      val got = topSets(QuantizationSpec.knnIvfPq(emb, k = 5, numCentroids = 16,
         nprobe = nprobe, trainIters = 2))
       val r = exact.map { case (q, e) => got.getOrElse(q, Set.empty[Long]).intersect(e).size.toDouble / e.size }
       nprobe -> r.sum / r.size
@@ -174,5 +174,22 @@ class QuantizationSpec extends AnyFunSuite {
       assert(scrubbed.contains("<ip>") === (nIp > 0), s"doc $id ip token")
       assert(scrubbed.contains("<phone>") === (nPhone > 0), s"doc $id phone token")
     }
+  }
+}
+
+object QuantizationSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions.{col, size}
+  import Similarity._
+
+  /** IVF-PQ kNN trained and served in one call: the index built from
+    * `embeddings` itself, then [[Similarity.knnIvfPqWith]]'s serving path. */
+  def knnIvfPq(embeddings: DataFrame, k: Int = 5, numCentroids: Int = 16,
+      nprobe: Int = 8, trainIters: Int = 2): DataFrame = {
+    val n = Tables.materialize(withNorm(embeddings))
+    val dim = n.select(size(col("e"))).head.getInt(0)
+    val cents = Tables.materialize(kmeansCentroidArray(n, numCentroids, trainIters))
+    val cb = Tables.materialize(ivfPqCodebook(n, dim, cents, trainIters))
+    knnIvfPqWith(n, dim, cents, cb, ivfPqIndex(n, dim, cents, cb), k, nprobe)
   }
 }

@@ -20,7 +20,7 @@ import graft.streaming.{InventoryStream, KeyedCount}
   * malformed payloads / unknown-action removals are driven through the full
   * decode → flatMapGroupsWithState chain over MemoryStream micro-batches;
   * after every batch the last-write-wins consumer view (tombstone = delete,
-  * as a compacted-topic reader sees it) must equal [[Actions.foldAllState]]
+  * as a compacted-topic reader sees it) must equal [[FoldPropertySpec.foldAllState]]
   * re-run over each key's accumulated event history — the same pure model
   * the batch fold and the algebraic laws in FoldPropertySpec check against.
   */
@@ -115,7 +115,7 @@ class StreamFoldPropertySpec extends AnyFunSuite {
         }
       }
       val model = history.toMap.flatMap { case (k, es) =>
-        Actions.foldAllState(es.toSeq).map(k -> _)
+        FoldPropertySpec.foldAllState(es.toSeq).map(k -> _)
       }
       roundsRun += 1
       assert(view === model, s"round $roundsRun: view=$view model=$model events=$events")

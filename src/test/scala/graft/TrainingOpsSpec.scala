@@ -104,7 +104,7 @@ class TrainingOpsSpec extends AnyFunSuite {
       (0.8, 32, 2), // high threshold, narrow bands
       (0.8, 64, 4)) // high threshold, wide bands: the ~250×-pruning regime
     sweep.foreach { case (t, nBits, bandBits) =>
-      val exact = Similarity.cosinePairsExactCollapsed(emb, t)
+      val exact = TrainingOpsSpec.cosinePairsExactCollapsed(emb, t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val banded = Similarity.cosinePairsBanded(emb, t, nBits, bandBits)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -281,4 +281,16 @@ class TrainingOpsSpec extends AnyFunSuite {
       assert(viaPipeline(r.getLong(0)) === expected)
     }
   }
+}
+
+object TrainingOpsSpec {
+  /** Exact twin of [[Similarity.cosinePairsBanded]] on the SAME
+    * collapse-first plan: candidate rep pairs are the full rep×rep
+    * triangle instead of band collisions, so the answer is exact by
+    * construction (no banding miss probability) while still paying the
+    * quadratic cost only on DISTINCT vectors. */
+  def cosinePairsExactCollapsed(embeddings: org.apache.spark.sql.DataFrame,
+      threshold: Double): org.apache.spark.sql.DataFrame =
+    Similarity.cosinePairsCollapsed(embeddings, threshold)(
+      (reps, _) => Similarity.exactRepCandidates(reps))
 }
