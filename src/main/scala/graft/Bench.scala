@@ -15,7 +15,8 @@ import org.apache.spark.sql.graftbridge.GraftBridge
   * query happens to run first. Beside each query's time, the record's
   * `layers` map holds that run's scheduler and task counters ([[Layers]]).
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the host's cores),
-  * SPARK_GRAFT_SHUFFLE_PARTITIONS, SPARK_GRAFT_ONLY, SPARK_GRAFT_BENCH_OUT. */
+  * SPARK_GRAFT_ONLY, SPARK_GRAFT_BENCH_OUT (default: `BENCH_LAST.json`, or
+  * `BENCH_SUBSET.json` for a subset, in the working directory). */
 object Bench {
 
   /** Full-evaluation action: `count()` lets Catalyst column-prune the plan
@@ -31,46 +32,6 @@ object Bench {
     val h = xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))
     df.select(h.as("h")).agg(expr("bit_xor(h)")).collect()
     ()
-  }
-
-  /** Data-adaptive reduce-partition count: clamp(inputBytes / 1 MiB, 1,
-    * cores). This is AQE's own coalescing formula — parallelismFirst=true
-    * targets max(totalShuffleBytes / parallelism, minPartitionSize = 1 MiB)
-    * — applied at session level, because runtime coalescing cannot reach
-    * most of this engine's reduce stages: `CoalesceShufflePartitions`
-    * skips any stage whose leaves are not all shuffle stages, and the
-    * materialized intermediates (`Tables.materialize`) put an
-    * InMemoryRelation leaf into exactly the expensive stages (cached-plan
-    * output partitioning is additionally pinned while
-    * `canChangeCachedPlanOutputPartitioning` is false — measured: flipping
-    * it serialized the CPU-dense cache consumers and was a net loss).
-    * Input bytes upper-bound the shuffled bytes for every registered query
-    * (projections/aggregations shrink; the row-amplifying explodes collapse
-    * via map-side combine before the exchange), so partitions-by-input
-    * never undersizes a shuffle below AQE's own 1 MiB floor, and the cap
-    * keeps reduce parallelism at the declared core count exactly when the
-    * data is big enough to use it — at 100 TB this default saturates at
-    * the cluster's cores and a deployment raises it explicitly
-    * (SPARK_GRAFT_SHUFFLE_PARTITIONS, guide §2.2: 100 MB–1 GB partitions).
-    * Map-side parallelism (scan splits, fanOut) is untouched.
-    * Measured (r22, 14-query anti-scaler subset, local[32] at sf0.1):
-    * 14.82 s at 32 partitions → 10.71 s at the derived 17; the formula's
-    * c8 value equals the old c8 default, so the driver's low-core run is
-    * unchanged. */
-  private[graft] def adaptiveShufflePartitions(sfDir: String, cpus: Int): Int = {
-    val bytes =
-      try {
-        val d = new java.io.File(sfDir)
-        // one directory level: <sfDir>/<table>.parquet/part-*.parquet
-        Option(d.listFiles()).map(_.flatMap(f =>
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
-          else Array(f)).map(_.length()).sum).getOrElse(0L)
-      } catch { case NonFatal(e) =>
-        System.err.println(s"[bench] listing $sfDir failed: $e"); 0L }
-    if (bytes <= 0L) {
-      System.err.println(s"[bench] no table bytes under $sfDir: shuffle partitions = $cpus")
-      cpus
-    } else math.max(1L, math.min(cpus.toLong, (bytes + (1L << 20) - 1) >> 20)).toInt
   }
 
   /** Scheduler and task counters of one timed run: the per-layer split of
@@ -130,34 +91,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
-    val spark = Graft.session("graft-bench", master = Some(s"local[$cpus]"),
-      // scale-adaptive default, env-parameterized (see above)
-      shufflePartitions = Some(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        .fold(adaptiveShufflePartitions(sfDir, cpus))(_.toInt)))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session("graft-bench")
     // map-typed outputs (map_funcs_orders) must be hashable by force()
     spark.conf.set("spark.sql.legacy.allowHashOnMapType", "true")
     val layers = new LayerListener(spark.sparkContext)
-    // Operators that materialize intermediates persist a new table per
-    // invocation; dropping caches between queries keeps every measurement
-    // hermetic (no storage-memory pressure from earlier queries).
-    def clearCaches(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.sharedState.cacheManager.clearCache()
-    }
-    // Local-iteration filter: SPARK_GRAFT_ONLY=name1,name2 times a subset.
-    // Unset (the driver's invocation) → the full suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val ordered = Driver.selected.sortBy(_.name)
     // A warm-up failure is logged, not fatal: the timed runs below record
     // the same query's failure in the `errors` map.
-    ordered.foreach { case (name, fn) =>
-      try force(fn(spark, sfDir)) catch { case e: Throwable => Verify.logFailure("bench", name, e) }
-      clearCaches()
+    ordered.foreach { q =>
+      try force(q.run(spark, sfDir)) catch { case e: Throwable => Driver.logFailure("bench", q.name, e) }
+      Driver.resetCaches(spark)
     }
     // Min of 3 timed runs per query: a single pass is dominated by GC /
     // scheduler noise at these sub-second scales (observed ±2s swings on
@@ -174,25 +117,25 @@ object Bench {
     // outside any timed region, and the final write below overwrites it
     // with the complete line.
     var flushed: Seq[(String, Either[String, (Double, Layers)])] = Seq.empty
-    val results = ordered.map { case (name, fn) =>
+    val results = ordered.map { q =>
       val runs = (1 to 3).map { _ =>
         layers.reset()
         val t0 = System.nanoTime()
         val r =
-          try { force(fn(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
+          try { force(q.run(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
           catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}".take(160)) }
         val rec = r.map(_ -> layers.read())
-        clearCaches()
+        Driver.resetCaches(spark)
         rec
       }
       val failures = runs.collect { case Left(e) => e }
-      val rec = name -> (if (failures.nonEmpty) Left(failures.head)
+      val rec = q.name -> (if (failures.nonEmpty) Left(failures.head)
                          else Right(runs.collect { case Right(t) => t }.minBy(_._1)))
       flushed = flushed :+ rec
-      writeRecord(flushed, partial = true, only, sfDir)
+      writeRecord(flushed, partial = true, sfDir)
       rec
     }
-    println(writeRecord(results, partial = false, only, sfDir))
+    println(writeRecord(results, partial = false, sfDir))
     spark.stop()
   }
 
@@ -202,18 +145,13 @@ object Bench {
     * still leaves every completed query's timing on disk; the final call
     * overwrites it with the complete, marker-free line. */
   private def writeRecord(results: Seq[(String, Either[String, (Double, Layers)])],
-      partial: Boolean, only: Option[Set[String]], sfDir: String): String = {
-    // All control chars (< 0x20, incl. \b \f and raw escapes in exception
-    // messages) flatten to spaces — one unlucky message must not make the
-    // emitted JSON line unparseable.
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"").replaceAll("\\p{Cntrl}", " ") + "\""
+      partial: Boolean, sfDir: String): String = {
     val ok = results.collect { case (k, Right((v, _))) => k -> v }
     val errors = results.collect { case (k, Left(e)) => k -> e }
-    val qs = ok.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val ls = results.collect { case (k, Right((_, l))) => jstr(k) + ":" + l.json }
+    val qs = ok.map { case (k, v) => Driver.json(k) + ":" + v }.mkString("{", ",", "}")
+    val ls = results.collect { case (k, Right((_, l))) => Driver.json(k) + ":" + l.json }
       .mkString("{", ",", "}")
-    val es = errors.map { case (k, e) => jstr(k) + ":" + jstr(e) }.mkString("{", ",", "}")
+    val es = errors.map { case (k, e) => Driver.json(k) + ":" + Driver.json(e) }.mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     // Artifact-served rows tagged in the output (r18 ADVICE): their
     // timings measure a persisted-artifact read (the production serving
@@ -224,7 +162,7 @@ object Bench {
     val served = ArtifactTwins.allServed
     val freshTotal = ok.collect { case (k, v) if !served.contains(k) => v }.sum
     val servedList = served.intersect(ok.map(_._1).toSet).toSeq.sorted
-      .map(jstr).mkString("[", ",", "]")
+      .map(Driver.json).mkString("[", ",", "]")
     // `value` stays the FULL suite total (every registered query, the
     // driver's standing cross-round series); fresh_secs and artifact_secs
     // sit adjacent at the head of the line with equal prominence (r19
@@ -233,19 +171,19 @@ object Bench {
     // explicit remainder, so no consumer can quote the artifact-inflated
     // total without seeing the split.
     val marker = if (partial) "\"partial\":true," else ""
-    val line = s"""{$marker"metric":"total","value":$total,"fresh_secs":$freshTotal,"artifact_secs":${total - freshTotal},"unit":"sec","artifact_served":$servedList,"queries":$qs,"layers":$ls,"errors":$es,"sf":"$sfDir"}"""
+    val line = s"""{$marker"metric":"total","value":$total,"fresh_secs":$freshTotal,"artifact_secs":${total - freshTotal},"unit":"sec","artifact_served":$servedList,"queries":$qs,"layers":$ls,"errors":$es,"sf":${Driver.json(sfDir)}}"""
     // The driver's stdout capture has truncated past rounds' artifacts to a
     // 2000-char tail (BENCH_r07.json: parsed null, no total, 57/110 query
-    // times) — so the COMPLETE line also lands at a stable path the driver
-    // can copy verbatim. Best-effort: a read-only workdir must not fail the
-    // bench, so a failed write is reported on stderr and the run goes on.
+    // times) — so the COMPLETE line also lands in a file the driver can
+    // copy verbatim. It is in the working directory, so a run in one
+    // checkout never overwrites another checkout's record. Best-effort: a
+    // read-only workdir must not fail the bench, so a failed write is
+    // reported on stderr and the run goes on.
     // An SPARK_GRAFT_ONLY subset run writes to a SIDECAR path instead:
     // BENCH_LAST.json is the standing contract for the complete committed
     // bench, and a local-iteration subset silently replacing it is exactly
     // how round 15 broke that contract.
-    val defaultOut =
-      if (only.isEmpty) "/root/repo/BENCH_LAST.json"
-      else "/root/repo/BENCH_SUBSET.json"
+    val defaultOut = if (Driver.only.isEmpty) "BENCH_LAST.json" else "BENCH_SUBSET.json"
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
     catch { case NonFatal(e) => System.err.println(s"[bench] record not written to $out: $e") }

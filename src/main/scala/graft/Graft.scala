@@ -1,20 +1,19 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one SparkSession factory: every entry point (the library facade,
   * `Bench`, `Verify`, the dev mains, the test harness) builds its session
   * here, so the configuration that is tested is the one that is verified,
-  * benched and shipped. Callers choose only the master and the
-  * shuffle-partition count.
+  * benched and shipped. Callers choose only the master.
   *
   * Deliberate defaults (each documented where it matters):
   *  - master `local[cores]` unless `spark.master` is already set (e.g. by
   *    spark-submit);
   *  - AQE on (runtime skew-join splitting + partition coalescing);
-  *  - shuffle partitions sized to cores locally — on a real cluster callers
-  *    should pass `shufflePartitions ≈ max(2×cores, inputBytes/128MB)` and
-  *    let AQE coalesce the excess;
+  *  - one reduce task per task slot ([[shufflePartitions]]), unless the
+  *    deployment set `spark.sql.shuffle.partitions` itself;
   *  - UTC session timezone (all oracle comparisons assume it);
   *  - nanosAsLong for TIMESTAMP(NANOS) parquet columns (pre-Spark-4.2
   *    parquet readers reject them otherwise);
@@ -30,20 +29,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    before the session is returned.
   */
 object Graft {
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
-  def session(
-      appName: String = "graft",
-      master: Option[String] = None,
-      shufflePartitions: Option[Int] = None): SparkSession = {
+  /** The one partitioning rule: a deployment's own
+    * `spark.sql.shuffle.partitions` (spark-submit `--conf`, a `-D` system
+    * property) wins; otherwise one reduce task per task slot, the
+    * `defaultParallelism` that [[Tables.fanOut]] also sizes the map side
+    * to (on a cluster, the cores registered when the session starts, so a
+    * deployment whose executors arrive later sets the conf). Small batches
+    * are bound by per-task scheduling cost, not by the width of a task, so
+    * more reduce tasks than slots only queue; AQE coalesces what a stage
+    * does not fill. */
+  private[graft] def shufflePartitions(deployed: SparkConf, slots: Int): Int =
+    deployed.getOption(ShufflePartitions).fold(slots)(_.toInt)
+
+  def session(appName: String = "graft", master: Option[String] = None): SparkSession = {
     // If a session already exists in this JVM, adopt it: getOrCreate would
-    // silently re-apply our conf (e.g. shuffle.partitions=cores) onto it,
+    // silently re-apply our conf (e.g. the shuffle partitions) onto it,
     // changing the partitioning of every downstream plan behind the
     // caller's back — the conf leak that broke IncrementalDedupSpec's
     // exchange-count assertion when run after another suite.
     //
-    // Adoption contract: explicitly passed `master`/`shufflePartitions` are
-    // IGNORED (logged below — conf of a live session is caller-owned, and
-    // partitioning/master/state-store cannot change mid-session anyway),
+    // Adoption contract: an explicitly passed `master` is IGNORED (logged
+    // below — conf of a live session is caller-owned, and partitioning,
+    // master and state store cannot change mid-session anyway),
     // but the two confs graft's SEMANTICS depend on — UTC session timezone
     // (every oracle-checked timestamp comparison assumes it) and
     // nanosAsLong (TIMESTAMP(NANOS) parquet is unreadable without it) —
@@ -52,11 +61,11 @@ object Graft {
     // different timestamps than the same query on a fresh one.
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
       case Some(existing) =>
-        if (master.nonEmpty || shufflePartitions.nonEmpty)
+        if (master.nonEmpty)
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            "graft: adopting the existing SparkSession; explicit " +
-              "master/shufflePartitions arguments are ignored (a live " +
-              "session's execution conf is caller-owned)")
+            "graft: adopting the existing SparkSession; the explicit " +
+              "master argument is ignored (a live session's execution " +
+              "conf is caller-owned)")
         existing.conf.set("spark.sql.session.timeZone", "UTC")
         existing.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         GraftExtensions.register(existing)
@@ -68,8 +77,6 @@ object Graft {
           .config("spark.sql.adaptive.enabled", "true")
           .config("spark.sql.session.timeZone", "UTC")
           .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.sql.shuffle.partitions",
-            shufflePartitions.getOrElse(cores).toString)
           .config("spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
           .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
@@ -77,6 +84,8 @@ object Graft {
         val hostMaster =
           if (sys.props.contains("spark.master")) None else Some(s"local[$cores]")
         val spark = master.orElse(hostMaster).fold(base)(base.master).getOrCreate()
+        val sc = spark.sparkContext
+        spark.conf.set(ShufflePartitions, shufflePartitions(sc.getConf, sc.defaultParallelism).toLong)
         GraftExtensions.register(spark)
         spark
     }

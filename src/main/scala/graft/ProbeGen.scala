@@ -33,8 +33,7 @@ object ProbeGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/probe10x")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = Graft.session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session("graft-probegen")
 
     val keyed: Seq[(String, Seq[String])] = Seq(
       "customer"   -> Seq("c_custkey"),

@@ -342,11 +342,9 @@ object StreamingOps {
     * batch N kept.
     *
     * The store (single `fp` column) is a plain parquet PATH, not the
-    * bucketed table: micro-batches add small fp partitions all day, and
-    * the nightly compaction rewrites the accumulated set through
-    * [[graft.sources.ParquetSink.writeBucketed]] — bucketing is a
-    * compaction-time property, not something tiny streaming writes can
-    * maintain. */
+    * bucketed table: each micro-batch adds its own small `batch=<id>`
+    * partition, and nothing compacts or re-buckets them — every batch's
+    * anti-join reads all earlier partitions. */
   def ingestBatch(batch: DataFrame, storePath: String, outPath: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
@@ -375,9 +373,10 @@ object StreamingOps {
     * member — or an earlier-id same-batch arrival — at cosine ≥ 0.99,
     * emit survivors and store their (vec_id, e, nrm, cid) member rows so
     * the next batch sees them. The centroids are deliberately NOT
-    * retrained per batch: they are the causal history artifact (drift is
-    * a compaction-time concern — retrain nightly and re-assign the store,
-    * exactly when the fp loop re-buckets). */
+    * retrained per batch: they are the causal history artifact. The
+    * member store, like the fp store, is `batch=<id>` partitions that are
+    * never compacted, so retraining would also mean re-assigning every
+    * stored member; no code does either. */
   def ingestBatchSemantic(batch: DataFrame, centroids: DataFrame,
       memPath: String, outPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
@@ -532,8 +531,8 @@ object StreamingOps {
     * cosine ≥ 0.99. Survivors are emitted (these rows ARE the embedder's
     * input) and their member rows (a [[memSchema]] row keyed by its chunk)
     * stored so the next batch sees them. Same frozen-centroid discipline
-    * as [[ingestBatchSemantic]] (retrain at compaction time, not per
-    * batch). `batch` needs (doc_id, text). */
+    * as [[ingestBatchSemantic]] (never retrained per batch). `batch`
+    * needs (doc_id, text). */
   def ingestBatchChunkSemantic(batch: DataFrame, centroids: DataFrame,
       memPath: String, outPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
@@ -647,8 +646,8 @@ object StreamingOps {
   /** One micro-batch of the IVF-PQ INDEX-MAINTENANCE loop — the streaming
     * twin of `knn_ivf_pq_incremental` (faiss `add` as a stream): encode the
     * batch's vectors under the FROZEN artifacts — the coarse centroid table
-    * and residual codebook passed in, trained at compaction time, never per
-    * batch — and store the (vec_id, codes, cid, nrm) rows in the code
+    * and residual codebook passed in, trained once outside the loop, never
+    * per batch — and store the (vec_id, codes, cid, nrm) rows in the code
     * store. The loop drops nothing: its product IS the incrementally
     * growing serving index (a reader does `read.parquet(store)` and serves
     * through the shared ADC tail); encoding under frozen codebooks is

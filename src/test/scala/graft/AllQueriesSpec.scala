@@ -27,10 +27,7 @@ class AllQueriesSpec extends AnyFunSuite {
     val failures = SparkEntry.allQueries.flatMap { q =>
       try { q.run(spark, dir).count(); None }
       catch { case e: Throwable => Some(q.name -> e.getMessage.take(200)) }
-      finally {
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        spark.sharedState.cacheManager.clearCache()
-      }
+      finally Driver.resetCaches(spark)
     }
     assert(failures.isEmpty, s"queries failed: ${failures.mkString("\n")}")
   }
@@ -54,8 +51,7 @@ class AllQueriesSpec extends AnyFunSuite {
     val partitions = "spark.sql.shuffle.partitions"
     val aqe = "spark.sql.adaptive.enabled"
     def rows(name: String): Seq[org.apache.spark.sql.Row] = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.sharedState.cacheManager.clearCache()
+      Driver.resetCaches(spark)
       SparkEntry.queries(name)(spark, dir).collect().toSeq
     }
     val saved = Seq(partitions, aqe).map(k => k -> spark.conf.get(k))

@@ -27,17 +27,11 @@ class BasketMarkovSpec extends AnyFunSuite {
   }
 
   test("basket plan: rank is TakeOrdered on integer lift, never a global sort") {
-    import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
-      case q: QueryStageExec => q +: flatten(q.plan)
-      case other => other +: other.children.flatMap(flatten)
-    }
     val q = SparkEntry.queries("basket_part_pairs")(spark, "/root/testdata/sf0.001")
     q.collect()
-    val nodes = flatten(q.queryExecution.executedPlan)
+    val nodes = PlanWalk.nodes(q.queryExecution.executedPlan)
     assert(nodes.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
       s"expected TakeOrderedAndProject:\n${q.queryExecution.executedPlan}")
     assert(!nodes.exists {

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,12 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class Bm25Spec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
-
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
-    case q: QueryStageExec => q +: flatten(q.plan)
-    case other => other +: other.children.flatMap(flatten)
-  }
 
   test("matches an independent local BM25 ranker") {
     val docs = Tables.documents(spark, dir)
@@ -52,7 +45,7 @@ class Bm25Spec extends AnyFunSuite {
   test("plan: term/stats joins broadcast; rank is TakeOrdered, not a global sort") {
     val q = SparkEntry.queries("text_bm25_topk")(spark, dir)
     q.collect()
-    val nodes = flatten(q.queryExecution.executedPlan)
+    val nodes = PlanWalk.nodes(q.queryExecution.executedPlan)
     assert(nodes.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
       s"expected TakeOrderedAndProject:\n${q.queryExecution.executedPlan}")
     assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),

@@ -35,19 +35,11 @@ class BroadcastGeneratorGateSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  /** Expand one node: through the AQE wrapper, into query-stage subplans,
-    * and into cached-relation plans (a materialize boundary hides the
-    * generator that produced the cached rows, but not from the estimator —
-    * pre-materialization, stats flow straight through the cache node). */
-  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      Seq(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-    case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-      Seq(im.relation.cachedPlan)
-    case other => other.children
-  }
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(allNodes)
+  /** Every node, walking into cached-relation plans too (a materialize
+    * boundary hides the generator that produced the cached rows, but not
+    * from the estimator — pre-materialization, stats flow straight through
+    * the cache node). */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = PlanWalk.nodes(p, intoCache = true)
 
   /** A keyless (global) aggregate immediately under the exchange is ONE
     * row by construction — the "1-row stats" allowance (e.g. a corpus
@@ -146,8 +138,7 @@ class BroadcastGeneratorGateSpec extends AnyFunSuite {
       val df: DataFrame = SparkEntry.queries(name)(spark, dir)
       val static = df.queryExecution.executedPlan // NOT collected: pre-AQE
       val bad = generatorBroadcasts(static).groupBy(_.id).map(_._2.head).toSeq
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.sharedState.cacheManager.clearCache()
+      Driver.resetCaches(spark)
       countedBounded.get(name) match {
         case Some((cap, _)) if bad.size <= cap => None
         case Some((cap, why)) => Some(s"$name: ${bad.size} generator-fed " +

@@ -27,20 +27,10 @@ class CountedGateOverCapSpec extends AnyFunSuite {
   private def probe: DataFrame =
     spark.range(0, 200).select(col("id").as("k"), (col("id") % 5).as("p"))
 
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        Seq(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }
-    p +: kids.flatMap(allNodes)
-  }
-
   /** Execute and return the FINAL (post-AQE) plan's node list. */
   private def executedNodes(df: DataFrame): Seq[SparkPlan] = {
     df.collect()
-    allNodes(df.queryExecution.executedPlan)
+    PlanWalk.nodes(df.queryExecution.executedPlan)
   }
 
   private def joinKinds(nodes: Seq[SparkPlan]): (Int, Int, Int) = (

@@ -19,15 +19,6 @@ class CurationV2Spec extends AnyFunSuite {
 
   private def docs: DataFrame = Tables.documents(spark, dir)
 
-  private def finalPlan(df: DataFrame): String = {
-    df.collect()
-    val root = df.queryExecution.executedPlan
-    root.collectFirst {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-    }.getOrElse(root).toString
-  }
-
   private def count(plan: String, needle: String): Int =
     plan.linesIterator.count(_.contains(needle))
 
@@ -85,12 +76,12 @@ class CurationV2Spec extends AnyFunSuite {
 
   test("plan shape: v2 carries the SAME exchange count as v1 — the " +
       "published gates are scan-local, no new shuffle") {
-    val v1 = finalPlan(TrainingData.curationPipeline.run(spark, dir))
+    val v1 = PlanWalk.finalPlan(TrainingData.curationPipeline.run(spark, dir)).toString
     // the PIPELINE plan, not the registered row (which serves the packed
     // table from its train-once artifact since round 18) — the exchange
     // pin is about the flow itself, with v1's presentation sort mirrored
-    val v2 = finalPlan(TrainingData
-      .curationPipelineV2On(Tables.documents(spark, dir)).orderBy("doc_id"))
+    val v2 = PlanWalk.finalPlan(TrainingData
+      .curationPipelineV2On(Tables.documents(spark, dir)).orderBy("doc_id")).toString
     assert(count(v2, "Exchange hashpartitioning") ===
       count(v1, "Exchange hashpartitioning"),
       s"v2 must not add a hash exchange:\nV1:\n$v1\nV2:\n$v2")

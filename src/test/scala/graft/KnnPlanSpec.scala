@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.SortExec
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,14 +27,6 @@ class KnnPlanSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  /** Flatten the executed plan, descending through AQE wrappers and the
-    * materialized query stages AQE caches. */
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
-    case q: QueryStageExec => q +: flatten(q.plan)
-    case other => other +: other.children.flatMap(flatten)
-  }
-
   private def knnQueries: Seq[String] = Seq(
     "knn_cosine_bruteforce", "knn_cosine_filtered", "knn_hard_negatives",
     "knn_cosine_lsh", "knn_cosine_ivf", "knn_cosine_ivf_kmeans",
@@ -47,7 +38,7 @@ class KnnPlanSpec extends AnyFunSuite {
   private def planOf(name: String): (DataFrame, Seq[SparkPlan]) = {
     val df = SparkEntry.queries(name)(spark, dir)
     df.collect() // finalize adaptive planning before reading the plan
-    (df, flatten(df.queryExecution.executedPlan))
+    (df, PlanWalk.nodes(df.queryExecution.executedPlan))
   }
 
   for (name <- knnQueries)
@@ -64,7 +55,7 @@ class KnnPlanSpec extends AnyFunSuite {
       // the only admissible sorts order the already-reduced output: every
       // SortExec must have a TopKPerGroupExec somewhere beneath it
       nodes.collect { case s: SortExec => s }.foreach { s =>
-        assert(flatten(s).exists(_.isInstanceOf[TopKPerGroupExec]),
+        assert(PlanWalk.nodes(s).exists(_.isInstanceOf[TopKPerGroupExec]),
           s"sort without a top-k reduction beneath it:\n$s")
       }
     }

@@ -36,17 +36,7 @@ class MegaDuplicateSpec extends AnyFunSuite {
     // rows (the per-doc final joins are doc-sized and are joins on the
     // signature key, not self-joins — bound them generously by 10*docs;
     // the SELF-join outputs are the real assertion, bounded by sig²)
-    // AQE nests materialized stages inside QueryStageExec wrappers whose
-    // children are empty — walk them explicitly
-    def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case ae: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        p +: allNodes(ae.executedPlan)
-      case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        p +: allNodes(qs.plan)
-      case _ => p +: p.children.flatMap(allNodes)
-    }
-    val joinOutputs = allNodes(out.queryExecution.executedPlan).collect {
+    val joinOutputs = PlanWalk.nodes(out.queryExecution.executedPlan).collect {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
         j.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,12 +49,6 @@ class MmrSpec extends AnyFunSuite {
     out.toSeq
   }
 
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
-    case q: QueryStageExec => q +: flatten(q.plan)
-    case other => other +: other.children.flatMap(flatten)
-  }
-
   test("engine MMR selection is identical to the local greedy replay") {
     val got = SparkEntry.queries("knn_mmr_diversify")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -84,7 +76,7 @@ class MmrSpec extends AnyFunSuite {
   test("no Window node in the executed MMR plan") {
     val df = SparkEntry.queries("knn_mmr_diversify")(spark, dir)
     df.collect()
-    val nodes = flatten(df.queryExecution.executedPlan)
+    val nodes = PlanWalk.nodes(df.queryExecution.executedPlan)
     assert(!nodes.exists(_.isInstanceOf[WindowExec]), "window-free greedy plan")
   }
 }

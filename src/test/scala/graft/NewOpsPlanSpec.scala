@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{ApproxAndSample, Dedup, InventoryParity, Similarity}
@@ -14,15 +13,6 @@ import graft.operators.{ApproxAndSample, Dedup, InventoryParity, Similarity}
 class NewOpsPlanSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
-  private def finalPlan(df: DataFrame): String = {
-    df.collect() // let AQE finalize before inspecting
-    val root = df.queryExecution.executedPlan
-    root.collectFirst {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-    }.getOrElse(root).toString
-  }
-
   private def hashExchanges(plan: String): Int =
     plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
 
@@ -31,7 +21,7 @@ class NewOpsPlanSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = (0L until 200L).map(i => (i, s"w${i % 37} w${i % 11} w$i"))
       .toDF("doc_id", "text")
-    val plan = finalPlan(Dedup.keepBestOn(docs))
+    val plan = PlanWalk.finalPlan(Dedup.keepBestOn(docs)).toString
     assert(hashExchanges(plan) === 1, s"one exchange on fp:\n$plan")
     assert(!plan.contains("WindowExec") && !plan.contains("Window ["),
       s"no window:\n$plan")
@@ -49,7 +39,7 @@ class NewOpsPlanSpec extends AnyFunSuite {
       .toDF("vec_id", "e")
       .withColumn("nrm", ssqrt(graft.functions.VectorFunctions
         .dotProduct(col("e"), col("e"))))
-    val plan = finalPlan(ApproxAndSample.clusterBalancedOn(n, 4, 3))
+    val plan = PlanWalk.finalPlan(ApproxAndSample.clusterBalancedOn(n, 4, 3)).toString
     assert(plan.contains("TopKPerGroup"), s"bounded-heap pick:\n$plan")
     assert(!plan.contains("WindowExec") && !plan.contains("Window ["),
       s"no window:\n$plan")
@@ -60,7 +50,7 @@ class NewOpsPlanSpec extends AnyFunSuite {
     val out = InventoryParity.scd2.run(spark, "/root/testdata/sf0.001")
     // strip the final presentation orderBy's range exchange from the count:
     // only hash exchanges are the claim
-    val plan = finalPlan(out)
+    val plan = PlanWalk.finalPlan(out).toString
     assert(hashExchanges(plan) === 1,
       s"one key-hash exchange shared by both windows + lead:\n$plan")
   }

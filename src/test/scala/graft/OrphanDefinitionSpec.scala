@@ -73,12 +73,12 @@ object OrphanDefinitionSpec {
     * MemoryStream). A test oracle (a form a spec checks another against)
     * lives next to its spec, not here. */
   val Allowed: Map[String, String] = Map(
-    "Bench" -> EntryPoint,
     "Bench.main" -> EntryPoint,
     "Explain" -> EntryPoint,
     "Explain.main" -> EntryPoint,
     "ProbeGen" -> EntryPoint,
     "ProbeGen.main" -> EntryPoint,
+    "Verify" -> EntryPoint,
     "Verify.main" -> EntryPoint,
     "SparkEntry.entry" -> EntryPoint,
     "Graft.run" -> EntryPoint,
