@@ -1,5 +1,14 @@
 package graft.operators
 
+import java.awt.image.BufferedImage
+import java.io.ByteArrayInputStream
+
+import scala.util.control.NonFatal
+
+import javax.imageio.{ImageIO, ImageReader}
+import javax.imageio.metadata.IIOMetadataNode
+import javax.imageio.stream.MemoryCacheImageInputStream
+
 /** One decoded raster image, reduced to the channel statistics the pipeline
   * extracts: dimensions, per-channel sums, and a position-weighted checksum
   * (`Σ (k+1)·(r_k + 2·g_k + 3·b_k)` over logical top-down row-major pixel
@@ -38,17 +47,18 @@ final case class Raster(
     height: Int,
     pixel: (Int, Int) => (Int, Int, Int))
 
-/** Pure-JVM image codecs for the two classic uncompressed raster formats —
-  * BMP (24-bit BI_RGB, both bottom-up and top-down row order, 4-byte row
-  * padding) and binary PPM (P6, comment-tolerant header). No native
-  * libraries, no ImageIO: the container ships no codecs, and these formats
-  * are fully specified by public documentation (Windows BITMAPINFOHEADER
-  * layout; the netpbm P6 format), so a header-true parser is ~100 lines.
+/** Media codecs over raw payload bytes. PNG, BMP, GIF and baseline JPEG
+  * decode through the JDK's `javax.imageio` readers, behind small header
+  * checks for the rules those readers do not enforce (PNG chunk CRCs and
+  * `IEND`, 8-bit truecolor non-interlaced PNG, 24-bit BI_RGB BMP, the GIF
+  * trailer, one-band JPEG). Binary PPM (P6), 16-bit PCM mono WAV and the
+  * GVID and RIFF/AVI containers have no JDK reader and are parsed here.
   *
   * [[decode]] is the production path (used by
   * [[Multimodal.imageFeatures]]); the `encode*` functions are deterministic
-  * FIXTURE generators for tests and the oracle-checked query — a real
-  * pipeline reads its bytes from object storage instead. */
+  * FIXTURE generators for tests and the oracle-checked queries, whose
+  * bytes they fix — a real pipeline reads its bytes from object storage
+  * instead. */
 object MediaCodec {
 
   // ---- little-endian helpers over raw byte arrays ----
@@ -64,15 +74,13 @@ object MediaCodec {
     b(i + 2) = (v >> 16).toByte; b(i + 3) = (v >> 24).toByte
   }
 
-  private def bmpRowStride(width: Int): Int = ((3 * width + 3) / 4) * 4
-
   /** Encode `rgb` (top-down row-major R,G,B triplets) as a 24-bit BI_RGB
     * BMP. `topDown = true` writes a negative-height header (rows stored
     * top-down) — the variant spec tests use to pin row-order handling. */
   def encodeBmp(width: Int, height: Int, rgb: Array[Byte],
       topDown: Boolean = false): Array[Byte] = {
     require(rgb.length == 3 * width * height, "rgb must be 3*w*h bytes")
-    val stride = bmpRowStride(width)
+    val stride = ((3 * width + 3) / 4) * 4 // rows pad to 4 bytes
     val dataOffset = 14 + 40
     val out = new Array[Byte](dataOffset + stride * height)
     out(0) = 'B'; out(1) = 'M'
@@ -109,7 +117,7 @@ object MediaCodec {
     header ++ rgb
   }
 
-  /** Decode a BMP, PPM, PNG, or baseline-grayscale JPEG payload to a
+  /** Decode a BMP, PPM, PNG, or grayscale JPEG payload to a
     * pixel-access [[Raster]]; `None` for unrecognized magic or a
     * malformed/truncated body (callers fall back to the opaque-payload
     * stub, [[Multimodal.decodeStub]]). */
@@ -119,7 +127,7 @@ object MediaCodec {
     else if (bytes.length >= 8 && (bytes(0) & 0xff) == 0x89 && bytes(1) == 'P' &&
       bytes(2) == 'N' && bytes(3) == 'G') decodePng(bytes)
     else if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xff &&
-      (bytes(1) & 0xff) == 0xd8) decodeJpeg(bytes)
+      (bytes(1) & 0xff) == 0xd8) decodeJpegGray(bytes).map(grayRaster("jpeg", _))
     else None
 
   /** [[decodeRaster]] reduced to channel statistics — the historical
@@ -163,6 +171,52 @@ object MediaCodec {
     }
     DecodedImage(format, width, height, sumR, sumG, sumB, posHash)
   }
+
+  /** Pixel cap checked against a header's dimensions before any raster is
+    * allocated: a compressed payload (PNG, GIF, JPEG) of a few bytes can
+    * declare a multi-GB raster. */
+  private val MaxPixels = 64L << 20
+
+  /** Decode `b` with the JDK's `formatName` reader: image 0, or every
+    * image when `all` (animated GIF), each handed to `image` with the
+    * reader for its metadata. The payload is read through a
+    * `MemoryCacheImageInputStream` (`ImageIO.read(InputStream)` would cache
+    * it to a temp file). `None` when an image's header dimensions exceed
+    * [[MaxPixels]], when `image` rejects one, on any read warning (a
+    * truncated JPEG decodes as a full image with a warning), or on any
+    * non-fatal exception. */
+  private def imageIo[A](b: Array[Byte], formatName: String, all: Boolean = false)(
+      image: (ImageReader, Int, BufferedImage) => Option[A]): Option[Vector[A]] = {
+    val reader = ImageIO.getImageReadersByFormatName(formatName).next()
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(b))
+    var warned = false
+    reader.addIIOReadWarningListener((_, _) => warned = true)
+    try {
+      reader.setInput(in)
+      val n = if (all) reader.getNumImages(true) else 1
+      val images = (0 until n).toVector.map(i =>
+        if (reader.getWidth(i).toLong * reader.getHeight(i) > MaxPixels) None
+        else image(reader, i, reader.read(i)))
+      if (warned || images.exists(_.isEmpty)) None else Some(images.flatten)
+    } catch { case NonFatal(_) => None }
+    finally { reader.dispose(); in.close() }
+  }
+
+  /** [[Raster]] over packed 0xRRGGBB pixels, top-down row-major. */
+  private def rgbRaster(format: String, width: Int, height: Int, rgb: Array[Int]): Raster =
+    Raster(format, width, height, (x, y) => {
+      val c = rgb(y * width + x)
+      ((c >> 16) & 0xff, (c >> 8) & 0xff, c & 0xff)
+    })
+
+  /** A decoded image's pixels as packed 0xRRGGBB (alpha dropped). */
+  private def packedRgb(img: BufferedImage): Array[Int] =
+    img.getRGB(0, 0, img.getWidth, img.getHeight, null, 0, img.getWidth).map(_ & 0xffffff)
+
+  /** Decode a single-image PNG or BMP payload to a raster. */
+  private def decodeRgb(b: Array[Byte], format: String): Option[Raster] =
+    imageIo(b, format)((_, _, img) =>
+      Some(rgbRaster(format, img.getWidth, img.getHeight, packedRgb(img)))).map(_.head)
 
   /** Encode mono 16-bit PCM as a canonical 44-byte-header WAV. */
   def encodeWav(sampleRate: Int, samples: Array[Short]): Array[Byte] = {
@@ -223,7 +277,7 @@ object MediaCodec {
       val id = new String(b, pos, 4, "US-ASCII")
       val sz = i32(b, pos + 4)
       val body = pos + 8
-      if (sz < 0 || body + sz > b.length) return None
+      if (sz < 0 || body.toLong + sz > b.length) return None // long: no wrap
       id match {
         case "fmt " =>
           if (sz < 16) return None
@@ -293,13 +347,11 @@ object MediaCodec {
   }
 
   // ---- GIF (public spec: GIF89a, CompuServe 1990): indexed-color frames
-  // with variable-width LZW entropy coding (the codec's fifth real wire
-  // format, and the one that makes frame SAMPLING run on a real animated
-  // container). Decoder: header + logical screen descriptor, global and
-  // local color tables, Graphic Control Extensions (frame delays), full
-  // LZW with clear/EOI/deferred-width handling and 4096-entry dictionary
-  // resets, interlace reordering. Encoder (fixture generator): real LZW
-  // compression, one GCE + image descriptor per frame. ----
+  // with variable-width LZW entropy coding — the animated container that
+  // makes frame SAMPLING run on a real format. The encoder (fixture
+  // generator) is written here: real LZW compression, one GCE + image
+  // descriptor per frame. Decoding is the JDK's GIF reader, which does
+  // the LZW, the local and global color tables and interlacing. ----
 
   /** One decoded GIF frame: placement rect, delay (centiseconds), and the
     * frame's own indexed pixels resolved through its active color table
@@ -403,170 +455,36 @@ object MediaCodec {
     bits.toByteArray
   }
 
-  /** GIF-variant LZW decompress: returns exactly `expected` indices or
-    * null on a malformed stream. */
-  private def lzwDecode(packed: Array[Byte], minCode: Int, expected: Int): Array[Byte] = {
-    val clear = 1 << minCode; val eoi = clear + 1
-    val out = new Array[Byte](expected)
-    var outPos = 0
-    // dictionary as prefix links: suffix byte + parent code per entry
-    val suffix = new Array[Byte](4096); val parent = new Array[Int](4096)
-    val buf = new Array[Byte](4096)
-    var next = 0; var width = 0; var prev = -1
-    def reset(): Unit = { next = eoi + 1; width = minCode + 1; prev = -1 }
-    reset()
-    var acc = 0L; var nAcc = 0; var pos = 0
-    def expand(code: Int): Int = { // write entry's byte string into buf, return length
-      var len = 0; var c = code
-      while (c >= clear) { buf(len) = suffix(c); len += 1; c = parent(c) } // eoi+1.. entries
-      buf(len) = c.toByte; len += 1
-      len
-    }
-    while (pos < packed.length || nAcc >= width) {
-      while (nAcc < width && pos < packed.length) {
-        acc |= (packed(pos) & 0xffL) << nAcc; nAcc += 8; pos += 1
-      }
-      if (nAcc < width) return null // truncated mid-code
-      val code = (acc & ((1 << width) - 1)).toInt
-      acc >>= width; nAcc -= width
-      if (code == clear) reset()
-      else if (code == eoi) {
-        return if (outPos == expected) out else null
-      } else {
-        // valid: a root (< clear), an existing entry (eoi < code < next),
-        // or the KwKwK case (code == next, only with a previous string)
-        val len =
-          if (code < clear) { buf(0) = code.toByte; 1 }
-          else if (code < next) expand(code)
-          else if (code == next && prev >= 0) {
-            // entry being defined right now: str(prev) + first(str(prev)).
-            // expand() fills buf REVERSED (last..first), so prepend the
-            // first byte at index 0 and the reversed emit stays correct.
-            val plen = expand(prev)
-            val fb = buf(plen - 1)
-            System.arraycopy(buf, 0, buf, 1, plen)
-            buf(0) = fb
-            plen + 1
-          } else return null
-        // emit reversed (expand walks suffix links root-ward)
-        var i = len - 1
-        while (i >= 0) {
-          if (outPos >= expected) return null
-          out(outPos) = buf(i); outPos += 1; i -= 1
-        }
-        if (prev >= 0 && next < 4096) {
-          suffix(next) = buf(len - 1) // first byte of this entry
-          parent(next) = prev
-          next += 1
-          if (next >= (1 << width) && width < 12) width += 1
-        }
-        prev = code
-      }
-    }
-    null // no EOI seen
-  }
-
   /** Decode an animated (or single-frame) GIF87a/89a: every frame's own
-    * indexed raster resolved through its local-else-global color table,
-    * with interlace reordering and GCE delays. `None` on bad magic or a
-    * malformed body. */
-  def decodeGifFrames(b: Array[Byte]): Option[GifAnimation] = try {
-    if (b.length < 13) return None
-    val magic = new String(b, 0, 6, "US-ASCII")
-    if (magic != "GIF89a" && magic != "GIF87a") return None
-    val sw = i16(b, 6); val sh = i16(b, 8)
-    if (sw <= 0 || sh <= 0) return None
-    var pos = 13
-    val gct: Array[Int] =
-      if ((u8(b, 10) & 0x80) != 0) {
-        val n = 2 << (u8(b, 10) & 7)
-        val t = Array.tabulate(n)(i =>
-          (u8(b, pos + 3 * i) << 16) | (u8(b, pos + 3 * i + 1) << 8) | u8(b, pos + 3 * i + 2))
-        pos += 3 * n
-        t
-      } else null
-    val frames = Vector.newBuilder[GifFrame]
-    var delay = 0
-    var done = false
-    while (!done) {
-      if (pos >= b.length) return None
-      u8(b, pos) match {
-        case 0x3b => done = true
-        case 0x21 => // extension: read label, then skip/harvest sub-blocks
-          val label = u8(b, pos + 1)
-          pos += 2
-          if (label == 0xf9 && u8(b, pos) == 4) delay = i16(b, pos + 2)
-          while (u8(b, pos) != 0) pos += 1 + u8(b, pos)
-          pos += 1
-        case 0x2c =>
-          val left = i16(b, pos + 1); val top = i16(b, pos + 3)
-          val fw = i16(b, pos + 5); val fh = i16(b, pos + 7)
-          val flags = u8(b, pos + 9)
-          pos += 10
-          if (fw <= 0 || fh <= 0 || fw.toLong * fh > (64L << 20)) return None
-          val lct: Array[Int] =
-            if ((flags & 0x80) != 0) {
-              val n = 2 << (flags & 7)
-              val t = Array.tabulate(n)(i =>
-                (u8(b, pos + 3 * i) << 16) | (u8(b, pos + 3 * i + 1) << 8) | u8(b, pos + 3 * i + 2))
-              pos += 3 * n
-              t
-            } else gct
-          if (lct == null) return None
-          val minCode = u8(b, pos); pos += 1
-          if (minCode < 2 || minCode > 8) return None
-          val data = new java.io.ByteArrayOutputStream()
-          while (u8(b, pos) != 0) {
-            val n = u8(b, pos)
-            if (pos + 1 + n > b.length) return None
-            data.write(b, pos + 1, n)
-            pos += 1 + n
-          }
-          pos += 1
-          val idx = lzwDecode(data.toByteArray, minCode, fw * fh)
-          if (idx == null) return None
-          val ordered =
-            if ((flags & 0x40) != 0) deinterlace(idx, fw, fh) else idx
-          val rgb = new Array[Int](fw * fh)
-          var k = 0
-          while (k < rgb.length) {
-            val i = ordered(k) & 0xff
-            if (i >= lct.length) return None
-            rgb(k) = lct(i)
-            k += 1
-          }
-          frames += GifFrame(left, top, fw, fh, delay, rgb)
-          delay = 0
-        case _ => return None
+    * raster resolved through its local-else-global color table, with its
+    * placement and GCE delay. `None` on bad magic, a stream that does not
+    * end in the `0x3B` trailer (the JDK reader accepts a truncated one), or
+    * a malformed body. */
+  def decodeGifFrames(b: Array[Byte]): Option[GifAnimation] = {
+    val magic = if (b.length < 13) "" else new String(b, 0, 6, "US-ASCII")
+    if ((magic != "GIF89a" && magic != "GIF87a") || b.last != 0x3b) return None
+    imageIo(b, "gif", all = true) { (reader, i, img) =>
+      val md = reader.getImageMetadata(i).getAsTree("javax_imageio_gif_image_1.0")
+        .asInstanceOf[IIOMetadataNode]
+      def attr(node: String, name: String): Int = {
+        val nodes = md.getElementsByTagName(node)
+        if (nodes.getLength == 0) 0
+        else nodes.item(0).asInstanceOf[IIOMetadataNode].getAttribute(name).toInt
       }
-    }
-    val fs = frames.result()
-    if (fs.isEmpty) None else Some(GifAnimation(sw, sh, fs))
-  } catch { case _: ArrayIndexOutOfBoundsException => None }
-
-  /** GIF interlace passes: rows 0,8,16.. then 4,12.. then 2,6.. then odd. */
-  private def deinterlace(idx: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val out = new Array[Byte](idx.length)
-    val passes = Seq((0, 8), (4, 8), (2, 4), (1, 2))
-    var src = 0
-    for ((start, step) <- passes; y <- start until h by step) {
-      System.arraycopy(idx, src * w, out, y * w, w)
-      src += 1
-    }
-    out
+      Some(GifFrame(attr("ImageDescriptor", "imageLeftPosition"),
+        attr("ImageDescriptor", "imageTopPosition"), img.getWidth, img.getHeight,
+        attr("GraphicControlExtension", "delayTime"), packedRgb(img)))
+    }.filter(_.nonEmpty).map(GifAnimation(i16(b, 6), i16(b, 8), _))
   }
 
   /** [[Raster]] view of one decoded GIF frame (its own rect). */
-  def gifFrameRaster(f: GifFrame): Raster =
-    Raster("gif", f.width, f.height, (x, y) => {
-      val c = f.rgb(y * f.width + x)
-      ((c >> 16) & 0xff, (c >> 8) & 0xff, c & 0xff)
-    })
+  def gifFrameRaster(f: GifFrame): Raster = rgbRaster("gif", f.width, f.height, f.rgb)
 
   // ---- PNG (public spec: RFC 2083 / W3C PNG): 8-bit truecolor (color
   // type 2), non-interlaced — the subset the fixture pipeline produces.
-  // zlib inflate via java.util.zip.Inflater; per-scanline unfiltering of
-  // all five standard filter types; chunk CRCs verified. ----
+  // The encoder deflates and filters each scanline here; decoding is the
+  // JDK's PNG reader, behind a chunk walk that verifies every CRC and
+  // requires IEND (the reader checks neither). ----
 
   private def be32(b: Array[Byte], i: Int): Int =
     (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
@@ -644,15 +562,14 @@ object MediaCodec {
     bos.toByteArray
   }
 
-  /** Decode an 8-bit truecolor non-interlaced PNG: walk the chunk list
-    * (CRC-verified), inflate the concatenated IDAT stream, unfilter each
-    * scanline per its filter byte. Other color types / bit depths /
-    * interlacing, a bad CRC, a corrupt zlib stream, or a short pixel
-    * payload all return `None`. */
+  /** Decode an 8-bit truecolor non-interlaced PNG. The chunk walk
+    * (CRC-verified, up to IEND) checks the layout; the JDK reader
+    * inflates and unfilters. Other color types / bit depths / interlacing,
+    * a bad CRC, a missing IEND or a corrupt zlib stream all return
+    * `None`. */
   private def decodePng(b: Array[Byte]): Option[Raster] = {
     var pos = 8
-    var width = -1; var height = -1; var headerOk = false
-    val idat = new java.io.ByteArrayOutputStream()
+    var headerOk = false
     var sawEnd = false
     while (!sawEnd && pos + 12 <= b.length) {
       val sz = be32(b, pos)
@@ -660,95 +577,28 @@ object MediaCodec {
       // long arithmetic: a chunk size near Int.MaxValue overflows the int
       // form of this bound and would walk past the buffer
       if (sz < 0 || body.toLong + sz.toLong + 4L > b.length) return None
-      val typ = new String(b, pos + 4, 4, "US-ASCII")
       val crc = new java.util.zip.CRC32()
       crc.update(b, pos + 4, 4 + sz)
       if (crc.getValue.toInt != be32(b, body + sz)) return None
-      typ match {
+      new String(b, pos + 4, 4, "US-ASCII") match {
         case "IHDR" =>
-          if (sz != 13) return None
-          width = be32(b, body); height = be32(b, body + 4)
-          headerOk = u8(b, body + 8) == 8 && u8(b, body + 9) == 2 &&
+          headerOk = sz == 13 && be32(b, body) > 0 && be32(b, body + 4) > 0 &&
+            u8(b, body + 8) == 8 && u8(b, body + 9) == 2 &&
             u8(b, body + 10) == 0 && u8(b, body + 11) == 0 && u8(b, body + 12) == 0
-        case "IDAT" => idat.write(b, body, sz)
         case "IEND" => sawEnd = true
-        case _ => () // ancillary chunks skipped
+        case _ => () // IDAT and ancillary chunks are the reader's
       }
       pos = body + sz + 4
     }
-    if (!headerOk || !sawEnd || width <= 0 || height <= 0) return None
-    // dimension guards in LONG arithmetic (same posture as decodeBmp /
-    // decodePpm): a hostile IHDR can declare dimensions whose raster size
-    // overflows int (NegativeArraySizeException) or demands a multi-GB
-    // allocation from a tiny file (PNG is compressed, so unlike BMP/PPM
-    // the payload length does not bound the raster — cap it explicitly)
-    val rawLenL = height.toLong * (1L + 3L * width.toLong)
-    if (rawLenL > (64L << 20)) return None // 64 MiB raster cap
-    val stride = 3 * width
-    val raw = new Array[Byte](rawLenL.toInt)
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    try {
-      var filled = 0
-      while (filled < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, filled, raw.length - filled)
-        if (n == 0 && inf.needsInput()) return None // truncated stream
-        filled += n
-      }
-      if (filled < raw.length) return None
-    } catch { case _: java.util.zip.DataFormatException => return None }
-    finally inf.end()
-    // unfilter in place into a top-down RGB buffer
-    val px = new Array[Byte](height * stride)
-    var y = 0
-    while (y < height) {
-      val ft = u8(raw, y * (1 + stride))
-      if (ft > 4) return None
-      var i = 0
-      while (i < stride) {
-        val f = u8(raw, y * (1 + stride) + 1 + i)
-        val a = if (i >= 3) px(y * stride + i - 3) & 0xff else 0
-        val bUp = if (y > 0) px((y - 1) * stride + i) & 0xff else 0
-        val c = if (y > 0 && i >= 3) px((y - 1) * stride + i - 3) & 0xff else 0
-        val v = ft match {
-          case 0 => f
-          case 1 => f + a
-          case 2 => f + bUp
-          case 3 => f + (a + bUp) / 2
-          case 4 => f + paeth(a, bUp, c)
-        }
-        px(y * stride + i) = (v & 0xff).toByte
-        i += 1
-      }
-      y += 1
-    }
-    Some(Raster("png", width, height, (x, y2) => {
-      val off = 3 * (y2 * width + x)
-      (u8(px, off), u8(px, off + 1), u8(px, off + 2))
-    }))
+    if (headerOk && sawEnd) decodeRgb(b, "png") else None
   }
 
-  private def decodeBmp(b: Array[Byte]): Option[Raster] = {
-    if (b.length < 54) return None
-    val dataOffset = i32(b, 10)
-    val headerSize = i32(b, 14)
-    val width = i32(b, 18)
-    val rawHeight = i32(b, 22)
-    val bpp = i16(b, 28)
-    val compression = i32(b, 30)
-    val topDown = rawHeight < 0
-    val height = math.abs(rawHeight)
-    // only the layout this codec understands: uncompressed 24-bit
-    if (headerSize < 40 || bpp != 24 || compression != 0) return None
-    if (width <= 0 || height <= 0) return None
-    val stride = bmpRowStride(width)
-    if (dataOffset.toLong + stride.toLong * height > b.length) return None
-    Some(Raster("bmp", width, height, (x, y) => {
-      val fileRow = if (topDown) y else height - 1 - y
-      val off = dataOffset + fileRow * stride + 3 * x
-      (u8(b, off + 2), u8(b, off + 1), u8(b, off)) // stored B,G,R
-    }))
-  }
+  /** Decode an uncompressed 24-bit BI_RGB BMP (bottom-up or top-down)
+    * through the JDK reader; other layouts return `None`. */
+  private def decodeBmp(b: Array[Byte]): Option[Raster] =
+    if (b.length >= 54 && i32(b, 14) >= 40 && i16(b, 28) == 24 && i32(b, 30) == 0)
+      decodeRgb(b, "bmp")
+    else None
 
   /** P6 header: three ASCII ints (width, height, maxval) separated by
     * whitespace, `#`-to-EOL comments allowed anywhere whitespace is, then
@@ -788,15 +638,11 @@ object MediaCodec {
   // ------------------------------------------------------------------
   // JPEG — baseline sequential DCT, grayscale (ITU-T T.81 / ISO 10918-1;
   // tables from Annex K, quality scaling per the libjpeg formula). The
-  // dominant image wire format of any crawled corpus; this closes the
-  // "JPEG needs native codecs" gap ([[Multimodal]]'s stub note) with a
-  // pure-JVM encoder + decoder pair. The encoder is the deterministic
-  // fixture generator; the DECODER is the production path: a real marker
-  // parser (DQT/SOF0/DHT/DRI/SOS, APPn/COM skip, RST handling, 0xFF00
-  // byte unstuffing), canonical Huffman decode from the FILE's own
-  // tables, dequantization, and a separable float IDCT — so it reads
-  // third-party baseline grayscale streams (MediaCodecSpec pins parity
-  // against javax.imageio's independent codec in BOTH directions).
+  // dominant image wire format of any crawled corpus. The encoder is the
+  // deterministic fixture generator, written here (FDCT, quantization,
+  // canonical Huffman coding, byte stuffing); the DECODER is the JDK's
+  // JPEG reader, which reads any baseline or progressive stream, held to
+  // one band: a color JPEG is out of scope and returns `None`.
   // ------------------------------------------------------------------
 
   /** Zigzag index → natural (row-major) index, T.81 Figure 5. */
@@ -990,237 +836,32 @@ object MediaCodec {
     out.toByteArray
   }
 
-  /** MSB-first bit reader over the entropy-coded segment: unstuffs 0xFF00,
-    * stops (returns -1 forever) at any real marker. `alignAndExpectRst`
-    * consumes a restart marker at a byte boundary. */
-  private final class BitReader(b: Array[Byte], private var pos: Int) {
-    private var acc = 0
-    private var nBits = 0
-    private var ended = false
-    def bit(): Int = {
-      if (nBits == 0) {
-        if (ended || pos >= b.length) return -1
-        val v = b(pos) & 0xff
-        if (v == 0xff) {
-          if (pos + 1 < b.length && b(pos + 1) == 0x00) { pos += 2 }
-          else { ended = true; return -1 } // real marker: entropy data over
-        } else pos += 1
-        acc = v; nBits = 8
-      }
-      nBits -= 1
-      (acc >> nBits) & 1
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { val x = bit(); if (x < 0) return -1; v = (v << 1) | x; i += 1 }
-      v
-    }
-    def alignAndExpectRst(): Boolean = {
-      nBits = 0
-      if (pos + 1 < b.length && (b(pos) & 0xff) == 0xff &&
-        (b(pos + 1) & 0xff) >= 0xd0 && (b(pos + 1) & 0xff) <= 0xd7) {
-        pos += 2; ended = false; true
-      } else false
-    }
+  /** Decode a one-band (grayscale) JPEG to (width, height, gray pixels
+    * 0..255 top-down row-major). `None` on color or malformed input,
+    * including a truncated stream and header dimensions past the pixel
+    * cap. */
+  private[graft] def decodeJpegGray(b: Array[Byte]): Option[(Int, Int, Array[Int])] =
+    imageIo(b, "jpeg") { (_, _, img) =>
+      val (w, h) = (img.getWidth, img.getHeight)
+      Option.when(img.getRaster.getNumBands == 1)(
+        (w, h, img.getRaster.getSamples(0, 0, w, h, 0, null: Array[Int])))
+    }.map(_.head)
+
+  /** Gray pixels as a raster (r = g = b = gray). */
+  private def grayRaster(format: String, jpeg: (Int, Int, Array[Int])): Raster = {
+    val (w, h, gray) = jpeg
+    Raster(format, w, h, (x, y) => { val g = gray(y * w + x); (g, g, g) })
   }
-
-  /** Canonical Huffman decoder: per-length first-code/first-index tables
-    * (the T.81 F.2.2.3 DECODE procedure). */
-  private final class HuffTable(bits: Array[Int], vals: Array[Int]) {
-    private val minCode = new Array[Int](17)
-    private val maxCode = new Array[Int](17)
-    private val valPtr = new Array[Int](17)
-    locally {
-      var code = 0
-      var k = 0
-      for (l <- 1 to 16) {
-        if (bits(l) == 0) { maxCode(l) = -1 }
-        else {
-          valPtr(l) = k; minCode(l) = code
-          k += bits(l); code += bits(l)
-          maxCode(l) = code - 1
-        }
-        code <<= 1
-      }
-    }
-    def decode(r: BitReader): Int = {
-      var code = 0
-      var l = 0
-      while (l < 16) {
-        val b = r.bit(); if (b < 0) return -1
-        code = (code << 1) | b; l += 1
-        if (maxCode(l) >= 0 && code <= maxCode(l) && code >= minCode(l))
-          return vals(valPtr(l) + code - minCode(l))
-      }
-      -1
-    }
-  }
-
-  /** T.81 F.2.2.1 EXTEND: map `size` magnitude bits to a signed value. */
-  private def extend(v: Int, size: Int): Int =
-    if (size == 0) 0 else if (v < (1 << (size - 1))) v - (1 << size) + 1 else v
-
-  /** Decode a baseline sequential GRAYSCALE JPEG to (width, height, gray
-    * pixels 0..255 top-down row-major). Handles DQT (8/16-bit), multiple
-    * DHTs, DRI/RSTn, APPn/COM skip, 0xFF00 unstuffing. `None` on
-    * progressive streams, multi-component images, or malformed input. */
-  private[graft] def decodeJpegGray(b: Array[Byte]): Option[(Int, Int, Array[Int])] = try {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var pos = 2
-    val quantTables = new Array[Array[Int]](4)
-    val dcTables = new Array[HuffTable](4)
-    val acTables = new Array[HuffTable](4)
-    var width = 0; var height = 0
-    var compQuant = 0; var compDc = 0; var compAc = 0
-    var restartInterval = 0
-    def be16(i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-    while (pos + 4 <= b.length) {
-      if ((b(pos) & 0xff) != 0xff) return None
-      val m = b(pos + 1) & 0xff
-      pos += 2
-      m match {
-        case 0xdb => // DQT: one or more tables
-          val end = pos + be16(pos)
-          var p = pos + 2
-          while (p < end) {
-            val pq = (b(p) & 0xff) >> 4; val tq = b(p) & 0x0f
-            p += 1
-            val t = new Array[Int](64)
-            for (i <- 0 until 64) {
-              t(Zigzag(i)) = if (pq == 0) b(p + i) & 0xff else be16(p + 2 * i)
-            }
-            p += (if (pq == 0) 64 else 128)
-            quantTables(tq) = t
-          }
-          pos = end
-        case 0xc4 => // DHT: one or more tables
-          val end = pos + be16(pos)
-          var p = pos + 2
-          while (p < end) {
-            val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
-            p += 1
-            val bits = new Array[Int](17)
-            var n = 0
-            for (l <- 1 to 16) { bits(l) = b(p + l - 1) & 0xff; n += bits(l) }
-            p += 16
-            val vals = new Array[Int](n)
-            for (i <- 0 until n) vals(i) = b(p + i) & 0xff
-            p += n
-            val t = new HuffTable(bits, vals)
-            if (tc == 0) dcTables(th) = t else acTables(th) = t
-          }
-          pos = end
-        case 0xc0 | 0xc1 => // SOF0/1: baseline (extended-sequential ok)
-          if ((b(pos + 2) & 0xff) != 8) return None
-          height = be16(pos + 3); width = be16(pos + 5)
-          if ((b(pos + 7) & 0xff) != 1) return None // grayscale only
-          if ((b(pos + 9) & 0xff) != 0x11) return None // no subsampling
-          compQuant = b(pos + 10) & 0x0f
-          pos += be16(pos)
-        case 0xc2 => return None // progressive: out of scope
-        case 0xdd => restartInterval = be16(pos + 2); pos += be16(pos)
-        case 0xda => // SOS → entropy-coded data follows
-          if ((b(pos + 2) & 0xff) != 1) return None
-          compDc = (b(pos + 4) & 0xff) >> 4; compAc = b(pos + 4) & 0x0f
-          val scanStart = pos + be16(pos)
-          val quant = quantTables(compQuant)
-          val dcT = dcTables(compDc); val acT = acTables(compAc)
-          if (quant == null || dcT == null || acT == null) return None
-          if (width <= 0 || height <= 0) return None
-          val r = new BitReader(b, scanStart)
-          val nbx = (width + 7) / 8; val nby = (height + 7) / 8
-          val gray = new Array[Int](width * height)
-          val coef = new Array[Int](64)
-          var dcPred = 0
-          var mcu = 0
-          var by = 0
-          while (by < nby) {
-            var bx = 0
-            while (bx < nbx) {
-              if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-                if (!r.alignAndExpectRst()) return None
-                dcPred = 0
-              }
-              java.util.Arrays.fill(coef, 0)
-              val dcSize = dcT.decode(r)
-              if (dcSize < 0) return None
-              val diff = extend(if (dcSize == 0) 0 else r.bits(dcSize), dcSize)
-              dcPred += diff
-              coef(0) = dcPred * quant(0)
-              var zz = 1
-              var eob = false
-              while (zz < 64 && !eob) {
-                val rs = acT.decode(r)
-                if (rs < 0) return None
-                val run = rs >> 4; val size = rs & 0x0f
-                if (size == 0) {
-                  if (run == 15) zz += 16 else eob = true // ZRL vs EOB
-                } else {
-                  zz += run
-                  if (zz > 63) return None
-                  coef(Zigzag(zz)) = extend(r.bits(size), size) * quant(Zigzag(zz))
-                  zz += 1
-                }
-              }
-              // IDCT (separable would be faster; direct form is fine at
-              // fixture scale) + level shift + clamp, cropped to SOF dims
-              var py = 0
-              while (py < 8) {
-                val yy = by * 8 + py
-                if (yy < height) {
-                  var px = 0
-                  while (px < 8) {
-                    val xx = bx * 8 + px
-                    if (xx < width) {
-                      var s = 0.0
-                      var uv = 0
-                      while (uv < 64) {
-                        val u = uv % 8; val v = uv / 8
-                        val c = coef(uv)
-                        if (c != 0)
-                          s += C(u) * C(v) * c * CosTable(px * 8 + u) * CosTable(py * 8 + v)
-                        uv += 1
-                      }
-                      val p = math.round(0.25 * s + 128.0).toInt
-                      gray(yy * width + xx) = math.max(0, math.min(255, p))
-                    }
-                    px += 1
-                  }
-                }
-                py += 1
-              }
-              mcu += 1
-              bx += 1
-            }
-            by += 1
-          }
-          return Some((width, height, gray))
-        case 0xd9 => return None // EOI before SOS
-        case x if x >= 0xd0 && x <= 0xd7 => // stray RST between segments
-        case _ => pos += be16(pos) // APPn, COM, anything else: skip
-      }
-    }
-    None
-  } catch { case _: ArrayIndexOutOfBoundsException => None }
-
-  /** [[decodeJpegGray]] as a raster (r = g = b = gray) — the
-    * [[decodeRaster]]-dispatch face of the JPEG path. */
-  private def decodeJpeg(b: Array[Byte]): Option[Raster] =
-    decodeJpegGray(b).map { case (w, h, gray) =>
-      Raster("jpeg", w, h, (x, y) => {
-        val g = gray(y * w + x); (g, g, g)
-      })
-    }
 
   // ---- AVI / MJPEG (public specs: Microsoft RIFF/AVI container, frames
   // as baseline JPEG — "motion JPEG", the classic index-seekable video
   // interchange format). This closes the video stub seam GVID documented:
-  // a REAL standard container whose frames run through the full baseline
-  // JPEG codec above. The 100 TB access pattern is the point — the
-  // `idx1` chunk index means stride-s frame sampling resolves each kept
-  // frame to an (offset, size) pair and decodes ONLY those byte ranges
-  // (ranged object-storage GETs), never scanning the stream. Layout
+  // a REAL standard container, walked here (the JDK has no AVI reader),
+  // whose frames decode through the JPEG reader above. The 100 TB access
+  // pattern is the point — the `idx1` chunk index means stride-s frame
+  // sampling resolves each kept frame to an (offset, size) pair and
+  // decodes ONLY those byte ranges (ranged object-storage GETs), never
+  // scanning the stream. Layout
   // written here: RIFF('AVI ') { LIST(hdrl){ avih, LIST(strl){ strh
   // 'vids'/'MJPG', strf BITMAPINFOHEADER } }, LIST(movi){ '00dc' chunks },
   // idx1 } — the minimal single-video-stream profile every AVI reader
@@ -1315,14 +956,14 @@ object MediaCodec {
     var p = 12
     while (p + 8 <= b.length) {
       val sz = i32(b, p + 4)
-      if (sz < 0 || p + 8 + sz > b.length) return None
+      if (sz < 0 || p + 8L + sz > b.length) return None // long: no wrap
       if (isFourcc(b, p, "LIST") && isFourcc(b, p + 8, "hdrl")) {
         // scan the hdrl list for avih
         var q = p + 12
         val end = p + 8 + sz
         while (q + 8 <= end && avih.isEmpty) {
           val qsz = i32(b, q + 4)
-          if (qsz < 0 || q + 8 + qsz > end) return None
+          if (qsz < 0 || q + 8L + qsz > end) return None
           if (isFourcc(b, q, "avih") && qsz >= 40) {
             val w = i32(b, q + 8 + 32); val h = i32(b, q + 8 + 36)
             val n = i32(b, q + 8 + 16)
@@ -1350,7 +991,7 @@ object MediaCodec {
     var p = 12
     while (p + 8 <= b.length) {
       val sz = i32(b, p + 4)
-      if (sz < 0 || p + 8 + sz > b.length) return None
+      if (sz < 0 || p + 8L + sz > b.length) return None // long: no wrap
       if (isFourcc(b, p, "LIST") && isFourcc(b, p + 8, "movi")) moviFourccPos = p + 8
       if (isFourcc(b, p, "idx1")) { idxAt = p + 8; idxSz = sz }
       p += 8 + sz + (sz & 1)
@@ -1376,16 +1017,12 @@ object MediaCodec {
     if (arr.isEmpty) None else Some(arr)
   }
 
-  /** Decode video frame `idx` through the REAL baseline JPEG decoder —
-    * only that frame's byte range is touched. Caller resolves the index
-    * once via [[aviFrameIndex]]. */
+  /** Decode video frame `idx` through [[decodeJpegGray]] — only that
+    * frame's byte range is touched. Caller resolves the index once via
+    * [[aviFrameIndex]]. */
   def aviFrame(b: Array[Byte], entry: (Int, Int)): Option[Raster] = {
     val (off, len) = entry
-    decodeJpegGray(java.util.Arrays.copyOfRange(b, off, off + len)).map {
-      case (w, h, gray) =>
-        Raster("mjpeg", w, h, (x, y) => {
-          val g = gray(y * w + x); (g, g, g)
-        })
-    }
+    decodeJpegGray(java.util.Arrays.copyOfRange(b, off, off + len))
+      .map(grayRaster("mjpeg", _))
   }
 }

@@ -26,18 +26,18 @@ final case class MediaFeatures(
   *
   * Two decode paths:
   *
-  *  - **Real decode** ([[imageFeatures]] / `multimodal_decode`): BMP and
-  *    PPM payloads are parsed by the pure-JVM [[MediaCodec]] — true header
-  *    parsing, bottom-up row order, BGR byte order, row padding — and
-  *    reduced to channel statistics. The oracle-checked query decodes
+  *  - **Real decode** ([[imageFeatures]] / `multimodal_decode`): BMP, PNG
+  *    and PPM payloads are decoded by [[MediaCodec]] (the JDK's
+  *    `javax.imageio` readers for BMP and PNG, its own P6 parser for PPM)
+  *    and reduced to channel statistics. The oracle-checked query decodes
   *    fixture images RENDERED from the documents table (pixels derived
   *    deterministically from the text bytes), so DuckDB can predict the
   *    decoded statistics without a codec of its own; the position-weighted
   *    checksum makes a row-order or channel-order bug fail the oracle.
   *  - **Stub fallback** ([[decodeStub]] / `multimodal_meta`): payloads in
-  *    formats this container cannot decode (video etc. need native codecs;
-  *    JPEG graduated to the real path in round 9 — [[MediaCodec]] now
-  *    carries a pure-JVM baseline decoder) keep the original deterministic
+  *    formats this container cannot decode (compressed video needs native
+  *    codecs; JPEG graduated to the real path in round 9 and decodes
+  *    through the JDK's reader) keep the original deterministic
   *    byte-arithmetic fake — the plumbing contract for opaque media stays
   *    oracle-checked.
   */
@@ -196,13 +196,12 @@ object Multimodal {
     * therefore DuckDB-oracle-checkable: a constant block's FDCT has only a
     * DC coefficient (ACs are exactly zero), DC = 8·(c−128), and at quality
     * 75 the DC quantizer step is exactly 8 ([[MediaCodec.scaledQuant]]) —
-    * so quantization loses nothing and the decoder's IDCT returns every
-    * pixel exactly. The ENCODED stream is a full baseline JPEG (markers,
-    * canonical Huffman entropy coding, zigzag, byte stuffing) and the
-    * decode path runs the full parser + Huffman + dequant + IDCT — only
-    * the VALUES are engineered to survive, which is what lets the oracle
-    * predict them from the mosaic formula. Non-flat content is pinned
-    * separately by MediaCodecSpec's javax.imageio differential. */
+    * so quantization loses nothing and a conforming decoder's IDCT returns
+    * every pixel exactly. The ENCODED stream is a full baseline JPEG
+    * (markers, canonical Huffman entropy coding, zigzag, byte stuffing)
+    * and the decode path is the JDK's JPEG reader (parser + Huffman +
+    * dequant + IDCT) — only the VALUES are engineered to survive, which
+    * is what lets the oracle predict them from the mosaic formula. */
   def renderJpegFixture(docId: Long, text: String): Array[Byte] = {
     val bw = (1 + docId % 3).toInt // blocks across: 1..3
     val bh = (1 + (docId * 5) % 2).toInt // blocks down: 1..2
@@ -223,7 +222,7 @@ object Multimodal {
   /** Render block-mosaic JPEGs from the documents table and REALLY decode
     * them — the JPEG face of `multimodal_decode`: the oracle predicts the
     * statistics from the mosaic formula, the engine recovers them through
-    * the full baseline JPEG pipeline (marker parse, Huffman decode,
+    * the JDK's baseline JPEG reader (marker parse, Huffman decode,
     * dequantization, IDCT). Grayscale ⇒ sum_r = sum_g = sum_b. */
   val jpegQuery: QueryDef = QueryDef.sql(
     "multimodal_jpeg",
@@ -514,8 +513,9 @@ object Multimodal {
     * into a REAL RIFF/AVI container with an `idx1` frame index
     * ([[MediaCodec.encodeAviMjpeg]]). This closes the video stub seam:
     * where GVID stood in for "a container we can't decode", MJPEG-AVI is
-    * a standard public format whose every byte — container AND codec —
-    * this engine writes and reads itself. */
+    * a standard public format whose container this engine writes and
+    * walks itself, and whose JPEG frames it writes and decodes through
+    * the JDK's reader. */
   def renderMjpegFixture(docId: Long, text: String): Array[Byte] = {
     val bw = (1 + docId % 3).toInt
     val bh = (1 + (docId * 5) % 2).toInt
@@ -631,8 +631,8 @@ object Multimodal {
   /** FIXTURE: deterministic animated GIF — dims / frame count / delay from
     * doc_id, frame f pixel k's palette index = char (f·11 + k) mod 16.
     * The ENCODED stream is real GIF89a with real LZW compression; the
-    * decode path runs the full parser (color table, GCE delays, LZW with
-    * width growth) to recover what the oracle predicts. */
+    * JDK's GIF reader (color table, GCE delays, LZW with width growth)
+    * recovers what the oracle predicts. */
   def renderGifFixture(docId: Long, text: String): Array[Byte] = {
     val w = (4 + docId % 5).toInt
     val h = (4 + (docId * 3) % 4).toInt

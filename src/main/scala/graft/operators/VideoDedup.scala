@@ -19,7 +19,7 @@ import graft.QueryDef
   * RIFF/AVI container walk: [[MediaCodec.aviFrameIndex]] reads the `idx1`
   * index once, stride-s sampling decodes only frames 0, s, 2s, … — each
   * one (offset, size) byte range, the ranged-GET posture at object-storage
-  * scale — through the full baseline JPEG decoder, then
+  * scale — through the JDK's JPEG reader ([[MediaCodec.aviFrame]]), then
   * [[ImageDedup.dhashBands]] (9×8 resize view → ITU-R 601 gray →
   * gradient bits). Clip bit n is 1 iff MORE THAN HALF of the sampled
   * frames set bit n (strict majority; ties → 0, deterministic): a

@@ -13,11 +13,6 @@ import graft.model.{Actions, OrderedUpdateEvent, Schemas}
   * reference's `toStream()` re-emits KTable deletions to the output topic. */
 final case class KeyedCount(productCode: String, count: Option[Int])
 
-object KeyedCount {
-  def apply(productCode: String, count: Int): KeyedCount =
-    KeyedCount(productCode, Some(count))
-}
-
 /** One SCD Type-2 interval of the continuously-maintained temporal table
   * ([[InventoryStream.scd2Stream]]): the state `invCount` held from
   * `validFrom` (inclusive) to `validTo` (exclusive; `Long.MaxValue` = the

@@ -129,7 +129,7 @@ class InventoryStreamSpec extends AnyFunSuite {
 
   test("output wire format matches the reference (embedded key null)") {
     import spark.implicits._
-    val counts = Seq(KeyedCount("key0", 42)).toDS()
+    val counts = Seq(KeyedCount("key0", Some(42))).toDS()
     val row = InventoryStream.encode(counts).collect().head
     assert(row.getString(0) === """{"productCode":"key0"}""")
     assert(row.getString(1) === """{"count":42,"key":null}""") // Jackson-style null field

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{MediaCodec, Multimodal}
 
-/** Codec round-trip and malformed-input behavior for the pure-JVM BMP/PPM
-  * decoder, against an independent stats model over the raw RGB array. */
+/** Codec round-trip and malformed-input behavior of every media decoder,
+  * against an independent stats model over the raw RGB array. */
 class MediaCodecSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
@@ -188,6 +188,10 @@ class MediaCodecSpec extends AnyFunSuite {
     assert(MediaCodec.decodeAudio(stereo).isEmpty, "stereo unsupported")
     val eightBit = good.clone(); eightBit(34) = 8
     assert(MediaCodec.decodeAudio(eightBit).isEmpty, "8-bit unsupported")
+    // a chunk size near Int.MaxValue must reject, not wrap the bound check
+    val huge = good.clone()
+    huge(16) = 0xf0.toByte; huge(17) = 0xff.toByte; huge(18) = 0xff.toByte; huge(19) = 0x7f
+    assert(MediaCodec.decodeAudio(huge).isEmpty, "fmt chunk size 0x7FFFFFF0")
   }
 
   test("audio fixture decode matches the fixture formulas end-to-end") {
@@ -224,16 +228,6 @@ class MediaCodecSpec extends AnyFunSuite {
     (w, h, out)
   }
 
-  private def imageIoEncodeGray(w: Int, h: Int, gray: Array[Byte]): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    for (y <- 0 until h; x <- 0 until w)
-      img.getRaster.setSample(x, y, 0, gray(y * w + x) & 0xff)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpeg", bos)
-    bos.toByteArray
-  }
-
   test("JPEG flat-mosaic round-trip is BIT-EXACT at quality 75 (DC step 8)") {
     // 8×8-constant blocks: FDCT leaves only DC = 8·(c−128); the q75 DC
     // quantizer step is exactly 8, so nothing is lost — the construction
@@ -265,20 +259,6 @@ class MediaCodecSpec extends AnyFunSuite {
     }
   }
 
-  test("JPEG third-party bitstream: our decoder reads javax.imageio's own output") {
-    for ((w, h) <- Seq((16, 16), (24, 12), (11, 7))) {
-      val gray = grayFill(w, h)
-      val enc = imageIoEncodeGray(w, h, gray) // independent encoder: APP0,
-      val decoded = MediaCodec.decodeJpegGray(enc) // its own tables/markers
-      assert(decoded.isDefined, s"${w}x$h: must parse ImageIO's stream")
-      val (dw, dh, ours) = decoded.get
-      val (_, _, ref) = imageIoDecodeGray(enc)
-      assert((dw, dh) === (w, h))
-      val maxDiff = ours.zip(ref).map { case (a, b) => math.abs(a - b) }.max
-      assert(maxDiff <= 1, s"${w}x$h: max per-pixel diff $maxDiff vs ImageIO's decode")
-    }
-  }
-
   test("multimodal_jpeg fixture decodes to the oracle's block-formula stats") {
     for (docId <- Seq(0L, 1L, 2L, 5L, 7L)) {
       val text = "the quick brown fox jumps over the lazy dog"
@@ -301,6 +281,12 @@ class MediaCodecSpec extends AnyFunSuite {
     assert(MediaCodec.decodeJpegGray("not a jpeg".getBytes).isEmpty)
     val good = MediaCodec.encodeJpegGray(8, 8, grayFill(8, 8))
     assert(MediaCodec.decodeJpegGray(good.take(good.length / 2)).isEmpty, "truncated")
+    // an 8x8 stream whose SOF0 declares 65535x65535: rejected at the header,
+    // before a 4 Gi-pixel raster is allocated
+    val bomb = good.clone()
+    val sof = bomb.indices.find(i => (bomb(i) & 0xff) == 0xff && (bomb(i + 1) & 0xff) == 0xc0).get
+    for (i <- sof + 5 to sof + 8) bomb(i) = 0xff.toByte // height, width
+    assert(MediaCodec.decodeJpegGray(bomb).isEmpty, "65535x65535 SOF0")
   }
 
   /** Independent nearest-neighbor model: sample the source array by the
@@ -419,25 +405,6 @@ class MediaCodecSpec extends AnyFunSuite {
     assert(anim.frames.head.rgb.toSeq === px.map(ix => palette(ix & 0xff)).toSeq)
   }
 
-  test("GIF third-party differential: our decoder matches ImageIO on ImageIO's stream") {
-    // ImageIO writes a real compressed GIF (its own palette choice); both
-    // decoders read the SAME bytes, so quantization cancels out
-    val (w, h) = (33, 21)
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w)
-      img.setRGB(x, y, operators.Multimodal.GifPalette((x * 7 + y * 3) % 16))
-    val baos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "gif", baos))
-    val bytes = baos.toByteArray
-    val ours = MediaCodec.decodeGifFrames(bytes).get.frames.head
-    val theirs = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    assert(ours.width === w && ours.height === h)
-    for (y <- 0 until h; x <- 0 until w)
-      assert((ours.rgb(y * w + x) & 0xffffff) === (theirs.getRGB(x, y) & 0xffffff),
-        s"pixel ($x,$y)")
-  }
-
   test("GIF reverse differential: ImageIO reads every frame of our stream") {
     val palette = operators.Multimodal.GifPalette
     val (w, h) = (12, 9)
@@ -545,5 +512,11 @@ class MediaCodecSpec extends AnyFunSuite {
     val bad = avi.clone(); bad(8) = 'X'
     assert(MediaCodec.decodeAviHeader(bad) === None)
     assert(MediaCodec.aviFrameIndex(bad) === None)
+    // a chunk size near Int.MaxValue (the hdrl LIST's) must reject, not
+    // wrap the bound check
+    val huge = avi.clone()
+    huge(16) = 0xf0.toByte; huge(17) = 0xff.toByte; huge(18) = 0xff.toByte; huge(19) = 0x7f
+    assert(MediaCodec.decodeAviHeader(huge) === None, "chunk size 0x7FFFFFF0")
+    assert(MediaCodec.aviFrameIndex(huge) === None, "chunk size 0x7FFFFFF0")
   }
 }

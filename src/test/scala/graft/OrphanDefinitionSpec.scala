@@ -85,7 +85,6 @@ object OrphanDefinitionSpec {
     "InventoryStream" -> StreamingApi,
     "InventoryStream.kafkaPipeline" -> StreamingApi,
     "InventoryStream.scd2Stream" -> StreamingApi,
-    "KeyedCount.apply" -> StreamingApi,
     "EventTimeAgg" -> StreamingApi,
     "EventTimeAgg.asEventTimeStream" -> StreamingApi,
     "EventTimeAgg.hourlyByType" -> StreamingApi,
